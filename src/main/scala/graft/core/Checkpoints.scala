@@ -1,6 +1,8 @@
 package graft.core
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.storage.StorageLevel
 
 /** Session-conf-driven lineage truncation for iterative operators
   * (connected components, PageRank, k-core peeling, skyline frontiers,
@@ -18,7 +20,8 @@ import org.apache.spark.sql.DataFrame
   *    every iterative operator at once; no code changes.
   *
   * Both variants are EAGER (materialize now), which the call sites rely
-  * on to unpersist upstream caches immediately after. */
+  * on to unpersist upstream caches immediately after. [[materialize]] is
+  * the same switch for RDD-level state (the [[Superstep]] kernel). */
 object Checkpoints {
 
   final val ConfKey = "spark.graft.checkpointDir"
@@ -29,15 +32,30 @@ object Checkpoints {
   // raw conf value — it can't serve as the change detector)
   private val applied = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
-  def truncate(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
+  def truncate(df: DataFrame): DataFrame =
+    if (reliable(df.sparkSession)) df.checkpoint() else df.localCheckpoint()
+
+  /** RDD twin of [[truncate]]: marks `rdd` for the conf's truncation and
+    * materialises it in ONE job that also sums `measure` over its
+    * partitions (the fused materialise-and-count of an iterative round).
+    * Call it before any other job touches `rdd`. Local mode cuts the
+    * lineage in that job; reliable mode keeps the blocks cached and adds
+    * Spark's checkpoint-write job, which reads them back from the cache. */
+  def materialize[T](spark: SparkSession, rdd: RDD[T])(measure: Iterator[T] => Long): Long = {
+    if (reliable(spark)) rdd.persist(StorageLevel.MEMORY_AND_DISK).checkpoint()
+    else rdd.localCheckpoint()
+    spark.sparkContext.runJob(rdd, measure).sum
+  }
+
+  /** Whether the conf asks for reliable checkpoints; points the context's
+    * checkpoint dir at it when it does. */
+  private def reliable(spark: SparkSession): Boolean =
     spark.conf.getOption(ConfKey).filter(_.nonEmpty) match {
       case Some(dir) =>
         val sc = spark.sparkContext
         if (applied.put(sc.applicationId, dir) != dir || sc.getCheckpointDir.isEmpty)
           sc.setCheckpointDir(dir)
-        df.checkpoint()
-      case None => df.localCheckpoint()
+        true
+      case None => false
     }
-  }
 }

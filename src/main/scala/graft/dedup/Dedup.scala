@@ -1041,21 +1041,19 @@ object Dedup {
     * actually consumes. Returns (node, component) where component = the
     * smallest node id reachable from `node`; only nodes that appear in an
     * edge are returned (singletons are trivially their own component).
+    * Rows with a null endpoint are dropped, like [[graft.operators.Graph]]'s
+    * iterative operators do.
     *
-    * Scale design: each round is one equi-join (edges ⋈ labels on the key
-    * partitioning) + one min-aggregate — the MapReduce-CC shape of
-    * Rastogi et al., "Finding Connected Components in Map-Reduce"
-    * (ICDE'13, public), with the standard DELTA refinement: only nodes
-    * whose label CHANGED last round push again (a node's earlier pushes
-    * were already absorbed — min is monotone), so after the free seed
-    * round each join streams the cached edge list against a frontier
-    * that collapses to near-empty on near-dup graphs (near-clique
-    * components settle in the seed round), instead of re-shuffling one
-    * contribution per edge per round. Rounds needed = graph diameter.
-    * Each round materializes through a constant-stat RDD leaf (the
-    * [[graft.operators.Graph]] fixpoint pattern — one fused job
-    * materializes the round AND counts the changed labels), which also
-    * cuts lineage and stats inheritance.
+    * Cost model: min-label propagation (the MapReduce-CC shape of Rastogi
+    * et al., "Finding Connected Components in Map-Reduce", ICDE'13) as
+    * [[graft.core.Superstep]] rounds. After one shuffle of the edge list
+    * into co-partitioned CSR blocks, each round is one Spark job with ONE
+    * message shuffle and per-partition state of O((V+E)/p) longs. Only
+    * nodes whose label changed last round send (DELTA propagation: min is
+    * monotone, so earlier pushes were already absorbed), and messages to
+    * one node are pre-combined by min on the sending side. Rounds needed
+    * = graph diameter + 1 (the last confirms the fixpoint); past
+    * `maxIter + 1` rounds it fails rather than return partial labels.
     */
   def connectedComponents(
       edges: DataFrame,
@@ -1063,94 +1061,33 @@ object Dedup {
       dstCol: String,
       maxIter: Int = 20
   ): DataFrame = {
-    // symmetrize by a row-local explode (both directions from one read of
-    // the upstream pair pipeline — the union formulation read it twice and
-    // needed its own cache to stay affordable); pre-partition on the join
-    // key BEFORE caching: every propagation round joins sym on `a`, and a
-    // cached frame keeps its partitioning, so the per-round plan exchanges
-    // only the (small, changing) label side instead of re-shuffling the
-    // edge list each round
-    val e0 = edges
-      .select(col(srcCol).cast("long").as("a"), col(dstCol).cast("long").as("b"))
-    val sym = graft.operators.Graph.symmetrize(e0, "a", "b")
-      .select(col("u").as("a"), col("v").as("b"))
-      .repartition(col("a"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // seed with round 1 for free: component(v) = min(v, min neighbor) is
-    // exactly one propagation round, computable as a single aggregation on
-    // the edge list — no join, one fewer iteration below
-    val spark = edges.sparkSession
-    val seed = sym.groupBy(col("a").as("node"))
-      .agg(min(col("b")).as("__mn"))
-      .select(col("node"), least(col("node"), col("__mn")).as("component"))
-    // internal-row state cache (see the loop below / Graph.minLabelFixpoint)
-    var prevRdd = seed.queryExecution.toRdd.map(_.copy())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    prevRdd.count()
-    var labels = org.apache.spark.sql.graft.Bridge.internalCreateDataFrame(
-      spark, prevRdd, seed.schema)
-    // delta frontier: every node already absorbed all neighbor IDS in the
-    // seed round, so only nodes whose label moved below their own id have
-    // anything new to push
-    var frontier = labels.filter(col("component") < col("node"))
-    var frontierSize = frontier.count()
-    var iter = 0
-    while (iter < maxIter && frontierSize > 0) {
-      // push only the CHANGED labels to their neighbors, keep the min;
-      // unchanged nodes' labels were absorbed in an earlier round. FUSED
-      // MESSAGES (the Graph fixpoint shape): the frontier's one-hop
-      // pushes ∪ every node's self message → ONE min-aggregate that also
-      // carries the old label on the self message — the old shape
-      // aggregated the pushes alone and re-joined the full label state
-      // to build the identical least()
-      val oneHop = sym.join(frontier, sym("a") === frontier("node"))
-        .select(col("b").as("node"), col("component").as("__pl"),
-          lit(false).as("__self"))
-      val selfMsg = labels.select(col("node"), col("component").as("__pl"),
-        lit(true).as("__self"))
-      val merged = oneHop.unionByName(selfMsg)
-        .groupBy("node")
-        .agg(max(when(col("__self"), col("__pl"))).as("component"),
-          min(col("__pl")).as("__nl"))
-        // every sym endpoint is seeded in labels, so no push can target a
-        // node without a self message; kept as a guard to mirror the old
-        // left-join drop semantics
-        .filter(col("component").isNotNull)
-        .select(col("node"), col("component"), col("__nl"))
-      // cache the query's own INTERNAL rows (copied — the scan reuses one
-      // mutable UnsafeRow): the public .rdd/createDataFrame round trip
-      // decoded + re-encoded every state row once per round (guide §1.4's
-      // df.rdd cost, per-row boxing that scales with the node count)
-      val rdd = merged.queryExecution.toRdd.map(_.copy())
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // one fused job: materialize the round (cutting lineage AND stats
-      // inheritance) and count the changed labels for convergence
-      frontierSize = rdd.mapPartitions { it =>
-        var c = 0L
-        it.foreach(r => if (r.getLong(2) < r.getLong(1)) c += 1)
-        Iterator.single(c)
-      }.fold(0L)(_ + _)
-      prevRdd.unpersist(false)
-      prevRdd = rdd
-      val mat = org.apache.spark.sql.graft.Bridge.internalCreateDataFrame(
-        spark, rdd, merged.schema)
-      labels = mat.select(col("node"), col("__nl").as("component"))
-      frontier = mat.filter(col("__nl") < col("component"))
-        .select(col("node"), col("__nl").as("component"))
-      iter += 1
-    }
-    if (frontierSize > 0) {
-      sym.unpersist(); prevRdd.unpersist(false)
+    val run = graft.core.Superstep.run(
+      edges.select(col(srcCol).cast("long"), col(dstCol).cast("long")),
+      undirected = true, simple = false, maxRounds = maxIter + 1)(_ => MinLabel)
+    if (run.lastChanged > 0) {
+      run.release()
       throw new IllegalStateException(
         s"connectedComponents did not reach a fixpoint in $maxIter rounds " +
           "(graph diameter exceeds maxIter); returning partial labels would " +
           "silently mislabel long-chain components - raise maxIter")
     }
-    // copy the result out of the loop's RDD cache, then release everything
-    val out = labels.transform(graft.core.Checkpoints.truncate)
-    sym.unpersist()
-    prevRdd.unpersist(false)
-    out
+    import org.apache.spark.sql.types._
+    run.frame(StructType(Seq(StructField("node", LongType, nullable = false),
+      StructField("component", LongType, nullable = true))))
+  }
+
+  /** Connected components' round: keep the smallest label seen. */
+  private object MinLabel extends graft.core.Superstep.Program {
+    def init(id: Long): Long = id
+    def message(label: Long, outDegree: Int): Long = label
+    override def deltaOnly: Boolean = true
+    override val combiner: (Long, Long) => Long = math.min(_: Long, _: Long)
+    def update(label: Long, msgs: Array[Long], from: Int, until: Int): Long = {
+      var m = label
+      var i = from
+      while (i < until) { if (msgs(i) < m) m = msgs(i); i += 1 }
+      m
+    }
   }
 
   /** INCREMENTAL connected components — the standing-pipeline form of

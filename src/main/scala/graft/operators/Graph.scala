@@ -2,6 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import graft.core.Superstep
 
 /** Distributed graph statistics over an edge list — no graph library, just
   * joins shaped the way a 1000-executor cluster wants them.
@@ -120,79 +122,43 @@ object Graph {
     *   r_{k+1}(v) = base + dampingPct * (Σ_{u→v} r_k(u) // outdeg(u)) // 100
     * }}}
     * Floor losses leak a little mass (bounded by N·iters ulps of `scale`)
-    * — irrelevant for ranking, essential for determinism.
+    * — irrelevant for ranking, essential for determinism. Sums that would
+    * overflow a long fail with an `ArithmeticException`, never wrap.
     *
-    * Scale shape per iteration: ranks (≤ N rows) join the cached
-    * degree-annotated edge list pre-partitioned on the destination key,
-    * then one keyed aggregation of the contribution rows (O(E)); the
-    * per-iteration [[graft.core.Checkpoints.truncate]] cuts lineage
-    * (conf-switchable to reliable checkpoints) so the plan never
-    * re-derives earlier rounds. Pass a symmetric edge list for an
-    * undirected graph.
-    *
-    * BROADCAST THRESHOLD — what the zero-O(E)-exchange claim scales to:
-    * with `broadcastRanks = true` (default) the N-row share frame is
-    * force-broadcast each iteration, so the claim holds while that frame
-    * fits comfortably in executor AND driver memory — ~16 bytes/node,
-    * i.e. up to roughly 10⁷–10⁸ nodes on typical 8–64 GiB executors.
-    * Past that the hint does not gracefully degrade, it OOMs. For larger
-    * graphs pass `broadcastRanks = false`: edges are cached partitioned
-    * on the SOURCE key instead, so the share join is co-partitioned (the
-    * O(E) side never re-exchanges — spec-asserted on the forced plan;
-    * only the O(N) share frame shuffles into place) and the per-iteration
-    * cost becomes that one O(N) exchange plus the unavoidable O(E)
-    * contribution shuffle into `groupBy(v)` — the standard Pregel
-    * superstep cost, linear and skew-tolerant, not an OOM. */
+    * Cost model: iterations are [[graft.core.Superstep]] rounds — after
+    * one shuffle of the edge list into co-partitioned CSR blocks, each
+    * iteration is one Spark job with ONE message shuffle (per-source
+    * shares, pre-summed per destination on the sending side) and
+    * per-partition state of O((V+E)/p) longs; nothing is broadcast. An
+    * iteration that changes no rank is a fixpoint and ends the loop early.
+    * Rows with a null endpoint are dropped; duplicate edges count with
+    * their multiplicity. Pass a symmetric edge list for an undirected
+    * graph. Fails with "empty graph" when no edge remains. */
   def pageRank(edges: DataFrame, src: String, dst: String, iters: Int = 5,
-      dampingPct: Int = 85, scale: Long = 1000000000000L,
-      broadcastRanks: Boolean = true): DataFrame = {
+      dampingPct: Int = 85, scale: Long = 1000000000000L): DataFrame = {
     require(iters >= 1 && dampingPct >= 0 && dampingPct <= 100)
-    val e = edges
-      .filter(col(src).isNotNull && col(dst).isNotNull)
-      .select(col(src).cast("long").as("u"), col(dst).cast("long").as("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // N-row frames used every iteration: materialize once
-    val out = e.groupBy(col("u").as("src")).agg(count(lit(1)).as("outdeg"))
-      .transform(graft.core.Checkpoints.truncate)
-    val nodes = e.select(col("u").as("node"))
-      .union(e.select(col("v").as("node"))).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val n = nodes.count()
-    require(n > 0, "empty graph")
-    val init = scale / n
-    val base = (100L - dampingPct) * init / 100L
-    // Cached degree-annotated edges. Broadcast path: pre-partitioned on
-    // the DESTINATION — the per-iteration join streams cached edges
-    // against the broadcast share frame, preserving the v-partitioning,
-    // so the contribution groupBy(v) runs with NO per-iteration Exchange
-    // of the O(E) side and the only repeated shuffles touch O(N)-row
-    // frames. No-broadcast path: pre-partitioned on the SOURCE so the
-    // shuffle join on u is co-partitioned (edges never re-exchange; the
-    // O(N) share frame shuffles to meet them), and groupBy(v) pays the
-    // one O(E) contribution shuffle — the Pregel superstep shape.
-    val eo = e.repartition(if (broadcastRanks) col("v") else col("u"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var ranks = nodes.withColumn("rank", lit(init))
-    (1 to iters).foreach { _ =>
-      // per-source share computed on the N-row side (one tiny join), so
-      // the O(E) pass carries a pre-divided long instead of re-dividing
-      // per edge row
-      val shares = ranks.join(out, ranks("node") === out("src"))
-        .select(col("src"), expr("rank div outdeg").as("share"))
-      val sharesSide = if (broadcastRanks) broadcast(shares) else shares
-      val contribs = eo.join(sharesSide, eo("u") === shares("src"))
-        .select(col("v").as("node"), col("share").as("c"))
-      val updated = contribs.groupBy("node").agg(sum("c").as("cs"))
-        .select(col("node"),
-          (lit(base) + expr(s"($dampingPct * cs) div 100")).as("rank"))
-      // in-degree-0 nodes get no contributions: restore them at base rank
-      // (N-row join, cheap)
-      ranks = nodes.join(updated, Seq("node"), "left")
-        .select(col("node"), coalesce(col("rank"), lit(base)).as("rank"))
-        .transform(graft.core.Checkpoints.truncate)
+    val run = Superstep.run(
+      edges.select(col(src).cast("long"), col(dst).cast("long")),
+      undirected = false, simple = false, maxRounds = iters) { n =>
+      require(n > 0, "empty graph")
+      new RankProgram(scale / n, dampingPct)
     }
-    e.unpersist(); eo.unpersist(); nodes.unpersist()
-    ranks
+    run.frame(StructType(Seq(StructField("node", LongType, nullable = false),
+      StructField("rank", LongType, nullable = false))))
+  }
+
+  private final class RankProgram(initRank: Long, dampingPct: Int)
+      extends Superstep.Program {
+    private val base = (100L - dampingPct) * initRank / 100L
+    def init(id: Long): Long = initRank
+    def message(rank: Long, outDegree: Int): Long = rank / outDegree
+    override val combiner: (Long, Long) => Long = Math.addExact(_: Long, _: Long)
+    def update(rank: Long, msgs: Array[Long], from: Int, until: Int): Long = {
+      var cs = 0L
+      var i = from
+      while (i < until) { cs = Math.addExact(cs, msgs(i)); i += 1 }
+      Math.addExact(base, Math.multiplyExact(dampingPct.toLong, cs) / 100L)
+    }
   }
 
   /** Bounded-round k-core peeling: `rounds` synchronized sweeps of the
@@ -204,8 +170,8 @@ object Graph {
     * unrolls the SAME round count, so both engines agree converged or
     * not). Per round: one degree aggregation + two semi-joins on a
     * monotonically shrinking edge frame; each round's frame is
-    * lineage-truncated so the plan doesn't grow with rounds (same
-    * pattern as [[pageRank]]).
+    * lineage-truncated by [[graft.core.Checkpoints.truncate]] so the plan
+    * doesn't grow with rounds.
     *
     * EARLY EXIT: peeling only ever removes edges, so an unchanged edge
     * count after a sweep IS the fixpoint — every surviving node already
@@ -252,54 +218,48 @@ object Graph {
     * twin unroll the exact same sweeps). Synchronous LPA can 2-cycle on
     * bipartite structures; a fixed `rounds` makes the result well-defined
     * regardless (spec pins the oscillation semantics on a path graph).
+    * The graph is the canonical one of [[canonicalEdges]]: nulls and
+    * self-loops dropped, each undirected edge counted once.
     *
-    * Scale shape per sweep: one equi-join of the symmetric adjacency
-    * (cached, pre-partitioned on `u`) against the O(V) label frame, then
-    * two map-side-combined aggregations — the (node, label) count and the
-    * per-node argmax via a single `max(struct(count, -label))` (no
-    * window, no sort). Lineage is cut per round by
-    * [[graft.core.Checkpoints.truncate]] like every other iterative op
-    * here. Returns `(node, label)`.
-    *
-    * BROADCAST THRESHOLD — the [[pageRank]] `broadcastRanks` contract:
-    * with `broadcastLabels = true` (default) the O(V) label frame is
-    * force-broadcast each sweep, the join probes the cached adjacency in
-    * place, and BOTH aggregations reuse the cached `u`-partitioning
-    * (hash-on-`u` clusters `(u, label)` too) — ZERO O(E) exchanges per
-    * sweep, valid while V·16 bytes fits executor + driver memory. Past
-    * that, pass `broadcastLabels = false`: by edge symmetry the sweep is
-    * rewritten to join on the CACHED key `u` (labels shuffle into place,
-    * the O(E) side never re-exchanges) and aggregate messages at `v` —
-    * the one O(E) message exchange per sweep that is the Pregel floor,
-    * identical output (each direction of an edge delivers the same
-    * neighbor label either way; spec-asserted). */
+    * Cost model: sweeps are [[graft.core.Superstep]] rounds — after one
+    * shuffle of the edge list into co-partitioned CSR blocks, each sweep
+    * is one Spark job with ONE message shuffle (every node's label to
+    * each neighbor) and per-partition state of O((V+E)/p) longs; the
+    * receiving side sorts each node's incoming labels and takes the mode.
+    * Nothing is broadcast. A sweep that changes no label is a fixpoint
+    * and ends the loop early. Node ids must be integral; returns
+    * `(node, label)` in the input's id type. */
   def labelPropagation(edges: DataFrame, src: String, dst: String,
-      rounds: Int, broadcastLabels: Boolean = true): DataFrame = {
+      rounds: Int): DataFrame = {
     require(rounds >= 1)
-    val e = canonicalEdges(edges, src, dst)
-    val adj = symmetrize(e, "a", "b")
-      .repartition(col("u")).cache()
-    var labels = adj.select(col("u").as("node")).distinct()
-      .withColumn("label", col("node"))
-      .transform(graft.core.Checkpoints.truncate)
-    for (_ <- 1 to rounds) {
-      val sweep =
-        if (broadcastLabels)
-          adj.join(broadcast(labels), adj("v") === labels("node"))
-            .groupBy(col("u"), col("label")).agg(count(lit(1)).as("__c"))
-            .groupBy(col("u"))
-            .agg(max(struct(col("__c"), (-col("label")).as("__nl"))).as("__m"))
-            .select(col("u").as("node"), (-col("__m.__nl")).as("label"))
-        else
-          adj.join(labels, adj("u") === labels("node"))
-            .groupBy(col("v"), col("label")).agg(count(lit(1)).as("__c"))
-            .groupBy(col("v"))
-            .agg(max(struct(col("__c"), (-col("label")).as("__nl"))).as("__m"))
-            .select(col("v").as("node"), (-col("__m.__nl")).as("label"))
-      labels = sweep.transform(graft.core.Checkpoints.truncate)
+    val idType = edges.select(least(col(src), col(dst))).schema.head.dataType
+    require(Seq(ByteType, ShortType, IntegerType, LongType).contains(idType),
+      s"labelPropagation needs integral node ids, got $idType")
+    Superstep.run(edges.select(col(src).cast("long"), col(dst).cast("long")),
+        undirected = true, simple = true, maxRounds = rounds)(_ => ModeLabel)
+      .frame(StructType(Seq(StructField("node", LongType, nullable = false),
+        StructField("label", LongType, nullable = true))))
+      .select(col("node").cast(idType).as("node"), col("label").cast(idType).as("label"))
+  }
+
+  /** Label propagation's sweep: adopt the most frequent neighbor label,
+    * ties to the smallest. */
+  private object ModeLabel extends Superstep.Program {
+    def init(id: Long): Long = id
+    def message(label: Long, outDegree: Int): Long = label
+    def update(label: Long, msgs: Array[Long], from: Int, until: Int): Long = {
+      java.util.Arrays.sort(msgs, from, until)
+      var best = label
+      var bestCount = 0
+      var i = from
+      while (i < until) {
+        var j = i + 1
+        while (j < until && msgs(j) == msgs(i)) j += 1
+        if (j - i > bestCount) { best = msgs(i); bestCount = j - i }
+        i = j
+      }
+      best
     }
-    adj.unpersist()
-    labels
   }
 
   /** Personalized PageRank from a single `source` node — the
@@ -324,8 +284,7 @@ object Graph {
     * `dampingPct = 100` case (restart base 0) stays anchored instead of
     * decaying to an empty frame.
     *
-    * BROADCAST THRESHOLD — same contract as [[pageRank]]'s
-    * `broadcastRanks`: with `broadcastFrontier = true` (default) the
+    * BROADCAST THRESHOLD: with `broadcastFrontier = true` (default) the
     * nonzero-rank frontier is force-broadcast each iteration. The
     * scaladoc bound — the k-hop neighborhood — is O(V) by hop 3-4 on a
     * power-law graph, so at 100× scale a forced broadcast is a
@@ -378,10 +337,10 @@ object Graph {
     * list pre-partitioned on the SOURCE key (the O(E) side never
     * re-exchanges — only the frontier shuffles into place), one
     * distinct, one anti-join against the visited set; each round is
-    * lineage-truncated like [[pageRank]]'s, and the loop exits early on
-    * an empty frontier (the driver-side count is the standard Pregel
-    * termination probe, O(1) rows). `q_bfs_hops` checks the result
-    * against a DuckDB recursive-CTE min-distance twin. */
+    * lineage-truncated by [[graft.core.Checkpoints.truncate]], and the
+    * loop exits early on an empty frontier (the driver-side count is the
+    * standard Pregel termination probe, O(1) rows). `q_bfs_hops` checks
+    * the result against a DuckDB recursive-CTE min-distance twin. */
   def bfsHops(edges: DataFrame, src: String, dst: String, source: Long,
       maxHops: Int): DataFrame = {
     require(maxHops >= 0)
@@ -829,26 +788,26 @@ object Graph {
     *
     * Scale shape: the O(E) edge frame is cached once, pre-partitioned on
     * the side each aggregation groups by; per iteration the O(N) score
-    * frame broadcasts into it (scores are ≤ |nodes| rows — the same
-    * broadcast-threshold reasoning as [[pageRank]]'s scaladoc), the
-    * normalizer is a one-row aggregate, and lineage truncates per round.
+    * frame broadcasts into it (scores are ≤ |nodes| rows, ~16 bytes a
+    * node, so the hint holds while that frame fits executor and driver
+    * memory), the normalizer is a one-row aggregate, and lineage
+    * truncates per round.
     * Nodes with no in-edges (resp. out-edges) hold authority (resp. hub)
     * score 0, matching the algebra.
     *
-    * `broadcastScores = false` is the beyond-the-threshold fallback (the
-    * [[pageRank]] Pregel-twin discipline): the per-iteration score joins
-    * drop the broadcast hint and become ordinary keyed joins — the O(N)
-    * score frame shuffles on its node key instead of materializing on
+    * `broadcastScores = false` is the beyond-the-threshold fallback: the
+    * per-iteration score joins drop the broadcast hint and become ordinary
+    * keyed joins — the O(N) score frame shuffles on its node key instead
+    * of materializing on
     * every executor, so a graph whose score frame outgrows the broadcast
     * limit degrades to two exchanges per iteration instead of dying. */
   def hits(edges: DataFrame, src: String, dst: String, iters: Int = 3,
       scale: Long = 1000000000000L,
       broadcastScores: Boolean = true): DataFrame = {
     require(iters >= 1)
-    // Two cached copies pre-partitioned per aggregation side (the
-    // [[pageRank]] destination-partitioning discipline): on the broadcast
-    // path the auth pass streams the v-partitioned copy against the
-    // broadcast hub frame so its groupBy(v) runs with NO per-iteration
+    // Two cached copies pre-partitioned per aggregation side: on the
+    // broadcast path the auth pass streams the v-partitioned copy against
+    // the broadcast hub frame so its groupBy(v) runs with NO per-iteration
     // O(E) exchange, and the hub pass uses the u-partitioned copy the same
     // way — previously every half-iteration re-shuffled the full edge
     // list (6 O(E) exchanges at iters = 3). On the no-broadcast fallback

@@ -21,16 +21,33 @@ class CheckpointSpec extends SparkSpec {
       Graph.pageRank(edges, "src", "dst", iters = 5)
         .orderBy("node").collect().toSeq,
       Graph.kCorePeel(edges, "src", "dst", k = 3, rounds = 4)
+        .orderBy("node").collect().toSeq,
+      Graph.labelPropagation(edges, "src", "dst", rounds = 3)
         .orderBy("node").collect().toSeq)
     val local = all() // default path: localCheckpoint
     val dir = "/tmp/graft_ckpt_spec"
-    val (cc, pr, kc) = withConf(dir)(all())
-    assert((cc, pr, kc) === local, "reliable-checkpoint run must equal local run")
+    val reliable = withConf(dir)(all())
+    assert(reliable === local, "reliable-checkpoint run must equal local run")
     // the reliable path actually wrote RDD checkpoints into the conf dir
-    val files = new java.io.File(dir)
-    def count(f: java.io.File): Int =
-      if (f.isDirectory) f.listFiles().map(count).sum else 1
-    assert(files.exists && count(files) > 0, s"no checkpoint data under $dir")
+    assert(fileCount(new java.io.File(dir)) > 0, s"no checkpoint data under $dir")
+  }
+
+  private def fileCount(f: java.io.File): Int =
+    if (f.isDirectory) f.listFiles().map(fileCount).sum
+    else if (f.exists) 1 else 0
+
+  test("each superstep operator alone writes its rounds under the conf dir") {
+    import spark.implicits._
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L)).toDF("src", "dst")
+    val ops = Seq[(String, () => Any)](
+      "cc" -> (() => graft.dedup.Dedup.connectedComponents(edges, "src", "dst").collect()),
+      "pagerank" -> (() => Graph.pageRank(edges, "src", "dst", iters = 2).collect()),
+      "lpa" -> (() => Graph.labelPropagation(edges, "src", "dst", rounds = 2).collect()))
+    ops.foreach { case (name, op) =>
+      val dir = java.nio.file.Files.createTempDirectory(s"graft_ckpt_$name").toString
+      withConf(dir)(op())
+      assert(fileCount(new java.io.File(dir)) > 0, s"$name wrote no checkpoint data under $dir")
+    }
   }
 
   test("truncate cuts lineage in both modes (no growth across iterations)") {

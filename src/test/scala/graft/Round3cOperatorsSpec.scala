@@ -255,43 +255,33 @@ class Round3cOperatorsSpec extends SparkSpec {
     assert(total <= 1000000000000L && total > 900000000000L)
   }
 
-  test("pageRank forced no-broadcast: bit-identical ranks; degraded plan is co-partitioned") {
+  test("pageRank equals a driver-side integer reference at any partition count") {
     import spark.implicits._
     val und = (1 to 6).map(i => (0L, i.toLong)) ++ Seq((1L, 2L), (3L, 4L))
-    val sym = (und ++ und.map(_.swap)).toDF("s", "d")
-    val bc = Graph.pageRank(sym, "s", "d", iters = 3)
-      .orderBy("node").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    val nobc = Graph.pageRank(sym, "s", "d", iters = 3, broadcastRanks = false)
-      .orderBy("node").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    assert(bc === nobc) // integer arithmetic: identical under either plan
-    // plan shape of one no-broadcast iteration, constructed exactly as
-    // pageRank builds it: the cached u-partitioned edge side must NOT
-    // re-exchange — the only shuffle feeds the O(N) share frame
-    // -1 threshold simulates a rank frame past the broadcastable size —
-    // the situation broadcastRanks = false exists for
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val e = sym.select(col("s").cast("long").as("u"), col("d").cast("long").as("v"))
-      val eo = e.repartition(col("u")).persist()
-      eo.count()
-      val shares = e.groupBy(col("u").as("src")).agg(count(lit(1)).as("outdeg"))
-        .select(col("src"), lit(100L).as("share"))
-      val joined = eo.join(shares, eo("u") === shares("src"))
-        .select(col("v").as("node"), col("share").as("c"))
-      joined.collect()
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(!plan.contains("Broadcast"), s"expected no broadcast in forced plan:\n$plan")
-      assert(plan.contains("SortMergeJoin") || plan.contains("ShuffledHashJoin"))
-      // the REPARTITION_BY_COL exchange inside InMemoryRelation is the
-      // one-time cache build; per-iteration exchanges are ENSURE_REQUIREMENTS
-      val nExchanges = "ENSURE_REQUIREMENTS".r.findAllMatchIn(plan).size
-      assert(nExchanges == 1, s"expected exactly 1 runtime exchange (share side only):\n$plan")
-      eo.unpersist()
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", "true")
-      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    val edges = und ++ und.map(_.swap)
+    val sym = edges.toDF("s", "d")
+    // the update rule of the scaladoc, unrolled sequentially
+    val nodes = edges.flatMap(e => Seq(e._1, e._2)).distinct
+    val outdeg = edges.groupBy(_._1).map { case (u, es) => u -> es.size.toLong }
+    val init = 1000000000000L / nodes.size
+    val base = 15L * init / 100L
+    var ref = nodes.map(_ -> init).toMap
+    (1 to 3).foreach { _ =>
+      val cs = edges.groupBy(_._2).map { case (v, es) =>
+        v -> es.map(e => ref(e._1) / outdeg(e._1)).sum }
+      ref = nodes.map(v => v -> (base + 85L * cs.getOrElse(v, 0L) / 100L)).toMap
     }
+    val want = ref.toSeq.sorted
+    def ranks() = Graph.pageRank(sym, "s", "d", iters = 3)
+      .orderBy("node").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    assert(ranks() === want)
+    val parts = spark.conf.get("spark.sql.shuffle.partitions")
+    try {
+      Seq("1", "7").foreach { p =>
+        spark.conf.set("spark.sql.shuffle.partitions", p)
+        assert(ranks() === want, s"shuffle.partitions=$p")
+      }
+    } finally spark.conf.set("spark.sql.shuffle.partitions", parts)
   }
 
   test("clusterBest: representative is the highest-scoring member, ties to smallest id") {
