@@ -2,6 +2,7 @@ package graft.core
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.storage.StorageLevel
 
 /** Session-conf-driven lineage truncation for iterative operators
@@ -21,7 +22,8 @@ import org.apache.spark.storage.StorageLevel
   *
   * Both variants are EAGER (materialize now), which the call sites rely
   * on to unpersist upstream caches immediately after. [[materialize]] is
-  * the same switch for RDD-level state (the [[Superstep]] kernel). */
+  * the same switch for RDD-level state (the [[Superstep]] kernel), and
+  * [[leaf]] for round state that must plan with constant stats. */
 object Checkpoints {
 
   final val ConfKey = "spark.graft.checkpointDir"
@@ -45,6 +47,33 @@ object Checkpoints {
     if (reliable(spark)) rdd.persist(StorageLevel.MEMORY_AND_DISK).checkpoint()
     else rdd.localCheckpoint()
     spark.sparkContext.runJob(rdd, measure).sum
+  }
+
+  /** A round's state materialised by [[leaf]]: the frame reading it, and
+    * how many of its rows matched the leaf's predicate. */
+  final class Leaf private[Checkpoints] (val frame: DataFrame, val matching: Long,
+      rdd: RDD[InternalRow]) {
+    /** Drops the cache once no later round reads [[frame]]. */
+    def release(): Unit = { rdd.unpersist(false); () }
+  }
+
+  /** The fused materialise-and-count step of a DataFrame fixpoint: ONE job
+    * materialises `df`'s internal rows through [[materialize]] (so the
+    * conf's truncation applies) and counts the rows satisfying `pred`,
+    * which must read only fields valid on an [[InternalRow]]. The leaf is
+    * a `LogicalRDD` with CONSTANT default stats: a state frame that joins
+    * itself every round would otherwise inherit stats that multiply per
+    * round (see `Graph.minLabelFixpoint`). The price is the planner's view
+    * of the real size — a frame whose joins want a stats-justified
+    * broadcast should go through [[truncate]] instead. */
+  def leaf(df: DataFrame)(pred: InternalRow => Boolean): Leaf = {
+    // the scan reuses one mutable row, so the cached rows are copies
+    val rdd = df.queryExecution.toRdd.map(_.copy())
+    val matching =
+      try materialize(df.sparkSession, rdd)(_.foldLeft(0L)((n, r) => if (pred(r)) n + 1 else n))
+      catch { case t: Throwable => rdd.unpersist(false); throw t }
+    new Leaf(org.apache.spark.sql.graft.Bridge.internalCreateDataFrame(
+      df.sparkSession, rdd, df.schema), matching, rdd)
   }
 
   /** Whether the conf asks for reliable checkpoints; points the context's

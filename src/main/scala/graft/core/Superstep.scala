@@ -56,10 +56,10 @@ object Superstep {
     /** Associative, commutative merge of two messages to one vertex,
       * applied on the sending side; `null` ships every message. */
     def combiner: (Long, Long) => Long = null
-    /** New state of a vertex from its old state and the messages
+    /** New state of vertex `id` from its old state and the messages
       * `msgs(from until until)` it received (possibly none). May reorder
       * that slice. */
-    def update(value: Long, msgs: Array[Long], from: Int, until: Int): Long
+    def update(id: Long, value: Long, msgs: Array[Long], from: Int, until: Int): Long
   }
 
   /** One partition's share of the graph (see the LAYOUT note above). */
@@ -253,7 +253,7 @@ object Superstep {
     var nChanged = 0L
     i = 0
     while (i < n) {
-      value(i) = prog.update(s.value(i), msgs, start(i), start(i + 1))
+      value(i) = prog.update(b.ids(i), s.value(i), msgs, start(i), start(i + 1))
       if (value(i) != s.value(i)) { changed.set(i); nChanged += 1 }
       i += 1
     }

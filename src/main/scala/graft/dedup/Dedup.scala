@@ -1082,7 +1082,7 @@ object Dedup {
     def message(label: Long, outDegree: Int): Long = label
     override def deltaOnly: Boolean = true
     override val combiner: (Long, Long) => Long = math.min(_: Long, _: Long)
-    def update(label: Long, msgs: Array[Long], from: Int, until: Int): Long = {
+    def update(id: Long, label: Long, msgs: Array[Long], from: Int, until: Int): Long = {
       var m = label
       var i = from
       while (i < until) { if (msgs(i) < m) m = msgs(i); i += 1 }

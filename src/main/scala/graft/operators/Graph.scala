@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.core.Superstep
+import graft.core.{Checkpoints, Superstep}
 
 /** Distributed graph statistics over an edge list — no graph library, just
   * joins shaped the way a 1000-executor cluster wants them.
@@ -104,7 +104,7 @@ object Graph {
           col("n_triangles") * 3.0 / col("n_wedges")).otherwise(lit(0.0))
           .as("global_clustering"))
       // one-row summary: materialize eagerly so the caches can be released
-      .transform(graft.core.Checkpoints.truncate)
+      .transform(Checkpoints.truncate)
     canon.unpersist(); oriented.unpersist()
     result
   }
@@ -137,27 +137,40 @@ object Graph {
   def pageRank(edges: DataFrame, src: String, dst: String, iters: Int = 5,
       dampingPct: Int = 85, scale: Long = 1000000000000L): DataFrame = {
     require(iters >= 1 && dampingPct >= 0 && dampingPct <= 100)
-    val run = Superstep.run(
-      edges.select(col(src).cast("long"), col(dst).cast("long")),
+    val run = Superstep.run(longEdges(edges, src, dst),
       undirected = false, simple = false, maxRounds = iters) { n =>
       require(n > 0, "empty graph")
-      new RankProgram(scale / n, dampingPct)
+      new RankProgram(scale / n, dampingPct, source = None)
     }
-    run.frame(StructType(Seq(StructField("node", LongType, nullable = false),
-      StructField("rank", LongType, nullable = false))))
+    run.frame(stateSchema("rank"))
   }
 
-  private final class RankProgram(initRank: Long, dampingPct: Int)
+  /** `(src, dst)` as the two long columns [[graft.core.Superstep]] reads. */
+  private def longEdges(edges: DataFrame, src: String, dst: String): DataFrame =
+    edges.select(col(src).cast("long"), col(dst).cast("long"))
+
+  /** Superstep output: `(node, <value>)`, both non-null longs. */
+  private def stateSchema(value: String): StructType =
+    StructType(Seq(StructField("node", LongType, nullable = false),
+      StructField(value, LongType, nullable = false)))
+
+  /** Integer PageRank's round: `base + dampingPct · Σ shares // 100`, each
+    * share `rank // outDegree`. With a `source`, the initial mass and the
+    * restart base belong to that vertex alone (personalized PageRank). */
+  private final class RankProgram(initRank: Long, dampingPct: Int, source: Option[Long])
       extends Superstep.Program {
     private val base = (100L - dampingPct) * initRank / 100L
-    def init(id: Long): Long = initRank
+    private val everywhere = source.isEmpty
+    private val at = source.getOrElse(0L)
+    private def mass(id: Long, m: Long): Long = if (everywhere || id == at) m else 0L
+    def init(id: Long): Long = mass(id, initRank)
     def message(rank: Long, outDegree: Int): Long = rank / outDegree
     override val combiner: (Long, Long) => Long = Math.addExact(_: Long, _: Long)
-    def update(rank: Long, msgs: Array[Long], from: Int, until: Int): Long = {
+    def update(id: Long, rank: Long, msgs: Array[Long], from: Int, until: Int): Long = {
       var cs = 0L
       var i = from
       while (i < until) { cs = Math.addExact(cs, msgs(i)); i += 1 }
-      Math.addExact(base, Math.multiplyExact(dampingPct.toLong, cs) / 100L)
+      Math.addExact(mass(id, base), Math.multiplyExact(dampingPct.toLong, cs) / 100L)
     }
   }
 
@@ -170,13 +183,13 @@ object Graph {
     * unrolls the SAME round count, so both engines agree converged or
     * not). Per round: one degree aggregation + two semi-joins on a
     * monotonically shrinking edge frame; each round's frame is
-    * lineage-truncated by [[graft.core.Checkpoints.truncate]] so the plan
+    * lineage-truncated by [[Checkpoints.truncate]] so the plan
     * doesn't grow with rounds.
     *
     * EARLY EXIT: peeling only ever removes edges, so an unchanged edge
     * count after a sweep IS the fixpoint — every surviving node already
-    * has degree ≥ k. The O(1)-row driver probe (the same Pregel
-    * termination shape as [[bfsHops]]') stops the loop there; the count
+    * has degree ≥ k. The O(1)-row driver probe (the Pregel termination
+    * shape) stops the loop there; the count
     * scans the round's eagerly-truncated blocks, not recomputed lineage.
     * A truncated (`rounds` too small) run remains deterministic for the
     * oracle: the SQL twin unrolls the same round count, and once both
@@ -184,12 +197,12 @@ object Graph {
   def kCorePeel(edges: DataFrame, src: String, dst: String, k: Int,
       rounds: Int): DataFrame = {
     require(k >= 1 && rounds >= 1)
-    // (the EagerLeaf fused materialize+count was tried in this loop and
-    // MEASURED SLOWER: the constant-stat leaf hides the shrinking edge
-    // frame's real size from the planner, flipping the keep semi-joins
-    // off their stats-justified broadcast — localCheckpoint's computed
+    // (the fused materialize+count of a constant-stat Checkpoints.leaf
+    // was tried in this loop and MEASURED SLOWER: the leaf hides the
+    // shrinking edge frame's real size from the planner, flipping the keep
+    // semi-joins off their stats-justified broadcast — truncate's computed
     // stats are the size-adaptive shape here. Reverted.)
-    var e = canonicalEdges(edges, src, dst).transform(graft.core.Checkpoints.truncate)
+    var e = canonicalEdges(edges, src, dst).transform(Checkpoints.truncate)
     var prevEdges = e.count()
     var round = 0
     var converged = prevEdges == 0
@@ -199,7 +212,7 @@ object Graph {
       e = e.join(keep.withColumnRenamed("node", "a"), Seq("a"), "left_semi")
         .join(keep.withColumnRenamed("node", "b"), Seq("b"), "left_semi")
         .select("a", "b")
-        .transform(graft.core.Checkpoints.truncate)
+        .transform(Checkpoints.truncate)
       val nEdges = e.count()
       converged = nEdges == prevEdges
       prevEdges = nEdges
@@ -235,7 +248,7 @@ object Graph {
     val idType = edges.select(least(col(src), col(dst))).schema.head.dataType
     require(Seq(ByteType, ShortType, IntegerType, LongType).contains(idType),
       s"labelPropagation needs integral node ids, got $idType")
-    Superstep.run(edges.select(col(src).cast("long"), col(dst).cast("long")),
+    Superstep.run(longEdges(edges, src, dst),
         undirected = true, simple = true, maxRounds = rounds)(_ => ModeLabel)
       .frame(StructType(Seq(StructField("node", LongType, nullable = false),
         StructField("label", LongType, nullable = true))))
@@ -247,7 +260,7 @@ object Graph {
   private object ModeLabel extends Superstep.Program {
     def init(id: Long): Long = id
     def message(label: Long, outDegree: Int): Long = label
-    def update(label: Long, msgs: Array[Long], from: Int, until: Int): Long = {
+    def update(id: Long, label: Long, msgs: Array[Long], from: Int, until: Int): Long = {
       java.util.Arrays.sort(msgs, from, until)
       var best = label
       var bestCount = 0
@@ -267,115 +280,78 @@ object Graph {
     * recommendation / related-item queries. Same INTEGER-EXACT algebra
     * as [[pageRank]] (scaled longs, floor-div shares, so results are
     * bit-stable under any partitioning and the oracle unrolls the exact
-    * iterations in SQL): rank(source) gets the full restart mass
-    * `(100-dampingPct)% · scale` each round, everything else only
-    * propagated mass.
+    * iterations in SQL): `source` starts with the full mass `scale` and
+    * gets the restart mass `(100-dampingPct)% · scale` each round,
+    * everything else only propagated mass. Duplicate edges and self-loops
+    * count with their multiplicity; rows with a null endpoint are dropped.
     *
-    * Scale shape: the rank frontier is SPARSE — nodes keep exact rank 0
-    * until a walk reaches them, and integer floor-div keeps far nodes at
-    * exact 0 — so each iteration joins only the nonzero-rank frontier
-    * (broadcast; bounded by the k-hop neighborhood) against edges cached
-    * pre-partitioned on the source key. The zero-rank filter is EXACT
-    * sparsity, not an approximation: dropped nodes contribute
-    * `0 div od = 0`. A one-row zero contribution for `source` flows
-    * through the same aggregation so the restart mass survives even when
-    * no walk returns to the source; the source row is additionally kept
-    * through the sparsity filter unconditionally, so even the degenerate
-    * `dampingPct = 100` case (restart base 0) stays anchored instead of
-    * decaying to an empty frame.
-    *
-    * BROADCAST THRESHOLD: with `broadcastFrontier = true` (default) the
-    * nonzero-rank frontier is force-broadcast each iteration. The
-    * scaladoc bound — the k-hop neighborhood — is O(V) by hop 3-4 on a
-    * power-law graph, so at 100× scale a forced broadcast is a
-    * driver/executor OOM, not a slowdown. For such graphs pass
-    * `broadcastFrontier = false`: edges stay cached pre-partitioned on
-    * the SOURCE key, the share join is co-partitioned (the O(E) side
-    * never re-exchanges — spec-asserted on the forced plan; only the
-    * O(F) frontier shuffles into place), and each iteration costs that
-    * one O(F) exchange plus the O(E) contribution shuffle — the Pregel
-    * superstep shape, linear and OOM-free. */
+    * Cost model: iterations are [[graft.core.Superstep]] rounds — one
+    * Spark job per round with ONE message shuffle (per-source shares,
+    * pre-summed per destination on the sending side) and per-partition
+    * state of O((V+E)/p) longs; nothing is broadcast. Far nodes keep
+    * exact rank 0 (integer floor-div), and only nonzero ranks are
+    * returned — plus the source, even at rank 0 (`dampingPct = 100`) or
+    * outside the graph (where it keeps the restart mass). Sums that would
+    * overflow a long fail with an `ArithmeticException`, never wrap. */
   def personalizedPageRank(edges: DataFrame, src: String, dst: String,
       source: Long, iters: Int = 4, dampingPct: Int = 85,
-      scale: Long = 1000000000000L,
-      broadcastFrontier: Boolean = true): DataFrame = {
+      scale: Long = 1000000000000L): DataFrame = {
     require(iters >= 1 && dampingPct >= 0 && dampingPct <= 100)
     val spark = edges.sparkSession
     import spark.implicits._
-    val e = edges.filter(col(src).isNotNull && col(dst).isNotNull)
-      .select(col(src).cast("long").as("u"), col(dst).cast("long").as("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val out = e.groupBy(col("u").as("srcn")).agg(count(lit(1)).as("outdeg"))
-      .transform(graft.core.Checkpoints.truncate)
-    val eo = e.repartition(col("u"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val base = (100L - dampingPct) * scale / 100L
-    val srcZero = Seq((source, 0L)).toDF("node", "c")
-    var ranks = Seq((source, scale)).toDF("node", "rank")
-    (1 to iters).foreach { _ =>
-      val shares = ranks.join(out, ranks("node") === out("srcn"))
-        .select(col("srcn"), expr("rank div outdeg").as("share"))
-      val sharesSide = if (broadcastFrontier) broadcast(shares) else shares
-      val contribs = eo.join(sharesSide, eo("u") === shares("srcn"))
-        .select(col("v").as("node"), col("share").as("c"))
-        .unionByName(srcZero)
-      ranks = contribs.groupBy("node").agg(sum("c").as("cs"))
-        .select(col("node"),
-          (when(col("node") === source, lit(base)).otherwise(lit(0L)) +
-            expr(s"($dampingPct * cs) div 100")).as("rank"))
-        .filter(col("rank") =!= 0L || col("node") === lit(source))
-        .transform(graft.core.Checkpoints.truncate)
-    }
-    e.unpersist(); eo.unpersist()
-    ranks
+    val ranks = Superstep.run(longEdges(edges, src, dst),
+        undirected = false, simple = false, maxRounds = iters)(
+        _ => new RankProgram(scale, dampingPct, Some(source)))
+      .frame(stateSchema("rank"))
+      .filter(col("rank") =!= 0L || col("node") === source)
+    // one job over the cached state: a source outside the graph is no
+    // vertex, yet keeps its restart mass
+    if (ranks.queryExecution.toRdd.filter(_.getLong(0) == source).count() > 0) ranks
+    else ranks.unionByName(Seq((source, (100L - dampingPct) * scale / 100L)).toDF("node", "rank"))
   }
 
   /** Level-synchronous single-source BFS: `(node, hop)` for every node
     * reachable from `source` within `maxHops` (min-hop distance — level
     * order IS minimality, so the result is deterministic with no
-    * tie-breaking). Per hop: the O(F)-row frontier joins the cached edge
-    * list pre-partitioned on the SOURCE key (the O(E) side never
-    * re-exchanges — only the frontier shuffles into place), one
-    * distinct, one anti-join against the visited set; each round is
-    * lineage-truncated by [[graft.core.Checkpoints.truncate]], and the
-    * loop exits early on an empty frontier (the driver-side count is the
-    * standard Pregel termination probe, O(1) rows). `q_bfs_hops` checks
+    * tie-breaking). `source` itself is hop 0, even outside the graph or
+    * at `maxHops = 0`; `hop` is an int.
+    *
+    * Cost model: hops are [[graft.core.Superstep]] rounds — one Spark job
+    * per hop with ONE message shuffle (hop + 1 from each node reached in
+    * the previous hop, pre-combined by min per destination) and
+    * per-partition state of O((V+E)/p) longs; nothing is broadcast. A hop
+    * that reaches no new node ends the loop early. `q_bfs_hops` checks
     * the result against a DuckDB recursive-CTE min-distance twin. */
   def bfsHops(edges: DataFrame, src: String, dst: String, source: Long,
       maxHops: Int): DataFrame = {
     require(maxHops >= 0)
     val spark = edges.sparkSession
     import spark.implicits._
-    val e = edges.filter(col(src).isNotNull && col(dst).isNotNull)
-      .select(col(src).cast("long").as("u"), col(dst).cast("long").as("v"))
-      .distinct()
-      .repartition(col("u"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var visited = Seq((source, 0)).toDF("node", "hop")
-    var frontier = visited
-    var hop = 0
-    var frontierSize = 1L
-    while (hop < maxHops && frontierSize > 0) {
-      hop += 1
-      val next = e.join(frontier.select(col("node").as("u")), Seq("u"))
-        .select(col("v").as("node")).distinct()
-        .join(visited.select("node"), Seq("node"), "left_anti")
-        .withColumn("hop", lit(hop))
-        .transform(graft.core.Checkpoints.truncate)
-      frontierSize = next.count()
-      // `visited` stays a UNION of the ≤ maxHops truncated hop leaves:
-      // the anti-join reads the cached leaves in place, their computed
-      // stats keep the planner's join choices size-adaptive, and the old
-      // shape's third job re-materializing all O(V) visited rows every
-      // hop is gone. (The EagerLeaf fused-count variant was tried here
-      // and MEASURED SLOWER: its constant-stat leaf forces the visited
-      // anti-join to plan as if O(V) were huge, losing the broadcast the
-      // real stats justify — task-sums rose ~45%. Reverted.)
-      visited = visited.unionByName(next)
-      frontier = next
+    val origin = Seq((source, 0)).toDF("node", "hop")
+    if (maxHops == 0) return origin
+    Superstep.run(longEdges(edges, src, dst),
+        undirected = false, simple = true, maxRounds = maxHops)(_ => new HopProgram(source))
+      .frame(stateSchema("hop"))
+      .filter(col("hop") =!= Long.MaxValue && col("node") =!= source)
+      .select(col("node"), col("hop").cast("int").as("hop"))
+      .unionByName(origin)
+  }
+
+  /** BFS's round: a node's hop is the least of its own and its
+    * in-neighbors' hops + 1; unreached nodes hold `Long.MaxValue`, which
+    * their messages keep (no wrap). */
+  private final class HopProgram(source: Long) extends Superstep.Program {
+    def init(id: Long): Long = if (id == source) 0L else Long.MaxValue
+    def message(hop: Long, outDegree: Int): Long =
+      if (hop == Long.MaxValue) hop else hop + 1
+    override def deltaOnly: Boolean = true
+    override val combiner: (Long, Long) => Long = math.min(_: Long, _: Long)
+    def update(id: Long, hop: Long, msgs: Array[Long], from: Int, until: Int): Long = {
+      var m = hop
+      var i = from
+      while (i < until) { if (msgs(i) < m) m = msgs(i); i += 1 }
+      m
     }
-    e.unpersist()
-    visited
   }
 
   /** Harmonic centrality from a pinned seed set, via MULTI-SOURCE
@@ -388,9 +364,10 @@ object Graph {
     * `h(v) = Σ_{seeds s ≠ v} 1 / d(s, v)` (unreachable seeds contribute
     * 0 — the property harmonic centrality has and closeness lacks).
     *
-    * Scale shape mirrors [[bfsHops]]: edges cached pre-partitioned on the
-    * source key, O(F) frontier shuffles into place, O(1)-row driver
-    * termination probe, lineage truncated per round. Returns the top-`k`
+    * Scale shape: edges cached pre-partitioned on the source key, the O(F)
+    * frontier shuffles into place, and each hop's merged state is one
+    * [[graft.core.Checkpoints.leaf]] whose materialising job also counts
+    * the next frontier (the O(1)-row termination probe). Returns the top-`k`
     * nodes: `(node, n_seeds, harmonic)`, ranked `(harmonic desc, node)` on
     * the 6-dp-rounded sum so the cut is engine-reproducible. */
   def harmonicCentrality(edges: DataFrame, src: String, dst: String,
@@ -418,19 +395,16 @@ object Graph {
         .groupBy(col("v").as("node"))
         .agg(expr("bit_or(fm)").as("pm"))
       // ONE fused job materializes the hop's merged state leaf AND counts
-      // the new-bit frontier rows for the termination probe (EagerLeaf —
-      // the fixpoint pattern; the unfused shape paid a localCheckpoint
-      // job + a frontier count job per hop). Every hop's leaf stays
-      // cached until the final contribution aggregate consumes it — the
-      // same lifetime the previous localCheckpoint blocks had.
-      val mergedLeaf = graft.core.EagerLeaf.cacheCount(
+      // the new-bit frontier rows for the termination probe. Every hop's
+      // leaf stays cached until the final contribution aggregate consumes
+      // it.
+      val mergedLeaf = Checkpoints.leaf(
         visited.join(prop, Seq("node"), "full_outer")
           .select(col("node"),
             coalesce(col("mask"), lit(0L)).as("old"),
             coalesce(col("pm"), lit(0L)).as("pm"))
-          .withColumn("nw", expr("pm & ~old")),
-        r => r.getLong(3) != 0L)
-      val merged = mergedLeaf.leaf
+          .withColumn("nw", expr("pm & ~old")))(_.getLong(3) != 0L)
+      val merged = mergedLeaf.frame
       contribs += merged.filter(col("nw") =!= 0L)
         .select(col("node"),
           (expr("bit_count(nw)").cast("double") / hop).as("inv"),
@@ -610,7 +584,7 @@ object Graph {
         / (lit(4.0) * col("n_edges").cast("double") * col("n_edges").cast("double")))
         .as("modularity"))
     // eager one-row truncation so canon can be released immediately
-    val res = out.transform(graft.core.Checkpoints.truncate)
+    val res = out.transform(Checkpoints.truncate)
     canon.unpersist()
     res
   }
@@ -734,12 +708,13 @@ object Graph {
     require(k >= 3, "k-truss needs k >= 3")
     val spark = edges.sparkSession
     import spark.implicits._
-    // (the EagerLeaf fused materialize+count was tried in this loop and
-    // MEASURED SLOWER — same stats reasoning as kCorePeel. Reverted.)
+    // (the fused materialize+count of a constant-stat Checkpoints.leaf was
+    // tried in this loop and MEASURED SLOWER — same stats reasoning as
+    // kCorePeel. Reverted.)
     var e = edges
       .select(col(srcCol).cast("long").as("a"), col(dstCol).cast("long").as("b"))
       .distinct()
-      .transform(graft.core.Checkpoints.truncate)
+      .transform(Checkpoints.truncate)
     var nEdges = e.count()
     // rank once on the initial graph (a total order stays acyclic on every
     // peeled subgraph) and keep it cached across rounds
@@ -753,7 +728,7 @@ object Graph {
         .groupBy("a", "b").agg(count(lit(1)).as("support"))
       val next = e.join(support, Seq("a", "b"))
         .filter(col("support") >= k - 2)
-        .transform(graft.core.Checkpoints.truncate)
+        .transform(Checkpoints.truncate)
       val nNext = next.count()
       converged = nNext == nEdges
       e = next.select(col("a"), col("b"))
@@ -768,7 +743,7 @@ object Graph {
         // so the rank cache can be released before returning
         triangleEdgeIncidence(e, Some(ranked), broadcastAdjacency)
           .groupBy("a", "b").agg(count(lit(1)).as("support"))
-          .transform(graft.core.Checkpoints.truncate)
+          .transform(Checkpoints.truncate)
     ranked.unpersist()
     out
   }
@@ -836,7 +811,7 @@ object Graph {
         .select(col("node"),
           expr(s"cast(cast(s as decimal(38,0)) * $scale as decimal(38,0)) div t")
             .as("s"))
-        .transform(graft.core.Checkpoints.truncate)
+        .transform(Checkpoints.truncate)
     }
     val maybeBc = (d: DataFrame) => if (broadcastScores) broadcast(d) else d
     var hub = hubs.select(col("u").as("node"), lit(scale / nHubs).as("s"))
@@ -852,7 +827,7 @@ object Graph {
     val out = hub.select(lit("hub").as("role"), col("node"), col("s").as("score"))
       .unionByName(auth.select(lit("authority").as("role"), col("node"),
         col("s").as("score")))
-      .transform(graft.core.Checkpoints.truncate) // eager: safe to unpersist
+      .transform(Checkpoints.truncate) // eager: safe to unpersist
     ev.unpersist(); eu.unpersist(); hubs.unpersist()
     out
   }
@@ -866,83 +841,61 @@ object Graph {
     * minimum enters against the gradient and must crawl hop by hop).
     *
     * ITERATION COST IS THE DESIGN POINT, not iteration count: each
-    * iteration truncates through an RDD-CACHED LEAF with constant default
-    * stats instead of `localCheckpoint`. A checkpointed plan inherits its
-    * COMPUTED stats, and `visitJoin` stats are the PRODUCT of the
-    * children's — with the state appearing in 3 join legs per iteration,
-    * inherited stats grow as digits×3 per iteration and by iteration ~15
-    * the driver burns minutes in BigInteger Karatsuba inside the stats
-    * visitor (measured: a 20-node cycle took >17 min before this fix,
-    * 100 iterations of constant-stat leaves take seconds). The constant
-    * leaf keeps every iteration's stats pass O(1). `adj` should be cached
-    * by the caller, pre-partitioned on `fromCol`. */
-  // dev-only iteration trace (stderr), enabled by SPARK_GRAFT_PROBE_GRAPH
-  private val probeIters = sys.env.contains("SPARK_GRAFT_PROBE_GRAPH")
-
+    * iteration truncates through a [[graft.core.Checkpoints.leaf]], whose
+    * stats are CONSTANT defaults, instead of [[Checkpoints.truncate]]. A
+    * truncated plan inherits its COMPUTED stats, and `visitJoin` stats are
+    * the PRODUCT of the children's — with the state appearing in 3 join
+    * legs per iteration, inherited stats grow as digits×3 per iteration
+    * and by iteration ~15 the driver burns minutes in BigInteger Karatsuba
+    * inside the stats visitor (measured: a 20-node cycle took >17 min
+    * before this fix, 100 iterations of constant-stat leaves take
+    * seconds). The constant leaf keeps every iteration's stats pass O(1),
+    * and its materialising job also counts the changed labels. `adj`
+    * should be cached by the caller, pre-partitioned on `fromCol`. Fails
+    * with "did not converge" after `maxIters` iterations; no leaf outlives
+    * the call on any exit path. */
   private def minLabelFixpoint(init: DataFrame, adj: DataFrame,
       fromCol: String, toCol: String, maxIters: Int): DataFrame = {
-    val spark = init.sparkSession
     var f = init // (node, label)
-    var prevRdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow] = null
+    var leaf: Checkpoints.Leaf = null
     var changed = 1L
     var it = 0
-    val t0 = System.nanoTime()
-    while (changed > 0 && it < maxIters) {
-      it += 1
-      // FUSED MESSAGES: the three candidate sources — one-hop propagation,
-      // the node's own label, and the label's label (path composition) —
-      // union into ONE min-aggregate, with the old label carried through
-      // the same aggregate on the self message (exactly one per node).
-      // The previous shape aggregated the one-hop messages alone and then
-      // re-joined the state twice (f ⟕ prop, f ⋈ f on label) to build the
-      // identical least(); min over the message union IS that least(), so
-      // the two merge joins (and their exchanges) are gone.
-      val oneHop = adj
-        .join(f.select(col("node").as(fromCol), col("label").as("pl")), Seq(fromCol))
-        .select(col(toCol).as("node"), col("pl"), lit(false).as("self"))
-      val selfMsg = f.select(col("node"), col("label").as("pl"),
-        lit(true).as("self"))
-      val composed = f.select(col("node").as("__v"), col("label").as("__l"))
-        .join(f.select(col("node").as("__l"), col("label").as("pl")), Seq("__l"))
-        .select(col("__v").as("node"), col("pl"), lit(false).as("self"))
-      val merged = oneHop.unionByName(selfMsg).unionByName(composed)
-        .groupBy("node")
-        .agg(max(when(col("self"), col("pl"))).as("label"),
-          min(col("pl")).as("nl"))
-        // a message target outside the state set has no self message; the
-        // old left-join shape dropped such rows (callers never produce
-        // them — adj endpoints are always seeded in init)
-        .filter(col("label").isNotNull)
-        .select(col("node"), col("label"), col("nl"))
-      // cache the query's own INTERNAL rows (copied — the scan reuses one
-      // mutable UnsafeRow): the public .rdd/createDataFrame round trip
-      // decodes + re-encodes every state row once per iteration, per-row
-      // boxing that scales with the node count (guide §1.4's df.rdd cost)
-      val rdd = merged.queryExecution.toRdd.map(_.copy())
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // ONE job both materializes the cache (cutting SQL lineage AND stats
-      // inheritance) and counts the changed labels — the previous
-      // count-then-filter-count shape paid a second scheduler round trip
-      // per iteration for the same cached rows
-      changed = rdd.mapPartitions { it =>
-        var c = 0L
-        it.foreach(r => if (r.getLong(2) < r.getLong(1)) c += 1)
-        Iterator.single(c)
-      }.fold(0L)(_ + _)
-      if (prevRdd != null) prevRdd.unpersist(false)
-      prevRdd = rdd
-      val mat = org.apache.spark.sql.graft.Bridge.internalCreateDataFrame(
-        spark, rdd, merged.schema)
-      f = mat.select(col("node"), col("nl").as("label"))
-      if (probeIters) System.err.println(
-        f"[graphprobe] minLabelFixpoint it=$it changed=$changed ${(System.nanoTime() - t0) / 1e9}%.2fs")
-    }
-    require(changed == 0, s"min-label fixpoint did not converge in $maxIters iters")
-    // copy the result out of the loop's RDD cache (cheap: constant-leaf
-    // stats), then release it — no cache outlives the call
-    val out = f.transform(graft.core.Checkpoints.truncate)
-    if (prevRdd != null) prevRdd.unpersist(false)
-    out
+    try {
+      while (changed > 0 && it < maxIters) {
+        it += 1
+        // FUSED MESSAGES: the three candidate sources — one-hop propagation,
+        // the node's own label, and the label's label (path composition) —
+        // union into ONE min-aggregate, with the old label carried through
+        // the same aggregate on the self message (exactly one per node).
+        // min over the message union IS least(own, one-hop, composed), so
+        // no merge join re-reads the state.
+        val oneHop = adj
+          .join(f.select(col("node").as(fromCol), col("label").as("pl")), Seq(fromCol))
+          .select(col(toCol).as("node"), col("pl"), lit(false).as("self"))
+        val selfMsg = f.select(col("node"), col("label").as("pl"),
+          lit(true).as("self"))
+        val composed = f.select(col("node").as("__v"), col("label").as("__l"))
+          .join(f.select(col("node").as("__l"), col("label").as("pl")), Seq("__l"))
+          .select(col("__v").as("node"), col("pl"), lit(false).as("self"))
+        val merged = oneHop.unionByName(selfMsg).unionByName(composed)
+          .groupBy("node")
+          .agg(max(when(col("self"), col("pl"))).as("label"),
+            min(col("pl")).as("nl"))
+          // a message target outside the state set has no self message
+          // (callers never produce them — adj endpoints are always seeded
+          // in init)
+          .filter(col("label").isNotNull)
+          .select(col("node"), col("label"), col("nl"))
+        val next = Checkpoints.leaf(merged)(r => r.getLong(2) < r.getLong(1))
+        if (leaf != null) leaf.release()
+        leaf = next
+        changed = next.matching
+        f = next.frame.select(col("node"), col("nl").as("label"))
+      }
+      require(changed == 0, s"min-label fixpoint did not converge in $maxIters iters")
+      // copy the result out of the leaf (cheap: constant-leaf stats)
+      f.transform(Checkpoints.truncate)
+    } finally if (leaf != null) leaf.release()
   }
 
   /** Strongly connected components of a DIRECTED graph, by forward +
@@ -982,11 +935,11 @@ object Graph {
       .select(col(src).cast("long").as("u"), col(dst).cast("long").as("v"))
       .filter(col("u") =!= col("v"))
       .distinct()
-      .transform(graft.core.Checkpoints.truncate)
+      .transform(Checkpoints.truncate)
     var active = e0.select(col("u").as("node"))
       .unionByName(e0.select(col("v").as("node")))
       .distinct()
-      .transform(graft.core.Checkpoints.truncate)
+      .transform(Checkpoints.truncate)
     var settled = Seq.empty[(Long, Long)].toDF("node", "scc_id")
     var remaining = active.count()
     var round = 0
@@ -998,46 +951,50 @@ object Graph {
         .select("u", "v")
         .repartition(col("u"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // FAST PATH: no edges between still-active nodes means every one of
-      // them is a singleton SCC — settle them all directly instead of
-      // paying two label fixpoints + the confirm joins over an empty edge
-      // relation (the common last round once the nontrivial components
-      // settled; the head(1) probe reads the just-persisted frame)
-      if (eAct.head(1).isEmpty) {
-        settled = settled.unionByName(active.withColumn("scc_id", col("node")))
-          .transform(graft.core.Checkpoints.truncate)
+      var eBack: DataFrame = null
+      try {
+        // FAST PATH: no edges between still-active nodes means every one of
+        // them is a singleton SCC — settle them all directly instead of
+        // paying two label fixpoints + the confirm joins over an empty edge
+        // relation (the common last round once the nontrivial components
+        // settled; the head(1) probe reads the just-persisted frame)
+        if (eAct.head(1).isEmpty) {
+          settled = settled.unionByName(active.withColumn("scc_id", col("node")))
+            .transform(Checkpoints.truncate)
+          remaining = 0L
+        } else {
+          // 1. forward: f(v) = min id reaching v
+          val f = minLabelFixpoint(active.withColumn("label", col("node")),
+            eAct, "u", "v", maxIters)
+          // 2. backward within color: reversed class-internal edges
+          val fU = f.select(col("node").as("u"), col("label").as("fu"))
+          val fV = f.select(col("node").as("v"), col("label").as("fv"))
+          eBack = eAct.join(fU, Seq("u")).join(fV, Seq("v"))
+            .filter(col("fu") === col("fv"))
+            // reverse: propagate b from edge head w back to tail v
+            .select(col("v").as("bu"), col("u").as("bv"))
+            .repartition(col("bu"))
+            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          val b = minLabelFixpoint(active.withColumn("label", col("node")),
+            eBack, "bu", "bv", maxIters)
+          // 3. settle where f = b
+          val confirmed = f.join(b.select(col("node"), col("label").as("blabel")),
+              Seq("node"))
+            .filter(col("label") === col("blabel"))
+            .select(col("node"), col("label").as("scc_id"))
+            .transform(Checkpoints.truncate)
+          settled = settled.unionByName(confirmed)
+            .transform(Checkpoints.truncate)
+          active = active.join(confirmed.select("node"), Seq("node"), "left_anti")
+            .transform(Checkpoints.truncate)
+          val nowRemaining = active.count()
+          require(nowRemaining < remaining,
+            s"SCC round $round settled nothing (${remaining} active)")
+          remaining = nowRemaining
+        }
+      } finally {
         eAct.unpersist()
-        remaining = 0L
-      } else {
-      // 1. forward: f(v) = min id reaching v
-      val f = minLabelFixpoint(active.withColumn("label", col("node")),
-        eAct, "u", "v", maxIters)
-      // 2. backward within color: reversed class-internal edges
-      val fU = f.select(col("node").as("u"), col("label").as("fu"))
-      val fV = f.select(col("node").as("v"), col("label").as("fv"))
-      val eBack = eAct.join(fU, Seq("u")).join(fV, Seq("v"))
-        .filter(col("fu") === col("fv"))
-        // reverse: propagate b from edge head w back to tail v
-        .select(col("v").as("bu"), col("u").as("bv"))
-        .repartition(col("bu"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val b = minLabelFixpoint(active.withColumn("label", col("node")),
-        eBack, "bu", "bv", maxIters)
-      // 3. settle where f = b
-      val confirmed = f.join(b.select(col("node"), col("label").as("blabel")),
-          Seq("node"))
-        .filter(col("label") === col("blabel"))
-        .select(col("node"), col("label").as("scc_id"))
-        .transform(graft.core.Checkpoints.truncate)
-      settled = settled.unionByName(confirmed)
-        .transform(graft.core.Checkpoints.truncate)
-      active = active.join(confirmed.select("node"), Seq("node"), "left_anti")
-        .transform(graft.core.Checkpoints.truncate)
-      eAct.unpersist(); eBack.unpersist()
-      val nowRemaining = active.count()
-      require(nowRemaining < remaining,
-        s"SCC round $round settled nothing (${remaining} active)")
-      remaining = nowRemaining
+        if (eBack != null) eBack.unpersist()
       }
     }
     require(remaining == 0, s"SCC did not settle all nodes in $maxRounds rounds")
@@ -1051,14 +1008,17 @@ object Graph {
     * a crawl graph, how many SCC "layers" a signal crosses end to end).
     *
     * Composition: [[stronglyConnectedComponents]] → map both edge ends to
-    * their `scc_id` → distinct cross-component edges → a longest-path
-    * fixpoint (`level(v) = max over in-edges of level(u)+1`; converges in
-    * DAG-depth iterations, each a key-partitioned join + max aggregate,
-    * truncated through the same constant-stat RDD leaves as the label
-    * fixpoints). One output row. */
+    * their `scc_id` → distinct cross-component edges → longest-path levels
+    * (`level(v) = max over in-edges of level(u)+1`, from 0) as
+    * [[graft.core.Superstep]] rounds: one Spark job per round with ONE
+    * message shuffle (level + 1 from the components whose level rose last
+    * round, pre-combined by max) and per-partition state of O((V+E)/p)
+    * longs. A DAG of depth D settles in D rounds and round D + 1 confirms
+    * it, so the depth must stay below `maxIters`; a deeper DAG fails
+    * descriptively. Components without a cross edge stay at level 0. One
+    * output row; no cache outlives the call on any exit path. */
   def sccCondensation(edges: DataFrame, src: String, dst: String,
       maxIters: Int = 100): DataFrame = {
-    val spark = edges.sparkSession
     val scc = stronglyConnectedComponents(edges, src, dst)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val e = edges.filter(col(src).isNotNull && col(dst).isNotNull)
@@ -1070,57 +1030,43 @@ object Graph {
       .select("cu", "cv").filter(col("cu") =!= col("cv")).distinct()
       .repartition(col("cu"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val comps = scc.select(col("scc_id").as("node")).distinct()
-    var lv = comps.withColumn("level", lit(0L))
-    var prevRdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow] = null
-    var changed = 1L
-    var it = 0
-    while (changed > 0 && it < maxIters) {
-      it += 1
-      // fused messages (the minLabelFixpoint shape, max instead of min):
-      // one-hop level+1 messages ∪ self messages → ONE max-aggregate that
-      // also carries the old level on the self message — no merge join
-      val oneHop = ce
-        .join(lv.select(col("node").as("cu"), col("level").as("pl")), Seq("cu"))
-        .select(col("cv").as("node"), (col("pl") + 1L).as("pl"),
-          lit(false).as("self"))
-      val selfMsg = lv.select(col("node"), col("level").as("pl"),
-        lit(true).as("self"))
-      val merged = oneHop.unionByName(selfMsg)
-        .groupBy("node")
-        .agg(max(when(col("self"), col("pl"))).as("level"),
-          max(col("pl")).as("nl"))
-        .filter(col("level").isNotNull)
-        .select(col("node"), col("level"), col("nl"))
-      // internal-row state cache per iteration (see minLabelFixpoint)
-      val rdd = merged.queryExecution.toRdd.map(_.copy())
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // one fused materialize+changed-count job per iteration (see
-      // minLabelFixpoint)
-      changed = rdd.mapPartitions { it =>
-        var c = 0L
-        it.foreach(r => if (r.getLong(2) > r.getLong(1)) c += 1)
-        Iterator.single(c)
-      }.fold(0L)(_ + _)
-      if (prevRdd != null) prevRdd.unpersist(false)
-      prevRdd = rdd
-      val mat = org.apache.spark.sql.graft.Bridge.internalCreateDataFrame(
-        spark, rdd, merged.schema)
-      lv = mat.select(col("node"), col("nl").as("level"))
+    var levels: Superstep.Result = null
+    try {
+      levels = Superstep.run(ce, undirected = false, simple = false,
+        maxRounds = maxIters)(_ => LongestPath)
+      // the components are SCCs, so their graph is a DAG: only its depth
+      // can outrun the rounds
+      require(levels.lastChanged == 0, s"condensation levels did not converge in " +
+        s"$maxIters rounds: the component DAG's depth exceeds ${maxIters - 1}")
+      val comps = scc.select(col("scc_id").as("node")).distinct()
+      val sources = comps
+        .join(ce.select(col("cv").as("node")).distinct(), Seq("node"), "left_anti")
+      comps.join(levels.frame(stateSchema("level")), Seq("node"), "left")
+        .agg(count(lit(1)).as("n_components"),
+          max(coalesce(col("level"), lit(0L))).as("max_level"))
+        .crossJoin(broadcast(ce.agg(count(lit(1)).as("n_dag_edges"))))
+        .crossJoin(broadcast(sources.agg(count(lit(1)).as("n_source_components"))))
+        .select("n_components", "n_dag_edges", "n_source_components", "max_level")
+        .transform(Checkpoints.truncate)
+    } finally {
+      if (levels != null) levels.release()
+      scc.unpersist(); ce.unpersist()
     }
-    require(changed == 0,
-      s"condensation level fixpoint did not converge in $maxIters iters — not a DAG?")
-    val sources = comps
-      .join(ce.select(col("cv").as("node")).distinct(), Seq("node"), "left_anti")
-    val out = lv.agg(count(lit(1)).as("n_components"),
-        max(col("level")).as("max_level"))
-      .crossJoin(broadcast(ce.agg(count(lit(1)).as("n_dag_edges"))))
-      .crossJoin(broadcast(sources.agg(count(lit(1)).as("n_source_components"))))
-      .select("n_components", "n_dag_edges", "n_source_components", "max_level")
-      .transform(graft.core.Checkpoints.truncate)
-    if (prevRdd != null) prevRdd.unpersist(false)
-    scc.unpersist(); ce.unpersist()
-    out
+  }
+
+  /** Condensation's round: a component's level is the greatest of its own
+    * and its in-neighbors' levels + 1. */
+  private object LongestPath extends Superstep.Program {
+    def init(id: Long): Long = 0L
+    def message(level: Long, outDegree: Int): Long = level + 1
+    override def deltaOnly: Boolean = true
+    override val combiner: (Long, Long) => Long = math.max(_: Long, _: Long)
+    def update(id: Long, level: Long, msgs: Array[Long], from: Int, until: Int): Long = {
+      var m = level
+      var i = from
+      while (i < until) { if (msgs(i) > m) m = msgs(i); i += 1 }
+      m
+    }
   }
 
   /** Seeded uniform random walks (the DeepWalk / node2vec(p=q=1) corpus
@@ -1155,7 +1101,7 @@ object Graph {
       .select(col("start"),
         explode(sequence(lit(1L), lit(walksPerNode.toLong))).as("walk"))
       .withColumn("node", col("start"))
-      .transform(graft.core.Checkpoints.truncate)
+      .transform(Checkpoints.truncate)
     var out = frontier.withColumn("step", lit(0L))
     for (t <- 1 to steps) {
       val h = conv(substring(md5(concat_ws(":", lit(seed), col("start"),
@@ -1170,7 +1116,7 @@ object Graph {
       // lineage grows two joins per hop — truncate only every few hops
       // (each truncation is a full materialization job)
       if (t % 4 == 0 && t < steps)
-        frontier = frontier.transform(graft.core.Checkpoints.truncate)
+        frontier = frontier.transform(Checkpoints.truncate)
       out = out.unionByName(frontier.withColumn("step", lit(t.toLong)))
     }
     adj.unpersist(); deg.unpersist()

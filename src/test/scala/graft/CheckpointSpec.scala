@@ -15,15 +15,18 @@ class CheckpointSpec extends SparkSpec {
     val rnd = new scala.util.Random(83)
     val edges = (0 until 600).map(_ => (rnd.nextInt(150).toLong, rnd.nextInt(150).toLong))
       .toDF("src", "dst")
-    def all() = (
-      graft.dedup.Dedup.connectedComponents(edges, "src", "dst")
-        .orderBy("node").collect().toSeq,
-      Graph.pageRank(edges, "src", "dst", iters = 5)
-        .orderBy("node").collect().toSeq,
-      Graph.kCorePeel(edges, "src", "dst", k = 3, rounds = 4)
-        .orderBy("node").collect().toSeq,
-      Graph.labelPropagation(edges, "src", "dst", rounds = 3)
-        .orderBy("node").collect().toSeq)
+    def all() = Seq(
+      graft.dedup.Dedup.connectedComponents(edges, "src", "dst").orderBy("node"),
+      Graph.pageRank(edges, "src", "dst", iters = 5).orderBy("node"),
+      Graph.kCorePeel(edges, "src", "dst", k = 3, rounds = 4).orderBy("node"),
+      Graph.labelPropagation(edges, "src", "dst", rounds = 3).orderBy("node"),
+      Graph.stronglyConnectedComponents(edges, "src", "dst").orderBy("node"),
+      Graph.sccCondensation(edges, "src", "dst"),
+      Graph.bfsHops(edges, "src", "dst", source = 0L, maxHops = 3).orderBy("node"),
+      Graph.personalizedPageRank(edges, "src", "dst", source = 0L, iters = 3)
+        .orderBy("node"),
+      Graph.harmonicCentrality(edges, "src", "dst", Seq(0L, 1L, 2L), maxHops = 3, k = 20))
+      .map(_.collect().toSeq)
     val local = all() // default path: localCheckpoint
     val dir = "/tmp/graft_ckpt_spec"
     val reliable = withConf(dir)(all())
@@ -36,18 +39,30 @@ class CheckpointSpec extends SparkSpec {
     if (f.isDirectory) f.listFiles().map(fileCount).sum
     else if (f.exists) 1 else 0
 
+  /** Runs `op` alone under a fresh conf dir and asserts it wrote there. */
+  private def writesUnderConf(name: String)(op: => Any): Unit = {
+    val dir = java.nio.file.Files.createTempDirectory(s"graft_ckpt_$name").toString
+    withConf(dir)(op)
+    assert(fileCount(new java.io.File(dir)) > 0, s"$name wrote no checkpoint data under $dir")
+  }
+
   test("each superstep operator alone writes its rounds under the conf dir") {
     import spark.implicits._
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L)).toDF("src", "dst")
-    val ops = Seq[(String, () => Any)](
-      "cc" -> (() => graft.dedup.Dedup.connectedComponents(edges, "src", "dst").collect()),
-      "pagerank" -> (() => Graph.pageRank(edges, "src", "dst", iters = 2).collect()),
-      "lpa" -> (() => Graph.labelPropagation(edges, "src", "dst", rounds = 2).collect()))
-    ops.foreach { case (name, op) =>
-      val dir = java.nio.file.Files.createTempDirectory(s"graft_ckpt_$name").toString
-      withConf(dir)(op())
-      assert(fileCount(new java.io.File(dir)) > 0, s"$name wrote no checkpoint data under $dir")
-    }
+    writesUnderConf("cc")(graft.dedup.Dedup.connectedComponents(edges, "src", "dst").collect())
+    writesUnderConf("pagerank")(Graph.pageRank(edges, "src", "dst", iters = 2).collect())
+    writesUnderConf("lpa")(Graph.labelPropagation(edges, "src", "dst", rounds = 2).collect())
+    writesUnderConf("bfs")(Graph.bfsHops(edges, "src", "dst", source = 1L, maxHops = 2).collect())
+    writesUnderConf("ppr")(
+      Graph.personalizedPageRank(edges, "src", "dst", source = 1L, iters = 2).collect())
+    writesUnderConf("condensation")(Graph.sccCondensation(edges, "src", "dst").collect())
+  }
+
+  test("harmonicCentrality alone writes its hop leaves under the conf dir") {
+    import spark.implicits._
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L)).toDF("src", "dst")
+    writesUnderConf("harmonic")(
+      Graph.harmonicCentrality(edges, "src", "dst", Seq(1L), maxHops = 2, k = 5).collect())
   }
 
   test("truncate cuts lineage in both modes (no growth across iterations)") {

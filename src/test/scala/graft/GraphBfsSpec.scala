@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.operators.Graph
 
 class GraphBfsSpec extends SparkSpec {
@@ -24,6 +23,10 @@ class GraphBfsSpec extends SparkSpec {
     val got = Graph.bfsHops(edges, "u", "v", source = 0L, maxHops = 2)
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     assert(got === Map(0L -> 0, 1L -> 1, 2L -> 2, 4L -> 2))
+    // maxHops = 0: the source alone
+    val none = Graph.bfsHops(edges, "u", "v", source = 0L, maxHops = 0)
+      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    assert(none === Map(0L -> 0))
     // cycle 0-1-2-0 added: node 2 must stay at hop 1 via the direct edge
     val cyc = edges.union(Seq((0L, 2L), (2L, 0L)).toDF("u", "v"))
     val got2 = Graph.bfsHops(cyc, "u", "v", source = 0L, maxHops = 10)
@@ -37,36 +40,39 @@ class GraphBfsSpec extends SparkSpec {
     assert(got === Map(42L -> 0))
   }
 
+  /** Personalized PageRank unrolled on the driver in the operator's
+    * scaled-long floor-div algebra: nonzero ranks plus the source. */
+  private def pprReference(edges: Seq[(Long, Long)], source: Long,
+      iters: Int): Map[Long, Long] = {
+    val scale = 1000000000000L
+    val damping = 85
+    val base = (100L - damping) * scale / 100L
+    val out = edges.groupBy(_._1).view.mapValues(_.size.toLong).toMap
+    var ref = Map(source -> scale)
+    (1 to iters).foreach { _ =>
+      val contribs = scala.collection.mutable.Map(source -> 0L)
+      edges.foreach { case (u, v) =>
+        ref.get(u).foreach(rank => contribs(v) = contribs.getOrElse(v, 0L) + rank / out(u))
+      }
+      ref = contribs.map { case (node, cs) =>
+        node -> ((if (node == source) base else 0L) + damping * cs / 100L)
+      }.filter { case (node, rank) => rank != 0L || node == source }.toMap
+    }
+    ref
+  }
+
+  private def ppr(df: org.apache.spark.sql.DataFrame, iters: Int): Map[Long, Long] =
+    Graph.personalizedPageRank(df, "u", "v", source = 0L, iters = iters)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
   test("personalizedPageRank equals an independent integer reference simulation") {
-    // random sparse digraph, symmetrized; reference = dense Map loop with
-    // the same scaled-long floor-div algebra
+    // random sparse digraph, symmetrized
     val rnd = new scala.util.Random(7)
     val raw = (0 until 120).map(_ => (rnd.nextInt(25).toLong, rnd.nextInt(25).toLong))
       .filter(p => p._1 != p._2).distinct
     val sym = (raw ++ raw.map(_.swap)).distinct
-    val df = sym.toDF("u", "v")
-
-    val scale = 1000000000000L
-    val damping = 85
-    val base = (100L - damping) * scale / 100L
-    val out = sym.groupBy(_._1).view.mapValues(_.size.toLong).toMap
-    var ref = Map(0L -> scale)
-    (1 to 4).foreach { _ =>
-      val contribs = scala.collection.mutable.Map(0L -> 0L)
-      ref.foreach { case (node, rank) =>
-        val share = rank / out(node) // every node in ref has out-edges here
-        sym.filter(_._1 == node).foreach { case (_, v) =>
-          contribs(v) = contribs.getOrElse(v, 0L) + share
-        }
-      }
-      ref = contribs.map { case (node, cs) =>
-        node -> ((if (node == 0L) base else 0L) + damping * cs / 100L)
-      }.filter(_._2 != 0L).toMap
-    }
-
-    val got = Graph.personalizedPageRank(df, "u", "v", source = 0L, iters = 4)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got === ref)
+    val got = ppr(sym.toDF("u", "v"), iters = 4)
+    assert(got === pprReference(sym, 0L, 4))
     // restart mass keeps the source ranked
     assert(got.contains(0L))
   }
@@ -77,17 +83,19 @@ class GraphBfsSpec extends SparkSpec {
     assert(got === Map(42L -> 150000000000L))
   }
 
-  test("personalizedPageRank forced no-broadcast: bit-identical ranks") {
+  test("personalizedPageRank equals the integer reference at 1 and 7 partitions") {
     val rnd = new scala.util.Random(11)
     val raw = (0 until 150).map(_ => (rnd.nextInt(30).toLong, rnd.nextInt(30).toLong))
       .filter(p => p._1 != p._2).distinct
-    val df = (raw ++ raw.map(_.swap)).distinct.toDF("u", "v")
-    val bc = Graph.personalizedPageRank(df, "u", "v", source = 0L, iters = 4)
-      .orderBy("node").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    val nobc = Graph.personalizedPageRank(df, "u", "v", source = 0L, iters = 4,
-      broadcastFrontier = false)
-      .orderBy("node").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    assert(bc === nobc) // integer arithmetic: identical under either plan
+    val sym = (raw ++ raw.map(_.swap)).distinct
+    val want = pprReference(sym, 0L, 4)
+    val parts = spark.conf.get("spark.sql.shuffle.partitions")
+    try {
+      Seq("1", "7").foreach { p =>
+        spark.conf.set("spark.sql.shuffle.partitions", p)
+        assert(ppr(sym.toDF("u", "v"), iters = 4) === want, s"shuffle.partitions=$p")
+      }
+    } finally spark.conf.set("spark.sql.shuffle.partitions", parts)
   }
 
   test("personalizedPageRank dampingPct=100 stays anchored at the source") {
@@ -102,90 +110,5 @@ class GraphBfsSpec extends SparkSpec {
       iters = 2, dampingPct = 100)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(walk.contains(0L))
-  }
-
-  test("PPR no-broadcast iteration plan: edges co-partitioned, one runtime exchange") {
-    // mirror of the pageRank no-broadcast plan spec: with the frontier
-    // past broadcastable size (simulated by threshold -1), the cached
-    // u-partitioned edge side must NOT re-exchange — the only
-    // ENSURE_REQUIREMENTS shuffle feeds the O(F) share frame
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val e = edges.select(col("u").cast("long").as("u"), col("v").cast("long").as("v"))
-      val eo = e.repartition(col("u")).persist()
-      eo.count()
-      // literal frontier frame: no exchanges of its own, so the count
-      // below isolates the join's requirements
-      val shares = Seq((0L, 100L), (1L, 100L)).toDF("srcn", "share")
-      val contribs = eo.join(shares, eo("u") === shares("srcn"))
-        .select(col("v").as("node"), col("share").as("c"))
-      contribs.collect()
-      val plan = contribs.queryExecution.executedPlan.toString
-      assert(!plan.contains("Broadcast"), s"expected no broadcast in forced plan:\n$plan")
-      assert(plan.contains("SortMergeJoin") || plan.contains("ShuffledHashJoin"))
-      val nExchanges = "ENSURE_REQUIREMENTS".r.findAllMatchIn(plan).size
-      assert(nExchanges == 1,
-        s"expected exactly 1 runtime exchange (share side only):\n$plan")
-      eo.unpersist()
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", "true")
-      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-    }
-  }
-
-  test("iteration plan shapes: BFS frontier meets cached edges co-partitioned; PPR shares broadcast") {
-    // one iteration of each loop, constructed exactly as the operators
-    // build it (same pattern as the pageRank no-broadcast plan spec)
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val e = edges.select(col("u").cast("long").as("u"), col("v").cast("long").as("v"))
-        .distinct()
-      val eo = e.repartition(col("u")).persist()
-      eo.count()
-
-      // BFS hop: frontier joins on u — the cached u-partitioned edge side
-      // must NOT re-exchange: its join branch is Sort-over-InMemoryTableScan
-      // directly (no Exchange between cache scan and join); only the O(F)
-      // frontier and the distinct stage shuffle
-      val frontier = Seq(0L, 1L).toDF("u")
-      val hop = eo.join(frontier, Seq("u"))
-        .select(col("v").as("node")).distinct()
-      hop.collect()
-      val bfsPlan = hop.queryExecution.executedPlan.toString
-      assert(!bfsPlan.contains("BroadcastExchange"))
-      val edgeBranchClean =
-        "Sort \\[u#\\d+L ASC[^\\n]*\\n[^\\n]*InMemoryTableScan".r
-          .findFirstIn(bfsPlan).isDefined
-      assert(edgeBranchClean,
-        s"cached edges must feed the join without a new Exchange:\n$bfsPlan")
-      eo.unpersist()
-
-      // PPR iteration: the nonzero-rank share frame is force-broadcast,
-      // so the edge side streams with ZERO runtime shuffles
-      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-      val eo2 = e.repartition(col("u")).persist()
-      eo2.count()
-      val shares = e.select(col("u").as("srcn")).limit(2)
-        .withColumn("share", lit(100L))
-      val contribs = eo2.join(broadcast(shares), eo2("u") === shares("srcn"))
-        .select(col("v").as("node"), col("share").as("c"))
-      contribs.collect()
-      val pprPlan = contribs.queryExecution.executedPlan.toString
-      assert(pprPlan.contains("BroadcastHashJoin"), pprPlan)
-      // the join's STREAMED side is the cache scan directly — no runtime
-      // Exchange touches the O(E) edges (the one in the stored cache-build
-      // plan ran once at persist time)
-      val streamedClean =
-        "BroadcastHashJoin[^\\n]*\\n[^\\n]*InMemoryTableScan".r
-          .findFirstIn(pprPlan).isDefined
-      assert(streamedClean,
-        s"PPR iteration must stream cached edges without a new Exchange:\n$pprPlan")
-      eo2.unpersist()
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", "true")
-      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-    }
   }
 }

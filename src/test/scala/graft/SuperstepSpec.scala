@@ -4,9 +4,10 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import graft.dedup.Dedup
 import graft.operators.Graph
 
-/** The superstep kernel behind connected components, PageRank and label
-  * propagation: one Spark job per round, and no cache left behind on any
-  * exit path. */
+/** The superstep kernel behind connected components, PageRank, label
+  * propagation, BFS, personalized PageRank and condensation levels: one
+  * Spark job per round, and no cache left behind on any exit path (also
+  * for the leaf-based SCC fixpoints). */
 class SuperstepSpec extends SparkSpec {
 
   /** Spark jobs `body` submits from this thread. A sentinel job after it
@@ -45,6 +46,16 @@ class SuperstepSpec extends SparkSpec {
 
   private def persisted: Int = spark.sparkContext.getPersistentRDDs.size
 
+  /** [[persisted]] once garbage collection has dropped the truncated
+    * frames (`Checkpoints.truncate`) that no frame references any more;
+    * a cache something still holds — a persisted frame, a live leaf —
+    * stays counted. */
+  private def retainedAbove(before: Int): Int = {
+    var tries = 0
+    while (persisted > before && tries < 20) { System.gc(); Thread.sleep(100); tries += 1 }
+    persisted
+  }
+
   test("connectedComponents on a path: one job per round plus at most 3") {
     import spark.implicits._
     val n = 10
@@ -75,6 +86,30 @@ class SuperstepSpec extends SparkSpec {
     val r = 5
     val jobs = jobsOf(Graph.labelPropagation(path, "s", "d", rounds = r))
     assert(jobs <= r + 3, s"$jobs jobs for $r rounds")
+  }
+
+  test("bfsHops(maxHops = k): one job per round plus at most 3") {
+    import spark.implicits._
+    // a path longer than k, so every hop reaches a new node
+    val und = (0L until 12L).map(i => (i, i + 1))
+    val sym = (und ++ und.map(_.swap)).toDF("s", "d")
+    val k = 6
+    var hops = Map.empty[Long, Int]
+    val jobs = jobsOf {
+      hops = Graph.bfsHops(sym, "s", "d", source = 0L, maxHops = k)
+        .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    }
+    assert(hops === (0 to k).map(i => i.toLong -> i).toMap)
+    assert(jobs <= k + 3 + 1, s"$jobs jobs for $k rounds (+1: the collect)")
+  }
+
+  test("personalizedPageRank(iters = k): one job per round plus at most 3") {
+    import spark.implicits._
+    val und = (1L to 6L).map(i => (0L, i)) ++ Seq((1L, 2L), (2L, 3L))
+    val sym = (und ++ und.map(_.swap)).toDF("s", "d")
+    val k = 6
+    val jobs = jobsOf(Graph.personalizedPageRank(sym, "s", "d", source = 0L, iters = k))
+    assert(jobs <= k + 3, s"$jobs jobs for $k rounds")
   }
 
   test("pageRank on an empty edge list fails and leaves no cache behind") {
@@ -116,6 +151,42 @@ class SuperstepSpec extends SparkSpec {
     // one round fewer stays in range
     assert(Graph.pageRank(tree, "s", "d", iters = 1, dampingPct = 100,
       scale = Long.MaxValue / 2000 * 111).count() === 111)
+  }
+
+  /** A directed chain 1 -> 2 -> ... -> n. */
+  private def chain(n: Long) = {
+    import spark.implicits._
+    (1L until n).map(i => (i, i + 1)).toDF("u", "v")
+  }
+
+  test("stronglyConnectedComponents past maxIters fails descriptively and leaves no cache behind") {
+    val edges = chain(13)
+    releaseAll()
+    val before = persisted
+    val e = intercept[IllegalArgumentException](
+      Graph.stronglyConnectedComponents(edges, "u", "v", maxIters = 2))
+    assert(e.getMessage.contains("min-label fixpoint did not converge in 2 iters"))
+    assert(retainedAbove(before) === before)
+  }
+
+  test("sccCondensation deeper than maxIters fails descriptively and leaves no cache behind") {
+    val edges = chain(13)
+    releaseAll()
+    val before = persisted
+    val e = intercept[IllegalArgumentException](
+      Graph.sccCondensation(edges, "u", "v", maxIters = 2))
+    assert(e.getMessage.contains("the component DAG's depth exceeds 1"), e.getMessage)
+    assert(retainedAbove(before) === before)
+  }
+
+  test("sccCondensation: a DAG of depth maxIters - 1 converges, depth maxIters fails") {
+    // 7 singleton components in a chain: depth 6
+    val edges = chain(7)
+    val r = Graph.sccCondensation(edges, "u", "v", maxIters = 7).collect().head
+    assert((r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)) === ((7L, 6L, 1L, 6L)))
+    val e = intercept[IllegalArgumentException](
+      Graph.sccCondensation(edges, "u", "v", maxIters = 6))
+    assert(e.getMessage.contains("did not converge in 6 rounds"), e.getMessage)
   }
 
   test("connectedComponents drops rows with a null endpoint") {
