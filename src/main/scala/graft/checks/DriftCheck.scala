@@ -15,11 +15,9 @@ import graft.core._
   *    state, output size bounded by `nBins` regardless of input rows.
   *  - **exact two-sample KS statistic** (max CDF gap). Counts are
   *    pre-aggregated per distinct value (one shuffle), and the cumulative
-  *    CDF sweep runs as a DISTRIBUTED ordered pass (the
-  *    `wasserstein1Distributed` template): range-sort the distinct-value
-  *    frame, collect the per-partition count totals (#partitions rows —
-  *    driver-tiny), then one `mapPartitions` sweep computes each
-  *    partition's CDF terms from its broadcast prefix offsets. No
+  *    CDF sweep runs as a DISTRIBUTED [[graft.core.OrderedScan]] over the
+  *    range-sorted distinct-value frame: each partition's CDF terms come
+  *    from its carried prefix counts. No
   *    unpartitioned window anywhere, so a continuous `double` column
   *    whose distinct-value frame is ~row-sized still spreads across the
   *    cluster. KS needs no boundary-gap carry (each term uses only the
@@ -115,6 +113,7 @@ final class DriftCheck(
     * the windowed formulation's null-propagating division guards. */
   def ksDf(current: DataFrame): DataFrame = {
     val spark = current.sparkSession
+    import spark.implicits._
     val b = baselineDf.filter(scopeCol(baselineDf) && col(column).isNotNull)
       .groupBy(col(column).as("v")).agg(count(lit(1)).as("na")).withColumn("nb", lit(0L))
     val c = current.filter(scopeCol(current) && col(column).isNotNull)
@@ -125,42 +124,27 @@ final class DriftCheck(
     // needs the per-value counts in sorted order
     val rdd = u.orderBy("v").select(col("na"), col("nb"))
       .queryExecution.toRdd.map(r => (r.getLong(0), r.getLong(1)))
-    rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val parts = rdd.mapPartitionsWithIndex { (i, it) =>
-        var a = 0L; var bb = 0L
-        it.foreach { case (x, y) => a += x; bb += y }
-        Iterator.single((i, a, bb))
-      }.collect().sortBy(_._1)
-      val na = parts.map(_._2).sum
-      val nb = parts.map(_._3).sum
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("ks",
-          org.apache.spark.sql.types.DoubleType, nullable = true),
-        org.apache.spark.sql.types.StructField("n_base",
-          org.apache.spark.sql.types.LongType, nullable = true),
-        org.apache.spark.sql.types.StructField("n_curr",
-          org.apache.spark.sql.types.LongType, nullable = true)))
-      def one(ks: Any, a: Any, bb: Any): DataFrame =
-        spark.createDataFrame(java.util.Arrays.asList(Row(ks, a, bb)), schema)
-      if (na == 0L && nb == 0L) one(null, null, null) // both sides empty
-      else if (na == 0L || nb == 0L) one(null, na, nb) // one-sided: CDF undefined
-      else {
-        val offA = parts.scanLeft(0L)(_ + _._2).dropRight(1)
-        val offB = parts.scanLeft(0L)(_ + _._3).dropRight(1)
-        val ks = rdd.mapPartitionsWithIndex { (i, it) =>
-          var ca = offA(i); var cb = offB(i)
+    OrderedScan.eager(rdd, (0L, 0L)) { it =>
+      var a = 0L; var bb = 0L
+      it.foreach { case (x, y) => a += x; bb += y }
+      (a, bb)
+    }((p, q) => (p._1 + q._1, p._2 + q._2)) { scan =>
+      val (na, nb) = scan.total
+      // one empty side: CDF undefined; both empty: no counts either
+      val ks = if (na == 0L || nb == 0L) None else Some(scan.fold(-1.0) {
+        case ((offA, offB), it) =>
+          var ca = offA; var cb = offB
           var m = -1.0
           it.foreach { case (x, y) =>
             ca += x; cb += y
             val gap = math.abs(ca.toDouble / na - cb.toDouble / nb)
             if (gap > m) m = gap
           }
-          Iterator.single(m)
-        }.fold(-1.0)(math.max)
-        one(ks, na, nb)
-      }
-    } finally rdd.unpersist()
+          m
+      }(math.max))
+      val counts = if (na == 0L && nb == 0L) None else Some((na, nb))
+      Seq((ks, counts.map(_._1), counts.map(_._2))).toDF("ks", "n_base", "n_curr")
+    }
   }
 
   override def valid(d: DataFrame, cols: Seq[String]): DataFrame = {

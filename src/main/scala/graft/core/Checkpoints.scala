@@ -6,8 +6,8 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.storage.StorageLevel
 
 /** Session-conf-driven lineage truncation for iterative operators
-  * (connected components, PageRank, k-core peeling, skyline frontiers,
-  * pair-pipeline hand-offs). Every iteration must cut its lineage or the
+  * (connected components, PageRank, k-core peeling, pair-pipeline
+  * hand-offs). Every iteration must cut its lineage or the
   * plan grows with rounds; HOW it cuts is a deployment decision:
   *
   *  - `spark.graft.checkpointDir` UNSET (default): `localCheckpoint` —

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.OrderedScan
+
 /** Split-conformal prediction (Vovk et al.; Papadopoulos et al. 2002 —
   * the distribution-free way to turn any point predictor into a
   * coverage-guaranteed interval): take the nonconformity scores
@@ -26,46 +28,39 @@ object Conformal {
   def splitConformal(df: DataFrame, residCol: String, isCalib: Column,
       alpha: Double = 0.1): DataFrame = {
     require(alpha > 0 && alpha < 1, "alpha must be in (0, 1)")
-    val spark = df.sparkSession
-    import spark.implicits._
     // ONE pass over the source: the residual/split columns (often
-    // per-row hashes, like the gated query's md5 split) used to be
-    // recomputed by each of the three consumers (calibration count,
-    // sort, coverage) — cache the projected two-column frame instead,
-    // and take the calibration count from the sorted run's own
-    // partition sizes rather than a separate count job
+    // per-row hashes, like the gated query's md5 split) feed the
+    // calibration count, the sort and the coverage, so the projected
+    // two-column frame is cached; the calibration count comes from the
+    // scan's partition sizes, not a separate count job
     val r = df.select(col(residCol).cast("double").as("__r"),
         isCalib.cast("boolean").as("__cal"))
       .filter(col("__r").isNotNull && col("__cal").isNotNull)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sorted = r.filter(col("__cal")).select("__r")
-      .orderBy("__r").queryExecution.toRdd
-      .map(_.getDouble(0))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val counts = sorted
-      .mapPartitionsWithIndex((i, it) => Iterator.single((i, it.size.toLong)))
-      .collect().sortBy(_._1).map(_._2)
-    val nCal = counts.sum
-    require(nCal > 0, "empty calibration split")
-    val k = math.min(nCal, math.ceil((nCal + 1) * (1.0 - alpha)).toLong)
-    // rank selection against the cached sort: locate the partition that
-    // holds the k-th value and read just its offset
-    val offsets = counts.scanLeft(0L)(_ + _)
-    val p = offsets.indexWhere(_ > k - 1) - 1
-    val off = (k - 1 - offsets(p)).toInt
-    val qhat = sorted
-      .mapPartitionsWithIndex((i, it) =>
-        if (i == p) it.slice(off, off + 1) else Iterator.empty)
-      .collect().head
-    sorted.unpersist(false)
-    val out = r.filter(!col("__cal"))
-      .agg(count(lit(1)).as("n_test"),
-        sum(when(col("__r") <= qhat, 1L).otherwise(0L)).as("__cov"))
-      .select(lit(nCal).as("n_cal"), col("n_test"),
-        round(lit(qhat), 6).as("qhat"),
-        round(col("__cov").cast("double") / col("n_test"), 6).as("coverage"))
-      .transform(graft.core.Checkpoints.truncate)
-    r.unpersist(false)
-    out
+    try {
+      val sorted = r.filter(col("__cal")).select("__r")
+        .orderBy("__r").queryExecution.toRdd
+        .map(_.getDouble(0))
+      // rank selection against the sorted calibration slice: the carry-in
+      // is the number of values below the partition, so only the partition
+      // holding the k-th value yields it
+      val sizeOf = (it: Iterator[Double]) => it.foldLeft(0L)((n, _) => n + 1)
+      val (nCal, qhat) = OrderedScan.eager(sorted, 0L)(sizeOf)(_ + _) { scan =>
+        val nCal = scan.total
+        require(nCal > 0, "empty calibration split")
+        val k = math.min(nCal, math.ceil((nCal + 1) * (1.0 - alpha)).toLong)
+        val q = scan.fold(Option.empty[Double]) { (below, it) =>
+          if (below > k - 1) None else it.drop((k - 1 - below).toInt).nextOption()
+        }(_.orElse(_))
+        (nCal, q.get)
+      }
+      r.filter(!col("__cal"))
+        .agg(count(lit(1)).as("n_test"),
+          sum(when(col("__r") <= qhat, 1L).otherwise(0L)).as("__cov"))
+        .select(lit(nCal).as("n_cal"), col("n_test"),
+          round(lit(qhat), 6).as("qhat"),
+          round(col("__cov").cast("double") / col("n_test"), 6).as("coverage"))
+        .transform(graft.core.Checkpoints.truncate)
+    } finally r.unpersist(false)
   }
 }

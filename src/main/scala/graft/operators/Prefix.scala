@@ -1,44 +1,40 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInternalRow, JoinedRow,
+  RowOrdering, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
+
+import graft.core.OrderedScan
 
 /** Distributed running (prefix) sums over a totally-ordered axis.
   *
   * `sum(x).over(Window.orderBy(k))` with no partition key collapses the
   * whole relation into ONE task — fine on five rows, a straggler on a
-  * 100 TB batch axis. This is the two-sweep partition prefix-scan
-  * discipline of [[TimeSeries.resampleLocf]] applied to exact long sums:
-  * range-partition + sort once, sweep 1 reduces each partition to its
-  * local column sums (#partitions rows to the driver — bounded by the
-  * shuffle-partition count, NOT the data), the driver prefix-scans those
-  * into per-partition carry-in offsets, and sweep 2 streams every
-  * partition once, adding its carry. Long addition is associative and
-  * exact, so the result is bit-identical to the single-partition window
-  * for any range split. The sort shuffle is written once and reused by
-  * both sweeps (same lineage).
+  * 100 TB batch axis. Here the range-sorted rows go through
+  * [[graft.core.OrderedScan]] with per-partition column sums as the
+  * summary. Long addition is associative and exact, so the result is
+  * bit-identical to the single-partition window for any range split.
   *
   * Both sweeps run on the query's own INTERNAL rows
-  * (`queryExecution.toRdd`): the public `df.rdd` capture decoded every
-  * UnsafeRow into a boxed external Row for sweep 1's long reads and
-  * sweep 2 re-boxed every field through `Row.fromSeq` +
-  * `createDataFrame`'s converter — per-row allocation proportional to
-  * the full width, paid once per sweep (guide §1.4's `df.rdd` cost).
-  * Sweep 2 appends the running columns with a `JoinedRow` + one
-  * `UnsafeProjection` — a single compact copy per row.
+  * (`queryExecution.toRdd`), so no field is boxed; sweep 2 appends the
+  * running columns with a `JoinedRow` + one `UnsafeProjection` — a
+  * single compact copy per row.
   */
 object Prefix {
 
   /** Appends running-total columns `outNames` (running sums of the
     * LongType columns `valueCols`, ordered by `orderCol`, current row
     * inclusive). Contract: `orderCol` values are distinct (a grouped
-    * axis) and `valueCols` are non-null LongType. */
+    * axis) and `valueCols` are non-null LongType; a duplicate `orderCol`
+    * value fails the query, since the running total of tied rows would
+    * depend on their order. */
   def cumSumLongs(df: DataFrame, orderCol: String, valueCols: Seq[String],
       outNames: Seq[String]): DataFrame = {
     require(valueCols.length == outNames.length,
       s"valueCols(${valueCols.length}) != outNames(${outNames.length})")
-    val spark = df.sparkSession
     val sorted = df.repartitionByRange(col(orderCol))
       .sortWithinPartitions(orderCol)
     val schema = sorted.schema
@@ -48,33 +44,33 @@ object Prefix {
         s"cumSumLongs needs LongType, got ${schema(i).dataType} for $c")
       i
     }.toArray
-    // capture ONCE: both sweeps share the sort shuffle
-    val rdd = sorted.queryExecution.toRdd
-    // sweep 1: per-partition local sums (one row per partition); reads
-    // longs straight off the UnsafeRows, no row is retained
-    val partSums = rdd.mapPartitionsWithIndex { (i, it) =>
+    val key = BoundReference(schema.fieldIndex(orderCol), schema(orderCol).dataType,
+      nullable = true)
+    val scan = OrderedScan(sorted.queryExecution.toRdd, new Array[Long](vIdx.length)) { it =>
+      // range partitioning keeps equal keys in one partition and the sort
+      // makes them adjacent, so comparing neighbours finds every duplicate
+      val keyOf = UnsafeProjection.create(Seq(key))
+      val ord = RowOrdering.createNaturalAscendingOrdering(Seq(key.dataType))
+      var prev: UnsafeRow = null
       val s = new Array[Long](vIdx.length)
       it.foreach { r =>
+        val k0 = keyOf(r)
+        require(prev == null || ord.compare(prev, k0) != 0,
+          s"cumSumLongs: duplicate $orderCol value ${k0.get(0, key.dataType)}; " +
+            "orderCol values must be distinct")
+        prev = k0.copy()
         var k = 0
         while (k < vIdx.length) { s(k) += r.getLong(vIdx(k)); k += 1 }
       }
-      Iterator.single((i, s))
-    }.collect().sortBy(_._1)
-    // driver prefix-scan: carry-in for partition p = Σ sums of partitions < p
-    val nParts = partSums.length
-    val carry = Array.ofDim[Long](math.max(nParts, 1), vIdx.length)
-    for (p <- 1 until nParts; k <- vIdx.indices)
-      carry(p)(k) = carry(p - 1)(k) + partSums(p - 1)._2(k)
+      s
+    }((a, b) => Array.tabulate(a.length)(k => a(k) + b(k)))
     val outSchema = StructType(schema.fields ++
       outNames.map(n => StructField(n, LongType, nullable = false)))
-    // sweep 2: stream each partition once with its carry as initial state
-    val out = rdd.mapPartitionsWithIndex { (i, it) =>
-      import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow, UnsafeProjection}
-      val run = carry(i).clone()
+    val out = scan.map { (carry, it) =>
+      val run = carry.clone()
       val extra = new GenericInternalRow(vIdx.length)
       val joined = new JoinedRow
       val proj = UnsafeProjection.create(outSchema)
-      proj.initialize(i)
       it.map { r =>
         var k = 0
         while (k < vIdx.length) {
@@ -84,9 +80,9 @@ object Prefix {
         }
         // the projection copies into its own buffer; downstream operators
         // that buffer rows copy again by the iterator contract
-        proj(joined(r, extra)): org.apache.spark.sql.catalyst.InternalRow
+        proj(joined(r, extra)): InternalRow
       }
     }
-    org.apache.spark.sql.graft.Bridge.internalCreateDataFrame(spark, out, outSchema)
+    org.apache.spark.sql.graft.Bridge.internalCreateDataFrame(df.sparkSession, out, outSchema)
   }
 }

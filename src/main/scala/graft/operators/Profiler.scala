@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.core.OrderedScan
+
 /** One-pass column profiler: the standard DQ summary block (count, nulls,
   * distinct, min/max/mean/stddev, approximate quantiles) for every requested
   * column of any DataFrame.
@@ -628,11 +630,10 @@ object Profiler {
     * correction in the variance.
     *
     * Scale shape: values pre-aggregate to per-DISTINCT-value counts (one
-    * keyed shuffle), then the rank sweep runs DISTRIBUTED (the
-    * `wasserstein1Distributed` template): range sort on the value,
-    * per-partition count totals collected (#partitions rows), one
-    * `mapPartitions` pass accumulating `2·Σ ca·avg_rank` and `Σ(t³−t)`
-    * as EXACT longs from each partition's broadcast rank offset — no
+    * keyed shuffle), then the rank sweep runs DISTRIBUTED as a
+    * [[graft.core.OrderedScan]] on the value, accumulating
+    * `2·Σ ca·avg_rank` and `Σ(t³−t)` as EXACT longs from each
+    * partition's carried rank offset — no
     * unpartitioned window, so continuous values (distinct ≈ rows) stay
     * parallel. Rank sums are half-integers, so halving the doubled long
     * reproduces the window formulation's double bit-for-bit; the final
@@ -839,9 +840,8 @@ object Profiler {
       StructType(fields.map { case (n, t) => StructField(n, t, nullable = true) }))
 
   /** Shared DISTRIBUTED rank sweep over a per-distinct-value count frame
-    * `(v, ca, cb)` — the `wasserstein1Distributed` template: range sort
-    * on `v`, per-partition count totals to the driver (#partitions
-    * rows), one `mapPartitions` pass from broadcast rank offsets.
+    * `(v, ca, cb)`: a [[graft.core.OrderedScan]] on `v` whose carry-in
+    * is the count of values below the partition.
     * Returns `(n_a, n_b, 2·Σ ca·avg_rank, Σ(t³−t))`, ALL exact longs
     * (a tie group's average rank is `prevCum + (t+1)/2`, so the doubled
     * rank sum is integral; halving it reproduces the window
@@ -849,29 +849,29 @@ object Profiler {
   private def rankSweep(perVal: DataFrame): (Long, Long, Long, Long) = {
     val rdd = perVal.orderBy("v").select("ca", "cb")
       .queryExecution.toRdd.map(r => (r.getLong(0), r.getLong(1)))
-    rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val parts = rdd.mapPartitionsWithIndex { (i, it) =>
-        var a = 0L; var b = 0L
-        it.foreach { case (x, y) => a += x; b += y }
-        Iterator.single((i, a, b))
-      }.collect().sortBy(_._1)
-      val na = parts.map(_._2).sum
-      val nb = parts.map(_._3).sum
-      val offs = parts.scanLeft(0L) { case (acc, (_, a, b)) => acc + a + b }.dropRight(1)
-      val (ra2, ties) = rdd.mapPartitionsWithIndex { (i, it) =>
-        var prev = offs(i); var r2 = 0L; var tt = 0L
+    OrderedScan.eager(rdd, (0L, 0L)) { it =>
+      var a = 0L; var b = 0L
+      it.foreach { case (x, y) => a += x; b += y }
+      (a, b)
+    }(addPairs) { scan =>
+      val (na, nb) = scan.total
+      val (ra2, ties) = scan.fold((0L, 0L)) { case ((offA, offB), it) =>
+        var prev = offA + offB; var r2 = 0L; var tt = 0L
         it.foreach { case (a, b) =>
           val t = a + b
           r2 += a * (2 * prev + t + 1)
           tt += t * t * t - t
           prev += t
         }
-        Iterator.single((r2, tt))
-      }.fold((0L, 0L)) { case ((x1, y1), (x2, y2)) => (x1 + x2, y1 + y2) }
+        (r2, tt)
+      }(addPairs)
       (na, nb, ra2, ties)
-    } finally rdd.unpersist()
+    }
   }
+
+  /** Combines the two-count summaries of [[rankSweep]] and [[gini]]. */
+  private val addPairs: ((Long, Long), (Long, Long)) => (Long, Long) =
+    (p, q) => (p._1 + q._1, p._2 + q._2)
 
   /** Welch's two-sample t statistic for `valueCol` between two groups of
     * `groupCol` — the unequal-variance cohort-mean comparison (A/B legs,
@@ -1040,13 +1040,12 @@ object Profiler {
     * `G = (2·Σ(i·xᵢ)) / (n·Σx) − (n+1)/n`. One row
     * `(n_keys, total, gini)`.
     *
-    * DISTRIBUTED exact pass (the `wasserstein1Distributed` template —
-    * no rank window, no key-count bound): per-key weights are
-    * cents-quantized to exact longs (decimal sum → ×100; 2-dp inputs are
-    * exact), the key frame is range-sorted on the weight, per-partition
-    * counts collect to the driver (#partitions rows), and one
-    * `mapPartitions` sweep accumulates `Σ rank·x` as an exact long from
-    * each partition's broadcast rank offset. Rank ties hold equal `x`,
+    * DISTRIBUTED exact pass (a [[graft.core.OrderedScan]] — no rank
+    * window, no key-count bound): per-key weights are cents-quantized to
+    * exact longs (decimal sum → ×100; 2-dp inputs are exact), the key
+    * frame is range-sorted on the weight, and sweep 2 accumulates
+    * `Σ rank·x` as an exact long from each partition's rank offset (its
+    * carried key count). Rank ties hold equal `x`,
     * so any tie order yields the SAME sum — no key tiebreak needed. The
     * final statistic derives from three exact integers by a fixed
     * double-op sequence: bit-identical in any engine, emitted raw. */
@@ -1062,33 +1061,29 @@ object Profiler {
       .agg(round(sum(weight.cast("decimal(30,6)")) * 100).cast("long").as("xc"))
     val rdd = perKey.orderBy("xc").select("xc")
       .queryExecution.toRdd.map(_.getLong(0))
-    rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val parts = rdd.mapPartitionsWithIndex { (i, it) =>
-        var cnt = 0L; var sx = 0L
-        it.foreach { x => cnt += 1; sx += x }
-        Iterator.single((i, cnt, sx))
-      }.collect().sortBy(_._1)
-      val n = parts.map(_._2).sum
-      val total = parts.map(_._3).sum
+    OrderedScan.eager(rdd, (0L, 0L)) { it =>
+      var cnt = 0L; var sx = 0L
+      it.foreach { x => cnt += 1; sx += x }
+      (cnt, sx)
+    }(addPairs) { scan =>
+      val (n, total) = scan.total
       if (n == 0) {
         Seq((0L, Option.empty[Double], Option.empty[Double]))
           .toDF("n_keys", "total", "gini")
       } else {
         require(total <= 0L || n <= Long.MaxValue / total,
           s"gini: n*total (${n} * ${total}) overflows the exact accumulator — pre-scale weights")
-        val offs = parts.scanLeft(0L)(_ + _._2).dropRight(1)
-        val s = rdd.mapPartitionsWithIndex { (i, it) =>
-          var r = offs(i); var acc = 0L
+        val s = scan.fold(0L) { case ((r0, _), it) =>
+          var r = r0; var acc = 0L
           it.foreach { x => r += 1; acc += r * x }
-          Iterator.single(acc)
-        }.fold(0L)(_ + _)
+          acc
+        }(_ + _)
         val g =
           if (total == 0L) Option.empty[Double]
           else Some(2.0 * s.toDouble / (n.toDouble * total.toDouble) - (n + 1.0) / n)
         Seq((n, Some(total.toDouble / 100), g)).toDF("n_keys", "total", "gini")
       }
-    } finally rdd.unpersist()
+    }
   }
 
   /** Functional-dependency violation profile for a candidate FD
@@ -1546,9 +1541,8 @@ object Profiler {
     * collapses to ONE keyed aggregation + one distributed prefix-max
     * sweep: fold to max-y per distinct x (keyed, map-side combined),
     * then keep the points whose y strictly exceeds the running max over
-    * all smaller x. The sweep is the `wasserstein1Distributed`
-    * ordered-pass template (range sort → per-partition maxes collected →
-    * broadcast prefix carry), so even a continuous-x domain whose
+    * all smaller x. The sweep is a [[graft.core.OrderedScan]] on x
+    * carrying the prefix max, so even a continuous-x domain whose
     * distinct-value frame approaches row count stays fully parallel —
     * no single-partition window anywhere. */
   def skyline2D(df: DataFrame, xCol: String, yCol: String): DataFrame = {
@@ -1558,37 +1552,21 @@ object Profiler {
     val y = col(yCol).cast("double")
     val perX = df.filter(x.isNotNull && y.isNotNull)
       .groupBy(x.as("x")).agg(max(y).as("y"))
-    // DISTRIBUTED prefix-max pass (the wasserstein1Distributed template):
-    // range-sort on x, collect one max-y per partition (driver-tiny),
-    // then each partition filters against its broadcast prefix max — no
-    // unpartitioned window, so a continuous-x frame (distinct ≈ rows)
-    // still spreads across the cluster.
     val rdd = perX.orderBy("x").select("x", "y")
       .queryExecution.toRdd.map(r => (r.getDouble(0), r.getDouble(1)))
-    rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val partMax: Array[Option[Double]] = rdd.mapPartitionsWithIndex { (i, it) =>
-        var m = Option.empty[Double]
-        it.foreach { case (_, yy) => if (m.forall(yy > _)) m = Some(yy) }
-        Iterator.single((i, m))
-      }.collect().sortBy(_._1).map(_._2)
-      val carry: Array[Option[Double]] = partMax
-        .scanLeft(Option.empty[Double]) { (a, b) =>
-          (a.toSeq ++ b.toSeq).reduceOption[Double](math.max)
-        }.dropRight(1)
-      val kept = rdd.mapPartitionsWithIndex { (i, it) =>
-        var m = carry(i)
-        it.filter { case (_, yy) =>
-          val keep = m.forall(yy > _)
-          if (keep) m = Some(yy)
-          keep
-        }
+    val kept = OrderedScan(rdd, Option.empty[Double]) { it =>
+      var m = Option.empty[Double]
+      it.foreach { case (_, yy) => if (m.forall(yy > _)) m = Some(yy) }
+      m
+    }((a, b) => (a.toSeq ++ b.toSeq).reduceOption[Double](math.max)).map { (carry, it) =>
+      var m = carry
+      it.filter { case (_, yy) =>
+        val keep = m.forall(yy > _)
+        if (keep) m = Some(yy)
+        keep
       }
-      // frontier is value-cardinality-bounded; materialize it eagerly so
-      // the persisted sorted frame can be released (triangleStats pattern)
-      kept.toDF("x", "y").select(col("x").as(xCol), col("y").as(yCol))
-        .transform(graft.core.Checkpoints.truncate)
-    } finally rdd.unpersist()
+    }
+    kept.toDF("x", "y").select(col("x").as(xCol), col("y").as(yCol))
   }
 
   /** Exact 1-Wasserstein (earth-mover) distance between two cohorts'
@@ -1649,10 +1627,9 @@ object Profiler {
   /** [[wasserstein1]] with a DISTRIBUTED ordered pass — the 100 TB shape:
     * instead of a single-partition window over the distinct-value frame,
     * the frame is range-sorted (Spark's `orderBy` = range-partitioned
-    * sort), per-partition count totals are collected (#partitions rows —
-    * driver-tiny), and one `mapPartitions` sweep computes each
-    * partition's CDF terms from its broadcast prefix offsets, carrying
-    * the next partition's first value for the boundary gap. All
+    * sort) and runs as a [[graft.core.OrderedScan]]: each partition's CDF
+    * terms come from its carried prefix counts, and the gap across a
+    * partition boundary from the carried last value before it. All
     * arithmetic matches [[wasserstein1]] operation-for-operation, so the
     * two implementations are BIT-IDENTICAL (spec-asserted) — same DuckDB
     * oracle. */
@@ -1669,35 +1646,23 @@ object Profiler {
     val rdd = perVal.orderBy("v").select("v", "ca", "cb")
       .queryExecution.toRdd
       .map(r => (r.getDouble(0), r.getLong(1), r.getLong(2)))
-    rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // one tiny row per partition: counts + first value
-      val parts = rdd.mapPartitionsWithIndex { (i, it) =>
-        var ca = 0L; var cb = 0L; var first = Option.empty[Double]
-        it.foreach { case (vv, a, b) =>
-          if (first.isEmpty) first = Some(vv); ca += a; cb += b
-        }
-        Iterator.single((i, ca, cb, first))
-      }.collect().sortBy(_._1)
-      val na = parts.map(_._2).sum
-      val nb = parts.map(_._3).sum
+    // summary: the partition's counts and last value; the carry-in is the
+    // counts below the partition and the last value before it
+    OrderedScan.eager(rdd, (0L, 0L, Option.empty[Double])) { it =>
+      var ca = 0L; var cb = 0L; var last = 0.0; var any = false
+      it.foreach { case (vv, a, b) => ca += a; cb += b; last = vv; any = true }
+      (ca, cb, if (any) Some(last) else None)
+    }((p, q) => (p._1 + q._1, p._2 + q._2, q._3.orElse(p._3))) { scan =>
+      val (na, nb, _) = scan.total
       require(na > 0 && nb > 0,
         s"wasserstein1Distributed: empty cohort (n_a=$na, n_b=$nb) — " +
           "W1 is undefined; both groups must be present")
-      val offA = parts.scanLeft(0L)(_ + _._2).dropRight(1)
-      val offB = parts.scanLeft(0L)(_ + _._3).dropRight(1)
-      // first value of the next NON-EMPTY partition, per partition
-      val nextFirst: Array[Option[Double]] = {
-        val firsts = parts.map(_._4)
-        val out = Array.fill(parts.length)(Option.empty[Double])
-        var carry = Option.empty[Double]
-        for (i <- parts.indices.reverse) { out(i) = carry; if (firsts(i).isDefined) carry = firsts(i) }
-        out
-      }
-      val sumQ = rdd.mapPartitionsWithIndex { (i, it) =>
-        var ca = offA(i); var cb = offB(i)
+      // each gap term closes in the partition holding its right end, the
+      // boundary gap from the carried previous value
+      val sumQ = scan.fold(0L) { case ((offA, offB, prevV), it) =>
+        var ca = offA; var cb = offB
         var acc = 0L
-        var pend: (Double, Long, Long) = null
+        var pend: (Double, Long, Long) = prevV.map((_, offA, offB)).orNull
         it.foreach { case (vv, a, b) =>
           if (pend != null)
             acc += math.floor(math.abs(pend._2.toDouble / na - pend._3.toDouble / nb) *
@@ -1705,15 +1670,10 @@ object Profiler {
           ca += a; cb += b
           pend = (vv, ca, cb)
         }
-        nextFirst(i).foreach { nv =>
-          if (pend != null)
-            acc += math.floor(math.abs(pend._2.toDouble / na - pend._3.toDouble / nb) *
-              (nv - pend._1) * 1e9).toLong
-        }
-        Iterator.single(acc)
-      }.fold(0L)(_ + _)
+        acc
+      }(_ + _)
       Seq((na, nb, sumQ.toDouble / 1e9)).toDF("n_a", "n_b", "w1")
-    } finally rdd.unpersist()
+    }
   }
 
   /** Physical-partition skew report for the frame's CURRENT partitioning

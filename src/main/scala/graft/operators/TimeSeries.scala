@@ -1,8 +1,13 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Coalesce, GenericInternalRow,
+  JoinedRow, UnsafeProjection}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import graft.core.OrderedScan
 
 /** Time-series regularization: turn an event-keyed frame into a dense,
   * fixed-step series — the resample step every downstream forecast/anomaly
@@ -11,10 +16,11 @@ import org.apache.spark.sql.functions._
   * The dense axis is built from the observed [min, max] period bounds (one
   * tiny aggregate + `sequence` explode — no driver round-trip, no
   * `generate_series` table function), so the plan stays a pure DataFrame
-  * graph. The fill is last-observation-carried-forward via
+  * graph. The keyed fills are last-observation-carried-forward via
   * `last(ignoreNulls)` over a running frame — one window pass, no
   * self-joins, and per-key ordering means the window streams each key's
-  * rows once.
+  * rows once; the single global series runs as an ordered scan instead
+  * ([[resampleLocf]]).
   */
 object TimeSeries {
 
@@ -34,60 +40,56 @@ object TimeSeries {
     * Leading gaps (before the first observation) stay null.
     *
     * DISTRIBUTED ordered pass (no unpartitioned window): the dense axis
-    * is range-partitioned and sorted on the period, a first sweep
-    * collects each partition's last non-null per value column
-    * (#partitions rows to the driver), the driver prefix-scans those
-    * into per-partition carry-in state, and a second `mapPartitions`
-    * sweep fills every null from the running carry — each partition
-    * streams once, independent of the others. The sort shuffle is
-    * written once and REUSED by both sweeps (same lineage), and the
-    * carry-in is exactly the global window's `last(ignoreNulls)` at the
-    * partition boundary, so the result is bit-identical to the windowed
-    * formulation for any range split. Single global series by contract
-    * (≤1 row per period); for many series use [[resampleLocfByKey]] —
-    * one keyed shuffle, every key streamed independently. */
+    * is range-sorted on the period and LOCF runs as a
+    * [[graft.core.OrderedScan]] whose summary is each partition's last
+    * non-null per value column — exactly the global window's
+    * `last(ignoreNulls)` at the partition boundary, so the result is
+    * bit-identical to the windowed formulation for any range split. Both
+    * sweeps read the internal rows; a carried value is copied out of the
+    * scan's reused row buffer, which strings and other variable-length
+    * values point into. Single global series by contract (≤1 row per
+    * period); for many series use [[resampleLocfByKey]] — one keyed
+    * shuffle, every key streamed independently. */
   def resampleLocf(df: DataFrame, periodCol: String,
       valueCols: Seq[String]): DataFrame = {
-    val spark = df.sparkSession
     val dense = densify(df, periodCol)
       .withColumn("filled", col(valueCols.head).isNull)
     val sorted = dense.repartitionByRange(col(periodCol))
       .sortWithinPartitions(periodCol)
     val schema = sorted.schema
     val vIdx = valueCols.map(schema.fieldIndex).toArray
-    val rdd = sorted.rdd // capture ONCE: both sweeps share the sort shuffle
-    // sweep 1: last non-null per value column per partition (one row each)
-    val parts = rdd.mapPartitionsWithIndex { (i, it) =>
-      val lastNN = Array.fill[Any](vIdx.length)(null)
-      it.foreach { r =>
-        var k = 0
-        while (k < vIdx.length) {
-          val v = r.get(vIdx(k)); if (v != null) lastNN(k) = v; k += 1
-        }
-      }
-      Iterator.single((i, lastNN))
-    }.collect().sortBy(_._1)
-    // driver prefix-scan: carry-in for partition p = last non-null across
-    // all partitions < p (null until the first observation)
-    val carries = Array.fill[Any](parts.length, vIdx.length)(null)
-    for (p <- 1 until parts.length; k <- vIdx.indices)
-      carries(p)(k) =
-        if (parts(p - 1)._2(k) != null) parts(p - 1)._2(k) else carries(p - 1)(k)
-    // sweep 2: LOCF with the broadcast carry as initial state
-    val out = rdd.mapPartitionsWithIndex { (i, it) =>
-      val state = carries(i).clone()
-      it.map { r =>
-        val vals = r.toSeq.toArray
-        var k = 0
-        while (k < vIdx.length) {
-          val ci = vIdx(k)
-          if (vals(ci) == null) vals(ci) = state(k) else state(k) = vals(ci)
-          k += 1
-        }
-        org.apache.spark.sql.Row.fromSeq(vals.toIndexedSeq)
+    val vTypes = vIdx.map(schema(_).dataType)
+    val observe = (last: Array[Any], r: InternalRow) => {
+      var k = 0
+      while (k < vIdx.length) {
+        if (!r.isNullAt(vIdx(k))) last(k) = InternalRow.copyValue(r.get(vIdx(k), vTypes(k)))
+        k += 1
       }
     }
-    spark.createDataFrame(out, schema)
+    val scan = OrderedScan(sorted.queryExecution.toRdd, new Array[Any](vIdx.length)) { it =>
+      val last = new Array[Any](vIdx.length)
+      it.foreach(observe(last, _))
+      last
+    }((a, b) => Array.tabulate(a.length)(k => if (b(k) != null) b(k) else a(k)))
+    // each value column coalesced with the carry, which sits after the row
+    val fill = schema.fields.indices.map { i =>
+      val ref = BoundReference(i, schema(i).dataType, schema(i).nullable)
+      val k = vIdx.indexOf(i)
+      if (k < 0) ref
+      else Coalesce(Seq(ref, BoundReference(schema.length + k, vTypes(k), nullable = true)))
+    }
+    val out = scan.map { (carry, it) =>
+      val last = carry.clone()
+      val state = new GenericInternalRow(last)
+      val joined = new JoinedRow
+      val proj = UnsafeProjection.create(fill)
+      it.map { r =>
+        val o = proj(joined(r, state))
+        observe(last, r)
+        o: InternalRow
+      }
+    }
+    org.apache.spark.sql.graft.Bridge.internalCreateDataFrame(df.sparkSession, out, schema)
   }
 
   /** Per-key variant of [[resampleLocf]]: the dense axis spans each key's

@@ -374,26 +374,30 @@ class Round3cOperatorsSpec extends SparkSpec {
   test("resampleLocf distributed sweep equals naive LOCF on random sparse series") {
     import spark.implicits._
     val rnd = new scala.util.Random(53)
-    // sparse observations over a wide axis, two value columns with
-    // independent null patterns, a leading gap before the first observation
+    // sparse observations over a wide axis, three value columns with
+    // independent null patterns, a leading gap before the first observation;
+    // the string column's carry must outlive the scan's reused row buffer
     val obs = (0 until 400).map { _ =>
       val day = 100L + rnd.nextInt(5000)
       (day,
         if (rnd.nextInt(4) == 0) None else Some(rnd.nextInt(1000).toDouble),
-        if (rnd.nextInt(3) == 0) None else Some(rnd.nextInt(1000).toLong))
+        if (rnd.nextInt(3) == 0) None else Some(rnd.nextInt(1000).toLong),
+        if (rnd.nextInt(3) == 0) None else Some(s"s${rnd.nextInt(1000)}"))
     }.distinctBy(_._1)
     val got = graft.operators.TimeSeries
-      .resampleLocf(obs.toDF("day", "a", "b"), "day", Seq("a", "b"))
+      .resampleLocf(obs.toDF("day", "a", "b", "c"), "day", Seq("a", "b", "c"))
       .orderBy("day").collect()
-      .map(r => (r.getLong(0), Option(r.get(1)), Option(r.get(2)), r.getBoolean(3)))
+      .map(r => (r.getLong(0), Option(r.get(1)), Option(r.get(2)), Option(r.get(3)),
+        r.getBoolean(4)))
     val byDay = obs.map(o => o._1 -> o).toMap
     val lo = obs.map(_._1).min; val hi = obs.map(_._1).max
-    var la: Option[Any] = None; var lb: Option[Any] = None
+    var la: Option[Any] = None; var lb: Option[Any] = None; var lc: Option[Any] = None
     val want = (lo to hi).map { d =>
       val o = byDay.get(d)
       o.flatMap(_._2).foreach(v => la = Some(v))
       o.flatMap(_._3).foreach(v => lb = Some(v))
-      (d, la, lb, o.flatMap(_._2).isEmpty)
+      o.flatMap(_._4).foreach(v => lc = Some(v))
+      (d, la, lb, lc, o.flatMap(_._2).isEmpty)
     }
     assert(got.length == want.length)
     got.zip(want).foreach { case (g, w) => assert(g == w, s"day ${w._1}") }

@@ -31,6 +31,17 @@ class Round8Spec extends SparkSpec {
     assert(ex.getMessage.contains("LongType"))
   }
 
+  test("Prefix.cumSumLongs rejects duplicate order keys") {
+    import spark.implicits._
+    val longKeys = Seq((1L, 1L), (2L, 1L), (2L, 5L), (3L, 1L)).toDF("k", "v")
+    val strKeys = Seq(("a", 1L), ("c", 1L), ("b", 2L), ("c", 3L)).toDF("k", "v")
+    for ((df, dup) <- Seq(longKeys -> "2", strKeys -> "c")) {
+      val ex = intercept[Exception](
+        graft.operators.Prefix.cumSumLongs(df, "k", Seq("v"), Seq("c")).collect())
+      assert(ex.getMessage.contains(s"cumSumLongs: duplicate k value $dup"), ex.getMessage)
+    }
+  }
+
   test("heapsLaw curve and slope match a hand-computed scalar replay") {
     import spark.implicits._
     val docs = Seq(

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import graft.dedup.Dedup
 import graft.operators.Graph
 
@@ -9,52 +8,6 @@ import graft.operators.Graph
   * Spark job per round, and no cache left behind on any exit path (also
   * for the leaf-based SCC fixpoints). */
 class SuperstepSpec extends SparkSpec {
-
-  /** Spark jobs `body` submits from this thread. A sentinel job after it
-    * flushes the (ordered) listener bus, so the count is complete. */
-  private def jobsOf(body: => Any): Int = {
-    val sc = spark.sparkContext
-    val group = s"superstep-pin-${System.nanoTime()}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val flushed = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`) => jobs.incrementAndGet()
-          case Some(g) if g == group + "-end" => flushed.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "superstep job-count pin")
-      body
-      sc.setJobGroup(group + "-end", "listener flush")
-      sc.parallelize(Seq(1), 1).count()
-      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      jobs.get()
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-  }
-
-  /** Persistent RDDs after dropping those earlier tests left behind
-    * (the registry holds them weakly, so a stale count could shrink by GC). */
-  private def releaseAll(): Unit =
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-
-  private def persisted: Int = spark.sparkContext.getPersistentRDDs.size
-
-  /** [[persisted]] once garbage collection has dropped the truncated
-    * frames (`Checkpoints.truncate`) that no frame references any more;
-    * a cache something still holds — a persisted frame, a live leaf —
-    * stays counted. */
-  private def retainedAbove(before: Int): Int = {
-    var tries = 0
-    while (persisted > before && tries < 20) { System.gc(); Thread.sleep(100); tries += 1 }
-    persisted
-  }
 
   test("connectedComponents on a path: one job per round plus at most 3") {
     import spark.implicits._
