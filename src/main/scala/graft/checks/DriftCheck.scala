@@ -124,11 +124,8 @@ final class DriftCheck(
     // needs the per-value counts in sorted order
     val rdd = u.orderBy("v").select(col("na"), col("nb"))
       .queryExecution.toRdd.map(r => (r.getLong(0), r.getLong(1)))
-    OrderedScan.eager(rdd, (0L, 0L)) { it =>
-      var a = 0L; var bb = 0L
-      it.foreach { case (x, y) => a += x; bb += y }
-      (a, bb)
-    }((p, q) => (p._1 + q._1, p._2 + q._2)) { scan =>
+    val add = (p: (Long, Long), q: (Long, Long)) => (p._1 + q._1, p._2 + q._2)
+    OrderedScan.eager(rdd, (0L, 0L))(_.foldLeft((0L, 0L))(add))(add) { scan =>
       val (na, nb) = scan.total
       // one empty side: CDF undefined; both empty: no counts either
       val ks = if (na == 0L || nb == 0L) None else Some(scan.fold(-1.0) {

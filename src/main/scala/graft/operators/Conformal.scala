@@ -41,18 +41,19 @@ object Conformal {
       val sorted = r.filter(col("__cal")).select("__r")
         .orderBy("__r").queryExecution.toRdd
         .map(_.getDouble(0))
-      // rank selection against the sorted calibration slice: the carry-in
-      // is the number of values below the partition, so only the partition
-      // holding the k-th value yields it
+      // rank selection: the prefix counts values, so only the partition
+      // holding the k-th value is read, from the count below it
       val sizeOf = (it: Iterator[Double]) => it.foldLeft(0L)((n, _) => n + 1)
       val (nCal, qhat) = OrderedScan.eager(sorted, 0L)(sizeOf)(_ + _) { scan =>
         val nCal = scan.total
         require(nCal > 0, "empty calibration split")
         val k = math.min(nCal, math.ceil((nCal + 1) * (1.0 - alpha)).toLong)
-        val q = scan.fold(Option.empty[Double]) { (below, it) =>
-          if (below > k - 1) None else it.drop((k - 1 - below).toInt).nextOption()
-        }(_.orElse(_))
-        (nCal, q.get)
+        (nCal, scan.find(_ > k - 1) { (below, it) =>
+          // a long offset: one partition can hold over Int.MaxValue values
+          var i = k - 1 - below
+          while (i > 0) { it.next(); i -= 1 }
+          it.next()
+        }.get)
       }
       r.filter(!col("__cal"))
         .agg(count(lit(1)).as("n_test"),

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInternalRow, JoinedRow,
-  RowOrdering, UnsafeProjection, UnsafeRow}
+  RowOrdering, UnsafeProjection}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
@@ -48,17 +48,21 @@ object Prefix {
       nullable = true)
     val scan = OrderedScan(sorted.queryExecution.toRdd, new Array[Long](vIdx.length)) { it =>
       // range partitioning keeps equal keys in one partition and the sort
-      // makes them adjacent, so comparing neighbours finds every duplicate
-      val keyOf = UnsafeProjection.create(Seq(key))
+      // makes them adjacent, so comparing neighbours finds every duplicate;
+      // two projections take turns, so the previous key stays in the
+      // other's buffer and no row is copied
+      val keyOf = Array.fill(2)(UnsafeProjection.create(Seq(key)))
       val ord = RowOrdering.createNaturalAscendingOrdering(Seq(key.dataType))
-      var prev: UnsafeRow = null
+      var prev: InternalRow = null
+      var turn = 0
       val s = new Array[Long](vIdx.length)
       it.foreach { r =>
-        val k0 = keyOf(r)
+        val k0 = keyOf(turn)(r)
         require(prev == null || ord.compare(prev, k0) != 0,
           s"cumSumLongs: duplicate $orderCol value ${k0.get(0, key.dataType)}; " +
             "orderCol values must be distinct")
-        prev = k0.copy()
+        prev = k0
+        turn ^= 1
         var k = 0
         while (k < vIdx.length) { s(k) += r.getLong(vIdx(k)); k += 1 }
       }

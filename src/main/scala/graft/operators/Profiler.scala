@@ -645,13 +645,7 @@ object Profiler {
       groupA: String, groupB: String): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val v = col(valueCol).cast("double")
-    val perVal = df.filter(col(groupCol).isNotNull && v.isNotNull &&
-        (col(groupCol) === groupA || col(groupCol) === groupB))
-      .groupBy(v.as("v")).agg(
-        sum(when(col(groupCol) === groupA, 1L).otherwise(0L)).as("ca"),
-        sum(when(col(groupCol) === groupB, 1L).otherwise(0L)).as("cb"))
-    val (na, nb, ra2, ties) = rankSweep(perVal)
+    val (na, nb, ra2, ties) = rankSweep(perValCounts(df, valueCol, groupCol, groupA, groupB))
     if (na == 0L && nb == 0L) nullRow(spark,
       Seq(("n_a", LongType), ("n_b", LongType), ("u_a", DoubleType), ("z", DoubleType)))
     else Seq((na, nb, ra2.toDouble / 2.0, ties)).toDF("n_a", "n_b", "__ra", "__ties")
@@ -839,6 +833,16 @@ object Profiler {
         org.apache.spark.sql.Row(fields.map(_ => null): _*)),
       StructType(fields.map { case (n, t) => StructField(n, t, nullable = true) }))
 
+  /** Per-distinct-value counts `(v, ca, cb)` of groups A and B. */
+  private def perValCounts(df: DataFrame, valueCol: String, groupCol: String,
+      groupA: String, groupB: String): DataFrame = {
+    val v = col(valueCol).cast("double")
+    df.filter(v.isNotNull && (col(groupCol) === groupA || col(groupCol) === groupB))
+      .groupBy(v.as("v")).agg(
+        sum(when(col(groupCol) === groupA, 1L).otherwise(0L)).as("ca"),
+        sum(when(col(groupCol) === groupB, 1L).otherwise(0L)).as("cb"))
+  }
+
   /** Shared DISTRIBUTED rank sweep over a per-distinct-value count frame
     * `(v, ca, cb)`: a [[graft.core.OrderedScan]] on `v` whose carry-in
     * is the count of values below the partition.
@@ -849,11 +853,7 @@ object Profiler {
   private def rankSweep(perVal: DataFrame): (Long, Long, Long, Long) = {
     val rdd = perVal.orderBy("v").select("ca", "cb")
       .queryExecution.toRdd.map(r => (r.getLong(0), r.getLong(1)))
-    OrderedScan.eager(rdd, (0L, 0L)) { it =>
-      var a = 0L; var b = 0L
-      it.foreach { case (x, y) => a += x; b += y }
-      (a, b)
-    }(addPairs) { scan =>
+    OrderedScan.eager(rdd, (0L, 0L))(_.foldLeft((0L, 0L))(addPairs))(addPairs) { scan =>
       val (na, nb) = scan.total
       val (ra2, ties) = scan.fold((0L, 0L)) { case ((offA, offB), it) =>
         var prev = offA + offB; var r2 = 0L; var tt = 0L
@@ -1061,11 +1061,8 @@ object Profiler {
       .agg(round(sum(weight.cast("decimal(30,6)")) * 100).cast("long").as("xc"))
     val rdd = perKey.orderBy("xc").select("xc")
       .queryExecution.toRdd.map(_.getLong(0))
-    OrderedScan.eager(rdd, (0L, 0L)) { it =>
-      var cnt = 0L; var sx = 0L
-      it.foreach { x => cnt += 1; sx += x }
-      (cnt, sx)
-    }(addPairs) { scan =>
+    val countSum = (it: Iterator[Long]) => it.foldLeft((0L, 0L))((s, x) => (s._1 + 1, s._2 + x))
+    OrderedScan.eager(rdd, (0L, 0L))(countSum)(addPairs) { scan =>
       val (n, total) = scan.total
       if (n == 0) {
         Seq((0L, Option.empty[Double], Option.empty[Double]))
@@ -1594,12 +1591,7 @@ object Profiler {
     * arithmetic, op-for-op, so the two paths are bit-identical. */
   def wasserstein1Window(df: DataFrame, valueCol: String, groupCol: String,
       groupA: String, groupB: String): DataFrame = {
-    val v = col(valueCol).cast("double")
-    val perVal = df.filter(v.isNotNull &&
-        (col(groupCol) === groupA || col(groupCol) === groupB))
-      .groupBy(v.as("v")).agg(
-        sum(when(col(groupCol) === groupA, 1L).otherwise(0L)).as("ca"),
-        sum(when(col(groupCol) === groupB, 1L).otherwise(0L)).as("cb"))
+    val perVal = perValCounts(df, valueCol, groupCol, groupA, groupB)
     val w = org.apache.spark.sql.expressions.Window.orderBy("v")
     val run = w.rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
     val all = org.apache.spark.sql.expressions.Window
@@ -1637,12 +1629,7 @@ object Profiler {
       groupA: String, groupB: String): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val v = col(valueCol).cast("double")
-    val perVal = df.filter(v.isNotNull &&
-        (col(groupCol) === groupA || col(groupCol) === groupB))
-      .groupBy(v.as("v")).agg(
-        sum(when(col(groupCol) === groupA, 1L).otherwise(0L)).as("ca"),
-        sum(when(col(groupCol) === groupB, 1L).otherwise(0L)).as("cb"))
+    val perVal = perValCounts(df, valueCol, groupCol, groupA, groupB)
     val rdd = perVal.orderBy("v").select("v", "ca", "cb")
       .queryExecution.toRdd
       .map(r => (r.getDouble(0), r.getLong(1), r.getLong(2)))

@@ -39,6 +39,22 @@ class OrderedScanSpec extends SparkSpec {
     assert(none.total === 7L && none.map((c, it) => it.map(_ + c)).isEmpty())
   }
 
+  test("find reads only the partition its long prefix selects, past Int.MaxValue") {
+    // each element stands for that many values: 2^31, 2^31, 5 and 2^31
+    val big = 1L << 31
+    val reads = spark.sparkContext.longAccumulator
+    val w = spark.sparkContext.parallelize(Seq(big, big, 5L, big), 4)
+      .map { x => reads.add(1); x }
+    val scan = OrderedScan(w, 0L)(_.sum)(_ + _)
+    reads.reset()
+    assert(scan.find(_ > 2 * big + 3)((below, it) => (below, it.toList)) ===
+      Some((2 * big, List(5L))))
+    assert(reads.value === 1L)
+    assert(scan.find(_ > 0L)((below, _) => below) === Some(0L))
+    assert(scan.find(_ >= 3 * big + 5)((below, _) => below) === Some(2 * big + 5))
+    assert(scan.find(_ > 3 * big + 5)((below, _) => below) === None)
+  }
+
   test("eager scan releases its input on return and on failure") {
     val rdd = sliced.map(_ * 2)
     assert(OrderedScan.eager(rdd, 0L)(_.sum)(_ + _)(_.fold(0L)((_, it) => it.size.toLong)(_ + _))
