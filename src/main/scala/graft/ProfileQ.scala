@@ -23,28 +23,50 @@ object ProfileQ {
     val taskTime = new java.util.concurrent.atomic.AtomicLong(0L)
     val jobNames = new java.util.concurrent.ConcurrentHashMap[Int, String]()
     val jobAgg = new java.util.concurrent.ConcurrentHashMap[String, (Int, Long)]()
+    // sentinel jobs that flush the listener bus (see `flush`), never counted
+    val flushGroup = "profileq-listener-flush"
+    val flushStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val flushJobs = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val flushed = new java.util.concurrent.Semaphore(0)
     spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobStarts.put(js.jobId, System.nanoTime())
-        val cs = js.stageInfos.lastOption.map(_.name.takeWhile(_ != '\n').take(90)).getOrElse("?")
-        jobNames.put(js.jobId, cs)
-        ()
-      }
-      override def onJobEnd(je: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-        val t0 = Option(jobStarts.remove(je.jobId)).getOrElse(0L)
-        jobCount.incrementAndGet()
-        val dt = System.nanoTime() - t0
-        jobTime.addAndGet(dt)
-        val nm = Option(jobNames.remove(je.jobId)).getOrElse("?")
-        jobAgg.merge(nm, (1, dt),
-          (a, b) => (a._1 + b._1, a._2 + b._2))
-        ()
-      }
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(js.properties).exists(_.getProperty("spark.jobGroup.id") == flushGroup)) {
+          flushJobs.add(js.jobId)
+          js.stageIds.foreach(flushStages.add)
+        } else {
+          jobStarts.put(js.jobId, System.nanoTime())
+          val cs = js.stageInfos.lastOption.map(_.name.takeWhile(_ != '\n').take(90)).getOrElse("?")
+          jobNames.put(js.jobId, cs)
+          ()
+        }
+      override def onJobEnd(je: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+        if (flushJobs.remove(je.jobId)) flushed.release()
+        else {
+          val t0 = Option(jobStarts.remove(je.jobId)).getOrElse(0L)
+          jobCount.incrementAndGet()
+          val dt = System.nanoTime() - t0
+          jobTime.addAndGet(dt)
+          val nm = Option(jobNames.remove(je.jobId)).getOrElse("?")
+          jobAgg.merge(nm, (1, dt),
+            (a, b) => (a._1 + b._1, a._2 + b._2))
+          ()
+        }
       override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        if (te.taskInfo != null) taskTime.addAndGet(te.taskInfo.duration * 1000000L)
+        if (te.taskInfo != null && !flushStages.contains(te.stageId))
+          taskTime.addAndGet(te.taskInfo.duration * 1000000L)
         ()
       }
     })
+    // The bus delivers events in order, so once a sentinel job's end event
+    // arrives every earlier job's has been counted — without this, late
+    // onJobEnd events are charged to the next run.
+    def flush(): Unit = {
+      spark.sparkContext.setJobGroup(flushGroup, "listener flush")
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.clearJobGroup()
+      require(flushed.tryAcquire(60, java.util.concurrent.TimeUnit.SECONDS),
+        "listener bus not flushed within 60 s")
+    }
     // optional per-stage breakdown: top stages by total task run time, with
     // CPU vs run split — separates real compute from per-task overhead
     val stageStats = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String, Int, Long, Long)]()
@@ -71,6 +93,7 @@ object ProfileQ {
         // release per-query caches exactly like Bench so repeat runs are honest
         spark.catalog.clearCache()
         spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+        flush()
         println(f"[profileq] $name run $i: $wall%.3f s ($c rows, " +
           f"${jobCount.get()} jobs, ${jobTime.get() / 1e9}%.3f s in jobs, " +
           f"${taskTime.get() / 1e9}%.3f s task-sum)")

@@ -78,6 +78,25 @@ package object functions {
   def quantize_stats(vec: Column): Column =
     col(QuantizeStats(expr(vec)))
 
+  /** Exact long dot products `q6(vec) · row` against every row of a
+    * constant matrix (array<bigint>; see [[QuantOps]] for the null and
+    * ANSI-overflow rules). */
+  def q6_dots(vec: Column, matrix: Array[Array[Long]]): Column =
+    col(QuantizedDots(expr(vec), matrix.flatten, matrix.head.length))
+
+  /** Nearest PQ code per subspace (array<int>, ties to the smaller code)
+    * against `books(sub)(code)(d)`. */
+  def pq_assign(vec: Column, books: Array[Array[Array[Long]]]): Column =
+    col(PqAssign(expr(vec), books.flatten.flatten, books.head.length, books.head.head.length))
+
+  /** PQ lookup table `lut[sub][code]`: exact squared L2 of each quantized
+    * subvector against each code (array<array<bigint>>). */
+  def pq_lut(vec: Column, books: Array[Array[Array[Long]]]): Column =
+    col(PqLut(expr(vec), books.flatten.flatten, books.head.length, books.head.head.length))
+
+  /** ADC distance `Σ_sub lut[sub][codes[sub]]` (bigint). */
+  def adc_sum(codes: Column, lut: Column): Column = col(AdcSum(expr(codes), expr(lut)))
+
   /** Per-doc repetition counters over a token array (one kernel pass). */
   def repetition_counts(tokens: Column): Column =
     col(RepetitionStats(expr(tokens)))

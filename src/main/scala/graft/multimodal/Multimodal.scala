@@ -148,7 +148,8 @@ object Multimodal {
     * Spark-side shape of video frame sampling (schema, fan-out, per-frame
     * stats); a real deployment swaps byte-chunking for codec keyframe
     * extraction inside the same plumbing. One row per sampled frame,
-    * all column ops (substring/sha2 are codegen'd), no UDFs.
+    * all column ops (substring/sha2 are compiled; the frame `filter` is an
+    * interpreted lambda), no UDFs.
     * Expects `media_id` + `payload` columns. */
   def sampleFrames(df: DataFrame, frameBytes: Int, step: Int): DataFrame = {
     require(frameBytes > 0 && step > 0)

@@ -442,7 +442,8 @@ object Graph {
     require(maxBasketSize >= 0, "maxBasketSize must be >= 0 (0 = unlimited)")
     // One pass, one exchange: collapse each basket to its sorted distinct
     // item array with a map-side-combined aggregate, then emit the a<b
-    // pairs ROW-LOCALLY from the array (codegen'd transform/slice — no
+    // pairs ROW-LOCALLY from the array (a `transform`/`slice` projection:
+    // `transform` runs as an interpreted lambda, but per basket — no
     // self-join, so the input is scanned once and never shuffled twice).
     // The old self-join formulation paid 2 scans + 2 distinct exchanges +
     // a sort-merge join before the final pair distinct; this pays 1 scan +

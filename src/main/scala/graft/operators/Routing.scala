@@ -15,8 +15,9 @@ import org.apache.spark.sql.functions._
   * The weight is the first 15 hex digits of `md5(key ":" shard)` read as
   * an integer — the repo's standard engine-reproducible hash (any engine
   * with md5 derives the identical routing; no JVM-private hash seeds), and
-  * the whole assignment is one row-local codegen'd expression: no shuffle,
-  * no UDF, no per-shard join. O(rows · nShards) work, embarrassingly
+  * the whole assignment is one row-local expression (a `transform` over
+  * the shard ids — an interpreted lambda): no shuffle, no UDF, no
+  * per-shard join. O(rows · nShards) work, embarrassingly
   * parallel — the shape that survives any scale.
   */
 object Routing {

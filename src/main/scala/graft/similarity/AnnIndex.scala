@@ -2,6 +2,7 @@ package graft.similarity
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.{adc_sum, pq_assign, pq_lut, q6_dots}
 
 /** Trained quantizers of a disk PQ index — persist alongside the index
   * (both are bounded driver-side arrays: `nLists·dim` + `m·k·dim/m`
@@ -20,9 +21,10 @@ final case class PqIndexModel(
   *  - BUILD ([[buildIndex]]): train the integer-exact coarse quantizer
   *    ([[Ivf.trainCentroidsQuantized]]) and PQ codebooks
   *    ([[Pq.trainCodebooks]]); assign every corpus vector its list and
-  *    its `m`-byte code IN ONE ROW-LOCAL PROJECTION ([[Pq.codesArray]] —
-  *    no explode, no shuffle); write `(id, codes, v)` rows
-  *    `partitionBy(list_id)`.
+  *    its `m`-byte code IN ONE ROW-LOCAL PROJECTION — two compiled
+  *    kernel calls per row ([[graft.functions.q6_dots]] for the list
+  *    argmax, [[graft.functions.pq_assign]] for the codes), no explode,
+  *    no shuffle; write `(id, codes, v)` rows `partitionBy(list_id)`.
   *  - SEARCH ([[searchIndex]]): each query probes its `nProbe` best
   *    lists, so the scan reads ONLY the probed lists' directories
   *    (`PartitionFilters` — spec-asserted) and ONLY the code columns
@@ -89,7 +91,7 @@ object AnnIndex {
       {
         val nl = if (nLists > 0) nLists else suggestNLists(corpus.count())
         Ivf.trainCentroidsQuantized(corpus, idCol, vecCol, nl, ivfIters,
-          ivfSample)
+          ivfSample, dim)
       },
       Pq.trainCodebooks(corpus, idCol, vecCol, dim, m, kCodes, pqIters,
         pqSample))
@@ -149,7 +151,6 @@ object AnnIndex {
       model: PqIndexModel,
       overwrite: Boolean
   ): Unit = {
-    val scores = Ivf.centroidScoresLong(col("__qv6"), model.coarse)
     df
       .filter(col(vecCol).isNotNull && size(col(vecCol)) === model.dim)
       .select(col(idCol).as("id"), col(vecCol).as("v"))
@@ -160,13 +161,10 @@ object AnnIndex {
       // list_id repartition below still bounds the store at ~one file
       // per list, and row order within a list never affects results
       .repartition(df.sparkSession.sparkContext.defaultParallelism)
-      .withColumn("__qv6", Pq.q6(col("v")))
       // corpus list assignment ties to the SMALLER centroid id (first max),
       // the ivfPqTopK convention
-      .withColumn("list_id",
-        (array_position(scores, array_max(scores)) - 1).cast("int"))
-      .withColumn("codes", Pq.codesArray(col("v"), model.dim, model.m, model.books))
-      .select("id", "codes", "v", "list_id")
+      .select(col("id"), pq_assign(col("v"), model.books).as("codes"), col("v"),
+        Ivf.firstMax(q6_dots(col("v"), model.coarse)).as("list_id"))
       // co-locate each list before the partitioned write: without this,
       // EVERY write task emits a file into EVERY list directory — at
       // nLists = √N the store degenerates into tasks·nLists tiny files
@@ -790,18 +788,11 @@ object AnnIndex {
     require(shortlist >= topK, s"shortlist=$shortlist < topK=$topK")
     val qBase = queries
       .filter(col(vecCol).isNotNull && size(col(vecCol)) === model.dim)
-    // probe lists per query: ties to the HIGHER centroid id (reversed
-    // (score, index) struct sort — the ivfPqTopK convention)
-    val scores = Ivf.centroidScoresLong(col("__qv6"), model.coarse)
-    val probeIdx = slice(
-      reverse(array_sort(zip_with(scores,
-        sequence(lit(0), lit(nLists - 1)),
-        (s, i) => struct(s.as("s"), i.as("i"))))),
-      1, nProbe)
+    // probe lists per query: ties to the HIGHER centroid id (descending
+    // (score, index) — the ivfPqTopK convention)
     val probes = qBase
-      .select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-      .withColumn("__qv6", Pq.q6(col("qv")))
-      .withColumn("__p", explode(probeIdx))
+      .select(col(idCol).as("query_id"),
+        explode(Ivf.probeOrder(q6_dots(col(vecCol), model.coarse), nLists, nProbe)).as("__p"))
       .select(col("query_id"), col("__p.i").cast("int").as("list_id"))
     // partition pruning: the union of probed lists, a bounded
     // |queries|·nProbe-row fetch; dedup on the driver — a distributed
@@ -822,20 +813,20 @@ object AnnIndex {
           .select(col("id").as("neighbor_id"))), Seq("neighbor_id"), "left_anti")
       else codes0
     // per-query LUT as ONE nested array + row-local ADC fold
-    // ([[Pq.adcDist]] — the identical m exact longs the old
+    // ([[graft.functions.adc_sum]] — the identical m exact longs the old
     // posexplode ⋈ (sub, code)-LUT ⋈ groupBy shape summed, with no 8×
     // row blowup, no LUT join and no aggregate exchange: the candidate
     // rows flow straight from the pruned code scan into the shortlist
     // window's single query_id exchange)
     val qlut = qBase
       .select(col(idCol).as("query_id"),
-        Pq.lutArrays(col(vecCol), model.dim, model.m, model.books).as("__lut"))
+        pq_lut(col(vecCol), model.books).as("__lut"))
     val adc = codes
       .join(broadcast(probes), Seq("list_id"))
       .filter(col("neighbor_id") =!= col("query_id"))
       .join(broadcast(qlut), Seq("query_id"))
       .select(col("query_id"), col("neighbor_id"),
-        Pq.adcDist(col("codes"), col("__lut")).as("adc_dist"))
+        adc_sum(col("codes"), col("__lut")).as("adc_dist"))
     val ws = org.apache.spark.sql.expressions.Window.partitionBy("query_id")
       .orderBy(col("adc_dist").asc, col("neighbor_id").asc)
     val short = adc.withColumn("__r", row_number().over(ws))

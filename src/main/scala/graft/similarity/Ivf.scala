@@ -2,7 +2,7 @@ package graft.similarity
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.functions.{cosine_sim, dot_product}
+import graft.functions.{cosine_sim, dot_product, q6_dots, QuantOps}
 
 /** IVF (inverted-file) approximate nearest-neighbor search — the classic
   * coarse-quantizer scale path for embedding search (public design: FAISS
@@ -14,8 +14,9 @@ import graft.functions.{cosine_sim, dot_product}
   *     (select it with `sampleSize <= 0`), required once nLists grows
   *     with corpus size past what a fixed sample can seed.
   *  2. ASSIGN: every corpus vector goes to its nearest centroid's list —
-  *     a pure map (argmax of `nLists` dot products, all codegen'd column
-  *     ops), no shuffle.
+  *     a pure map (argmax of `nLists` dot products: one `dot_product`
+  *     kernel call per centroid, compiled built-ins for the argmax), no
+  *     shuffle.
   *  3. PROBE: each query is scored against the same centroids and probes
   *     its `nProbe` best lists; candidates = corpus rows in those lists
   *     (equi-join on `list_id`, queries broadcast), then exact cosine +
@@ -165,10 +166,20 @@ object Ivf {
     array(centroids.toIndexedSeq.map(c => dot_product(vec, typedLit(c.toSeq))): _*)
 
   /** Column: 0-based index of the best-scoring centroid (ties → first). */
-  private def argmaxList(vec: Column, centroids: Array[Array[Float]]): Column = {
-    val scores = centroidScores(vec, centroids)
+  private def argmaxList(vec: Column, centroids: Array[Array[Float]]): Column =
+    firstMax(centroidScores(vec, centroids))
+
+  /** Column: 0-based index of the first maximum of a score array — ties
+    * to the SMALLER index, null scores ignored (null when all are). */
+  private[graft] def firstMax(scores: Column): Column =
     (array_position(scores, array_max(scores)) - 1).cast("int")
-  }
+
+  /** Column: the `nProbe` best `(s, i)` structs of an `nLists` score
+    * array, best first — descending `(score, index)`, so ties go to the
+    * HIGHER index and null scores rank last. */
+  private[graft] def probeOrder(scores: Column, nLists: Int, nProbe: Int): Column =
+    slice(sort_array(arrays_zip(scores.as("s"), sequence(lit(0), lit(nLists - 1)).as("i")),
+      asc = false), 1, nProbe)
 
   /** Materialize an IVF index on disk: corpus assigned to lists and
     * written `partitionBy(list_id)` — every probe then reads ONLY the
@@ -268,13 +279,7 @@ object Ivf {
       centroids: Array[Array[Float]],
       nProbe: Int
   ): DataFrame = {
-    val nLists = centroids.length
-    val qScores = centroidScores(col("qv"), centroids)
-    val probeIdx = slice(
-      reverse(array_sort(zip_with(qScores,
-        sequence(lit(0), lit(nLists - 1)),
-        (s, i) => struct(s.as("s"), i.as("i"))))),
-      1, nProbe)
+    val probeIdx = probeOrder(centroidScores(col("qv"), centroids), centroids.length, nProbe)
     queries
       .select(col(idCol).as("query_id"), col(vecCol).as("qv"))
       .withColumn("__probe", explode(probeIdx))
@@ -283,12 +288,14 @@ object Ivf {
   }
 
   /** INTEGER-EXACT spherical-ish k-means on the same deterministic sample
-    * rule as [[trainCentroids]] (first `sampleSize` rows by ascending id),
+    * rule as [[trainCentroids]] (first `sampleSize` rows by ascending id,
+    * skipping null vectors and, when `dim > 0`, vectors of another length
+    * — the rows [[Pq.trainCodebooks]] and the index writers also skip),
     * re-expressed so an external SQL engine can replay training bit-for-bit
     * (the md5-twin playbook applied to k-means — exact long algebra instead
     * of drift-prone float means):
     *
-    *  - components quantize once: `q6(x) = floor(x·1e6)` as a long (the
+    *  - components quantize once: [[QuantOps.q6]], `floor(x·1e6)` as a long (the
     *    corpus embeddings are unit-norm, so inner-product assignment IS
     *    cosine assignment and no per-vector normalization is needed);
     *  - E-step: argmax of LONG dot products (≤ 64·1e12 per dot — no
@@ -307,36 +314,40 @@ object Ivf {
       vecCol: String,
       nLists: Int,
       iters: Int = 8,
-      sampleSize: Int = 2048
+      sampleSize: Int = 2048,
+      dim: Int = 0
   ): Array[Array[Long]] = {
+    val usable = if (dim > 0) col(vecCol).isNotNull && size(col(vecCol)) === dim
+      else col(vecCol).isNotNull
     // deterministic sample order: numeric ids sort exactly as before (the
     // oracle's ORDER BY id); non-castable ids (try_cast -> null) fall back
     // to string order instead of throwing under ANSI
     val sample: Array[Array[Long]] = df
+      .filter(usable)
       .select(col(idCol).try_cast("long").as("id"),
         col(idCol).cast("string").as("ids"), col(vecCol).as("v"))
       .orderBy("id", "ids").limit(sampleSize)
       .collect()
-      .map(_.getSeq[Float](2).toArray.map(x => math.floor(x.toDouble * 1e6).toLong))
+      .map(_.getSeq[Float](2).toArray.map(QuantOps.q6))
     require(sample.length >= nLists, s"sample ${sample.length} < nLists $nLists")
-    val dim = sample.head.length
+    val width = sample.head.length
     var centroids = Array.tabulate(nLists)(i => sample((i * sample.length) / nLists).clone())
     var it = 0
     while (it < iters) {
-      val sums = Array.fill(nLists)(new Array[Long](dim))
+      val sums = Array.fill(nLists)(new Array[Long](width))
       val counts = new Array[Int](nLists)
       sample.foreach { v =>
         var best = 0; var bestDot = Long.MinValue; var i = 0
         while (i < nLists) {
           var dot = 0L; var d = 0
           val c = centroids(i)
-          while (d < dim) { dot += c(d) * v(d); d += 1 }
+          while (d < width) { dot += c(d) * v(d); d += 1 }
           if (dot > bestDot) { bestDot = dot; best = i } // strict >: first max wins ties
           i += 1
         }
         counts(best) += 1
         var d = 0
-        while (d < dim) { sums(best)(d) += v(d); d += 1 }
+        while (d < width) { sums(best)(d) += v(d); d += 1 }
       }
       centroids = Array.tabulate(nLists) { i =>
         if (counts(i) == 0) centroids(i) // empty list keeps its centroid
@@ -346,18 +357,6 @@ object Ivf {
     }
     centroids
   }
-
-  /** Column: `q6`-quantized long components of a float vector — the same
-    * rounding an oracle applies (`floor(x::DOUBLE * 1e6)`). */
-  private[similarity] def q6(vec: Column): Column =
-    transform(vec, x => floor(x.cast("double") * lit(1000000.0)))
-
-  /** Column: array of LONG dot products of the quantized `vec` against each
-    * quantized centroid (all codegen'd built-ins, row-local). */
-  private[similarity] def centroidScoresLong(qvec: Column, centroids: Array[Array[Long]]): Column =
-    array(centroids.toIndexedSeq.map(c =>
-      aggregate(zip_with(qvec, typedLit(c.toSeq), (a, b) => a * b),
-        lit(0L), (acc, x) => acc + x)): _*)
 
   /** End-to-end IVF top-k with INTEGER-EXACT training + assignment +
     * probing ([[trainCentroidsQuantized]]): the coarse-quantizer routing is
@@ -379,27 +378,17 @@ object Ivf {
   ): DataFrame = {
     require(nProbe >= 1 && nProbe <= nLists)
     val centroids = trainCentroidsQuantized(corpus, idCol, vecCol, nLists, iters, sampleSize)
-    val scores = centroidScoresLong(col("qv6"), centroids)
     val assigned = corpus
       .repartition(corpus.sparkSession.sparkContext.defaultParallelism)
       .select(col(idCol).as("id"), col(vecCol).as("v"))
-      .withColumn("qv6", q6(col("v")))
-      .withColumn("list_id", (array_position(scores, array_max(scores)) - 1).cast("int"))
-      .drop("qv6")
+      .withColumn("list_id", firstMax(q6_dots(col("v"), centroids)))
     // nProbe best lists per query, ties to the HIGHER centroid index —
-    // the (score, index) struct sort reversed, mirrored by the oracle's
-    // ORDER BY dot DESC, cid DESC
-    val probeIdx = slice(
-      reverse(array_sort(zip_with(scores,
-        sequence(lit(0), lit(nLists - 1)),
-        (s, i) => struct(s.as("s"), i.as("i"))))),
-      1, nProbe)
+    // mirrored by the oracle's ORDER BY dot DESC, cid DESC
     val probes = queries
       .select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-      .withColumn("qv6", q6(col("qv")))
-      .withColumn("__probe", explode(probeIdx))
+      .withColumn("__probe", explode(probeOrder(q6_dots(col("qv"), centroids), nLists, nProbe)))
       .withColumn("list_id", col("__probe.i").cast("int"))
-      .drop("__probe", "qv6")
+      .drop("__probe")
     val scored = assigned.join(broadcast(probes), Seq("list_id"))
       .filter(col("id") =!= col("query_id"))
       .select(col("query_id"), col("id").as("neighbor_id"),

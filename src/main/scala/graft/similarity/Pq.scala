@@ -1,7 +1,8 @@
 package graft.similarity
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.functions.{adc_sum, pq_assign, pq_lut, q6_dots, QuantOps}
 
 /** Product quantization (Jégou, Douze & Schmid, TPAMI 2011) — the
   * compressed-vector half of the canonical billion-scale ANN stack
@@ -18,10 +19,11 @@ import org.apache.spark.sql.functions._
   * driver with integer Lloyd steps (L2 argmin, ties to the smaller code,
   * `floorDiv` centroid means, empty codes keep their centroid), so the
   * codebook is a pure function of the data that plain SQL replays; and
-  * assignment is one row-local codegen'd expression per subspace —
-  * `argmin_c Σ_d (v_d − c_d)²` over exact longs (≤ 3·10¹³, exact in
-  * double too, so engines agree bit-for-bit). Codes scale
-  * embarrassingly: no shuffle, no join, the codebook rides the closure.
+  * assignment is one row-local kernel call per vector
+  * ([[graft.functions.pq_assign]]) — `argmin_c Σ_d (v_d − c_d)²` per
+  * subspace over exact longs (≤ 3·10¹³, exact in double too, so engines
+  * agree bit-for-bit). Codes scale embarrassingly: no shuffle, no join,
+  * the codebook rides the plan as one primitive `long[]`.
   */
 object Pq {
 
@@ -48,7 +50,7 @@ object Pq {
         col(idCol).cast("string").as("ids"), col(vecCol).as("v"))
       .orderBy("id", "ids").limit(sampleSize)
       .collect()
-      .map(_.getSeq[Float](2).toArray.map(x => math.floor(x.toDouble * 1e6).toLong))
+      .map(_.getSeq[Float](2).toArray.map(QuantOps.q6))
     require(sample.length >= k, s"sample ${sample.length} < k $k")
     Array.tabulate(m) { sub =>
       val off = sub * subDim
@@ -84,101 +86,10 @@ object Pq {
     }
   }
 
-  private[similarity] def q6(vec: Column): Column =
-    transform(vec, x => floor(x.cast("double") * lit(1000000.0)))
-
-  /** Row-local L2² of a quantized subvector against one codebook row. */
-  private def subDist(subVec: Column, cv: Array[Long]): Column =
-    aggregate(zip_with(subVec, typedLit(cv.toSeq),
-      (a, b) => (a - b) * (a - b)), lit(0L), (acc, x) => acc + x)
-
-  /** Row-local nearest-code assignment against trained codebooks. One
-    * row per (vector, subspace): the codebook rides as a single literal
-    * nested array and the k-candidate argmin is ONE generated loop
-    * (`transform` with index + lexicographic struct-min, ties to the
-    * smaller code) — not k·m unrolled expressions, which was measured to
-    * blow whole-stage codegen up to 9 s at sf0.1 before this shape. */
-  private def assignCodes(
-      df: DataFrame,
-      idCol: String,
-      vecCol: String,
-      dim: Int,
-      m: Int,
-      codebooks: Array[Array[Array[Long]]]
-  ): DataFrame = {
-    val subDim = dim / m
-    val qv = q6(col(vecCol))
-    val subArrays = array((0 until m).map(sub =>
-      slice(qv, sub * subDim + 1, subDim)): _*)
-    val books3d = typedLit(codebooks.map(_.map(_.toIndexedSeq).toIndexedSeq).toIndexedSeq)
-    val cands = transform(element_at(books3d, col("sub") + 1),
-      (cb, c) => struct(
-        aggregate(zip_with(col("sv"), cb, (a, b) => (a - b) * (a - b)),
-          lit(0L), (acc, x) => acc + x).as("d"),
-        c.as("c")))
-    df.filter(col(vecCol).isNotNull && size(col(vecCol)) === dim)
-      .select(col(idCol).as("id"), posexplode(subArrays).as(Seq("sub", "sv")))
-      .withColumn("best", array_min(cands))
-      .select(col("id"), col("sub"), col("best.c").as("code"),
-        col("best.d").as("err_q"))
-  }
-
-  /** WIDE row-local code assignment — the codes a disk index stores: ONE
-    * `array<int>` of `m` nearest-code ids per vector, same integer-exact
-    * L2 argmin and smaller-code tie rule as [[assignCodes]] (lexicographic
-    * struct-min), but with no explode and no shuffle: the codebook rides
-    * as one literal nested array and the whole assignment is a single
-    * nested-HOF expression in the scan's projection. */
-  private[similarity] def codesArray(
-      vec: Column,
-      dim: Int,
-      m: Int,
-      codebooks: Array[Array[Array[Long]]]
-  ): Column = {
-    val subDim = dim / m
-    val qv = q6(vec)
-    val books3d = typedLit(codebooks.map(_.map(_.toIndexedSeq).toIndexedSeq).toIndexedSeq)
-    zip_with(
-      array((0 until m).map(sub => slice(qv, sub * subDim + 1, subDim)): _*),
-      sequence(lit(0), lit(m - 1)),
-      (sv, sub) => array_min(transform(element_at(books3d, sub + 1),
-        (cb, c) => struct(
-          aggregate(zip_with(sv, cb, (a, b) => (a - b) * (a - b)),
-            lit(0L), (acc, x) => acc + x).as("d"),
-          c.as("c")))).getField("c").cast("int"))
-  }
-
-  /** Per-query ADC lookup table as ONE nested array column:
-    * `lut[sub][code]` = exact subspace L2² of the query's sub-vector
-    * against codebook entry `code` — the row-local ADC table
-    * (the same `subDist` longs, laid out for direct `element_at` indexing
-    * instead of an explode + `(sub, code)` join). */
-  private[similarity] def lutArrays(
-      vec: Column,
-      dim: Int,
-      m: Int,
-      codebooks: Array[Array[Array[Long]]]
-  ): Column = {
-    val subDim = dim / m
-    val qv = q6(vec)
-    array((0 until m).map { sub =>
-      val sv = slice(qv, sub * subDim + 1, subDim)
-      array(codebooks(sub).toIndexedSeq.map(cv => subDist(sv, cv)): _*)
-    }: _*)
-  }
-
-  /** Row-local ADC distance: `Σ_sub lut[sub][codes[sub]]` — the SAME `m`
-    * exact longs the (sub, code) explode-join-groupBy shape summed, folded
-    * in one codegen'd expression with no explode, no LUT join and no
-    * aggregate exchange (long addition is associative and commutative, so
-    * the grouping order cannot change the total). */
-  private[similarity] def adcDist(codes: Column, lut: Column): Column =
-    aggregate(zip_with(codes, lut, (c, l) => element_at(l, c + 1)),
-      lit(0L), (acc, x) => acc + x)
-
   /** Assign PQ codes: for each input vector, one row per subspace with
     * the nearest code and its exact squared quantization error.
-    * Returns `(id, sub, code, err_q)`. */
+    * Returns `(id, sub, code, err_q)`: one row per (vector, subspace),
+    * `err_q` read from the vector's own lookup table at its code. */
   def pqCodes(
       df: DataFrame,
       idCol: String,
@@ -190,7 +101,14 @@ object Pq {
       sampleSize: Int = 512
   ): DataFrame = {
     val codebooks = trainCodebooks(df, idCol, vecCol, dim, m, k, iters, sampleSize)
-    assignCodes(df, idCol, vecCol, dim, m, codebooks)
+    df.filter(col(vecCol).isNotNull && size(col(vecCol)) === dim)
+      .select(col(idCol).as("id"), pq_lut(col(vecCol), codebooks).as("__lut"),
+        pq_assign(col(vecCol), codebooks).as("__codes"))
+      // explode below the table lookup's projection, so each vector's
+      // table is built once, not once per subspace row
+      .select(col("id"), col("__lut"), posexplode(col("__codes")).as(Seq("sub", "code")))
+      .select(col("id"), col("sub"), col("code"),
+        element_at(element_at(col("__lut"), col("sub") + 1), col("code") + 1).as("err_q"))
   }
 
   /** PQ top-k search with asymmetric distance computation (ADC — Jégou
@@ -223,8 +141,8 @@ object Pq {
     val codebooks = trainCodebooks(corpus, idCol, vecCol, dim, m, kCodes,
       iters, sampleSize)
     // corpus side: m-byte codes only (the compressed representation), ONE
-    // array<int> per vector ([[codesArray]] — row-local, no explode);
-    // query side: the m×k LUT as ONE nested array ([[lutArrays]]). ADC is
+    // array<int> per vector (`pq_assign` — row-local, no explode);
+    // query side: the m×k LUT as ONE nested array (`pq_lut`). ADC is
     // then a broadcast pairing + a row-local m-lookup fold: the previous
     // (sub, code) hash join shipped m rows per (query, vector) pair into a
     // groupBy exchange only to rebuild exactly this sum (and its
@@ -238,11 +156,11 @@ object Pq {
       // ivfTopKExact discipline); the per-row output is order-independent
       .repartition(corpus.sparkSession.sparkContext.defaultParallelism)
       .select(col("neighbor_id"),
-        codesArray(col("__v"), dim, m, codebooks).as("__codes"))
+        pq_assign(col("__v"), codebooks).as("__codes"))
     val qlut = queries
       .filter(col(vecCol).isNotNull && size(col(vecCol)) === dim)
       .select(col(idCol).as("query_id"),
-        lutArrays(col(vecCol), dim, m, codebooks).as("__lut"))
+        pq_lut(col(vecCol), codebooks).as("__lut"))
     // full-corpus ADC is the operator's contract — every query scores
     // every corpus vector — so the pairing is an EXPLICIT broadcast
     // nested-loop join against the bounded query side (the old join
@@ -250,7 +168,7 @@ object Pq {
     val dists = codes
       .join(broadcast(qlut), col("neighbor_id") =!= col("query_id"))
       .select(col("query_id"), col("neighbor_id"),
-        adcDist(col("__codes"), col("__lut")).as("adc_dist"))
+        adc_sum(col("__codes"), col("__lut")).as("adc_dist"))
     val w = org.apache.spark.sql.expressions.Window.partitionBy("query_id")
       .orderBy(col("adc_dist").asc, col("neighbor_id").asc)
     dists.withColumn("rank", row_number().over(w)).filter(col("rank") <= topK)
@@ -287,12 +205,11 @@ object Pq {
   ): DataFrame = {
     require(nProbe >= 1 && nProbe <= nLists)
     val coarse = Ivf.trainCentroidsQuantized(corpus, idCol, vecCol, nLists,
-      ivfIters, ivfSample)
+      ivfIters, ivfSample, dim)
     val books = trainCodebooks(corpus, idCol, vecCol, dim, m, kCodes,
       pqIters, pqSample)
-    val scores = Ivf.centroidScoresLong(col("qv6"), coarse)
     // corpus: list id AND the m-byte code array in ONE row-local
-    // projection (integer-exact dot argmax, first max; [[codesArray]]) —
+    // projection (integer-exact dot argmax, first max; `pq_assign`) —
     // the narrow (id, sub, code) shape needed a corpus-wide codes ⋈ lists
     // join just to reunite columns computed from the same row
     val codes = corpus
@@ -301,34 +218,26 @@ object Pq {
       // spread before the heavy per-row encode (see pqAdcTopK /
       // ivfTopKExact — guide §2.5)
       .repartition(corpus.sparkSession.sparkContext.defaultParallelism)
-      .withColumn("qv6", Ivf.q6(col("v")))
-      .withColumn("list_id", (array_position(scores, array_max(scores)) - 1).cast("int"))
-      .select(col("neighbor_id"),
-        codesArray(col("v"), dim, m, books).as("__codes"), col("list_id"))
+      .select(col("neighbor_id"), pq_assign(col("v"), books).as("__codes"),
+        Ivf.firstMax(q6_dots(col("v"), coarse)).as("list_id"))
     // queries: nProbe best lists (ties to the HIGHER centroid index, the
     // ivfTopKExact convention) + the ADC LUT
-    val probeIdx = slice(
-      reverse(array_sort(zip_with(scores,
-        sequence(lit(0), lit(nLists - 1)),
-        (s, i) => struct(s.as("s"), i.as("i"))))),
-      1, nProbe)
     val qBase = queries.filter(col(vecCol).isNotNull && size(col(vecCol)) === dim)
     val probes = qBase
-      .select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-      .withColumn("qv6", Ivf.q6(col("qv")))
-      .withColumn("__p", explode(probeIdx))
+      .select(col(idCol).as("query_id"),
+        explode(Ivf.probeOrder(q6_dots(col(vecCol), coarse), nLists, nProbe)).as("__p"))
       .select(col("query_id"), col("__p.i").cast("int").as("list_id"))
     // per-query LUT as one nested array + row-local ADC fold (see
     // [[pqAdcTopK]] — identical longs, no explode/LUT join/groupBy
     // exchange); the probed-list pairing stays a broadcast hash join
     val qlut = qBase
       .select(col(idCol).as("query_id"),
-        lutArrays(col(vecCol), dim, m, books).as("__lut"))
+        pq_lut(col(vecCol), books).as("__lut"))
     val dists = codes.join(broadcast(probes), Seq("list_id"))
       .filter(col("neighbor_id") =!= col("query_id"))
       .join(broadcast(qlut), Seq("query_id"))
       .select(col("query_id"), col("neighbor_id"),
-        adcDist(col("__codes"), col("__lut")).as("adc_dist"))
+        adc_sum(col("__codes"), col("__lut")).as("adc_dist"))
     val w = org.apache.spark.sql.expressions.Window.partitionBy("query_id")
       .orderBy(col("adc_dist").asc, col("neighbor_id").asc)
     dists.withColumn("rank", row_number().over(w)).filter(col("rank") <= topK)

@@ -108,10 +108,8 @@ object Similarity {
   /** Per-vector L2-norm + symmetric int8 quantization summary — the audit
     * pass before shipping embeddings to a vector store (norm for
     * normalization checks, scale + code checksums for quantization QA).
-    * Row-local HOF arithmetic over the 64-dim array (fine at this width;
-    * a hot inner loop over much wider vectors belongs in a native
-    * `Expression` like [[graft.functions.cosine_sim]]). No shuffle: one
-    * narrow projection at scan speed. Quantization: `scale = max|x|/127`,
+    * One row-local [[graft.functions.quantize_stats]] kernel call per
+    * vector. No shuffle: one narrow projection at scan speed. Quantization: `scale = max|x|/127`,
     * `code = floor(x/scale + 0.5)` (explicit floor keeps ties engine-
     * independent; codes span [-127, 127]). */
   def quantizeSummary(df: DataFrame, idCol: String, vecCol: String): DataFrame = {
@@ -355,11 +353,11 @@ object Similarity {
     * exact integer sum. Scaling by `1/√outDim` is left to the caller (it
     * would reintroduce floats).
     *
-    * Shape: the sign matrix is built ONCE at plan time (outDim×inDim
-    * literals) and the projection is one row-local codegen'd expression —
-    * no shuffle, no join, no per-row hashing; embarrassingly parallel at
-    * any scale. Returns `(id, dim, proj_q)` exploded per output
-    * coordinate. */
+    * Shape: the sign matrix is built ONCE at plan time (one primitive
+    * outDim×inDim `long[]`) and the projection is one row-local kernel
+    * call ([[graft.functions.q6_dots]]) — no shuffle, no join, no per-row
+    * hashing; embarrassingly parallel at any scale. Returns
+    * `(id, dim, proj_q)` exploded per output coordinate. */
   def signProjection(df: DataFrame, idCol: String, vecCol: String,
       inDim: Int, outDim: Int, seed: Long = 42L): DataFrame = {
     require(inDim >= 1 && outDim >= 1 && outDim <= 256, s"dims $inDim->$outDim")
@@ -370,12 +368,8 @@ object Similarity {
       val w = java.lang.Long.parseLong(hex.substring(0, 15), 16)
       if (w % 2 == 0) 1L else -1L
     }
-    val qv = transform(col(vecCol), x => floor(x.cast("double") * lit(1000000.0)))
-    val projs = mdSigns.toIndexedSeq.map { row =>
-      aggregate(zip_with(qv, typedLit(row.toSeq), (a, b) => a * b),
-        lit(0L), (acc, x) => acc + x)
-    }
     df.filter(col(vecCol).isNotNull && size(col(vecCol)) === inDim)
-      .select(col(idCol).as("id"), posexplode(array(projs: _*)).as(Seq("dim", "proj_q")))
+      .select(col(idCol).as("id"),
+        posexplode(graft.functions.q6_dots(col(vecCol), mdSigns)).as(Seq("dim", "proj_q")))
   }
 }

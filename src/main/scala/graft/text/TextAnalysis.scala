@@ -7,8 +7,10 @@ import org.apache.spark.sql.functions._
   * (SURVEY.md §2c extension; `documents` table is the fixture).
   *
   * All operators are pure `org.apache.spark.sql.functions` compositions —
-  * fully codegen'd, no UDFs — so they pipeline inside one WholeStageCodegen
-  * over the scan, shuffle nothing, and scale linearly with input bytes.
+  * no UDFs; their higher-order functions (`transform`, `filter`,
+  * `aggregate`) are not compiled but run as interpreted lambdas inside the
+  * generated stage — so they pipeline inside one WholeStageCodegen over
+  * the scan, shuffle nothing, and scale linearly with input bytes.
   * Regexes use plain ASCII character classes so DuckDB oracles can mirror
   * them exactly (Java vs RE2 dialect differences avoided).
   */
@@ -303,7 +305,7 @@ object TextAnalysis {
     * placeholder text). `keep` is the document-level verdict: no tripwire,
     * ≥ 3 sentences, ≥ 1 surviving line.
     *
-    * Pure codegen column ops over one scan (split + higher-order filter) —
+    * Pure column ops over one scan (split + an interpreted `filter`) —
     * ASCII-only regexes so the DuckDB oracle mirrors them byte-for-byte. */
   def c4LineAudit(text: Column): Seq[(String, Column)] = {
     val lines = split(text, "\n")
@@ -801,7 +803,8 @@ object TextAnalysis {
     * fold `out + s`, replacing `out`'s tail when `(last(out), s)` equals
     * the chosen pair — exactly greedy non-overlapping (a merged symbol
     * `left||right` can never equal `left` again since `right` is
-    * non-empty), expressed as a codegen'd `aggregate` HOF, no UDF. */
+    * non-empty), expressed as an `aggregate` HOF (an interpreted
+    * lambda), no UDF. */
   def bpeTrain(df: org.apache.spark.sql.DataFrame, textCol: String,
       nMerges: Int): org.apache.spark.sql.DataFrame = {
     val spark = df.sparkSession
@@ -843,7 +846,8 @@ object TextAnalysis {
 
   /** Greedy non-overlapping left-to-right merge of one symbol pair inside
     * a symbol array — the shared BPE kernel ([[bpeTrain]] round rewrite,
-    * [[bpeEncode]] apply pass). A codegen `aggregate` fold: append each
+    * [[bpeEncode]] apply pass). An `aggregate` fold (an interpreted
+    * lambda): append each
     * symbol, except replace the tail when `(last(out), s)` equals the
     * pair. Greedy because the merged symbol `l+r` can never re-match `l`
     * (`r` is non-empty). */
@@ -1167,8 +1171,8 @@ object TextAnalysis {
     * trailing path slashes (bare host → `/`), strip the fragment, drop
     * tracking params (`utm_*`, `fbclid`, `gclid`), and sort the remaining
     * query params. Pure regex/array compositions over ASCII classes
-    * (`[[TextAnalysis]]`'s no-UDF rule): row-local, codegen'd,
-    * oracle-mirrorable. Non-URL strings (no `scheme://`) canonicalize to
+    * (`[[TextAnalysis]]`'s no-UDF rule): row-local (the param `filter`
+    * and `array_sort` are interpreted lambdas), oracle-mirrorable. Non-URL strings (no `scheme://`) canonicalize to
     * `://` + whatever matched — callers filter those upstream. */
   def canonicalUrl(url: Column): Column = {
     val scheme = lower(regexp_extract(url, "^([A-Za-z][A-Za-z0-9+.-]*)://", 1))

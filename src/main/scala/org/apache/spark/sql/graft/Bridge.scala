@@ -37,4 +37,11 @@ object Bridge {
       schema: org.apache.spark.sql.types.StructType): org.apache.spark.sql.DataFrame =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .internalCreateDataFrame(rdd, schema)
+
+  /** `element_at`'s errors, for kernels that index with its semantics. */
+  def elementAtIndexError(index: Int, numElements: Int): ArrayIndexOutOfBoundsException =
+    org.apache.spark.sql.errors.QueryExecutionErrors.invalidElementAtIndexError(
+      index, numElements, null)
+  def indexOfZeroError(): RuntimeException =
+    org.apache.spark.sql.errors.QueryExecutionErrors.invalidIndexOfZeroError(null)
 }

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.similarity.{AnnIndex, Pq, Similarity}
+import graft.similarity.{AnnIndex, Ivf, Pq, Similarity}
 
 /** The composed production ANN path (disk IVF code store + ADC shortlist +
   * exact re-rank): disk == in-memory twin, partition/column pruning reaches
@@ -149,5 +149,32 @@ class AnnIndexSpec extends SparkSpec {
         round(col("cosine"), 6).as("cosine")) // searchIndex rounds to 6 dp
     assert(full.exceptAll(bf).isEmpty && bf.exceptAll(full).isEmpty,
       "nProbe = nLists + shortlist = corpus must equal exact brute force")
+  }
+
+  test("null and wrong-length vectors are skipped by training: build and search equal the clean corpus's") {
+    val s = spark
+    import s.implicits._
+    // the two lowest ids: a null embedding, then a 63-dim one
+    val bad = Seq((-2L, null: Seq[Float], 0), (-1L, Seq.fill(63)(0.125f), 0))
+      .toDF("vec_id", "embedding", "label")
+    val dirty = bad.unionByName(emb.select("vec_id", "embedding", "label"))
+    def built(corpus: org.apache.spark.sql.DataFrame, path: String) = {
+      rmTree(path)
+      val model = AnnIndex.buildIndex(corpus, "vec_id", "embedding", path,
+        dim = 64, nLists = 16, m = 8, kCodes = 16)
+      (model, AnnIndex.searchIndex(spark, path, model, queries,
+        "vec_id", "embedding", topK = 5, nProbe = 12, shortlist = 100).collect().toSet)
+    }
+    val (cleanModel, cleanHits) = built(emb, "/tmp/graft_ann_index_clean")
+    val (dirtyModel, dirtyHits) = built(dirty, "/tmp/graft_ann_index_dirty")
+    assert(dirtyModel.coarse.map(_.toSeq).toSeq == cleanModel.coarse.map(_.toSeq).toSeq)
+    assert(dirtyModel.books.map(_.map(_.toSeq).toSeq).toSeq ==
+      cleanModel.books.map(_.map(_.toSeq).toSeq).toSeq)
+    assert(dirtyHits == cleanHits && cleanHits.nonEmpty)
+    // the in-memory exact IVF path trains past the null head vector too
+    def exact(corpus: org.apache.spark.sql.DataFrame) =
+      Ivf.ivfTopKExact(corpus, queries, "vec_id", "embedding", 5).collect().toSet
+    assert(exact(bad.limit(1).unionByName(emb.select("vec_id", "embedding", "label"))) ==
+      exact(emb))
   }
 }

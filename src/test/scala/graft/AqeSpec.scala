@@ -12,15 +12,6 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
   * handles the join case on its own. */
 class AqeSpec extends SparkSpec {
 
-  private def withConfs[T](kvs: (String, String)*)(f: => T): T = {
-    val prev = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try f finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   private def finalPlan(df: org.apache.spark.sql.DataFrame) = {
     df.collect()
     df.queryExecution.executedPlan match {

@@ -67,18 +67,9 @@ class OrderedScanSpec extends SparkSpec {
 
   /** Runs `body` with `n` shuffle partitions and partition coalescing off,
     * so range-sorted frames keep every partition the range split made. */
-  private def atPartitions[A](n: Int)(body: => A): A = {
-    val keys = Seq("spark.sql.shuffle.partitions",
-      "spark.sql.adaptive.coalescePartitions.enabled")
-    val old = keys.map(k => k -> spark.conf.getOption(k))
-    spark.conf.set(keys(0), n.toString)
-    spark.conf.set(keys(1), "false")
-    try body
-    finally old.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
+  private def atPartitions[A](n: Int)(body: => A): A =
+    withConfs("spark.sql.shuffle.partitions" -> n.toString,
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false")(body)
 
   // ≤ 10 distinct sort values per site
   private val ranked = (0 until 240).map(i =>

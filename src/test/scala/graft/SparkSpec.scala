@@ -39,6 +39,16 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  /** Runs `body` with the given session confs, restoring them after. */
+  protected def withConfs[A](kvs: (String, String)*)(body: => A): A = {
+    val old = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally old.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   /** Persistent RDDs after dropping those earlier tests left behind
     * (the registry holds them weakly, so a stale count could shrink by GC). */
   protected def releaseAll(): Unit =

@@ -7,20 +7,23 @@ import graft.streaming.IdempotentSink
 class WassersteinSinkSpec extends SparkSpec {
 
   test("wasserstein1: identical = 0, shifted point masses = shift, hand case") {
-    val s = spark
-    import s.implicits._
-    val same = Seq(("a", 1.0), ("a", 2.0), ("b", 1.0), ("b", 2.0)).toDF("g", "v")
-    assert(Profiler.wasserstein1(same, "v", "g", "a", "b")
-      .collect().head.getAs[Double]("w1") == 0.0)
-    // A at 0, B at 10 -> W1 = 10
-    val shift = (Seq.fill(5)(("a", 0.0)) ++ Seq.fill(7)(("b", 10.0))).toDF("g", "v")
-    val r = Profiler.wasserstein1(shift, "v", "g", "a", "b").collect().head
-    assert(r.getLong(0) == 5L && r.getLong(1) == 7L)
-    assert(math.abs(r.getAs[Double]("w1") - 10.0) < 1e-8)
-    // A uniform {0,1}, B all at 1: |0.5-0|*1 = 0.5
-    val hand = (Seq(("a", 0.0), ("a", 1.0)) ++ Seq.fill(3)(("b", 1.0))).toDF("g", "v")
-    assert(math.abs(Profiler.wasserstein1(hand, "v", "g", "a", "b")
-      .collect().head.getAs[Double]("w1") - 0.5) < 1e-8)
+    // uncoalesced, so the range sort keeps one partition per distinct value
+    withConfs("spark.sql.adaptive.coalescePartitions.enabled" -> "false") {
+      val s = spark
+      import s.implicits._
+      val same = Seq(("a", 1.0), ("a", 2.0), ("b", 1.0), ("b", 2.0)).toDF("g", "v")
+      assert(Profiler.wasserstein1(same, "v", "g", "a", "b")
+        .collect().head.getAs[Double]("w1") == 0.0)
+      // A at 0, B at 10 -> W1 = 10
+      val shift = (Seq.fill(5)(("a", 0.0)) ++ Seq.fill(7)(("b", 10.0))).toDF("g", "v")
+      val r = Profiler.wasserstein1(shift, "v", "g", "a", "b").collect().head
+      assert(r.getLong(0) == 5L && r.getLong(1) == 7L)
+      assert(math.abs(r.getAs[Double]("w1") - 10.0) < 1e-8)
+      // A uniform {0,1}, B all at 1: |0.5-0|*1 = 0.5
+      val hand = (Seq(("a", 0.0), ("a", 1.0)) ++ Seq.fill(3)(("b", 1.0))).toDF("g", "v")
+      assert(math.abs(Profiler.wasserstein1(hand, "v", "g", "a", "b")
+        .collect().head.getAs[Double]("w1") - 0.5) < 1e-8)
+    }
   }
 
   test("mutualInformation: independence = 0, identity = H(x), U in [0,1]") {
