@@ -40,7 +40,7 @@ object AnnProbe {
       println(s"[probe] --- round $round ---")
       val path = s"${System.getProperty("java.io.tmpdir")}/graft_ann_probe_${spark.sparkContext.applicationId}_$round"
       val coarse = time("trainCentroidsQuantized")(
-        graft.similarity.Ivf.trainCentroidsQuantized(e, "vec_id", "embedding", 16, 8, 2048))
+        graft.similarity.Ivf.trainCentroidsQuantized(e, "vec_id", "embedding", 64, 16, 8, 2048))
       val books = time("trainCodebooks")(
         graft.similarity.Pq.trainCodebooks(e, "vec_id", "embedding", 64, 8, 16, 4, 512))
       val model = time("buildIndex (full incl. above twice)")(

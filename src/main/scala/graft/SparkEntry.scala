@@ -753,7 +753,7 @@ object SparkEntry {
     "q_ann_topk_ivf" -> ((s, dir) => {
       val e = t(s, dir, "embeddings")
       graft.similarity.Ivf.ivfTopKExact(e, e.filter(col("vec_id") < 10), "vec_id", "embedding",
-        k = 5, nLists = 16, nProbe = 7, iters = 8)
+        dim = 64, k = 5, nLists = 16, nProbe = 7, iters = 8)
         .select(col("query_id"), col("rank"), col("neighbor_id"), round(col("cosine"), 6).as("cosine"))
         .orderBy("query_id", "rank")
     }),

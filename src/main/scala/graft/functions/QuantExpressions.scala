@@ -59,13 +59,14 @@ object QuantOps {
       val base = r * cols
       var s = 0L
       i = 0
-      if (ansi) while (i < n) {
+      while (i < n) {
         if (i < valid || !v.isNullAt(i)) {
-          val p = MathUtils.multiplyExact(q(i), m(base + i))
-          if (i < valid) s = MathUtils.addExact(s, p)
+          val a = q(i); val b = m(base + i)
+          val p = if (ansi) MathUtils.multiplyExact(a, b) else a * b
+          if (i < valid) s = if (ansi) MathUtils.addExact(s, p) else s + p
         }
         i += 1
-      } else if (!nullSum) while (i < n) { s += q(i) * m(base + i); i += 1 }
+      }
       if (nullSum) out.setNullAt(r) else out.setLong(r, s)
       r += 1
     }
@@ -93,15 +94,14 @@ object QuantOps {
       val base = (sub * k + c) * subDim
       var s = 0L
       d = 0
-      if (ansi) while (d < svLen) {
+      while (d < svLen) {
         if (d < valid || !v.isNullAt(start + d)) {
-          val diff = MathUtils.subtractExact(q(d), books(base + d))
-          val p = MathUtils.multiplyExact(diff, diff)
-          if (d < valid) s = MathUtils.addExact(s, p)
+          val a = q(d); val b = books(base + d)
+          val diff = if (ansi) MathUtils.subtractExact(a, b) else a - b
+          val p = if (ansi) MathUtils.multiplyExact(diff, diff) else diff * diff
+          if (d < valid) s = if (ansi) MathUtils.addExact(s, p) else s + p
         }
         d += 1
-      } else if (defined) while (d < subDim) {
-        val diff = q(d) - books(base + d); s += diff * diff; d += 1
       }
       dist(c) = s
       c += 1

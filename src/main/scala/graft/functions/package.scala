@@ -82,17 +82,38 @@ package object functions {
     * constant matrix (array<bigint>; see [[QuantOps]] for the null and
     * ANSI-overflow rules). */
   def q6_dots(vec: Column, matrix: Array[Array[Long]]): Column =
-    col(QuantizedDots(expr(vec), matrix.flatten, matrix.head.length))
+    col(QuantizedDots(expr(vec), matrix.flatten, rectangular("q6_dots", matrix)))
 
   /** Nearest PQ code per subspace (array<int>, ties to the smaller code)
     * against `books(sub)(code)(d)`. */
-  def pq_assign(vec: Column, books: Array[Array[Array[Long]]]): Column =
-    col(PqAssign(expr(vec), books.flatten.flatten, books.head.length, books.head.head.length))
+  def pq_assign(vec: Column, books: Array[Array[Array[Long]]]): Column = {
+    val (k, subDim) = codebookShape("pq_assign", books)
+    col(PqAssign(expr(vec), books.flatten.flatten, k, subDim))
+  }
 
   /** PQ lookup table `lut[sub][code]`: exact squared L2 of each quantized
     * subvector against each code (array<array<bigint>>). */
-  def pq_lut(vec: Column, books: Array[Array[Array[Long]]]): Column =
-    col(PqLut(expr(vec), books.flatten.flatten, books.head.length, books.head.head.length))
+  def pq_lut(vec: Column, books: Array[Array[Array[Long]]]): Column = {
+    val (k, subDim) = codebookShape("pq_lut", books)
+    col(PqLut(expr(vec), books.flatten.flatten, k, subDim))
+  }
+
+  /** The common row length of a non-empty matrix; the kernels read it
+    * flattened, so a ragged row would misalign every later one. */
+  private def rectangular(fn: String, m: Array[Array[Long]]): Int = {
+    require(m.nonEmpty && m.head.nonEmpty, s"$fn: empty matrix")
+    val cols = m.head.length
+    require(m.forall(_.length == cols), s"$fn: matrix rows differ in length")
+    cols
+  }
+
+  /** `(codes per subspace, subspace width)` of `books(sub)(code)(d)`. */
+  private def codebookShape(fn: String, books: Array[Array[Array[Long]]]): (Int, Int) = {
+    require(books.nonEmpty, s"$fn: no codebooks")
+    val k = books.head.length
+    require(books.forall(_.length == k), s"$fn: codebooks differ in size")
+    (k, rectangular(fn, books.flatten))
+  }
 
   /** ADC distance `Σ_sub lut[sub][codes[sub]]` (bigint). */
   def adc_sum(codes: Column, lut: Column): Column = col(AdcSum(expr(codes), expr(lut)))

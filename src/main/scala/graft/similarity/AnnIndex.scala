@@ -90,8 +90,8 @@ object AnnIndex {
     val (coarse, books) = awaitBoth(
       {
         val nl = if (nLists > 0) nLists else suggestNLists(corpus.count())
-        Ivf.trainCentroidsQuantized(corpus, idCol, vecCol, nl, ivfIters,
-          ivfSample, dim)
+        Ivf.trainCentroidsQuantized(corpus, idCol, vecCol, dim, nl, ivfIters,
+          ivfSample)
       },
       Pq.trainCodebooks(corpus, idCol, vecCol, dim, m, kCodes, pqIters,
         pqSample))

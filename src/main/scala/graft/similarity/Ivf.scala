@@ -289,8 +289,8 @@ object Ivf {
 
   /** INTEGER-EXACT spherical-ish k-means on the same deterministic sample
     * rule as [[trainCentroids]] (first `sampleSize` rows by ascending id,
-    * skipping null vectors and, when `dim > 0`, vectors of another length
-    * — the rows [[Pq.trainCodebooks]] and the index writers also skip),
+    * skipping null vectors and vectors whose length is not `dim` — the
+    * rows [[Pq.trainCodebooks]] and the index writers also skip),
     * re-expressed so an external SQL engine can replay training bit-for-bit
     * (the md5-twin playbook applied to k-means — exact long algebra instead
     * of drift-prone float means):
@@ -312,42 +312,39 @@ object Ivf {
       df: DataFrame,
       idCol: String,
       vecCol: String,
+      dim: Int,
       nLists: Int,
       iters: Int = 8,
-      sampleSize: Int = 2048,
-      dim: Int = 0
+      sampleSize: Int = 2048
   ): Array[Array[Long]] = {
-    val usable = if (dim > 0) col(vecCol).isNotNull && size(col(vecCol)) === dim
-      else col(vecCol).isNotNull
     // deterministic sample order: numeric ids sort exactly as before (the
     // oracle's ORDER BY id); non-castable ids (try_cast -> null) fall back
     // to string order instead of throwing under ANSI
     val sample: Array[Array[Long]] = df
-      .filter(usable)
+      .filter(col(vecCol).isNotNull && size(col(vecCol)) === dim)
       .select(col(idCol).try_cast("long").as("id"),
         col(idCol).cast("string").as("ids"), col(vecCol).as("v"))
       .orderBy("id", "ids").limit(sampleSize)
       .collect()
       .map(_.getSeq[Float](2).toArray.map(QuantOps.q6))
     require(sample.length >= nLists, s"sample ${sample.length} < nLists $nLists")
-    val width = sample.head.length
     var centroids = Array.tabulate(nLists)(i => sample((i * sample.length) / nLists).clone())
     var it = 0
     while (it < iters) {
-      val sums = Array.fill(nLists)(new Array[Long](width))
+      val sums = Array.fill(nLists)(new Array[Long](dim))
       val counts = new Array[Int](nLists)
       sample.foreach { v =>
         var best = 0; var bestDot = Long.MinValue; var i = 0
         while (i < nLists) {
           var dot = 0L; var d = 0
           val c = centroids(i)
-          while (d < width) { dot += c(d) * v(d); d += 1 }
+          while (d < dim) { dot += c(d) * v(d); d += 1 }
           if (dot > bestDot) { bestDot = dot; best = i } // strict >: first max wins ties
           i += 1
         }
         counts(best) += 1
         var d = 0
-        while (d < width) { sums(best)(d) += v(d); d += 1 }
+        while (d < dim) { sums(best)(d) += v(d); d += 1 }
       }
       centroids = Array.tabulate(nLists) { i =>
         if (counts(i) == 0) centroids(i) // empty list keeps its centroid
@@ -364,12 +361,15 @@ object Ivf {
     * hash-match oracle; only the final rerank uses float cosine, rounded
     * like every other ANN query. Same dataflow shape (and the same 100 TB
     * story) as [[ivfTopK]]: assignment is a row-local argmax map, probes
-    * broadcast, candidates = corpus rows in probed lists only. */
+    * broadcast, candidates = corpus rows in probed lists only. Vectors
+    * whose length is not `dim` (or null) are neither trained on nor
+    * assigned a list, so they are never candidates. */
   def ivfTopKExact(
       corpus: DataFrame,
       queries: DataFrame,
       idCol: String,
       vecCol: String,
+      dim: Int,
       k: Int,
       nLists: Int = 16,
       nProbe: Int = 6,
@@ -377,7 +377,7 @@ object Ivf {
       sampleSize: Int = 2048
   ): DataFrame = {
     require(nProbe >= 1 && nProbe <= nLists)
-    val centroids = trainCentroidsQuantized(corpus, idCol, vecCol, nLists, iters, sampleSize)
+    val centroids = trainCentroidsQuantized(corpus, idCol, vecCol, dim, nLists, iters, sampleSize)
     val assigned = corpus
       .repartition(corpus.sparkSession.sparkContext.defaultParallelism)
       .select(col(idCol).as("id"), col(vecCol).as("v"))

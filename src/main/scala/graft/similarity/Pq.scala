@@ -204,8 +204,8 @@ object Pq {
       pqSample: Int = 512
   ): DataFrame = {
     require(nProbe >= 1 && nProbe <= nLists)
-    val coarse = Ivf.trainCentroidsQuantized(corpus, idCol, vecCol, nLists,
-      ivfIters, ivfSample, dim)
+    val coarse = Ivf.trainCentroidsQuantized(corpus, idCol, vecCol, dim, nLists,
+      ivfIters, ivfSample)
     val books = trainCodebooks(corpus, idCol, vecCol, dim, m, kCodes,
       pqIters, pqSample)
     // corpus: list id AND the m-byte code array in ONE row-local

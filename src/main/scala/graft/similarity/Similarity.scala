@@ -356,8 +356,11 @@ object Similarity {
     * Shape: the sign matrix is built ONCE at plan time (one primitive
     * outDim×inDim `long[]`) and the projection is one row-local kernel
     * call ([[graft.functions.q6_dots]]) — no shuffle, no join, no per-row
-    * hashing; embarrassingly parallel at any scale. Returns
-    * `(id, dim, proj_q)` exploded per output coordinate. */
+    * hashing; embarrassingly parallel at any scale. The kernel quantizes
+    * floats, so `vecCol` is read as `array<float>`: another numeric array
+    * is cast first, and a double component keeps only float precision
+    * before `q6`. Returns `(id, dim, proj_q)` exploded per output
+    * coordinate. */
   def signProjection(df: DataFrame, idCol: String, vecCol: String,
       inDim: Int, outDim: Int, seed: Long = 42L): DataFrame = {
     require(inDim >= 1 && outDim >= 1 && outDim <= 256, s"dims $inDim->$outDim")
@@ -370,6 +373,6 @@ object Similarity {
     }
     df.filter(col(vecCol).isNotNull && size(col(vecCol)) === inDim)
       .select(col(idCol).as("id"),
-        posexplode(graft.functions.q6_dots(col(vecCol), mdSigns)).as(Seq("dim", "proj_q")))
+        posexplode(graft.functions.q6_dots(col(vecCol).cast("array<float>"), mdSigns)).as(Seq("dim", "proj_q")))
   }
 }

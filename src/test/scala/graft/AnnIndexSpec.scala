@@ -171,10 +171,14 @@ class AnnIndexSpec extends SparkSpec {
     assert(dirtyModel.books.map(_.map(_.toSeq).toSeq).toSeq ==
       cleanModel.books.map(_.map(_.toSeq).toSeq).toSeq)
     assert(dirtyHits == cleanHits && cleanHits.nonEmpty)
-    // the in-memory exact IVF path trains past the null head vector too
+    // the in-memory exact IVF path: neither row is trained on or becomes a
+    // candidate, whichever of the two leads the id order
     def exact(corpus: org.apache.spark.sql.DataFrame) =
-      Ivf.ivfTopKExact(corpus, queries, "vec_id", "embedding", 5).collect().toSet
-    assert(exact(bad.limit(1).unionByName(emb.select("vec_id", "embedding", "label"))) ==
-      exact(emb))
+      Ivf.ivfTopKExact(corpus, queries, "vec_id", "embedding", 64, 5).collect().toSet
+    val cleanExact = exact(emb)
+    assert(cleanExact.nonEmpty && exact(dirty) == cleanExact)
+    val shortHead = bad.filter(col("vec_id") === -1L)
+      .unionByName(emb.select("vec_id", "embedding", "label"))
+    assert(exact(shortHead) == cleanExact)
   }
 }

@@ -95,14 +95,14 @@ class IvfSpec extends SparkSpec {
     // the integer-exact (oracle-graduated) variant honors the same IVF
     // contract as the float path: probing every list IS brute force...
     val exact = Similarity.bruteForceTopK(emb, queries, "vec_id", "embedding", 5)
-    val full = Ivf.ivfTopKExact(emb, queries, "vec_id", "embedding", 5,
+    val full = Ivf.ivfTopKExact(emb, queries, "vec_id", "embedding", 64, 5,
       nLists = 8, nProbe = 8, iters = 8)
     assert(full.exceptAll(exact).isEmpty && exact.exceptAll(full).isEmpty)
     // ...and the shipped q_ann_topk_ivf config (16 lists, 7 probes, 8
     // integer Lloyd iterations) holds the recall floor — quantization
     // moves centroids ≤ 1e-6 per component, not enough to change routing
     // quality
-    val ship = Ivf.ivfTopKExact(emb, queries, "vec_id", "embedding", 5,
+    val ship = Ivf.ivfTopKExact(emb, queries, "vec_id", "embedding", 64, 5,
         nLists = 16, nProbe = 7, iters = 8)
       .select(col("query_id"), col("neighbor_id"))
     val exactIds = exact.select(col("query_id"), col("neighbor_id"))
@@ -111,8 +111,8 @@ class IvfSpec extends SparkSpec {
   }
 
   test("ivfTopKExact training is deterministic and centroids are integer-exact") {
-    val a = Ivf.trainCentroidsQuantized(emb, "vec_id", "embedding", nLists = 16, iters = 8)
-    val b = Ivf.trainCentroidsQuantized(emb, "vec_id", "embedding", nLists = 16, iters = 8)
+    val a = Ivf.trainCentroidsQuantized(emb, "vec_id", "embedding", 64, nLists = 16, iters = 8)
+    val b = Ivf.trainCentroidsQuantized(emb, "vec_id", "embedding", 64, nLists = 16, iters = 8)
     assert(a.length === 16)
     assert(a.zip(b).forall { case (x, y) => x.sameElements(y) })
     // q6 components of unit-norm vectors: |c| ≤ 1e6 (the no-overflow bound

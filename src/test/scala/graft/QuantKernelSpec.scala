@@ -157,10 +157,23 @@ class QuantKernelSpec extends SparkSpec {
     }
   }
 
+  test("a ragged matrix or codebook is rejected when the column is built") {
+    // flattened, a short row would shift every later row's slice
+    val ragged = matrix.updated(2, matrix(2).init)
+    intercept[IllegalArgumentException](q6_dots(col("v"), ragged))
+    intercept[IllegalArgumentException](q6_dots(col("v"), Array.empty[Array[Long]]))
+    val shortCode = books.updated(1, books(1).updated(3, books(1)(3).init))
+    val fewCodes = books.updated(1, books(1).init)
+    for (b <- Seq(shortCode, fewCodes)) {
+      intercept[IllegalArgumentException](pq_assign(col("v"), b))
+      intercept[IllegalArgumentException](pq_lut(col("v"), b))
+    }
+  }
+
   test("kernels equal the HOF reference on the unit-norm fixture's trained quantizers") {
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
       .select(col("vec_id").cast("int").as("id"), col("embedding").as("v"))
-    val coarse = Ivf.trainCentroidsQuantized(emb, "id", "v", nLists = 8)
+    val coarse = Ivf.trainCentroidsQuantized(emb, "id", "v", dim = 64, nLists = 8)
     val cb = Pq.trainCodebooks(emb, "id", "v", dim = 64, m = 8, k = 16)
     everyMode { label =>
       val k = q6_dots(col("v"), coarse)

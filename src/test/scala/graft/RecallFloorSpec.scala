@@ -70,7 +70,7 @@ class RecallFloorSpec extends SparkSpec {
     val exact = matchSet(Similarity.bruteForceTopK(emb, annQueries, "vec_id", "embedding", 5))
     def recallAt(p: Int): Double = {
       val ivf = matchSet(Ivf.ivfTopKExact(emb, annQueries, "vec_id", "embedding",
-        k = 5, nLists = 16, nProbe = p, iters = 8))
+        dim = 64, k = 5, nLists = 16, nProbe = p, iters = 8))
       ivf.intersect(exact).size.toDouble / exact.size
     }
     assert(exact.size == 50)

@@ -352,6 +352,11 @@ class Round8Spec extends SparkSpec {
     }
     // both signs actually occur (the matrix is not degenerate)
     assert(out.values.toSet === Set(1000000L, -1000000L))
+    // a double vector column is cast to float first (exact for these values)
+    val dbl = vecs.withColumn("embedding", vecs("embedding").cast("array<double>"))
+    assert(graft.similarity.Similarity
+      .signProjection(dbl, "vec_id", "embedding", inDim = 8, outDim = 4)
+      .collect().map(r => (r.getLong(0), r.getInt(1)) -> r.getLong(2)).toMap === out)
   }
 
   test("pqCodes recovers planted prototypes with zero quantization error") {
