@@ -196,12 +196,27 @@ object QuantOps {
   }
 }
 
+/** A kernel's constant matrix: one flat row-major `long[]`, equal to
+  * another by content, its hash computed once. Two kernel calls over equal
+  * matrices built apart are then one common subexpression, evaluated once
+  * per row. */
+final class QuantMatrix(val values: Array[Long]) extends Serializable {
+  private val hash = java.util.Arrays.hashCode(values)
+  override def hashCode(): Int = hash
+  override def equals(o: Any): Boolean = o match {
+    case m: QuantMatrix =>
+      (m eq this) || (m.hash == hash && java.util.Arrays.equals(m.values, values))
+    case _ => false
+  }
+  def length: Int = values.length
+}
+
 /** One float-vector child and a constant long matrix held once as a
   * primitive `long[]` (a codegen reference object, not a literal tree);
   * `failOnError` is the session's ANSI setting when the expression is
   * built, as for Spark's own arithmetic. Plans print the matrix's shape. */
 private[functions] trait QuantMatrixExpression extends UnaryExpression {
-  def matrix: Array[Long]
+  def matrix: QuantMatrix
   def failOnError: Boolean
   /** The [[QuantOps]] method, called as `(vector, matrix, shapeArgs.tail…, ansi)`. */
   protected def kernel: String
@@ -223,7 +238,7 @@ private[functions] trait QuantMatrixExpression extends UnaryExpression {
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val c = child.genCode(ctx)
-    val m = ctx.addReferenceObj("matrix", matrix, "long[]")
+    val m = ctx.addReferenceObj("matrix", matrix.values, "long[]")
     val args = shapeArgs.tail.mkString(", ")
     ev.copy(code = c.code + code"""
       ArrayData ${ev.value} = graft.functions.QuantOps.$kernel(
@@ -234,32 +249,32 @@ private[functions] trait QuantMatrixExpression extends UnaryExpression {
 
 /** `q6_dots(array<float>) -> array<bigint>`: [[QuantOps.dots]] against a
   * constant `rows × cols` matrix. */
-case class QuantizedDots(child: Expression, matrix: Array[Long], cols: Int,
+case class QuantizedDots(child: Expression, matrix: QuantMatrix, cols: Int,
     failOnError: Boolean = SQLConf.get.ansiEnabled) extends QuantMatrixExpression {
   override def prettyName: String = "q6_dots"
   override def dataType: DataType = ArrayType(LongType, containsNull = true)
   protected val kernel = "dots"
   protected def shapeArgs: Seq[Int] = Seq(matrix.length / cols, cols)
-  protected def run(v: ArrayData): ArrayData = QuantOps.dots(v, matrix, cols, failOnError)
+  protected def run(v: ArrayData): ArrayData = QuantOps.dots(v, matrix.values, cols, failOnError)
   protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
 /** `pq_assign(array<float>) -> array<int>`: [[QuantOps.pqAssign]] against
   * constant `m × k × subDim` codebooks. */
-case class PqAssign(child: Expression, matrix: Array[Long], k: Int, subDim: Int,
+case class PqAssign(child: Expression, matrix: QuantMatrix, k: Int, subDim: Int,
     failOnError: Boolean = SQLConf.get.ansiEnabled) extends QuantMatrixExpression {
   override def prettyName: String = "pq_assign"
   override def dataType: DataType = ArrayType(IntegerType, containsNull = true)
   protected val kernel = "pqAssign"
   protected def shapeArgs: Seq[Int] = Seq(matrix.length / (k * subDim), k, subDim)
   protected def run(v: ArrayData): ArrayData =
-    QuantOps.pqAssign(v, matrix, k, subDim, failOnError)
+    QuantOps.pqAssign(v, matrix.values, k, subDim, failOnError)
   protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
 /** `pq_lut(array<float>) -> array<array<bigint>>`: [[QuantOps.pqLut]]
   * against constant `m × k × subDim` codebooks. */
-case class PqLut(child: Expression, matrix: Array[Long], k: Int, subDim: Int,
+case class PqLut(child: Expression, matrix: QuantMatrix, k: Int, subDim: Int,
     failOnError: Boolean = SQLConf.get.ansiEnabled) extends QuantMatrixExpression {
   override def prettyName: String = "pq_lut"
   override def dataType: DataType =
@@ -267,7 +282,7 @@ case class PqLut(child: Expression, matrix: Array[Long], k: Int, subDim: Int,
   protected val kernel = "pqLut"
   protected def shapeArgs: Seq[Int] = Seq(matrix.length / (k * subDim), k, subDim)
   protected def run(v: ArrayData): ArrayData =
-    QuantOps.pqLut(v, matrix, k, subDim, failOnError)
+    QuantOps.pqLut(v, matrix.values, k, subDim, failOnError)
   protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 

@@ -82,20 +82,20 @@ package object functions {
     * constant matrix (array<bigint>; see [[QuantOps]] for the null and
     * ANSI-overflow rules). */
   def q6_dots(vec: Column, matrix: Array[Array[Long]]): Column =
-    col(QuantizedDots(expr(vec), matrix.flatten, rectangular("q6_dots", matrix)))
+    col(QuantizedDots(expr(vec), new QuantMatrix(matrix.flatten), rectangular("q6_dots", matrix)))
 
   /** Nearest PQ code per subspace (array<int>, ties to the smaller code)
     * against `books(sub)(code)(d)`. */
   def pq_assign(vec: Column, books: Array[Array[Array[Long]]]): Column = {
     val (k, subDim) = codebookShape("pq_assign", books)
-    col(PqAssign(expr(vec), books.flatten.flatten, k, subDim))
+    col(PqAssign(expr(vec), new QuantMatrix(books.flatten.flatten), k, subDim))
   }
 
   /** PQ lookup table `lut[sub][code]`: exact squared L2 of each quantized
     * subvector against each code (array<array<bigint>>). */
   def pq_lut(vec: Column, books: Array[Array[Array[Long]]]): Column = {
     val (k, subDim) = codebookShape("pq_lut", books)
-    col(PqLut(expr(vec), books.flatten.flatten, k, subDim))
+    col(PqLut(expr(vec), new QuantMatrix(books.flatten.flatten), k, subDim))
   }
 
   /** The common row length of a non-empty matrix; the kernels read it

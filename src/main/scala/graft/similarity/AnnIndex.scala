@@ -19,9 +19,10 @@ final case class PqIndexModel(
   * bounded exact re-rank.
   *
   *  - BUILD ([[buildIndex]]): train the integer-exact coarse quantizer
-  *    ([[Ivf.trainCentroidsQuantized]]) and PQ codebooks
-  *    ([[Pq.trainCodebooks]]); assign every corpus vector its list and
-  *    its `m`-byte code IN ONE ROW-LOCAL PROJECTION — two compiled
+  *    ([[Ivf.centroidsFromSample]]) and PQ codebooks
+  *    ([[Pq.codebooksFromSample]]) on one shared sample; assign every
+  *    corpus vector its list and its `m`-byte code IN ONE ROW-LOCAL
+  *    PROJECTION — two compiled
   *    kernel calls per row ([[graft.functions.q6_dots]] for the list
   *    argmax, [[graft.functions.pq_assign]] for the codes), no explode,
   *    no shuffle; write `(id, codes, v)` rows `partitionBy(list_id)`.
@@ -72,9 +73,15 @@ object AnnIndex {
     (r1.get, r2.get)
   }
 
-  /** Train both quantizers — two independent bounded sample-collect jobs
-    * over the same corpus, overlapped (guide §2.6). */
-  private def trainModel(
+  /** Train both quantizers from ONE sample collect over `corpus`: the
+    * first `max(ivfSample, pqSample)` valid rows by id
+    * ([[Ivf.trainingSampleQuery]]), each trainer taking its own prefix — the
+    * rows its own sample collect would return, as the id order is total.
+    * With `nLists = 0` the row count [[suggestNLists]] needs rides on the
+    * same job as an observed metric, taken BEFORE the validity filter, so
+    * it is `corpus.count()` (null and wrong-length rows included) without
+    * a second evaluation of a lazy corpus. */
+  private[similarity] def trainModel(
       corpus: DataFrame,
       idCol: String,
       vecCol: String,
@@ -87,15 +94,18 @@ object AnnIndex {
       ivfSample: Int = 2048,
       pqSample: Int = 512
   ): PqIndexModel = {
-    val (coarse, books) = awaitBoth(
-      {
-        val nl = if (nLists > 0) nLists else suggestNLists(corpus.count())
-        Ivf.trainCentroidsQuantized(corpus, idCol, vecCol, dim, nl, ivfIters,
-          ivfSample)
-      },
-      Pq.trainCodebooks(corpus, idCol, vecCol, dim, m, kCodes, pqIters,
-        pqSample))
-    PqIndexModel(coarse, books, dim, m)
+    val rows = "graft_ann_corpus_rows"
+    val query = Ivf.trainingSampleQuery(
+      if (nLists > 0) corpus else corpus.observe(rows, count(lit(1))),
+      idCol, vecCol, dim, math.max(ivfSample, pqSample))
+    val sample = Ivf.trainingSample(query)
+    val nl = if (nLists > 0) nLists else suggestNLists(
+      // an optimizer that drops the sample plan (say, a zero limit) drops
+      // the metric with it: count directly then
+      query.queryExecution.observedMetrics.get(rows).map(_.getLong(0))
+        .getOrElse(corpus.count()))
+    PqIndexModel(Ivf.centroidsFromSample(sample.take(ivfSample), dim, nl, ivfIters),
+      Pq.codebooksFromSample(sample.take(pqSample), dim, m, kCodes, pqIters), dim, m)
   }
 
   /** Train both quantizers and materialize the index at `path`.
@@ -103,13 +113,19 @@ object AnnIndex {
     * [[Ivf.appendToIndex]] discipline); re-train offline when
     * [[Ivf.indexStats]] over `path` shows list drift.
     *
+    * A lazy `corpus` (say, a join) is evaluated exactly twice: once by
+    * the training-sample collect ([[trainModel]]) and once by the store
+    * write. It is not persisted: two streaming reads scale with the
+    * corpus, a cached copy of it does not.
+    *
     * `nLists = 0` (the default) sizes the list count by
-    * [[suggestNLists]] (≈ √N — one extra `count()` job at build time), so
-    * a user following the README path gets the corpus-scaled store, not a
-    * toy constant. The GATED queries pin `nLists = 16` explicitly: the
-    * DuckDB oracle replays the assignment algebra with a fixed list
-    * count, so oracle reproducibility requires pinning it — that pin is a
-    * property of the gate, not a recommended production setting. */
+    * [[suggestNLists]] (≈ √N; the row count is an observed metric of the
+    * sample collect, so it costs no job of its own), so a user following
+    * the README path gets the corpus-scaled store, not a toy constant.
+    * The GATED queries pin `nLists = 16` explicitly: the DuckDB oracle
+    * replays the assignment algebra with a fixed list count, so oracle
+    * reproducibility requires pinning it — that pin is a property of the
+    * gate, not a recommended production setting. */
   def buildIndex(
       corpus: DataFrame,
       idCol: String,
@@ -151,7 +167,7 @@ object AnnIndex {
       model: PqIndexModel,
       overwrite: Boolean
   ): Unit = {
-    df
+    val rows = df
       .filter(col(vecCol).isNotNull && size(col(vecCol)) === model.dim)
       .select(col(idCol).as("id"), col(vecCol).as("v"))
       // spread the narrow projection BEFORE the heavy per-row encode
@@ -172,8 +188,15 @@ object AnnIndex {
       // every subsequent search pays the full listing+open cost). One
       // hash shuffle on list_id bounds the store at ~one file per list.
       .repartition(col("list_id"))
-      .write.mode(if (overwrite) "overwrite" else "append")
+    rows.write.mode(if (overwrite) "overwrite" else "append")
       .partitionBy("list_id").parquet(path)
+    // a fresh store reads back as the schema just written, with list_id
+    // inferred as int (a string without partition type inference): prime
+    // the cache with it, so the first search runs no inference job
+    val spark = df.sparkSession
+    if (overwrite && spark.conf.get(
+        "spark.sql.sources.partitionColumnTypeInference.enabled", "true").toBoolean)
+      graft.sources.CachedParquet.prime(spark, path, rows.schema)
   }
 
   /** Tombstone DELETE — the remaining CRUD piece of a standing index
@@ -620,9 +643,9 @@ object AnnIndex {
     val from = currentVersion(spark, base).getOrElse(
       throw new IllegalStateException(s"retrain: no CURRENT index under $base"))
     val cand = from + 1
-    val nl = if (nLists > 0) nLists else suggestNLists(corpus.count())
     val vp = versionPath(base, cand)
-    val model = trainModel(corpus, idCol, vecCol, dim, nl, m, kCodes)
+    val model = trainModel(corpus, idCol, vecCol, dim, nLists, m, kCodes)
+    val nl = model.coarse.length
     // NOT overlapped: writeRows' overwrite clears the whole candidate
     // directory at job start (see buildVersioned)
     writeRows(corpus, idCol, vecCol, vp, model, overwrite = true)
@@ -799,10 +822,13 @@ object AnnIndex {
     // distinct on these few rows costs a shuffle + an extra AQE job
     val probedLists = probes.select("list_id")
       .collect().map(_.getInt(0)).distinct.sorted.toSeq
-    // corpus-wide pass: code columns ONLY (ReadSchema excludes v)
-    val codes0 = graft.sources.CachedParquet.read(spark, path)
+    // ONE pruned store frame feeds the code scan and the re-rank read:
+    // each read builds its own file index, and listing a store of more
+    // than 32 list directories is a Spark job of its own
+    val store = graft.sources.CachedParquet.read(spark, path)
       .filter(col("list_id").isin(probedLists: _*))
-      .select(col("id").as("neighbor_id"), col("codes"), col("list_id"))
+    // corpus-wide pass: code columns ONLY (ReadSchema excludes v)
+    val codes0 = store.select(col("id").as("neighbor_id"), col("codes"), col("list_id"))
     // deleted ids can never surface: broadcast anti-join against the
     // tombstone log (joined only when the log exists, so tombstone-free
     // indexes keep the exact audited plan); the shortlist and re-rank
@@ -832,10 +858,8 @@ object AnnIndex {
     val short = adc.withColumn("__r", row_number().over(ws))
       .filter(col("__r") <= shortlist)
       .select("query_id", "neighbor_id")
-    // exact re-rank: second pruned read, raw vectors for shortlist rows only
-    val raw = graft.sources.CachedParquet.read(spark, path)
-      .filter(col("list_id").isin(probedLists: _*))
-      .select(col("id").as("neighbor_id"), col("v"))
+    // exact re-rank: second pruned scan, raw vectors for shortlist rows only
+    val raw = store.select(col("id").as("neighbor_id"), col("v"))
     val qv = qBase.select(col(idCol).as("query_id"), col(vecCol).as("__qv"))
     val exact = raw
       .join(broadcast(short), Seq("neighbor_id"))

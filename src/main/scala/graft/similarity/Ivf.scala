@@ -287,10 +287,33 @@ object Ivf {
       .drop("__probe")
   }
 
-  /** INTEGER-EXACT spherical-ish k-means on the same deterministic sample
-    * rule as [[trainCentroids]] (first `sampleSize` rows by ascending id,
-    * skipping null vectors and vectors whose length is not `dim` — the
-    * rows [[Pq.trainCodebooks]] and the index writers also skip),
+  /** The one training-sample query of the quantized IVF and PQ trainers:
+    * the first `n` rows by ascending id, skipping null vectors and vectors
+    * whose length is not `dim` (the rows the index writers also skip).
+    * Numeric ids sort exactly (the oracle's ORDER BY id); ids that do not
+    * cast to a long (try_cast → null) fall back to string order instead
+    * of throwing under ANSI. With unique ids the order is total, so the
+    * first `n'` rows of this sample ARE the `n'`-row sample: one collect
+    * of the larger size serves both trainers ([[AnnIndex.trainModel]]). */
+  def trainingSampleQuery(
+      df: DataFrame,
+      idCol: String,
+      vecCol: String,
+      dim: Int,
+      n: Int
+  ): DataFrame =
+    df
+      .filter(col(vecCol).isNotNull && size(col(vecCol)) === dim)
+      .select(col(idCol).try_cast("long").as("id"),
+        col(idCol).cast("string").as("ids"), col(vecCol).as("v"))
+      .orderBy("id", "ids").limit(n)
+
+  /** Collects a [[trainingSampleQuery]] (one job) as [[QuantOps.q6]] longs. */
+  def trainingSample(query: DataFrame): Array[Array[Long]] =
+    query.collect().map(_.getSeq[Float](2).toArray.map(QuantOps.q6))
+
+  /** INTEGER-EXACT spherical-ish k-means on the deterministic sample of
+    * [[trainingSampleQuery]] (first `sampleSize` valid rows by ascending id),
     * re-expressed so an external SQL engine can replay training bit-for-bit
     * (the md5-twin playbook applied to k-means — exact long algebra instead
     * of drift-prone float means):
@@ -307,7 +330,9 @@ object Ivf {
     * engine reproduces each step exactly; that is what graduates the IVF
     * query from rows-only to a full hash-match oracle. Quantization moves
     * centroids by ≤ 1e-6 per component vs float training — irrelevant to
-    * recall, decisive for reproducibility. */
+    * recall, decisive for reproducibility. A thin wrapper: sample, then
+    * [[centroidsFromSample]]; a caller that also trains PQ codebooks
+    * shares one sample instead ([[AnnIndex.trainModel]]). */
   def trainCentroidsQuantized(
       df: DataFrame,
       idCol: String,
@@ -316,17 +341,18 @@ object Ivf {
       nLists: Int,
       iters: Int = 8,
       sampleSize: Int = 2048
+  ): Array[Array[Long]] =
+    centroidsFromSample(trainingSample(trainingSampleQuery(df, idCol, vecCol, dim, sampleSize)),
+      dim, nLists, iters)
+
+  /** The driver-side Lloyd loop of [[trainCentroidsQuantized]] over a
+    * [[trainingSample]] (`dim`-long quantized vectors in id order). */
+  def centroidsFromSample(
+      sample: Array[Array[Long]],
+      dim: Int,
+      nLists: Int,
+      iters: Int = 8
   ): Array[Array[Long]] = {
-    // deterministic sample order: numeric ids sort exactly as before (the
-    // oracle's ORDER BY id); non-castable ids (try_cast -> null) fall back
-    // to string order instead of throwing under ANSI
-    val sample: Array[Array[Long]] = df
-      .filter(col(vecCol).isNotNull && size(col(vecCol)) === dim)
-      .select(col(idCol).try_cast("long").as("id"),
-        col(idCol).cast("string").as("ids"), col(vecCol).as("v"))
-      .orderBy("id", "ids").limit(sampleSize)
-      .collect()
-      .map(_.getSeq[Float](2).toArray.map(QuantOps.q6))
     require(sample.length >= nLists, s"sample ${sample.length} < nLists $nLists")
     var centroids = Array.tabulate(nLists)(i => sample((i * sample.length) / nLists).clone())
     var it = 0

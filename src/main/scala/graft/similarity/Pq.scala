@@ -28,7 +28,10 @@ import graft.functions.{adc_sum, pq_assign, pq_lut, q6_dots, QuantOps}
 object Pq {
 
   /** Train per-subspace codebooks on the first `sampleSize` vectors by
-    * id: `codebooks(sub)(code)(d)` quantized longs. */
+    * id: `codebooks(sub)(code)(d)` quantized longs. A thin wrapper: one
+    * [[Ivf.trainingSample]] collect, then [[codebooksFromSample]]; a
+    * caller that also trains the IVF coarse quantizer shares one sample
+    * instead ([[AnnIndex.trainModel]]). */
   def trainCodebooks(
       df: DataFrame,
       idCol: String,
@@ -38,19 +41,23 @@ object Pq {
       k: Int,
       iters: Int = 4,
       sampleSize: Int = 512
+  ): Array[Array[Array[Long]]] =
+    codebooksFromSample(
+      Ivf.trainingSample(Ivf.trainingSampleQuery(df, idCol, vecCol, dim, sampleSize)),
+      dim, m, k, iters)
+
+  /** The driver-side integer Lloyd loops of [[trainCodebooks]], one per
+    * subspace, over a [[Ivf.trainingSample]] (`dim`-long quantized
+    * vectors in id order). */
+  def codebooksFromSample(
+      sample: Array[Array[Long]],
+      dim: Int,
+      m: Int,
+      k: Int,
+      iters: Int = 4
   ): Array[Array[Array[Long]]] = {
     require(dim % m == 0, s"m=$m must divide dim=$dim")
     val subDim = dim / m
-    // deterministic sample order: numeric ids sort exactly as before (the
-    // oracle's ORDER BY id); non-castable ids (try_cast -> null) fall back
-    // to string order instead of throwing under ANSI
-    val sample: Array[Array[Long]] = df
-      .filter(col(vecCol).isNotNull && size(col(vecCol)) === dim)
-      .select(col(idCol).try_cast("long").as("id"),
-        col(idCol).cast("string").as("ids"), col(vecCol).as("v"))
-      .orderBy("id", "ids").limit(sampleSize)
-      .collect()
-      .map(_.getSeq[Float](2).toArray.map(QuantOps.q6))
     require(sample.length >= k, s"sample ${sample.length} < k $k")
     Array.tabulate(m) { sub =>
       val off = sub * subDim
@@ -204,10 +211,9 @@ object Pq {
       pqSample: Int = 512
   ): DataFrame = {
     require(nProbe >= 1 && nProbe <= nLists)
-    val coarse = Ivf.trainCentroidsQuantized(corpus, idCol, vecCol, dim, nLists,
-      ivfIters, ivfSample)
-    val books = trainCodebooks(corpus, idCol, vecCol, dim, m, kCodes,
-      pqIters, pqSample)
+    // both quantizers from ONE sample collect (see AnnIndex.trainModel)
+    val PqIndexModel(coarse, books, _, _) = AnnIndex.trainModel(corpus, idCol, vecCol,
+      dim, nLists, m, kCodes, ivfIters, pqIters, ivfSample, pqSample)
     // corpus: list id AND the m-byte code array in ONE row-local
     // projection (integer-exact dot argmax, first max; `pq_assign`) —
     // the narrow (id, sub, code) shape needed a corpus-wide codes ⋈ lists
@@ -244,20 +250,6 @@ object Pq {
       .select(col("query_id"), col("rank"), col("neighbor_id"), col("adc_dist"))
   }
 
-  /** ADC shortlist → EXACT re-rank (Jégou et al. §VI, "IVFADC-R"): the
-    * 32-bit codes alone rank coarsely (measured recall@5 = 0.26 at the
-    * shipped m=8/k=16 — `RecallFloorSpec`), so production stacks re-rank
-    * an ADC SHORTLIST of `shortlist` candidates with exact distances.
-    * The raw vectors are read for only |queries|·shortlist rows — the
-    * corpus-wide pass still touches codes only, which is the entire point
-    * of PQ — and the re-rank join is broadcast-sized by construction.
-    * Recall@5 ladder (sf0.01): 0.82 / 0.94 / 0.98 at shortlist
-    * 50 / 100 / 150; the shipped query uses 100 (spec floor 0.90).
-    *
-    * Exact metric: cosine (the [[Similarity.bruteForceTopK]] twin — the
-    * corpus embeddings are unit-norm, so L2 and cosine rank identically
-    * and the oracle mirrors with `list_cosine_similarity`). Returns
-    * `(query_id, rank, neighbor_id, cosine)`, `rank ≤ topK`. */
   /** IVF-PQ → ADC shortlist → EXACT re-rank: the full IVFADC-R stack
     * ([[ivfPqTopK]] routing+compression, [[pqAdcRerankTopK]] re-rank
     * discipline) in one in-memory operator — the verification twin of
@@ -301,6 +293,20 @@ object Pq {
         round(col("c"), 6).as("cosine"))
   }
 
+  /** ADC shortlist → EXACT re-rank (Jégou et al. §VI, "IVFADC-R"): the
+    * 32-bit codes alone rank coarsely (measured recall@5 = 0.26 at the
+    * shipped m=8/k=16 — `RecallFloorSpec`), so production stacks re-rank
+    * an ADC SHORTLIST of `shortlist` candidates with exact distances.
+    * The raw vectors are read for only |queries|·shortlist rows — the
+    * corpus-wide pass still touches codes only, which is the entire point
+    * of PQ — and the re-rank join is broadcast-sized by construction.
+    * Recall@5 ladder (sf0.01): 0.82 / 0.94 / 0.98 at shortlist
+    * 50 / 100 / 150; the shipped query uses 100 (spec floor 0.90).
+    *
+    * Exact metric: cosine (the [[Similarity.bruteForceTopK]] twin — the
+    * corpus embeddings are unit-norm, so L2 and cosine rank identically
+    * and the oracle mirrors with `list_cosine_similarity`). Returns
+    * `(query_id, rank, neighbor_id, cosine)`, `rank ≤ topK`. */
   def pqAdcRerankTopK(
       corpus: DataFrame,
       queries: DataFrame,

@@ -19,6 +19,12 @@ import org.apache.spark.sql.types.StructType
   * across appends (true of every call site: a store's column set and id
   * type are fixed at creation by its writer). Results never depend on
   * the cache — a hit supplies the identical StructType inference would.
+  *
+  * A writer that knows the schema it just wrote [[prime]]s the cache with
+  * it, so even the first read of a fresh store skips inference. It must
+  * prime what inference would return: the written columns, partition
+  * columns last with their inferred types (the reader makes every field
+  * nullable either way).
   */
 object CachedParquet {
 
@@ -35,6 +41,14 @@ object CachedParquet {
       cache.put(path, (stamp, fresh.schema))
       fresh
     }
+  }
+
+  /** Cache `schema` for `path` as it stands now (the next change to the
+    * path's stamp re-infers). */
+  def prime(spark: SparkSession, path: String, schema: StructType): Unit = {
+    val stamp = stampOf(spark, path)
+    if (stamp != null) cache.put(path, (stamp, schema))
+    ()
   }
 
   /** The cached (or freshly inferred) schema of `path` — for callers that

@@ -5,8 +5,9 @@ import graft.similarity.{AnnIndex, Ivf, Pq, Similarity}
 
 /** The composed production ANN path (disk IVF code store + ADC shortlist +
   * exact re-rank): disk == in-memory twin, partition/column pruning reaches
-  * the scans, frozen-model appends are one-shot-identical, and the recall
-  * floor of the shipped configuration holds. */
+  * the scans, frozen-model appends are one-shot-identical, the recall
+  * floor of the shipped configuration holds, one shared sample trains both
+  * quantizers, and build and search stay within their pinned job counts. */
 class AnnIndexSpec extends SparkSpec {
 
   // correctness-gate data (sf0.01, like RecallFloorSpec): recall floors are
@@ -180,5 +181,93 @@ class AnnIndexSpec extends SparkSpec {
     val shortHead = bad.filter(col("vec_id") === -1L)
       .unionByName(emb.select("vec_id", "embedding", "label"))
     assert(exact(shortHead) == cleanExact)
+  }
+
+  // the two lowest ids: a null embedding, then a 63-dim one; under 447
+  // clean rows they tip the automatic list count (suggestNLists 7, not 6)
+  private lazy val dirtyHead = {
+    val s = spark
+    import s.implicits._
+    Seq((-2L, null: Seq[Float], 0), (-1L, Seq.fill(63)(0.125f), 0))
+      .toDF("vec_id", "embedding", "label")
+      .unionByName(emb.filter(col("vec_id") < 447).select("vec_id", "embedding", "label"))
+  }
+
+  private def sameModel(a: graft.similarity.PqIndexModel,
+      coarse: Array[Array[Long]], books: Array[Array[Array[Long]]]): Boolean =
+    a.coarse.map(_.toSeq).toSeq == coarse.map(_.toSeq).toSeq &&
+      a.books.map(_.map(_.toSeq).toSeq).toSeq == books.map(_.map(_.toSeq).toSeq).toSeq
+
+  test("one shared training sample equals the two separate trainers' samples") {
+    val path = "/tmp/graft_ann_shared_sample"
+    for ((ivfSample, pqSample) <- Seq((300, 100), (100, 300), (200, 200))) {
+      rmTree(path)
+      val model = AnnIndex.buildIndex(dirtyHead, "vec_id", "embedding", path,
+        dim = 64, nLists = 16, m = 8, kCodes = 16,
+        ivfSample = ivfSample, pqSample = pqSample)
+      val coarse = Ivf.trainCentroidsQuantized(dirtyHead, "vec_id", "embedding", 64, 16,
+        sampleSize = ivfSample)
+      val books = Pq.trainCodebooks(dirtyHead, "vec_id", "embedding", 64, 8, 16,
+        sampleSize = pqSample)
+      assert(sameModel(model, coarse, books), s"ivfSample=$ivfSample pqSample=$pqSample")
+    }
+  }
+
+  test("automatic nLists counts every corpus row, null and wrong-length ones included") {
+    val path = "/tmp/graft_ann_auto_lists"
+    rmTree(path)
+    val n = dirtyHead.count()
+    assert(AnnIndex.suggestNLists(n) != AnnIndex.suggestNLists(n - 2), "fixture must tip the count")
+    val model = AnnIndex.buildIndex(dirtyHead, "vec_id", "embedding", path, dim = 64)
+    assert(model.coarse.length == AnnIndex.suggestNLists(n))
+  }
+
+  test("job pins: buildIndex reads a lazy corpus twice; searchIndex lists its store once") {
+    // a lazy joined corpus, like a pipeline's `embeddings ⋈ keep`: each
+    // evaluation re-runs the joins. Evaluated four times (count, IVF
+    // sample, PQ sample, write), this build ran 23 jobs; the search below,
+    // with a schema-inference read and a second listing of its 40-list
+    // store, ran 11.
+    val dropped = emb.filter(col("vec_id") % 10 === 3).select("vec_id").distinct()
+    val keep = emb.select("vec_id").distinct().join(dropped, Seq("vec_id"), "left_anti")
+    val corpus = emb.join(keep, Seq("vec_id"))
+    val path = "/tmp/graft_ann_job_pins"
+    rmTree(path)
+    val build = jobsOf(AnnIndex.buildIndex(corpus, "vec_id", "embedding", path, dim = 64))
+    assert(build <= 12, s"buildIndex ran $build jobs")
+    rmTree(path)
+    // more than 32 list directories: listing the store is a Spark job
+    val wide = AnnIndex.buildIndex(corpus, "vec_id", "embedding", path, dim = 64, nLists = 40)
+    val search = jobsOf(AnnIndex.searchIndex(spark, path, wide, queries,
+      "vec_id", "embedding", topK = 5, nProbe = 10, shortlist = 50).collect())
+    assert(search <= 9, s"searchIndex ran $search jobs")
+  }
+
+  test("a fresh store primes the schema cache with exactly the inferred schema") {
+    val s = spark
+    import s.implicits._
+    for ((name, corpus) <- Seq(
+        "long" -> emb,
+        "string" -> emb.withColumn("vec_id", concat(lit("v"), col("vec_id"))))) {
+      val path = s"/tmp/graft_ann_primed_$name"
+      rmTree(path)
+      val model = AnnIndex.buildIndex(corpus, "vec_id", "embedding", path,
+        dim = 64, nLists = 16, m = 8, kCodes = 16)
+      var held: org.apache.spark.sql.types.StructType = null
+      assert(jobsOf { held = graft.sources.CachedParquet.schemaOf(spark, path) } == 0,
+        s"$name: the first read after the build inferred its schema")
+      assert(held == spark.read.parquet(path).schema, name)
+      if (name == "string") {
+        // tombstones take the id type from the held schema
+        val hit = AnnIndex.searchIndex(spark, path, model, corpus.filter(col("vec_id") === "v3"),
+          "vec_id", "embedding", topK = 5, nProbe = 16, shortlist = 50)
+          .select("neighbor_id").as[String].collect().head
+        AnnIndex.deleteFromIndex(Seq(hit).toDF("vec_id"), "vec_id", path)
+        val after = AnnIndex.searchIndex(spark, path, model, corpus.filter(col("vec_id") === "v3"),
+          "vec_id", "embedding", topK = 5, nProbe = 16, shortlist = 50)
+          .select("neighbor_id").as[String].collect()
+        assert(after.nonEmpty && !after.contains(hit), s"deleted id $hit surfaced")
+      }
+    }
   }
 }

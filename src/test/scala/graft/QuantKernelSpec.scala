@@ -14,8 +14,9 @@ import graft.similarity.{AnnIndex, Ivf, Pq}
   * `adc_sum`) against their higher-order-function reference
   * ([[QuantHof]]): identical values — nulls, NaN/±Inf, ties and wrapped
   * overflow included — with ANSI on and off, generated and interpreted;
-  * identical errors where the reference throws. And the ANN hot paths'
-  * executed plans carry no higher-order function. */
+  * identical errors where the reference throws. Kernel calls over equal
+  * matrices are one common subexpression. And the ANN hot paths' executed
+  * plans carry no higher-order function. */
 class QuantKernelSpec extends SparkSpec {
 
   private val dim = 8
@@ -168,6 +169,25 @@ class QuantKernelSpec extends SparkSpec {
       intercept[IllegalArgumentException](pq_assign(col("v"), b))
       intercept[IllegalArgumentException](pq_lut(col("v"), b))
     }
+  }
+
+  test("kernel calls over equal matrices built apart are one subexpression, run once per row") {
+    val twin = books.map(_.map(_.clone()))
+    val df = frame(safe).select(pq_assign(col("v"), books).as("a"),
+      pq_assign(col("v"), twin).as("b"), q6_dots(col("v"), matrix).as("c"),
+      q6_dots(col("v"), matrix.map(_.clone())).as("d"))
+    val calls = df.queryExecution.analyzed.expressions.flatMap(_.collect {
+      case k: graft.functions.PqAssign => k
+      case k: graft.functions.QuantizedDots => k
+    })
+    assert(calls.size == 4)
+    assert(calls(0).semanticEquals(calls(1)) && calls(2).semanticEquals(calls(3)))
+    assert(!calls(0).semanticEquals(calls(2)))
+    val code = df.queryExecution.debug.codegenToSeq().map(_._2).mkString("\n")
+    for (kernel <- Seq("pqAssign", "dots"))
+      assert(s"QuantOps\\.$kernel\\(".r.findAllIn(code).size == 1,
+        s"$kernel is not evaluated once per row:\n$code")
+    assert(df.collect().forall(r => r.get(0) == r.get(1) && r.get(2) == r.get(3)))
   }
 
   test("kernels equal the HOF reference on the unit-norm fixture's trained quantizers") {
