@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.core.OrderedScan
+import graft.core.{ColumnNotFoundException, OrderedScan}
 
 /** One-pass column profiler: the standard DQ summary block (count, nulls,
   * distinct, min/max/mean/stddev, approximate quantiles) for every requested
@@ -94,23 +94,24 @@ object Profiler {
     * pass): sketch+counts, exact distincts, then one conditional-count
     * pass at the estimate thresholds (the estimates are a bounded driver
     * round-trip, as with IVF centroids). Each pass scans only the
-    * profiled columns (parquet pruning). The exact `countDistinct`s run
-    * in their OWN aggregate deliberately: a distinct agg and a typed
-    * `Aggregator` buffer in one aggregate push the whole thing onto the
-    * sort-based fallback path, which re-serializes the sketch buffer per
-    * input row — measured 35 s vs 1.3 s for the sketch alone at sf0.1. */
+    * profiled columns (parquet pruning). The exact distinct counts
+    * ([[valueCountStats]]) run in their OWN aggregates deliberately: a
+    * distinct agg and a typed `Aggregator` buffer in one aggregate push
+    * the whole thing onto the sort-based fallback path, which
+    * re-serializes the sketch buffer per input row — measured 35 s vs
+    * 1.3 s for the sketch alone at sf0.1. */
   def profileContract(df: DataFrame, cols: Seq[String],
       alpha: Double = 0.01): DataFrame = {
     import org.apache.spark.sql.functions.{udaf => _, _}
     val probs = QuantileProbs
     val ddq = graft.functions.DDSketchQuantiles.columnFn(alpha, probs) _
     val xs = cols.map(c => c -> col(c).cast("double"))
-    // NOT repartitioned (tried, measured, reverted): unlike [[profileExact]],
-    // the heavy state here is sketches (DDSketch buckets + HLL registers) —
-    // a round-robin exchange before the partials made total CPU ~7x (row-wise
-    // shuffle input vs the vectorized scan, 32 sketch states built + merged)
-    // and WALL slower (2.6 s -> 3.3 s); the serial scan partial is the
-    // cheaper side at any input the sketch state dominates
+    // NOT repartitioned (tried, measured, reverted): the heavy state here is
+    // sketches (DDSketch buckets + HLL registers) — a round-robin exchange
+    // before the partials made total CPU ~7x (row-wise shuffle input vs the
+    // vectorized scan, 32 sketch states built + merged) and WALL slower
+    // (2.6 s -> 3.3 s); the serial scan partial is the cheaper side at any
+    // input the sketch state dominates
     val base = df.select(cols.map(col): _*)
     // job 1: counts, HLL, min, DDSketch — no distinct aggs in here
     val firstAggs = xs.flatMap { case (c, x) => Seq(
@@ -120,9 +121,10 @@ object Profiler {
       min(x).as(s"__min_$c"),
       ddq(x).as(s"__est_$c")) }
     val first = base.agg(firstAggs.head, firstAggs.tail: _*).head()
-    // job 2: exact distincts (one Expand over all columns, pure codegen)
-    val distinctAggs = xs.map { case (c, x) => countDistinct(x).as(s"__d_$c") }
-    val distincts = base.agg(distinctAggs.head, distinctAggs.tail: _*).head()
+    // job 2: exact distincts, read off the per-column value counts
+    val distincts = valueCountStats(base.select(xs.map { case (c, x) => x.as(c) }: _*), cols) {
+      (c, _, _) => struct(lit(c).as("c"), count(col(c)).as("n"))
+    }.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val n = cols.indices.map(ci => first.getLong(5 * ci))
     val est = cols.indices.map(ci =>
       if (n(ci) == 0) Seq.fill(probs.size)(0.0) else first.getSeq[Double](5 * ci + 4))
@@ -156,7 +158,7 @@ object Profiler {
           second.getLong(secondBase(ci) + 2 * i) < r &&
             second.getLong(secondBase(ci) + 2 * i + 1) >= r
         }
-      val nDistinct = distincts.getLong(ci)
+      val nDistinct = distincts(c)
       val distinctOk = math.abs(first.getLong(5 * ci + 2) - nDistinct).toDouble <=
         0.06 * math.max(1L, nDistinct)
       (c, n(ci), first.getLong(5 * ci + 1), nDistinct, distinctOk, qOk(0), qOk(1), qOk(2))
@@ -168,35 +170,68 @@ object Profiler {
       .orderBy("col_name")
   }
 
-  /** Long-format profile: one row per (column, stat). Exact stats only —
-    * suitable for oracle checks; sketch stats stay in [[profileRow]]. */
-  def profileExact(df: DataFrame, cols: Seq[String]): DataFrame = {
-    val fields = df.schema.fields.map(f => f.name -> f.dataType).toMap
-    // project to the profiled columns and repartition: the multi-
-    // countDistinct partial pass expands rows |cols|-fold, and a
-    // single-file source would run that whole expansion in one scan task
-    // (guide §2.5, §2.3 — shuffle only the profiled columns); the decimal
-    // sums and distinct sets are partition-order-independent
-    val base = df.select(cols.map(col): _*)
-      .repartition(df.sparkSession.sparkContext.defaultParallelism)
-    val rows = cols.map { c =>
-      val numeric = isNumeric(fields(c))
+  /** Long-format profile: one row per requested column,
+    * `(column, n_non_null, n_null, n_distinct, min_val, max_val, mean_val)`.
+    * Exact stats only — suitable for oracle checks; sketch stats stay in
+    * [[profileRow]]. `min_val`, `max_val` and `mean_val` are null for a
+    * non-numeric column.
+    *
+    * Plan: every statistic is read off the exact per-column value counts
+    * ([[valueCountStats]]), so the input rows pass through one
+    * count-only aggregate and the statistics aggregate only the distinct
+    * values. The mean is `Σ decimal(32,6)(v)·n / n_non_null` — the exact
+    * decimal sum of every row's value, in any order (a double sum is
+    * partition-order dependent, which makes round(mean, 6)
+    * nondeterministic at scale). A float column's `-0.0` counts as the
+    * same value as `0.0` (Spark normalizes grouping keys), so an extreme
+    * at zero reads `0.0`. */
+  def profileExact(df: DataFrame, cols: Seq[String]): DataFrame =
+    valueCountStats(df, cols) { (c, own, n) =>
+      val v = col(c)
+      val numeric = isNumeric(df.schema(c).dataType)
+      def num(stat: Column): Column = if (numeric) stat else lit(null).cast("double")
+      val nonNull = coalesce(sum(when(v.isNotNull, n)), lit(0L))
       struct(
         lit(c).as("column"),
-        count(col(c)).as("n_non_null"),
-        count(when(col(c).isNull, 1)).as("n_null"),
-        countDistinct(col(c)).as("n_distinct"),
-        (if (numeric) min(col(c)).cast("double") else lit(null).cast("double")).as("min_val"),
-        (if (numeric) max(col(c)).cast("double") else lit(null).cast("double")).as("max_val"),
-        // mean over an exact decimal sum — a double sum is partition-order
-        // dependent, which makes round(mean, 6) nondeterministic at scale
-        (if (numeric)
-          sum(col(c).cast("decimal(32,6)")).cast("double") / count(col(c))
-        else lit(null).cast("double")).as("mean_val"))
+        nonNull.as("n_non_null"),
+        coalesce(sum(when(own && v.isNull, n)), lit(0L)).as("n_null"),
+        count(v).as("n_distinct"),
+        num(min(v).cast("double")).as("min_val"),
+        num(max(v).cast("double")).as("max_val"),
+        num(sum(v.cast("decimal(32,6)") * n).cast("double") / nonNull).as("mean_val"))
     }
-    base.agg(rows.head.as("s0"), rows.tail.zipWithIndex.map { case (r, i) => r.as(s"s${i + 1}") }: _*)
-      .select(explode(array(rows.indices.map(i => col(s"s$i")): _*)).as("p"))
-      .select("p.*")
+
+  /** Per-column statistics read off exact value counts — a data cube over
+    * one grouping set per column (Gray et al., "Data Cube", ICDE 1996).
+    * One aggregate counts every (column, value) pair; its only buffer is
+    * the count. One global aggregate over those counts then evaluates
+    * `stat(c, own, n)` for each column `c`: over the count rows, `col(c)`
+    * is one of `c`'s distinct values (null on the other columns' rows and
+    * on `c`'s own null row), `own` marks `c`'s rows and `n` is the value's
+    * row count. The result has one row per entry of `cols`, with the
+    * fields of `stat`'s struct; a column listed twice is counted once and
+    * gives two identical rows. Spark caps a grouping-set aggregate at 64
+    * columns, so each further 64 columns add one such pair of aggregates. */
+  private def valueCountStats(df: DataFrame, cols: Seq[String])(
+      stat: (String, Column, Column) => Column): DataFrame = {
+    require(cols.nonEmpty, "no column to profile")
+    val missing = cols.filterNot(df.columns.toSet).distinct
+    if (missing.nonEmpty)
+      throw new ColumnNotFoundException(s"Columns not found: ${missing.mkString("[", ", ", "]")}")
+    cols.distinct.grouped(64).map { chunk =>
+      val counts = df.groupingSets(chunk.map(c => Seq(col(c))), chunk.map(col): _*)
+        .agg(count(lit(1)).as("__n"), grouping_id().as("__gid"))
+      // grouping_id() sets bit (w-1-i) when column i is NOT grouped
+      val w = chunk.size
+      val stats = chunk.zipWithIndex.map { case (c, i) =>
+        val gid = (-1L >>> (64 - w)) & ~(1L << (w - 1 - i))
+        stat(c, col("__gid") === lit(gid), col("__n")).as(s"__s$i")
+      }
+      val picked = cols.filter(chunk.contains).map(c => col(s"__s${chunk.indexOf(c)}"))
+      counts.agg(stats.head, stats.tail: _*)
+        .select(explode(array(picked: _*)).as("__p"))
+        .select("__p.*")
+    }.reduce(_ union _)
   }
 
   /** Key-skew diagnostic: the topN heaviest key values with their row count
@@ -1129,25 +1164,24 @@ object Profiler {
   /** Dead-column detection: per column, null count, exact distinct count
     * (nulls excluded), and the verdict — `all_null`, `constant` (≤1
     * non-null distinct value), or `live`. The cheap schema-debt audit run
-    * before wasting IO on columns nobody populates.
+    * before wasting IO on columns nobody populates. `n_null` is null on an
+    * empty input (a sum over no rows); `column`, `n_null` and
+    * `n_distinct` are typed nullable.
     *
-    * Single pass: Spark rewrites the multi-`countDistinct` aggregate into
-    * one `expand`-based aggregation (rows × #cols intermediate, partial
-    * combine before the shuffle) — no per-column scans. */
+    * Single pass over the input, read off the per-column value counts
+    * ([[valueCountStats]]) — no per-column scans, and lazy: no driver
+    * round-trip. */
   def deadColumns(df: DataFrame, cols: Seq[String]): DataFrame = {
-    require(cols.nonEmpty)
-    val aggs = cols.flatMap(c => Seq(
-      sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"__null_$c"),
-      countDistinct(col(c)).as(s"__dist_$c")))
-    // stay lazy: pivot the one aggregate row to one row per column with
-    // stack() — no driver round-trip, still a single job
-    val stackArgs = cols.map(c => s"'$c', `__null_$c`, `__dist_$c`").mkString(", ")
-    df.agg(aggs.head, aggs.tail: _*)
-      .selectExpr(s"stack(${cols.size}, $stackArgs) AS (column, n_null, n_distinct)")
-      .withColumn("verdict",
-        when(col("n_distinct") === 0, lit("all_null"))
-          .when(col("n_distinct") === 1, lit("constant"))
-          .otherwise(lit("live")))
+    import org.apache.spark.sql.graft.Bridge.nullable
+    valueCountStats(df, cols) { (c, own, n) =>
+      struct(
+        nullable(lit(c)).as("column"),
+        sum(when(own && col(c).isNull, n).otherwise(0L)).as("n_null"),
+        nullable(count(col(c))).as("n_distinct"))
+    }.withColumn("verdict",
+      when(col("n_distinct") === 0, lit("all_null"))
+        .when(col("n_distinct") === 1, lit("constant"))
+        .otherwise(lit("live")))
   }
 
   /** l-diversity audit — [[kAnonymity]]'s companion: k-anonymity bounds

@@ -52,24 +52,30 @@ object AnnIndex {
     * their per-job planning + scheduling latency). Every overlapped pair
     * below is data-independent and individually deterministic, so
     * concurrency cannot change any result. */
-  private lazy val lifecycleEc: scala.concurrent.ExecutionContext =
-    scala.concurrent.ExecutionContext.fromExecutorService(
-      java.util.concurrent.Executors.newCachedThreadPool(r => {
-        val t = new Thread(r, "ann-lifecycle")
-        t.setDaemon(true)
-        t
-      }))
+  private lazy val lifecyclePool: java.util.concurrent.ExecutorService =
+    java.util.concurrent.Executors.newCachedThreadPool(r => {
+      val t = new Thread(r, "ann-lifecycle")
+      t.setDaemon(true)
+      t
+    })
 
   /** Run two independent actions concurrently; both settle before the
     * first failure (if any) is rethrown, so a failure path never races a
-    * straggler still writing. */
-  private def awaitBoth[A, B](fa: => A, fb: => B): (A, B) = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    val f1 = Future(fa)(lifecycleEc)
-    val f2 = Future(fb)(lifecycleEc)
-    val r1 = scala.util.Try(Await.result(f1, Duration.Inf))
-    val r2 = scala.util.Try(Await.result(f2, Duration.Inf))
+    * straggler still writing. Each action runs under the caller's local
+    * properties (job group, description, scheduler pool) and active
+    * session, captured at submission as AQE does for its stage jobs: a
+    * pooled thread otherwise keeps the properties of the caller that
+    * created it. */
+  private def awaitBoth[A, B](spark: SparkSession)(fa: => A, fb: => B): (A, B) = {
+    import org.apache.spark.sql.graft.Bridge
+    val f1 = Bridge.submitCaptured(spark, lifecyclePool)(fa)
+    val f2 = Bridge.submitCaptured(spark, lifecyclePool)(fb)
+    def settle[T](f: java.util.concurrent.CompletableFuture[T]) =
+      scala.util.Try(f.get()).recoverWith {
+        case e: java.util.concurrent.ExecutionException => scala.util.Failure(e.getCause)
+      }
+    val r1 = settle(f1)
+    val r2 = settle(f2)
     (r1.get, r2.get)
   }
 
@@ -264,11 +270,11 @@ object AnnIndex {
     // three independent single-file writes to three directories —
     // overlapped (guide §2.6): each is one tiny job + a commit, and the
     // commits' driver-side latency otherwise serializes
-    val (_, _) = awaitBoth(
+    val (_, _) = awaitBoth(spark)(
       model.coarse.zipWithIndex.map { case (cv, i) => (i, cv.toSeq) }.toSeq
         .toDF("cid", "cv")
         .coalesce(1).write.mode("overwrite").parquet(s"$path/coarse"),
-      awaitBoth(
+      awaitBoth(spark)(
         (for {
           (book, sub) <- model.books.zipWithIndex.toSeq
           (cv, code) <- book.zipWithIndex
@@ -299,9 +305,9 @@ object AnnIndex {
     // vs the 3 collects this shape pays (the model is driver-resident
     // either way, so sorting it there is free). The three single-file
     // reads are independent — overlapped (guide §2.6).
-    val (meta, (coarse, books)) = awaitBoth(
+    val (meta, (coarse, books)) = awaitBoth(spark)(
       spark.read.schema(metaSchema).parquet(s"$path/meta").head(),
-      awaitBoth(
+      awaitBoth(spark)(
         spark.read.schema(coarseSchema).parquet(s"$path/coarse").collect()
           .map(r => (r.getInt(0), r.getSeq[Long](1).toArray))
           .sortBy(_._1).map(_._2),
@@ -666,7 +672,7 @@ object AnnIndex {
       case Some(d) => corpus.select(col(idCol), col(vecCol)).unionByName(d)
       case None => corpus
     }
-    val (got, exact) = awaitBoth(
+    val (got, exact) = awaitBoth(spark)(
       searchIndex(spark, vp, model, probeQueries, idCol, vecCol, topK,
           math.min(nProbe, nl), shortlist)
         .select(col("query_id"), col("neighbor_id"))

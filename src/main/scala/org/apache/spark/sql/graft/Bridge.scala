@@ -14,6 +14,10 @@ object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
+  /** `c`, typed nullable whatever its expression's own nullability. */
+  def nullable(c: Column): Column =
+    column(org.apache.spark.sql.catalyst.expressions.KnownNullable(expression(c)))
+
   /** DataFrame from a (resolved) logical plan — the `Dataset.ofRows`
     * doorway custom operators need to surface a custom `LogicalPlan`
     * node through the public Column API. */
@@ -37,6 +41,14 @@ object Bridge {
       schema: org.apache.spark.sql.types.StructType): org.apache.spark.sql.DataFrame =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .internalCreateDataFrame(rdd, schema)
+
+  /** Runs `body` on `pool` under the calling thread's local properties
+    * (job group, description, scheduler pool) and active session — the
+    * capture AQE uses for its query-stage jobs. */
+  def submitCaptured[T](spark: org.apache.spark.sql.SparkSession,
+      pool: java.util.concurrent.ExecutorService)(body: => T): java.util.concurrent.CompletableFuture[T] =
+    org.apache.spark.sql.execution.SQLExecution.withThreadLocalCaptured(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], pool)(body)
 
   /** `element_at`'s errors, for kernels that index with its semantics. */
   def elementAtIndexError(index: Int, numElements: Int): ArrayIndexOutOfBoundsException =

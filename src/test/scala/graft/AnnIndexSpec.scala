@@ -243,6 +243,32 @@ class AnnIndexSpec extends SparkSpec {
     assert(search <= 9, s"searchIndex ran $search jobs")
   }
 
+  test("pooled lifecycle actions run under the caller's job group, not the pool thread creator's") {
+    // the first round creates the pool's threads outside any job group;
+    // the second, under a fresh group, reuses them
+    val base = "/tmp/graft_ann_lifecycle_group"
+    rmTree(base)
+    AnnIndex.buildVersioned(emb, "vec_id", "embedding", base, dim = 64, nLists = 8)
+    def round(v: Int): Unit = {
+      val model = AnnIndex.loadModel(spark, s"${AnnIndex.versionPath(base, v)}/_model")
+      AnnIndex.saveModel(spark, model, s"$base/saved_$v")
+      val res = AnnIndex.retrain(emb, "vec_id", "embedding", base, dim = 64,
+        probeQueries = queries, nLists = 8, recallFloor = 0.0)
+      assert(res.promoted && res.toVersion == v + 1)
+    }
+    round(1)
+    val all = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (!Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+            .exists(_.endsWith("-end"))) { all.incrementAndGet(); () }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val grouped = try jobsOf(round(2)) finally spark.sparkContext.removeSparkListener(listener)
+    assert(grouped > 0 && grouped == all.get(),
+      s"${all.get()} jobs ran, $grouped under the caller's job group")
+  }
+
   test("a fresh store primes the schema cache with exactly the inferred schema") {
     val s = spark
     import s.implicits._
