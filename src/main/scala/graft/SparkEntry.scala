@@ -748,8 +748,8 @@ object SparkEntry {
     // --- similarity: IVF coarse-quantizer ANN. Training/assignment/probing
     //     run in INTEGER-EXACT quantized algebra (Ivf.trainCentroidsQuantized),
     //     so the whole pipeline — k-means included — carries a FULL
-    //     hash-match oracle (ivfTopkSql replays both Lloyd iterations in
-    //     SQL); recall vs brute force is still floor-asserted in IvfSpec ---
+    //     hash-match oracle (ivfTopkSql replays every Lloyd iteration in
+    //     SQL); recall vs brute force is floor-asserted in RecallFloorSpec ---
     "q_ann_topk_ivf" -> ((s, dir) => {
       val e = t(s, dir, "embeddings")
       graft.similarity.Ivf.ivfTopKExact(e, e.filter(col("vec_id") < 10), "vec_id", "embedding",

@@ -115,6 +115,11 @@ object Superstep {
     def release(): Unit = if (state != null) state.unpersist(false)
   }
 
+  /** Fault-injection seam for specs: when set, called on the driver after
+    * each round with the round number and its materialised state. Unset,
+    * it costs one null check per round. */
+  @volatile private[graft] var afterRound: (Int, RDD[State]) => Unit = null
+
   /** HashPartitioner's vertex mapping, without boxing the id. */
   private def owner(id: Long, parts: Int): Int = {
     val h = java.lang.Long.hashCode(id) % parts
@@ -169,6 +174,7 @@ object Superstep {
         prev.unpersist(false)
         prev = null
         round += 1
+        if (afterRound != null) afterRound(round, state)
       }
       new Result(spark, state, changed)
     } catch {

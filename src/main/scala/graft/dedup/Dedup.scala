@@ -580,17 +580,14 @@ object Dedup {
       textCol: String,
       n: Int = 3,
       threshold: Double = 0.9,
-      blockCols: Seq[String] = Seq.empty,
-      cacheIntermediate: Boolean = true
+      blockCols: Seq[String] = Seq.empty
   ): DataFrame = {
     val setCol = shingle_hashes(TextAnalysis.tokens(col(textCol)), n)
-    val base0 = df
+    val base = df
       .repartition(df.sparkSession.sparkContext.defaultParallelism)
       .select(col(idCol).as("id") +: setCol.as("sh") +: blockCols.map(col): _*)
       .filter(size(col("sh")) > 0)
-    val base = if (cacheIntermediate)
-      base0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else base0
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val prefLen = (size(col("sh")).cast("long") -
       ceil(lit(threshold) * size(col("sh")).cast("double") - lit(1e-9)) + 1).cast("int")
     val full = base.select(
@@ -614,7 +611,7 @@ object Dedup {
         (graft.functions.sorted_intersection_count(col("sha"), col("shb")).cast("double") /
           least(size(col("sha")), size(col("shb"))).cast("double")).as("containment"))
       .filter(col("containment") >= threshold)
-    finishPairs(verified, base, cacheIntermediate)
+    finishPairs(verified, base)
   }
 
   /** LSH banding parameter PLANNER (the published S-curve analysis —
@@ -667,15 +664,7 @@ object Dedup {
       bands: Int = 32,
       threshold: Double = 0.5,
       seed: Long = 42L,
-      maxBucketSize: Int = 1000,
-      /** the shingle-set frame is consumed three times (signature/banding +
-        * both sides of the Jaccard verify join); caching it avoids
-        * re-tokenizing the corpus thrice. MEMORY_AND_DISK — spills rather
-        * than OOMs when the corpus is large. When enabled the verified pair
-        * list is materialized EAGERLY (one job at call time) so the cache
-        * can be released before returning — see [[finishPairs]]. Disable
-        * for one-shot lazy plans on inputs too large to want cached. */
-      cacheIntermediate: Boolean = true
+      maxBucketSize: Int = 1000
   ): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     val r = numHashes / bands
@@ -686,14 +675,15 @@ object Dedup {
     // hashes are 8 bytes each and the verify step merges them linearly.
     // Repartition first: a small/compacted source (one parquet file = one
     // partition) would otherwise run the whole signature pass on one core.
-    val base0 = df
+    // The frame is consumed three times (signature/banding + both sides of
+    // the verify join), so it is cached MEMORY_AND_DISK (spills rather than
+    // OOMs) until [[finishPairs]] has materialized the pair list.
+    val base = df
       .repartition(df.sparkSession.sparkContext.defaultParallelism)
       .select(col(idCol).as("id"),
         shingle_hashes(TextAnalysis.tokens(col(textCol)), shingleN, seed).as("sh"))
       .filter(size(col("sh")) > 0)
-    val base = if (cacheIntermediate)
-      base0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else base0
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
     val banded = base
       .select(col("id"), minhash_from_hashes(col("sh"), numHashes).as("sig"))
@@ -711,7 +701,7 @@ object Dedup {
       .filter(col("ida") < col("idb"))
       .distinct()
 
-    finishPairs(verifyJaccard(candidates, base, threshold), base, cacheIntermediate)
+    finishPairs(verifyJaccard(candidates, base, threshold), base)
   }
 
   /** Shard-routed twin of [[minHashLshPairs]]: the band buckets are routed
@@ -741,19 +731,16 @@ object Dedup {
       threshold: Double = 0.5,
       seed: Long = 42L,
       maxBucketSize: Int = 1000,
-      nShards: Int = 16,
-      cacheIntermediate: Boolean = true
+      nShards: Int = 16
   ): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     val r = numHashes / bands
-    val base0 = df
+    val base = df
       .repartition(df.sparkSession.sparkContext.defaultParallelism)
       .select(col(idCol).as("id"),
         shingle_hashes(TextAnalysis.tokens(col(textCol)), shingleN, seed).as("sh"))
       .filter(size(col("sh")) > 0)
-    val base = if (cacheIntermediate)
-      base0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else base0
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
     val banded = base
       .select(col("id"), minhash_from_hashes(col("sh"), numHashes).as("sig"))
@@ -778,7 +765,7 @@ object Dedup {
       .dropDuplicates("shard", "ida", "idb")
       .select("ida", "idb").distinct()
 
-    finishPairs(verifyJaccard(candidates, base, threshold), base, cacheIntermediate)
+    finishPairs(verifyJaccard(candidates, base, threshold), base)
   }
 
   /** Incremental NEAR-dup: which docs in a new `batch` near-duplicate a
@@ -793,7 +780,7 @@ object Dedup {
     * batch-side band table (bounded by |batch|·bands) is broadcast into
     * the bucket join, so the corpus's banded stream sheds non-matching
     * rows at scan speed. In a standing pipeline, materialize the corpus
-    * band table once (same pattern as [[graft.similarity.Ivf.buildIndex]])
+    * band table once (same pattern as [[graft.similarity.AnnIndex.buildIndex]])
     * and this becomes a pure index probe. Recall: a true pair at J ≥ t
     * shares an LSH bucket with probability 1 − (1 − J^r)^bands — at the
     * default 64 bands of r = 2, misses at J ≥ 0.5 are ≤ 1e-8, so the
@@ -844,22 +831,21 @@ object Dedup {
     out
   }
 
-  /** When the shingle frame was cached, materialize the (much smaller)
-    * verified pair list eagerly via [[graft.core.Checkpoints.truncate]]
-    * and unpersist the
-    * cache before returning: the persisted corpus-sized frame would
-    * otherwise stay pinned in executor storage for as long as the returned
-    * lazy plan lives (a storage leak in long-running sessions). The
+  /** Materialize the (much smaller) verified pair list eagerly via
+    * [[graft.core.Checkpoints.truncate]] (one job at call time) and
+    * unpersist the cached shingle frame before returning: the persisted
+    * corpus-sized frame would otherwise stay pinned in executor storage
+    * for as long as the returned lazy plan lives (a storage leak in
+    * long-running sessions). The
     * checkpoint also truncates lineage, so downstream iterative consumers
     * (connected components) never re-run the pair pipeline. On a real
     * cluster set `spark.graft.checkpointDir` and the truncation becomes a
     * RELIABLE checkpoint, survivable across executor loss. */
-  private def finishPairs(pairs: DataFrame, cached: DataFrame, wasCached: Boolean): DataFrame =
-    if (wasCached) {
-      val out = pairs.transform(graft.core.Checkpoints.truncate)
-      cached.unpersist()
-      out
-    } else pairs
+  private def finishPairs(pairs: DataFrame, cached: DataFrame): DataFrame = {
+    val out = pairs.transform(graft.core.Checkpoints.truncate)
+    cached.unpersist()
+    out
+  }
 
   /** Exact Jaccard verify over SORTED distinct sets: |A∩B| via linear merge,
     * |A∪B| = |A|+|B|−|A∩B|. Same values as array_intersect/array_union but
@@ -984,20 +970,17 @@ object Dedup {
       textCol: String,
       n: Int = 1,
       threshold: Double = 0.8,
-      blockCols: Seq[String] = Seq.empty,
-      cacheIntermediate: Boolean = true
+      blockCols: Seq[String] = Seq.empty
   ): DataFrame = {
     // gram sets as sorted distinct 64-bit hashes (collision odds negligible;
     // the exploded index then moves 8-byte longs, not gram strings)
     val setCol = shingle_hashes(TextAnalysis.tokens(col(textCol)), n)
-    val base0 = df
+    // consumed thrice (prefix index + both verify sides)
+    val base = df
       .repartition(df.sparkSession.sparkContext.defaultParallelism)
       .select(col(idCol).as("id") +: setCol.as("sh") +: blockCols.map(col): _*)
       .filter(size(col("sh")) > 0)
-    // consumed thrice (prefix index + both verify sides)
-    val base = if (cacheIntermediate)
-      base0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else base0
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // ceil(t*|A|) with a tiny slack so an off-by-one-ulp product can only
     // LENGTHEN the prefix (correctness is one-sided; extra grams cost only
     // a few more candidates)
@@ -1032,7 +1015,7 @@ object Dedup {
         lit(alpha) * (col("ca") + col("cb")).cast("double") - lit(1e-9))
       .select("ida", "idb")
     finishPairs(verifyJaccard(candidates, base.select("id", "sh"), threshold),
-      base, cacheIntermediate)
+      base)
   }
 
   /** Connected components over an undirected edge list by iterative

@@ -2,7 +2,6 @@ package graft.similarity
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.functions.{adc_sum, pq_assign, pq_lut, q6_dots}
 
 /** Trained quantizers of a disk PQ index — persist alongside the index
   * (both are bounded driver-side arrays: `nLists·dim` + `m·k·dim/m`
@@ -86,7 +85,9 @@ object AnnIndex {
     * With `nLists = 0` the row count [[suggestNLists]] needs rides on the
     * same job as an observed metric, taken BEFORE the validity filter, so
     * it is `corpus.count()` (null and wrong-length rows included) without
-    * a second evaluation of a lazy corpus. */
+    * a second evaluation of a lazy corpus. That automatic count is capped
+    * at the rows the IVF trainer receives (at most `ivfSample`): k-means
+    * cannot seed more lists than it has sample rows. */
   private[similarity] def trainModel(
       corpus: DataFrame,
       idCol: String,
@@ -105,19 +106,20 @@ object AnnIndex {
       if (nLists > 0) corpus else corpus.observe(rows, count(lit(1))),
       idCol, vecCol, dim, math.max(ivfSample, pqSample))
     val sample = Ivf.trainingSample(query)
-    val nl = if (nLists > 0) nLists else suggestNLists(
+    val ivfRows = sample.take(ivfSample)
+    val nl = if (nLists > 0) nLists else math.min(math.max(ivfRows.length, 1), suggestNLists(
       // an optimizer that drops the sample plan (say, a zero limit) drops
       // the metric with it: count directly then
       query.queryExecution.observedMetrics.get(rows).map(_.getLong(0))
-        .getOrElse(corpus.count()))
-    PqIndexModel(Ivf.centroidsFromSample(sample.take(ivfSample), dim, nl, ivfIters),
+        .getOrElse(corpus.count())))
+    PqIndexModel(Ivf.centroidsFromSample(ivfRows, dim, nl, ivfIters),
       Pq.codebooksFromSample(sample.take(pqSample), dim, m, kCodes, pqIters), dim, m)
   }
 
   /** Train both quantizers and materialize the index at `path`.
-    * Append new batches with [[appendToIndex]] (frozen quantizers — the
-    * [[Ivf.appendToIndex]] discipline); re-train offline when
-    * [[Ivf.indexStats]] over `path` shows list drift.
+    * Append new batches with [[appendToIndex]] (frozen quantizers);
+    * re-train offline ([[retrain]]) when [[Ivf.indexStats]] over `path`
+    * shows list drift.
     *
     * A lazy `corpus` (say, a join) is evaluated exactly twice: once by
     * the training-sample collect ([[trainModel]]) and once by the store
@@ -127,7 +129,11 @@ object AnnIndex {
     * `nLists = 0` (the default) sizes the list count by
     * [[suggestNLists]] (≈ √N; the row count is an observed metric of the
     * sample collect, so it costs no job of its own), so a user following
-    * the README path gets the corpus-scaled store, not a toy constant.
+    * the README path gets the corpus-scaled store, not a toy constant. The
+    * automatic count never exceeds `ivfSample` (nor the valid rows the
+    * IVF trainer receives): from about 4.2M rows on, √N would outgrow the
+    * training sample, so raise `ivfSample` with the corpus to keep √N
+    * lists. An explicit `nLists` above the sample fails with a `require`.
     * The GATED queries pin `nLists = 16` explicitly: the DuckDB oracle
     * replays the assignment algebra with a fixed list count, so oracle
     * reproducibility requires pinning it — that pin is a property of the
@@ -155,8 +161,11 @@ object AnnIndex {
   /** Frozen-quantizer incremental append: assign a new batch with the
     * EXISTING model and add its rows to the partitioned store. Search
     * over a grown index equals one built in one shot with the same
-    * model (the [[Ivf.appendToIndex]] contract — assignment is per-row,
-    * the store append-only, probes read whole lists). */
+    * model (spec-asserted): assignment is per-row, the store append-only,
+    * probes read whole lists. Freezing the quantizers is the standard IVF
+    * practice — re-training moves every list boundary and forces a full
+    * rebuild, so a standing index re-trains offline ([[retrain]]) when
+    * [[Ivf.indexStats]] shows drift. */
   def appendToIndex(
       batch: DataFrame,
       idCol: String,
@@ -173,20 +182,10 @@ object AnnIndex {
       model: PqIndexModel,
       overwrite: Boolean
   ): Unit = {
-    val rows = df
-      .filter(col(vecCol).isNotNull && size(col(vecCol)) === model.dim)
-      .select(col(idCol).as("id"), col(vecCol).as("v"))
-      // spread the narrow projection BEFORE the heavy per-row encode
-      // (centroid argmax + PQ code assignment): a single-file corpus scan
-      // is unsplittable, so without this the whole encode runs on ONE
-      // core (guide §2.5 — measured 0.58 s single-task CPU at sf0.1); the
-      // list_id repartition below still bounds the store at ~one file
-      // per list, and row order within a list never affects results
-      .repartition(df.sparkSession.sparkContext.defaultParallelism)
-      // corpus list assignment ties to the SMALLER centroid id (first max),
-      // the ivfPqTopK convention
-      .select(col("id"), pq_assign(col("v"), model.books).as("codes"), col("v"),
-        Ivf.firstMax(q6_dots(col("v"), model.coarse)).as("list_id"))
+    // the encode spreads the corpus before the per-row codes and list
+    // argmax; the list_id repartition below still bounds the store at ~one
+    // file per list, and row order within a list never affects results
+    val rows = Pq.encode(df, idCol, vecCol, model.dim, model.books, Some(model.coarse))
       // co-locate each list before the partitioned write: without this,
       // EVERY write task emits a file into EVERY list directory — at
       // nLists = √N the store degenerates into tasks·nLists tiny files
@@ -815,14 +814,8 @@ object AnnIndex {
     val nLists = model.coarse.length
     require(nProbe >= 1 && nProbe <= nLists, s"nProbe=$nProbe not in 1..$nLists")
     require(shortlist >= topK, s"shortlist=$shortlist < topK=$topK")
-    val qBase = queries
-      .filter(col(vecCol).isNotNull && size(col(vecCol)) === model.dim)
-    // probe lists per query: ties to the HIGHER centroid id (descending
-    // (score, index) — the ivfPqTopK convention)
-    val probes = qBase
-      .select(col(idCol).as("query_id"),
-        explode(Ivf.probeOrder(q6_dots(col(vecCol), model.coarse), nLists, nProbe)).as("__p"))
-      .select(col("query_id"), col("__p.i").cast("int").as("list_id"))
+    val qBase = Ivf.validRows(queries, vecCol, model.dim)
+    val probes = Ivf.probeLists(qBase, idCol, vecCol, model.coarse, nProbe)
     // partition pruning: the union of probed lists, a bounded
     // |queries|·nProbe-row fetch; dedup on the driver — a distributed
     // distinct on these few rows costs a shuffle + an extra AQE job
@@ -845,37 +838,14 @@ object AnnIndex {
           .select(col("id").as("neighbor_id"))), Seq("neighbor_id"), "left_anti")
       else codes0
     // per-query LUT as ONE nested array + row-local ADC fold
-    // ([[graft.functions.adc_sum]] — the identical m exact longs the old
-    // posexplode ⋈ (sub, code)-LUT ⋈ groupBy shape summed, with no 8×
-    // row blowup, no LUT join and no aggregate exchange: the candidate
-    // rows flow straight from the pruned code scan into the shortlist
-    // window's single query_id exchange)
-    val qlut = qBase
-      .select(col(idCol).as("query_id"),
-        pq_lut(col(vecCol), model.books).as("__lut"))
-    val adc = codes
-      .join(broadcast(probes), Seq("list_id"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .join(broadcast(qlut), Seq("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        adc_sum(col("codes"), col("__lut")).as("adc_dist"))
-    val ws = org.apache.spark.sql.expressions.Window.partitionBy("query_id")
-      .orderBy(col("adc_dist").asc, col("neighbor_id").asc)
-    val short = adc.withColumn("__r", row_number().over(ws))
-      .filter(col("__r") <= shortlist)
+    // ([[graft.functions.adc_sum]]): the candidate rows flow straight from
+    // the pruned code scan into the shortlist window's single query_id
+    // exchange
+    val short = Pq.adcTopN(Pq.probedCandidates(codes, probes,
+        Pq.lutFrame(qBase, idCol, vecCol, model.books)), shortlist)
       .select("query_id", "neighbor_id")
     // exact re-rank: second pruned scan, raw vectors for shortlist rows only
-    val raw = store.select(col("id").as("neighbor_id"), col("v"))
-    val qv = qBase.select(col(idCol).as("query_id"), col(vecCol).as("__qv"))
-    val exact = raw
-      .join(broadcast(short), Seq("neighbor_id"))
-      .join(broadcast(qv), Seq("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        graft.functions.cosine_sim(col("__qv"), col("v")).as("c"))
-    val w = org.apache.spark.sql.expressions.Window.partitionBy("query_id")
-      .orderBy(col("c").desc, col("neighbor_id").asc)
-    exact.withColumn("rank", row_number().over(w)).filter(col("rank") <= topK)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("c"), 6).as("cosine"))
+    Pq.rerank(store.select(col("id").as("neighbor_id"), col("v"))
+      .join(broadcast(short), Seq("neighbor_id")), qBase, idCol, vecCol, topK)
   }
 }

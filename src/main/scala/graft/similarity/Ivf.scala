@@ -2,172 +2,32 @@ package graft.similarity
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.functions.{cosine_sim, dot_product, q6_dots, QuantOps}
+import graft.functions.{cosine_sim, q6_dots, QuantOps}
 
-/** IVF (inverted-file) approximate nearest-neighbor search — the classic
-  * coarse-quantizer scale path for embedding search (public design: FAISS
-  * IVF-Flat; here re-expressed as Spark dataflow):
+/** IVF (inverted-file) coarse quantizer — the routing half of the
+  * IVFADC stack (Jégou et al., TPAMI 2011; [[Pq]] is the compression
+  * half, [[AnnIndex]] the disk store), re-expressed as Spark dataflow.
+  * One quantizer, integer-exact end to end so plain SQL replays it:
   *
-  *  1. TRAIN: spherical k-means → `nLists` unit centroids. Two trainers:
-  *     a bounded driver-side sample (fast, fine while nLists is small),
-  *     and [[trainCentroidsDistributed]] — full-corpus E/M over Spark
-  *     (select it with `sampleSize <= 0`), required once nLists grows
-  *     with corpus size past what a fixed sample can seed.
-  *  2. ASSIGN: every corpus vector goes to its nearest centroid's list —
-  *     a pure map (argmax of `nLists` dot products: one `dot_product`
-  *     kernel call per centroid, compiled built-ins for the argmax), no
-  *     shuffle.
-  *  3. PROBE: each query is scored against the same centroids and probes
-  *     its `nProbe` best lists; candidates = corpus rows in those lists
-  *     (equi-join on `list_id`, queries broadcast), then exact cosine +
-  *     bounded-heap top-k rerank.
+  *  1. TRAIN ([[trainCentroidsQuantized]] / [[centroidsFromSample]]):
+  *     integer Lloyd iterations on a bounded driver-side sample (the
+  *     first `sampleSize` valid rows by id) → `nLists` centroids of
+  *     [[QuantOps.q6]] longs. The sample bounds the list count:
+  *     `nLists` can never exceed the rows it holds.
+  *  2. ASSIGN: every corpus vector goes to its first-max centroid's list
+  *     ([[firstMax]] over one [[graft.functions.q6_dots]] kernel call per
+  *     row) — a pure map, no shuffle.
+  *  3. PROBE ([[probeLists]]): each query probes its `nProbe` best lists
+  *     ([[probeOrder]]); candidates = corpus rows in those lists
+  *     (equi-join on `list_id`, queries broadcast), then an exact cosine
+  *     re-rank ([[ivfTopKExact]]) or ADC over PQ codes ([[Pq.ivfPqTopK]],
+  *     [[AnnIndex.searchIndex]]).
   *
   * Recall < 1 by design (a true neighbor can live in an unprobed list);
   * raise `nProbe` toward `nLists` to trade compute for recall — at
-  * `nProbe = nLists` results equal [[Similarity.bruteForceTopK]].
+  * `nProbe = nLists` [[ivfTopKExact]] equals [[Similarity.bruteForceTopK]].
   */
 object Ivf {
-
-  /** Spherical k-means (Lloyd's, cosine assignment) on a deterministic
-    * sample: first `sampleSize` rows by ascending id. Returns unit-norm
-    * centroids. */
-  def trainCentroids(
-      df: DataFrame,
-      idCol: String,
-      vecCol: String,
-      nLists: Int,
-      iters: Int = 8,
-      sampleSize: Int = 2048
-  ): Array[Array[Float]] = {
-    val sample: Array[Array[Float]] = df
-      .select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
-      .orderBy("id").limit(sampleSize)
-      .collect()
-      .map(_.getSeq[Float](1).toArray)
-      .map(normalize)
-    require(sample.length >= nLists, s"sample ${sample.length} < nLists $nLists")
-    val dim = sample.head.length
-    // init: evenly spaced sample points (deterministic, spread across ids)
-    var centroids = Array.tabulate(nLists)(i => sample((i * sample.length) / nLists).clone())
-    var it = 0
-    while (it < iters) {
-      val sums = Array.fill(nLists)(new Array[Double](dim))
-      val counts = new Array[Int](nLists)
-      sample.foreach { v =>
-        val a = nearest(centroids, v)
-        counts(a) += 1
-        var d = 0
-        while (d < dim) { sums(a)(d) += v(d); d += 1 }
-      }
-      centroids = Array.tabulate(nLists) { i =>
-        if (counts(i) == 0) centroids(i) // empty list keeps its centroid
-        else normalize(sums(i).map(_.toFloat))
-      }
-      it += 1
-    }
-    centroids
-  }
-
-  /** Full-corpus spherical k-means — the trainer that scales past what a
-    * driver sample supports: nLists must grow with corpus size (FAISS
-    * guidance ~√N lists), and at 100 TB a 2048-row sample cannot even
-    * seed 4096 lists. Same E/M shape as
-    * [[Similarity.kmeansAssign]]/[[Similarity.kmeansUpdate]], specialized
-    * to the cosine objective:
-    *
-    *  - E-step: centroids BROADCAST as a literal matrix; assignment is a
-    *    row-local argmax of dot products (codegen'd kernels, no shuffle —
-    *    the corpus streams through map tasks once per iteration);
-    *  - M-step: `posexplode` each unit vector and hash-aggregate
-    *    `(list, dim)` partial sums — map-side combine bounds the shuffle
-    *    at `nLists·dim` rows regardless of corpus size; only that frame
-    *    reaches the driver to rebuild the broadcast matrix.
-    *
-    * Per-component sums are floor-quantized to integer nano-units and
-    * summed as longs (the [[Similarity.kmeansAssign]] trick), so every
-    * iteration is EXACT and partition-order independent — distributed
-    * training is as deterministic as the driver-sample path. Init =
-    * vectors at `nLists` evenly spaced id quantiles (one
-    * `percentile_approx` pass, a bounded nLists-row fetch). */
-  def trainCentroidsDistributed(
-      df: DataFrame,
-      idCol: String,
-      vecCol: String,
-      nLists: Int,
-      iters: Int = 4
-  ): Array[Array[Float]] = {
-    val nrm2 = aggregate(transform(col("v0"), x => x.cast("double") * x),
-      lit(0.0), (a, x) => a + x)
-    val unit = df
-      .select(col(idCol).cast("long").as("id"), col(vecCol).as("v0"))
-      .withColumn("v",
-        when(sqrt(nrm2) === 0.0, col("v0").cast("array<double>"))
-          .otherwise(transform(col("v0"), x => x.cast("double") / sqrt(nrm2))))
-      .select(col("id"), col("v").cast("array<float>").as("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // init: rows at evenly spaced id quantiles (deterministic, one pass)
-      val ps = (0 until nLists).map(i => (i + 0.5) / nLists)
-      val cutIds = unit.agg(percentile_approx(col("id"),
-          typedLit(ps), lit(100000)).as("cuts"))
-        .head().getSeq[Long](0).distinct
-      require(cutIds.length >= nLists,
-        s"corpus has only ${cutIds.length} distinct id quantiles < nLists $nLists")
-      var centroids: Array[Array[Float]] = unit
-        .filter(col("id").isin(cutIds: _*))
-        .dropDuplicates("id").orderBy("id").limit(nLists)
-        .collect().map(_.getSeq[Float](1).toArray)
-      var it = 0
-      while (it < iters) {
-        val summed = unit
-          .withColumn("list_id", argmaxList(col("v"), centroids))
-          .select(col("list_id"), posexplode(col("v")).as(Seq("pos", "x")))
-          .groupBy("list_id", "pos")
-          .agg(sum(floor(col("x").cast("double") * 1e9).cast("long")).as("s"))
-          .collect()
-        val dim = centroids.head.length
-        val sums = Array.fill(nLists)(new Array[Double](dim))
-        val touched = new Array[Boolean](nLists)
-        summed.foreach { r =>
-          val l = r.getInt(0); touched(l) = true
-          sums(l)(r.getInt(1)) = r.getLong(2).toDouble / 1e9
-        }
-        centroids = Array.tabulate(nLists) { i =>
-          if (!touched(i)) centroids(i) // empty list keeps its centroid
-          else normalize(sums(i).map(_.toFloat))
-        }
-        it += 1
-      }
-      centroids
-    } finally unit.unpersist()
-  }
-
-  private def normalize(v: Array[Float]): Array[Float] = {
-    var s = 0.0; var i = 0
-    while (i < v.length) { s += v(i).toDouble * v(i); i += 1 }
-    val n = math.sqrt(s)
-    if (n == 0.0) v else v.map(x => (x / n).toFloat)
-  }
-
-  private def nearest(centroids: Array[Array[Float]], v: Array[Float]): Int = {
-    var best = 0; var bestDot = Double.MinValue; var i = 0
-    while (i < centroids.length) {
-      var dot = 0.0; var d = 0
-      val c = centroids(i)
-      while (d < v.length) { dot += c(d).toDouble * v(d); d += 1 }
-      if (dot > bestDot) { bestDot = dot; best = i }
-      i += 1
-    }
-    best
-  }
-
-  /** Column: array of dot products of `vec` against each centroid. */
-  private def centroidScores(vec: Column, centroids: Array[Array[Float]]): Column =
-    array(centroids.toIndexedSeq.map(c => dot_product(vec, typedLit(c.toSeq))): _*)
-
-  /** Column: 0-based index of the best-scoring centroid (ties → first). */
-  private def argmaxList(vec: Column, centroids: Array[Array[Float]]): Column =
-    firstMax(centroidScores(vec, centroids))
 
   /** Column: 0-based index of the first maximum of a score array — ties
     * to the SMALLER index, null scores ignored (null when all are). */
@@ -181,52 +41,25 @@ object Ivf {
     slice(sort_array(arrays_zip(scores.as("s"), sequence(lit(0), lit(nLists - 1)).as("i")),
       asc = false), 1, nProbe)
 
-  /** Materialize an IVF index on disk: corpus assigned to lists and
-    * written `partitionBy(list_id)` — every probe then reads ONLY the
-    * probed lists' files (partition pruning, visible as PartitionFilters
-    * in the scan). This is how the coarse quantizer actually pays off at
-    * 100 TB: the per-query scan cost drops to nProbe/nLists of the corpus
-    * without any custom reader. Returns the trained centroids (persist
-    * them alongside the index for future sessions). */
-  def buildIndex(
-      corpus: DataFrame,
-      idCol: String,
-      vecCol: String,
-      path: String,
-      nLists: Int = 16,
-      iters: Int = 8,
-      sampleSize: Int = 2048
-  ): Array[Array[Float]] = {
-    val centroids =
-      if (sampleSize <= 0) trainCentroidsDistributed(corpus, idCol, vecCol, nLists, iters)
-      else trainCentroids(corpus, idCol, vecCol, nLists, iters, sampleSize)
-    corpus
-      .select(col(idCol).as("id"), col(vecCol).as("v"))
-      .withColumn("list_id", argmaxList(col("v"), centroids))
-      .write.mode("overwrite").partitionBy("list_id").parquet(path)
-    centroids
-  }
+  /** The rows every trainer, index writer and query side admits: a
+    * non-null vector of exactly `dim` components. */
+  private[similarity] def validRows(df: DataFrame, vecCol: String, dim: Int): DataFrame =
+    df.filter(col(vecCol).isNotNull && size(col(vecCol)) === dim)
 
-  /** INCREMENTAL index maintenance — the daily-ingest shape: assign a new
-    * batch to the EXISTING centroids (frozen quantizer, the standard IVF
-    * practice: re-training moves every list boundary and forces a full
-    * rebuild, so production indexes freeze the quantizer and re-train
-    * offline when [[indexStats]] shows drift) and APPEND the rows to the
-    * partitioned store. `searchIndex` over an incrementally-grown index is
-    * row-identical to one built in one shot with the same centroids
-    * (spec-asserted): assignment is per-row, the store is append-only, and
-    * probing reads whole lists. */
-  def appendToIndex(
-      batch: DataFrame,
+  /** `(query_id, list_id)`, one row per probe: each query's `nProbe` best
+    * lists of `coarse` ([[probeOrder]] — ties to the HIGHER centroid id).
+    * `queries` holds [[validRows]] only. */
+  private[similarity] def probeLists(
+      queries: DataFrame,
       idCol: String,
       vecCol: String,
-      path: String,
-      centroids: Array[Array[Float]]
-  ): Unit =
-    batch
-      .select(col(idCol).as("id"), col(vecCol).as("v"))
-      .withColumn("list_id", argmaxList(col("v"), centroids))
-      .write.mode("append").partitionBy("list_id").parquet(path)
+      coarse: Array[Array[Long]],
+      nProbe: Int
+  ): DataFrame =
+    queries
+      .select(col(idCol).as("query_id"),
+        explode(probeOrder(q6_dots(col(vecCol), coarse), coarse.length, nProbe)).as("__p"))
+      .select(col("query_id"), col("__p.i").cast("int").as("list_id"))
 
   /** Per-list occupancy report for a disk index: `(list_id, n_vectors,
     * load_ratio)` with `load_ratio` relative to perfect balance — the
@@ -244,49 +77,6 @@ object Ivf {
         (col("n_vectors").cast("double") * nLists / col("__tot")).as("load_ratio"))
   }
 
-  /** Query a disk IVF index built by [[buildIndex]]: per-query probe lists
-    * become a pushed-down `list_id IN (...)` partition filter. */
-  def searchIndex(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      centroids: Array[Array[Float]],
-      queries: DataFrame,
-      idCol: String,
-      vecCol: String,
-      k: Int,
-      nProbe: Int
-  ): DataFrame = {
-    val nLists = centroids.length
-    require(nProbe >= 1 && nProbe <= nLists)
-    val probes = probeLists(queries, idCol, vecCol, centroids, nProbe)
-    // partition pruning: restrict the scan to the union of probed lists
-    val probedListIds = probes.select("list_id").distinct()
-      .collect().map(_.getInt(0)).toSeq
-    val index = graft.sources.CachedParquet.read(spark, path)
-      .filter(col("list_id").isin(probedListIds: _*))
-    val scored = index.join(broadcast(probes), Seq("list_id"))
-      .filter(col("id") =!= col("query_id"))
-      .select(col("query_id"), col("id").as("neighbor_id"),
-        cosine_sim(col("qv"), col("v")).as("cosine"))
-    Similarity.topKByKey(scored, "query_id", "cosine", "neighbor_id", k)
-  }
-
-  /** (query_id, qv, list_id) rows: each query's nProbe best centroid lists. */
-  private def probeLists(
-      queries: DataFrame,
-      idCol: String,
-      vecCol: String,
-      centroids: Array[Array[Float]],
-      nProbe: Int
-  ): DataFrame = {
-    val probeIdx = probeOrder(centroidScores(col("qv"), centroids), centroids.length, nProbe)
-    queries
-      .select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-      .withColumn("__probe", explode(probeIdx))
-      .withColumn("list_id", col("__probe.i").cast("int"))
-      .drop("__probe")
-  }
-
   /** The one training-sample query of the quantized IVF and PQ trainers:
     * the first `n` rows by ascending id, skipping null vectors and vectors
     * whose length is not `dim` (the rows the index writers also skip).
@@ -302,8 +92,7 @@ object Ivf {
       dim: Int,
       n: Int
   ): DataFrame =
-    df
-      .filter(col(vecCol).isNotNull && size(col(vecCol)) === dim)
+    validRows(df, vecCol, dim)
       .select(col(idCol).try_cast("long").as("id"),
         col(idCol).cast("string").as("ids"), col(vecCol).as("v"))
       .orderBy("id", "ids").limit(n)
@@ -385,9 +174,9 @@ object Ivf {
     * probing ([[trainCentroidsQuantized]]): the coarse-quantizer routing is
     * reproducible in plain SQL, so the whole query carries a full
     * hash-match oracle; only the final rerank uses float cosine, rounded
-    * like every other ANN query. Same dataflow shape (and the same 100 TB
-    * story) as [[ivfTopK]]: assignment is a row-local argmax map, probes
-    * broadcast, candidates = corpus rows in probed lists only. Vectors
+    * like every other ANN query. The IVF-Flat shape: assignment is a
+    * row-local argmax map, probes broadcast, candidates = corpus rows in
+    * probed lists only, ranked by exact cosine. Vectors
     * whose length is not `dim` (or null) are neither trained on nor
     * assigned a list, so they are never candidates. */
   def ivfTopKExact(
@@ -415,35 +204,6 @@ object Ivf {
       .withColumn("__probe", explode(probeOrder(q6_dots(col("qv"), centroids), nLists, nProbe)))
       .withColumn("list_id", col("__probe.i").cast("int"))
       .drop("__probe")
-    val scored = assigned.join(broadcast(probes), Seq("list_id"))
-      .filter(col("id") =!= col("query_id"))
-      .select(col("query_id"), col("id").as("neighbor_id"),
-        cosine_sim(col("qv"), col("v")).as("cosine"))
-    Similarity.topKByKey(scored, "query_id", "cosine", "neighbor_id", k)
-  }
-
-  /** End-to-end IVF top-k. Output schema matches
-    * [[Similarity.bruteForceTopK]]: (query_id, rank, neighbor_id, cosine). */
-  def ivfTopK(
-      corpus: DataFrame,
-      queries: DataFrame,
-      idCol: String,
-      vecCol: String,
-      k: Int,
-      nLists: Int = 16,
-      nProbe: Int = 4,
-      iters: Int = 8,
-      sampleSize: Int = 2048
-  ): DataFrame = {
-    require(nProbe >= 1 && nProbe <= nLists)
-    val centroids =
-      if (sampleSize <= 0) trainCentroidsDistributed(corpus, idCol, vecCol, nLists, iters)
-      else trainCentroids(corpus, idCol, vecCol, nLists, iters, sampleSize)
-    val assigned = corpus
-      .repartition(corpus.sparkSession.sparkContext.defaultParallelism)
-      .select(col(idCol).as("id"), col(vecCol).as("v"))
-      .withColumn("list_id", argmaxList(col("v"), centroids))
-    val probes = probeLists(queries, idCol, vecCol, centroids, nProbe)
     val scored = assigned.join(broadcast(probes), Seq("list_id"))
       .filter(col("id") =!= col("query_id"))
       .select(col("query_id"), col("id").as("neighbor_id"),

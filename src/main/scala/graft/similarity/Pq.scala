@@ -1,8 +1,9 @@
 package graft.similarity
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.functions.{adc_sum, pq_assign, pq_lut, q6_dots, QuantOps}
+import graft.functions.{adc_sum, cosine_sim, pq_assign, pq_lut, q6_dots, QuantOps}
 
 /** Product quantization (Jégou, Douze & Schmid, TPAMI 2011) — the
   * compressed-vector half of the canonical billion-scale ANN stack
@@ -108,7 +109,7 @@ object Pq {
       sampleSize: Int = 512
   ): DataFrame = {
     val codebooks = trainCodebooks(df, idCol, vecCol, dim, m, k, iters, sampleSize)
-    df.filter(col(vecCol).isNotNull && size(col(vecCol)) === dim)
+    Ivf.validRows(df, vecCol, dim)
       .select(col(idCol).as("id"), pq_lut(col(vecCol), codebooks).as("__lut"),
         pq_assign(col(vecCol), codebooks).as("__codes"))
       // explode below the table lookup's projection, so each vector's
@@ -124,10 +125,9 @@ object Pq {
     * distances to every codebook entry, and a candidate's approximate
     * L2² is the sum of `m` table lookups — the corpus' raw vectors are
     * never read again after encoding. That is the 100 TB contract: at
-    * scale you store 8 bytes per vector instead of 256, and search joins
-    * the (tiny) LUT frame to the code frame on `(sub, code)` — a
-    * broadcast join against O(queries·m·k) rows, followed by one keyed
-    * sum per (query, vector). All distances are exact longs (quantized
+    * scale you store 8 bytes per vector instead of 256, and search pairs
+    * every code row with the broadcast (tiny) LUT frame and folds `m`
+    * lookups per pair ([[adcTopN]]). All distances are exact longs (quantized
     * inputs, integer codebooks), so ranking is total-ordered
     * (dist asc, neighbor asc) and fully oracle-replayable.
     *
@@ -148,37 +148,15 @@ object Pq {
     val codebooks = trainCodebooks(corpus, idCol, vecCol, dim, m, kCodes,
       iters, sampleSize)
     // corpus side: m-byte codes only (the compressed representation), ONE
-    // array<int> per vector (`pq_assign` — row-local, no explode);
-    // query side: the m×k LUT as ONE nested array (`pq_lut`). ADC is
-    // then a broadcast pairing + a row-local m-lookup fold: the previous
-    // (sub, code) hash join shipped m rows per (query, vector) pair into a
-    // groupBy exchange only to rebuild exactly this sum (and its
-    // `__m = m` completeness guard is structural here — every codes array
-    // has all m entries by construction).
-    val codes = corpus
-      .filter(col(vecCol).isNotNull && size(col(vecCol)) === dim)
-      .select(col(idCol).as("neighbor_id"), col(vecCol).as("__v"))
-      // spread before the per-row code assignment: a single-file corpus
-      // scan pins the encode to one core otherwise (guide §2.5, the
-      // ivfTopKExact discipline); the per-row output is order-independent
-      .repartition(corpus.sparkSession.sparkContext.defaultParallelism)
-      .select(col("neighbor_id"),
-        pq_assign(col("__v"), codebooks).as("__codes"))
-    val qlut = queries
-      .filter(col(vecCol).isNotNull && size(col(vecCol)) === dim)
-      .select(col(idCol).as("query_id"),
-        pq_lut(col(vecCol), codebooks).as("__lut"))
+    // array<int> per vector; query side: the m×k LUT as ONE nested array.
+    // ADC is then a broadcast pairing + a row-local m-lookup fold.
+    val codes = encode(corpus, idCol, vecCol, dim, codebooks, coarse = None)
+      .select(col("id").as("neighbor_id"), col("codes"))
     // full-corpus ADC is the operator's contract — every query scores
     // every corpus vector — so the pairing is an EXPLICIT broadcast
-    // nested-loop join against the bounded query side (the old join
-    // produced the same |corpus|·|queries| pairs, m rows each)
-    val dists = codes
-      .join(broadcast(qlut), col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        adc_sum(col("__codes"), col("__lut")).as("adc_dist"))
-    val w = org.apache.spark.sql.expressions.Window.partitionBy("query_id")
-      .orderBy(col("adc_dist").asc, col("neighbor_id").asc)
-    dists.withColumn("rank", row_number().over(w)).filter(col("rank") <= topK)
+    // nested-loop join against the bounded query side
+    val qlut = lutFrame(Ivf.validRows(queries, vecCol, dim), idCol, vecCol, codebooks)
+    adcTopN(codes.join(broadcast(qlut), col("neighbor_id") =!= col("query_id")), topK)
       .select(col("query_id"), col("rank"), col("neighbor_id"), col("adc_dist"))
   }
 
@@ -214,39 +192,12 @@ object Pq {
     // both quantizers from ONE sample collect (see AnnIndex.trainModel)
     val PqIndexModel(coarse, books, _, _) = AnnIndex.trainModel(corpus, idCol, vecCol,
       dim, nLists, m, kCodes, ivfIters, pqIters, ivfSample, pqSample)
-    // corpus: list id AND the m-byte code array in ONE row-local
-    // projection (integer-exact dot argmax, first max; `pq_assign`) —
-    // the narrow (id, sub, code) shape needed a corpus-wide codes ⋈ lists
-    // join just to reunite columns computed from the same row
-    val codes = corpus
-      .filter(col(vecCol).isNotNull && size(col(vecCol)) === dim)
-      .select(col(idCol).as("neighbor_id"), col(vecCol).as("v"))
-      // spread before the heavy per-row encode (see pqAdcTopK /
-      // ivfTopKExact — guide §2.5)
-      .repartition(corpus.sparkSession.sparkContext.defaultParallelism)
-      .select(col("neighbor_id"), pq_assign(col("v"), books).as("__codes"),
-        Ivf.firstMax(q6_dots(col("v"), coarse)).as("list_id"))
-    // queries: nProbe best lists (ties to the HIGHER centroid index, the
-    // ivfTopKExact convention) + the ADC LUT
-    val qBase = queries.filter(col(vecCol).isNotNull && size(col(vecCol)) === dim)
-    val probes = qBase
-      .select(col(idCol).as("query_id"),
-        explode(Ivf.probeOrder(q6_dots(col(vecCol), coarse), nLists, nProbe)).as("__p"))
-      .select(col("query_id"), col("__p.i").cast("int").as("list_id"))
-    // per-query LUT as one nested array + row-local ADC fold (see
-    // [[pqAdcTopK]] — identical longs, no explode/LUT join/groupBy
-    // exchange); the probed-list pairing stays a broadcast hash join
-    val qlut = qBase
-      .select(col(idCol).as("query_id"),
-        pq_lut(col(vecCol), books).as("__lut"))
-    val dists = codes.join(broadcast(probes), Seq("list_id"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .join(broadcast(qlut), Seq("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        adc_sum(col("__codes"), col("__lut")).as("adc_dist"))
-    val w = org.apache.spark.sql.expressions.Window.partitionBy("query_id")
-      .orderBy(col("adc_dist").asc, col("neighbor_id").asc)
-    dists.withColumn("rank", row_number().over(w)).filter(col("rank") <= topK)
+    // corpus: list id AND the m-byte code array in ONE row-local projection
+    val codes = encode(corpus, idCol, vecCol, dim, books, Some(coarse))
+      .select(col("id").as("neighbor_id"), col("codes"), col("list_id"))
+    val qBase = Ivf.validRows(queries, vecCol, dim)
+    adcTopN(probedCandidates(codes, Ivf.probeLists(qBase, idCol, vecCol, coarse, nProbe),
+        lutFrame(qBase, idCol, vecCol, books)), topK)
       .select(col("query_id"), col("rank"), col("neighbor_id"), col("adc_dist"))
   }
 
@@ -279,18 +230,8 @@ object Pq {
     val short = ivfPqTopK(corpus, queries, idCol, vecCol, dim, nLists, nProbe,
         ivfIters, m, kCodes, pqIters, shortlist, ivfSample, pqSample)
       .select("query_id", "neighbor_id")
-    val cv = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("__nv"))
-    val qv = queries.select(col(idCol).as("query_id"), col(vecCol).as("__qv"))
-    val exact = short
-      .join(cv, Seq("neighbor_id"))
-      .join(broadcast(qv), Seq("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        graft.functions.cosine_sim(col("__qv"), col("__nv")).as("c"))
-    val w = org.apache.spark.sql.expressions.Window.partitionBy("query_id")
-      .orderBy(col("c").desc, col("neighbor_id").asc)
-    exact.withColumn("rank", row_number().over(w)).filter(col("rank") <= topK)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("c"), 6).as("cosine"))
+    rerank(short.join(corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("v")),
+      Seq("neighbor_id")), queries, idCol, vecCol, topK)
   }
 
   /** ADC shortlist → EXACT re-rank (Jégou et al. §VI, "IVFADC-R"): the
@@ -324,17 +265,96 @@ object Pq {
     val short = pqAdcTopK(corpus, queries, idCol, vecCol, dim, m, kCodes,
         shortlist, iters, sampleSize)
       .select("query_id", "neighbor_id")
-    val cv = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("__nv"))
-    val qv = queries.select(col(idCol).as("query_id"), col(vecCol).as("__qv"))
-    val exact = short
-      .join(cv, Seq("neighbor_id"))
-      .join(broadcast(qv), Seq("query_id"))
+    rerank(short.join(corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("v")),
+      Seq("neighbor_id")), queries, idCol, vecCol, topK)
+  }
+
+  // ===== the IVFADC query steps, written once ============================
+  //
+  // [[pqAdcTopK]], [[ivfPqTopK]], the two re-rank operators and
+  // [[AnnIndex]]'s store writer and search all compose these, so the
+  // in-memory operators and the disk path run the same algebra.
+
+  /** The corpus encode: [[Ivf.validRows]], spread, then ONE row-local
+    * projection `(id, codes, v, list_id)` — the `m`-code array
+    * ([[graft.functions.pq_assign]]) and, given a `coarse` quantizer, the
+    * list id (first max of [[graft.functions.q6_dots]], ties to the
+    * SMALLER centroid id). Spreading the narrow projection BEFORE the
+    * heavy per-row encode matters: a single-file corpus scan is
+    * unsplittable, so without it the whole encode runs on ONE core
+    * (measured 0.58 s single-task CPU at sf0.1); the per-row output never
+    * depends on row order. */
+  private[similarity] def encode(
+      df: DataFrame,
+      idCol: String,
+      vecCol: String,
+      dim: Int,
+      books: Array[Array[Array[Long]]],
+      coarse: Option[Array[Array[Long]]]
+  ): DataFrame =
+    Ivf.validRows(df, vecCol, dim)
+      .select(col(idCol).as("id"), col(vecCol).as("v"))
+      .repartition(df.sparkSession.sparkContext.defaultParallelism)
+      .select(Seq(col("id"), pq_assign(col("v"), books).as("codes"), col("v")) ++
+        coarse.map(c => Ivf.firstMax(q6_dots(col("v"), c)).as("list_id")): _*)
+
+  /** `(query_id, __lut)`: each query's `m×k` ADC lookup table as ONE
+    * nested array ([[graft.functions.pq_lut]]). */
+  private[similarity] def lutFrame(
+      queries: DataFrame,
+      idCol: String,
+      vecCol: String,
+      books: Array[Array[Array[Long]]]
+  ): DataFrame =
+    queries.select(col(idCol).as("query_id"), pq_lut(col(vecCol), books).as("__lut"))
+
+  /** The IVF candidates: code rows `(neighbor_id, codes, list_id)` of each
+    * query's probed lists ([[Ivf.probeLists]]), self-pairs dropped, each
+    * carrying its query's LUT. Probes and LUTs are |queries|-bounded, so
+    * both pairings are broadcast hash joins. */
+  private[similarity] def probedCandidates(
+      codes: DataFrame,
+      probes: DataFrame,
+      qlut: DataFrame
+  ): DataFrame =
+    codes.join(broadcast(probes), Seq("list_id"))
+      .filter(col("neighbor_id") =!= col("query_id"))
+      .join(broadcast(qlut), Seq("query_id"))
+
+  /** ADC over candidate rows `(query_id, neighbor_id, codes, __lut)`: the
+    * row-local m-lookup fold ([[graft.functions.adc_sum]], exact longs),
+    * then each query's `n` best by `(adc_dist, neighbor_id)` ascending —
+    * `(query_id, neighbor_id, adc_dist, rank)`, `rank ≤ n`. */
+  private[similarity] def adcTopN(cands: DataFrame, n: Int): DataFrame = {
+    val w = Window.partitionBy("query_id").orderBy(col("adc_dist").asc, col("neighbor_id").asc)
+    cands
       .select(col("query_id"), col("neighbor_id"),
-        graft.functions.cosine_sim(col("__qv"), col("__nv")).as("c"))
-    val w = org.apache.spark.sql.expressions.Window.partitionBy("query_id")
-      .orderBy(col("c").desc, col("neighbor_id").asc)
-    exact.withColumn("rank", row_number().over(w)).filter(col("rank") <= topK)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("c"), 6).as("cosine"))
+        adc_sum(col("codes"), col("__lut")).as("adc_dist"))
+      .withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= n)
+  }
+
+  /** Exact cosine re-rank of shortlist pairs `(query_id, neighbor_id, v)`
+    * carrying each candidate's raw vector: the query vectors join
+    * broadcast, and each query keeps its `topK` by `(cosine desc,
+    * neighbor_id asc)` — `(query_id, rank, neighbor_id, cosine)`, cosine
+    * rounded to 6 dp. The caller pairs the shortlist with the vectors:
+    * [[AnnIndex.searchIndex]] broadcasts it into a pruned store scan, the
+    * in-memory operators join it to the corpus. */
+  private[similarity] def rerank(
+      pairs: DataFrame,
+      queries: DataFrame,
+      idCol: String,
+      vecCol: String,
+      topK: Int
+  ): DataFrame = {
+    val qv = queries.select(col(idCol).as("query_id"), col(vecCol).as("__qv"))
+    val w = Window.partitionBy("query_id").orderBy(col("c").desc, col("neighbor_id").asc)
+    pairs
+      .join(broadcast(qv), Seq("query_id"))
+      .select(col("query_id"), col("neighbor_id"), cosine_sim(col("__qv"), col("v")).as("c"))
+      .withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= topK)
+      .select(col("query_id"), col("rank"), col("neighbor_id"), round(col("c"), 6).as("cosine"))
   }
 }

@@ -88,6 +88,11 @@ class AnnIndexSpec extends SparkSpec {
     val b = AnnIndex.searchIndex(spark, oncePath, model, queries,
       "vec_id", "embedding", topK = 5, nProbe = 12, shortlist = 100)
     assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
+    // occupancy report of the grown store: every admitted vector counted
+    // once, load ratios sum to nLists
+    val stats = Ivf.indexStats(spark, incPath, nLists = 16).collect()
+    assert(stats.map(_.getLong(1)).sum === valid.count())
+    assert(math.abs(stats.map(_.getDouble(2)).sum - 16.0) < 1e-9)
   }
 
   test("model save/load round-trip: loaded model searches and appends identically") {
@@ -220,6 +225,16 @@ class AnnIndexSpec extends SparkSpec {
     assert(AnnIndex.suggestNLists(n) != AnnIndex.suggestNLists(n - 2), "fixture must tip the count")
     val model = AnnIndex.buildIndex(dirtyHead, "vec_id", "embedding", path, dim = 64)
     assert(model.coarse.length == AnnIndex.suggestNLists(n))
+    // the count never exceeds the rows the IVF trainer receives: a 4-row
+    // IVF sample trains 4 lists, not suggestNLists(n) = 7
+    rmTree(path)
+    val capped = AnnIndex.buildIndex(dirtyHead, "vec_id", "embedding", path, dim = 64,
+      ivfSample = 4)
+    assert(capped.coarse.length == 4)
+    // an explicit count above the sample still fails descriptively
+    val err = intercept[IllegalArgumentException](AnnIndex.buildIndex(dirtyHead,
+      "vec_id", "embedding", path, dim = 64, nLists = 5, ivfSample = 4))
+    assert(err.getMessage.contains("sample 4 < nLists 5"))
   }
 
   test("job pins: buildIndex reads a lazy corpus twice; searchIndex lists its store once") {

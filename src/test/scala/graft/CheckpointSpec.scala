@@ -35,6 +35,38 @@ class CheckpointSpec extends SparkSpec {
     assert(fileCount(new java.io.File(dir)) > 0, s"no checkpoint data under $dir")
   }
 
+  test("a superstep round's lost state blocks: reliable mode recovers row-identically, local mode fails descriptively") {
+    import spark.implicits._
+    // a 12-node chain (12 CC rounds) plus two small components
+    val edges = ((0L until 11L).map(i => (i + 1, i)) ++ Seq((20L, 21L), (22L, 21L), (30L, 31L)))
+      .toDF("src", "dst")
+    def cc() = graft.dedup.Dedup.connectedComponents(edges, "src", "dst")
+      .orderBy("node").collect().toSeq
+    val want = cc()
+    assert(want.map(_.getLong(1)).distinct.sorted == Seq(0L, 20L, 30L))
+    // between rounds 3 and 4, the finished round's cached state blocks go
+    // as a dead executor's would: the state keeps its storage level, the
+    // blocks are gone
+    var dropped = 0
+    def losingRound3[T](body: => T): T = {
+      graft.core.Superstep.afterRound = (round, state) =>
+        if (round == 3) { org.apache.spark.LostBlocks.drop(state); dropped += 1 }
+      try body finally graft.core.Superstep.afterRound = null
+    }
+    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt_lost").toString
+    assert(withConf(dir)(losingRound3(cc())) == want,
+      "reliable checkpoints must recover the lost round row-identically")
+    assert(dropped == 1)
+    // local checkpoints keep no copy: the next round fails, naming the
+    // missing block, instead of answering from partial state
+    val err = intercept[org.apache.spark.SparkException](losingRound3(cc()))
+    assert(dropped == 2)
+    val messages = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .map(e => String.valueOf(e.getMessage)).toSeq
+    assert(messages.exists(m => m.contains("Checkpoint block") && m.contains("not found")),
+      messages.mkString("\n"))
+  }
+
   private def fileCount(f: java.io.File): Int =
     if (f.isDirectory) f.listFiles().map(fileCount).sum
     else if (f.exists) 1 else 0

@@ -93,13 +93,13 @@ class Round3bOperatorsSpec extends SparkSpec {
       (3L, "z1 z2 z3 z4 z5 z6 z7 z8 z9 z10")
     ).toDF("doc_id", "text")
     val got = graft.dedup.Dedup.ngramContainmentPairs(
-        docs, "doc_id", "text", n = 3, threshold = 0.9, cacheIntermediate = false)
+        docs, "doc_id", "text", n = 3, threshold = 0.9)
       .orderBy("ida", "idb").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
     assert(got === Seq((1L, 2L, 1.0)))
     // and Jaccard at the same threshold does NOT pair them (3 shared of 18 union)
     val jac = graft.dedup.Dedup.ngramJaccardPairs(
-      docs, "doc_id", "text", n = 3, threshold = 0.9, cacheIntermediate = false)
+      docs, "doc_id", "text", n = 3, threshold = 0.9)
     assert(jac.count() === 0L)
   }
 
@@ -122,7 +122,7 @@ class Round3bOperatorsSpec extends SparkSpec {
       if mn > 0 && m.toDouble / mn >= 0.5
     } yield (a, b)).toSet
     val got = graft.dedup.Dedup.ngramContainmentPairs(
-        docs, "doc_id", "text", n = 3, threshold = 0.5, cacheIntermediate = false)
+        docs, "doc_id", "text", n = 3, threshold = 0.5)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got === expected)
   }
