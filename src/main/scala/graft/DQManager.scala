@@ -1,8 +1,13 @@
 package graft
 
 import scala.collection.mutable.ArrayBuffer
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
-import graft.checks.BaseCheck
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.functions.{array, col, explode, lit, when}
+import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.storage.StorageLevel
+import graft.checks.{BaseCheck, ConsistencyCheck, RowCheck, UniqueCheck, Verdict}
 import graft.core.{CacheObject, MetricResult}
 
 /** Orchestrator — parity target `DQManager`
@@ -40,12 +45,15 @@ final class DQManager(val spark: SparkSession, val dataset: String = "") {
 
 /** Result facade — parity target `ResultObj` (`result_obj.py:32-70`).
   *
-  * Spark-native improvement (SURVEY.md §4 O1): [[getMetricResults]] fuses
-  * every fusable check's aggregate expressions into ONE job (one scan of the
-  * input), instead of the reference's one-or-more jobs per check; and
-  * [[observedValidDf]] attaches the same aggregates as observed metrics
-  * (`CollectMetrics`) so the job that materializes `valid_df` ALSO yields the
-  * metrics — zero extra scans.
+  * Spark-native improvement (SURVEY.md §4 O1): the outputs read one marked
+  * frame, the input plus the verdicts that need a join (a reference-key flag
+  * per [[ConsistencyCheck]], a duplicate-key flag per keyed [[UniqueCheck]]),
+  * built lazily at most once and persisted `MEMORY_AND_DISK`, so a lost
+  * block is recomputed from lineage. Without such a check it is the input.
+  * [[getMetricResults]] is one aggregate (outlier and drift checks add their
+  * own jobs), [[getInvalidUnionDf]] one scan, and [[getValidDf]]
+  * deduplicates only the rows of a duplicated key. Every output first checks
+  * every check's columns.
   */
 final class ResultObj(
     val checks: List[BaseCheck],
@@ -53,78 +61,114 @@ final class ResultObj(
     val spark: SparkSession
 ) {
 
+  private val inputCols: Seq[Column] = df.columns.toSeq.map(col)
+
+  /** Per check, its flag column in the marked frame, if any. */
+  private val flags: List[Option[String]] = checks.zipWithIndex.map {
+    case (_: ConsistencyCheck, i) => Some(s"__graft_ref_hit_$i")
+    case (u: UniqueCheck, i) if u.inputAttributes.nonEmpty => Some(s"__graft_dup_$i")
+    case _ => None
+  }
+
+  private lazy val validated: Unit = checks.foreach(_.preCheck(df))
+
+  @volatile private var markedRdd: Option[RDD[InternalRow]] = None
+
+  private lazy val marked: DataFrame = {
+    validated
+    val joined = checks.zip(flags).foldLeft(df) {
+      case (m, (c: ConsistencyCheck, Some(f))) => c.markReferenced(m, f)
+      case (m, (u: UniqueCheck, Some(f))) => u.markDuplicates(m, df, f)
+      case (m, _) => m
+    }
+    if (joined eq df) df
+    else {
+      // the scan reuses one mutable row, so the cached rows are copies
+      val rdd = joined.queryExecution.toRdd.map(_.copy()).persist(StorageLevel.MEMORY_AND_DISK)
+      markedRdd = Some(rdd)
+      Bridge.rddFrame(joined, rdd)
+    }
+  }
+
+  /** Per check: its step of the valid fold and, if it has one, its fail
+    * verdict on the marked frame (an outlier's bounds are a statistic of the
+    * rows it sees). Built once: an anchorless freshness horizon is fixed. */
+  private lazy val steps: List[(BaseCheck, DataFrame => DataFrame, Option[Column])] = {
+    val m = marked
+    def rowLocal(c: BaseCheck, v: Verdict) = (c, (d: DataFrame) => d.filter(v.pass), Some(v.fail))
+    checks.zip(flags).map {
+      case (r: RowCheck, _) => rowLocal(r, r.scopedVerdict(m))
+      case (c: ConsistencyCheck, Some(f)) =>
+        rowLocal(c, Verdict(col(f), !col(f)).within(c.scope.toColumn(m)))
+      case (u: UniqueCheck, Some(f)) =>
+        (u, (d: DataFrame) => u.validMarked(d, col(f)), Some(u.failMarked(m, col(f))))
+      case (c, _) => (c, (d: DataFrame) => c.valid(d), None)
+    }
+  }
+
   /** Fold of all checks' valid filters — intersection (AND) semantics
-    * (`result_obj.py:44-50`). */
-  def getValidDf: DataFrame =
-    checks.foldLeft(df)((d, c) => c.getValidDf(d))
+    * (`result_obj.py:44-50`): check k sees only the rows that passed checks
+    * 1..k-1, so an outlier check's bounds come from the rows it sees. */
+  def getValidDf: DataFrame = {
+    val folded = steps.foldLeft(marked) { case (d, (_, keep, _)) => keep(d) }
+    if (marked eq df) folded else folded.select(inputCols: _*)
+  }
 
   /** Fold of all checks' invalid filters (`result_obj.py:52-58`). Works
     * across checks because every default `invalid` here is schema-preserving
-    * (deviation D2 fixes reference bug B4). */
-  def getInvalidDf: DataFrame =
+    * (deviation D2 fixes reference bug B4). Stays a fold of the per-check
+    * `invalid`s: a unique check's duplicates depend on the rows folded into
+    * it. */
+  def getInvalidDf: DataFrame = {
+    validated
     checks.foldLeft(df)((d, c) => c.getInvalidDf(d))
+  }
 
   /** Per-check invalid rows as ONE schema-preserving union, each row tagged
     * with the failing check's metric name (`__graft_failed_check`). This is
     * the D2 companion to the fold: the fold composes filters (rows invalid
     * under check 1 never reach check 2's invalid set), while this union
     * attributes every row to every check it violates — the shape a
-    * quarantine/repair pipeline wants. One scan per check; Catalyst merges
-    * the scans when the source supports it. */
+    * quarantine/repair pipeline wants. One scan of the marked frame emits a
+    * row per failing check; a check without a fail column adds its own
+    * `invalid`. */
   def getInvalidUnionDf(tagCol: String = "__graft_failed_check"): DataFrame = {
-    import org.apache.spark.sql.functions.lit
-    val tagged = checks.map(c => c.invalid(df).withColumn(tagCol, lit(c.metricName)))
-    tagged.reduceLeft(_.unionByName(_))
+    val m = marked
+    val fails = steps.collect { case (c, _, Some(f)) => (c.metricName, f) }
+    val scanned = if (fails.isEmpty) None else Some(
+      m.filter(fails.map(_._2).reduce(_ || _))
+        .select(inputCols :+ explode(array(fails.map { case (n, f) => when(f, n) }: _*)).as(tagCol): _*)
+        .filter(col(tagCol).isNotNull)
+        .withColumn(tagCol, Bridge.knownNotNull(col(tagCol))))
+    val own = steps.collect { case (c, _, None) =>
+      c.invalid(m).select(inputCols :+ lit(c.metricName).as(tagCol): _*)
+    }
+    (scanned ++ own).reduceOption(_.union(_))
+      .getOrElse(df.filter(lit(false)).withColumn(tagCol, lit(null).cast("string")))
   }
 
-  /** All checks' metric rows. Checks whose metrics are plain aggregates are
-    * fused into a single aggregation job over one scan; checks needing their
-    * own plan (e.g. cross-dataset joins) run standalone. */
+  /** All checks' metric rows: the fusable checks' and the consistency
+    * checks' from ONE aggregation job, the rest each its own way over the
+    * input (an outlier check's mean and deviation sum the rows in the
+    * input's order). */
   def metricRows: Seq[MetricResult] = {
-    val (fusable, standalone) = checks.partition(_.metricAggs(df).nonEmpty)
-    val fused: Seq[MetricResult] =
-      if (fusable.isEmpty) Seq.empty
-      else {
-        val aggs = fusable.flatMap(_.metricAggs(df))
-        val row = df.agg(aggs.head, aggs.tail: _*).head()
-        fusable.flatMap(_.metricsFromRow(row))
-      }
-    fused ++ standalone.flatMap(_.metricResults(df))
+    validated
+    val hits = checks.zip(flags).collect { case (c: ConsistencyCheck, Some(f)) => (c, f) }
+    val in = if (hits.isEmpty) df else marked
+    val (fusable, standalone) = checks.partition(_.metricAggs(in).nonEmpty)
+    val aggs = fusable.flatMap(_.metricAggs(in)) ++
+      hits.flatMap { case (c, f) => c.orphanAggs(in, col(f)) }
+    lazy val row = in.agg(aggs.head, aggs.tail: _*).head()
+    fusable.flatMap(_.metricsFromRow(row)) ++ standalone.flatMap {
+      case c: ConsistencyCheck => c.metricsFromRow(row)
+      case c => c.metricResults(df)
+    }
   }
-
-  /** Reference-shaped path: one (or more) jobs per check. Kept for parity
-    * comparison and benchmarking against the fused path. */
-  def metricRowsPerCheck: Seq[MetricResult] =
-    checks.flatMap(_.metricResults(df))
 
   /** Metrics as a DataFrame with the exact reference schema
     * (`result_obj.py:60-70`); empty input → empty DF with same schema. */
   def getMetricResults: DataFrame = MetricResult.toDF(spark, metricRows)
 
-  /** Zero-extra-scan path: returns the folded valid DataFrame with all
-    * fusable checks' metrics attached as observed metrics, plus a decoder to
-    * call AFTER the caller runs an action on the returned frame. The single
-    * job that writes/collects `valid_df` then also produces the metrics
-    * (idiomatic Catalyst `CollectMetrics`; uses HLL++ for distinct counts
-    * since observe forbids distinct aggregates). */
-  def observedValidDf(name: String = "graft_dq"): (DataFrame, () => Seq[MetricResult]) = {
-    val fusable = checks.filter(_.observableAggs(df).nonEmpty)
-    if (fusable.isEmpty) (getValidDf, () => Seq.empty)
-    else {
-      val obs = Observation(name)
-      val aggs = fusable.flatMap(_.observableAggs(df))
-      val observed = df.observe(obs, aggs.head, aggs.tail: _*)
-      val validDf = checks.foldLeft(observed)((d, c) => c.valid(d))
-      (validDf, () => {
-        val m = obs.get
-        val keys = m.keys.toSeq
-        val schema = org.apache.spark.sql.types.StructType(
-          keys.map(k =>
-            org.apache.spark.sql.types.StructField(k, org.apache.spark.sql.types.NullType)))
-        val r = new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
-          keys.map(m(_).asInstanceOf[Any]).toArray, schema)
-        fusable.flatMap(_.metricsFromRow(r))
-      })
-    }
-  }
+  /** Releases the marked frame's cached blocks. */
+  def unpersist(): Unit = markedRdd.foreach(_.unpersist(false))
 }

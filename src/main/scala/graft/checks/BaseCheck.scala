@@ -2,6 +2,7 @@ package graft.checks
 
 import java.sql.Timestamp
 import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.functions.{col, lit}
 import graft.core._
 
 /** Check contract + memoizing base class.
@@ -15,17 +16,17 @@ import graft.core._
   * exposes its metric computation as a list of **aggregate Columns**
   * ([[metricAggs]]) plus a row decoder ([[metricsFromRow]]). This lets
   * [[graft.ResultObj]] fuse all checks' metrics into a SINGLE aggregation job
-  * (one scan instead of one-job-per-check), or ride them along the
-  * `valid_df` materialization via `df.observe(...)` (`CollectMetrics`) so one
-  * scan yields both the row split and the metrics. The reference runs one or
-  * more full-scan jobs per check (`completeness_col_ratio_check.py:110`,
-  * `completeness_raw_check.py:95-96`).
+  * (one scan instead of one-job-per-check). The reference runs one or more
+  * full-scan jobs per check (`completeness_col_ratio_check.py:110`,
+  * `completeness_raw_check.py:95-96`). A check whose verdict on a row reads
+  * only that row is a [[RowCheck]]: it states the verdict once, and its
+  * `valid`/`invalid` and the manager's marked frame all read it.
   *
   * Scope semantics: the user-supplied [[graft.core.Scope]] predicate is ANDed
   * into every computation; inside aggregates it becomes
   * `agg(when(scope, expr))` so the fused job needs no pre-filter — Catalyst
   * still collapses and pushes plain filters when the per-check job path is
-  * used.
+  * used. A row whose scope is null is in neither split.
   */
 abstract class BaseCheck(
     val dataset: String,
@@ -85,10 +86,16 @@ abstract class BaseCheck(
   }
 
   // --- column validation (`_pre_check`) ---
-  protected def preCheck(d: DataFrame, cols: Seq[String] = inputAttributes): Unit = {
-    val missing = cols.filterNot(d.columns.contains)
-    if (missing.nonEmpty)
-      throw new ColumnNotFoundException(s"Columns not found: ${missing.mkString("[", ", ", "]")}")
+  /** The configured columns missing from `d`, or from another frame the
+    * check holds (named `<frame>.<column>`). */
+  protected def missingColumns(d: DataFrame): Seq[String] = inputAttributes.filterNot(d.columns.contains)
+
+  /** Raises [[ColumnNotFoundException]] naming this check and the missing
+    * configured columns and `cols`. */
+  protected[graft] def preCheck(d: DataFrame, cols: Seq[String] = Nil): Unit = {
+    val missing = (missingColumns(d) ++ cols.filterNot(d.columns.contains)).distinct
+    if (missing.nonEmpty) throw new ColumnNotFoundException(
+      s"Columns not found for check $metricName: ${missing.mkString("[", ", ", "]")}")
   }
 
   protected def scopeCol(d: DataFrame): Column = scope.toColumn(d)
@@ -108,7 +115,8 @@ abstract class BaseCheck(
   def metricAggs(d: DataFrame): Seq[Column]
 
   /** Variant safe for `df.observe`/`CollectMetrics` (no distinct aggregates
-    * allowed there); defaults to [[metricAggs]]. */
+    * allowed there; `StreamingDQ.observedMetrics`); defaults to
+    * [[metricAggs]]. */
   def observableAggs(d: DataFrame): Seq[Column] = metricAggs(d)
 
   def metricsFromRow(row: Row): Seq[MetricResult]
@@ -126,10 +134,19 @@ abstract class BaseCheck(
   def metricResults(): Seq[MetricResult] = metricResults(df)
 
   // --- shared helpers for metric-row assembly ---
-  protected def statusOf(ok: Boolean): CheckStatus =
-    if (ok) CheckStatus.Success else CheckStatus.Failure
-
   protected def pct(v: Double): String = f"${v * 100}%.2f%%"
+
+  /** `part / whole`, `empty` when `whole` is 0. */
+  protected def ratio(part: Long, whole: Long, empty: Double = 0.0): Double =
+    if (whole == 0) empty else part.toDouble / whole.toDouble
+
+  /** The metric row of ratio `r` checked against the threshold: passing at
+    * or above it, or with `atMost` at or below it (`"<what> <r> >= <t>"`). */
+  protected def ratioMetric(column: String, what: String, r: Double,
+      extra: Map[String, String] = Map.empty, atMost: Boolean = false): MetricResult = {
+    val op = if (atMost) (if (r <= threshold) "<=" else ">") else if (r >= threshold) ">=" else "<"
+    mkMetric(column, Some(r), s"$what ${pct(r)} $op ${pct(threshold)}", r, extra)
+  }
 
   protected def baseExtra: Map[String, String] =
     Map("condition" -> scope.describe)
@@ -158,5 +175,41 @@ abstract class BaseCheck(
       ingestDatetime = now,
       extraInfo = baseExtra ++ extra
     )
+  }
+}
+
+/** A check's verdict on one row: `pass` keeps it in the valid split, `fail`
+  * puts it in the invalid one; it may be in neither (a rule that does not
+  * trigger, a row outside the scope). A null counts as false. */
+final case class Verdict(pass: Column, fail: Column) {
+  def within(scope: Column): Verdict = Verdict(pass && scope, fail && scope)
+}
+
+object Verdict {
+  /** Pass when every column is non-null, fail when any is null. */
+  def complete(cols: Seq[String]): Verdict = Verdict(
+    cols.map(col(_).isNotNull).reduceOption(_ && _).getOrElse(lit(true)),
+    cols.map(col(_).isNull).reduceOption(_ || _).getOrElse(lit(false)))
+}
+
+/** A check whose verdict on a row reads only that row (completeness,
+  * validity, rule, freshness, drift). It states the verdict once; `valid`,
+  * `invalid` and [[graft.ResultObj]]'s marked frame all read it. */
+trait RowCheck extends BaseCheck {
+
+  /** Pass and fail of a row of `d`, before the scope; `cols` are the
+    * columns a completeness check tests. */
+  def verdict(d: DataFrame, cols: Seq[String]): Verdict
+
+  def scopedVerdict(d: DataFrame): Verdict = verdict(d, inputAttributes).within(scopeCol(d))
+
+  override def valid(d: DataFrame, cols: Seq[String]): DataFrame = {
+    preCheck(d, cols)
+    d.filter(verdict(d, cols).pass && scopeCol(d))
+  }
+
+  override def invalid(d: DataFrame, cols: Seq[String]): DataFrame = {
+    preCheck(d, cols)
+    d.filter(verdict(d, cols).fail && scopeCol(d))
   }
 }

@@ -30,32 +30,18 @@ final class CompletenessColRatioCheck(
     inputAttributes: Seq[String],
     threshold: Double,
     scope: Scope = NoScope
-) extends BaseCheck(dataset, runId, severityLevel, metricName, inputAttributes, threshold, scope) {
+) extends BaseCheck(dataset, runId, severityLevel, metricName, inputAttributes, threshold, scope)
+    with RowCheck {
 
   val checkType: String = "completeness"
   val dimension: Dimension = Dimension.Completeness
 
   /** Single-column variant (reference `col=` kwarg path, `:82-83`). */
-  def validCol(d: DataFrame, c: String): DataFrame = {
-    preCheck(d, Seq(c))
-    d.filter(col(c).isNotNull && scopeCol(d))
-  }
+  def validCol(d: DataFrame, c: String): DataFrame = valid(d, Seq(c))
 
-  def invalidCol(d: DataFrame, c: String): DataFrame =
-    d.filter(col(c).isNull && scopeCol(d))
+  def invalidCol(d: DataFrame, c: String): DataFrame = invalid(d, Seq(c))
 
-  override def valid(d: DataFrame, cols: Seq[String]): DataFrame = {
-    preCheck(d)
-    val s = scopeCol(d)
-    if (cols.isEmpty) d.filter(s)
-    else d.filter(cols.map(col(_).isNotNull).reduce(_ && _) && s)
-  }
-
-  override def invalid(d: DataFrame, cols: Seq[String]): DataFrame = {
-    val s = scopeCol(d)
-    if (cols.isEmpty) d.filter(s && lit(false))
-    else d.filter(cols.map(col(_).isNull).reduce(_ || _) && s)
-  }
+  override def verdict(d: DataFrame, cols: Seq[String]): Verdict = Verdict.complete(cols)
 
   /** `avg(when(scope, isnotnull cast double))` per attribute — `when` without
     * `otherwise` yields null outside the scope, which `avg` ignores, so the
@@ -73,10 +59,6 @@ final class CompletenessColRatioCheck(
       // `ratios_dict.get(col, 0.0)` (`:125`)
       val p = Option(row.getAs[java.lang.Double](aggAlias(c)))
         .map(_.doubleValue()).getOrElse(0.0)
-      val ok = p >= threshold
-      val msg =
-        if (ok) s"$c completeness ${pct(p)} >= ${pct(threshold)}"
-        else s"$c completeness ${pct(p)} < ${pct(threshold)}"
-      mkMetric(column = c, value = Some(p), message = msg, thresholdResult = p)
+      ratioMetric(c, s"$c completeness", p)
     }
 }

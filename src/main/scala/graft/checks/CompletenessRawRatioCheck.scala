@@ -28,51 +28,27 @@ final class CompletenessRawRatioCheck(
     inputAttributes: Seq[String],
     threshold: Double,
     scope: Scope = NoScope
-) extends BaseCheck(dataset, runId, severityLevel, metricName, inputAttributes, threshold, scope) {
+) extends BaseCheck(dataset, runId, severityLevel, metricName, inputAttributes, threshold, scope)
+    with RowCheck {
 
   val checkType: String = "completeness"
   val dimension: Dimension = Dimension.Completeness
 
-  override def valid(d: DataFrame, cols: Seq[String]): DataFrame = {
-    preCheck(d)
-    val s = scopeCol(d)
-    if (cols.isEmpty) d.filter(s)
-    else d.filter(cols.map(col(_).isNotNull).reduce(_ && _) && s)
-  }
-
-  override def invalid(d: DataFrame, cols: Seq[String]): DataFrame = {
-    val s = scopeCol(d)
-    if (cols.isEmpty) d.filter(s && lit(false))
-    else d.filter(cols.map(col(_).isNull).reduce(_ || _) && s)
-  }
-
-  private def allNonNull: Column =
-    if (inputAttributes.isEmpty) lit(true)
-    else inputAttributes.map(col(_).isNotNull).reduce(_ && _)
+  override def verdict(d: DataFrame, cols: Seq[String]): Verdict = Verdict.complete(cols)
 
   override def metricAggs(d: DataFrame): Seq[Column] = {
     val s = scopeCol(d)
     Seq(
       count(when(s, 1)).as(aggAlias("total")),
-      count(when(s && allNonNull, 1)).as(aggAlias("valid"))
+      count(when(s && Verdict.complete(inputAttributes).pass, 1)).as(aggAlias("valid"))
     )
   }
 
   override def metricsFromRow(row: Row): Seq[MetricResult] = {
     val total = row.getAs[Long](aggAlias("total"))
     val valid = row.getAs[Long](aggAlias("valid"))
-    val ratio = if (total == 0) 0.0 else valid.toDouble / total.toDouble
-    val ok = ratio >= threshold
-    val msg =
-      if (ok) s"raw completeness ${pct(ratio)} >= ${pct(threshold)}"
-      else s"raw completeness ${pct(ratio)} < ${pct(threshold)}"
     // single result row with column="" like the reference (`:101-116`)
-    Seq(mkMetric(
-      column = "",
-      value = Some(ratio),
-      message = msg,
-      thresholdResult = ratio,
-      extra = Map("valid_count" -> valid.toString, "total_count" -> total.toString)
-    ))
+    Seq(ratioMetric("", "raw completeness", ratio(valid, total),
+      Map("valid_count" -> valid.toString, "total_count" -> total.toString)))
   }
 }

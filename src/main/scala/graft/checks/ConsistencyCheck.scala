@@ -19,8 +19,8 @@ import graft.core._
   * is small — it is projected to key columns + `distinct()` first, so AQE
   * converts to broadcast whenever the dim fits; for a genuinely large
   * reference, both sides hash-partition on the key (co-partitioned, no
-  * nested loop). Metrics can't be expressed as a row-local aggregate, so
-  * this check is NOT fused ([[metricAggs]] empty) and runs one join job.
+  * nested loop). Metrics aggregate [[orphanAggs]] over the frame
+  * [[markReferenced]] flags: alone, or fused in [[graft.ResultObj]].
   */
 final class ConsistencyCheck(
     dataset: String,
@@ -58,33 +58,36 @@ final class ConsistencyCheck(
     d.filter(scopeCol(d)).join(refKeys, inputAttributes, "left_anti")
   }
 
+  override protected def missingColumns(d: DataFrame): Seq[String] =
+    super.missingColumns(d) ++ refCols.filterNot(refDf.columns.contains).map("refDf." + _)
+
+  /** `d` plus the boolean column `flag`: whether the row's FK is among the
+    * (distinct, so no row repeats) reference keys; a null FK never is. */
+  private[graft] def markReferenced(d: DataFrame, flag: String): DataFrame =
+    d.join(refKeys.withColumn(flag, lit(true)), inputAttributes, "left_outer")
+      .select(d.columns.map(col) :+ col(flag).isNotNull.as(flag): _*)
+
+  /** Scoped and orphan counts over a frame flagged `hit`. */
+  private[graft] def orphanAggs(d: DataFrame, hit: Column): Seq[Column] = {
+    val s = scopeCol(d)
+    Seq(count(when(s, 1)).as(aggAlias("total")), count(when(s && !hit, 1)).as(aggAlias("orphans")))
+  }
+
   override def metricAggs(d: DataFrame): Seq[Column] = Seq.empty
 
-  override def metricsFromRow(row: Row): Seq[MetricResult] = Seq.empty
-
-  /** One job: anti-join count + scoped count via a single pass over a
-    * left-outer membership flag. */
+  /** One job: one pass over the scoped rows' left-outer membership flag. */
   override def metricResults(d: DataFrame): Seq[MetricResult] = {
     preCheck(d)
-    val marked = d.filter(scopeCol(d))
-      .join(refKeys.withColumn("__graft_ref_hit", lit(1)), inputAttributes, "left_outer")
-    val row = marked.agg(
-      count(lit(1)).as("total"),
-      count(when(col("__graft_ref_hit").isNull, 1)).as("orphans")
-    ).head()
-    val total = row.getAs[Long]("total")
-    val orphans = row.getAs[Long]("orphans")
-    val ratio = if (total == 0) 0.0 else orphans.toDouble / total.toDouble
-    val ok = ratio <= threshold
-    val msg =
-      if (ok) s"${inputAttributes.mkString(",")} orphan ratio ${pct(ratio)} <= ${pct(threshold)}"
-      else s"${inputAttributes.mkString(",")} orphan ratio ${pct(ratio)} > ${pct(threshold)}"
-    Seq(mkMetric(
-      column = inputAttributes.mkString(","),
-      value = Some(ratio),
-      message = msg,
-      thresholdResult = ratio,
-      extra = Map("orphan_count" -> orphans.toString, "total_count" -> total.toString)
-    ))
+    val marked = markReferenced(d.filter(scopeCol(d)), "__graft_ref_hit")
+    val aggs = orphanAggs(marked, col("__graft_ref_hit"))
+    metricsFromRow(marked.agg(aggs.head, aggs.tail: _*).head())
+  }
+
+  override def metricsFromRow(row: Row): Seq[MetricResult] = {
+    val total = row.getAs[Long](aggAlias("total"))
+    val orphans = row.getAs[Long](aggAlias("orphans"))
+    val keys = inputAttributes.mkString(",")
+    Seq(ratioMetric(keys, s"$keys orphan ratio", ratio(orphans, total),
+      Map("orphan_count" -> orphans.toString, "total_count" -> total.toString), atMost = true))
   }
 }

@@ -50,7 +50,8 @@ final class DriftCheck(
     threshold: Double = 0.2,
     val eps: Double = 1e-6,
     scope: Scope = NoScope
-) extends BaseCheck(dataset, runId, severityLevel, metricName, Seq(column), threshold, scope) {
+) extends BaseCheck(dataset, runId, severityLevel, metricName, Seq(column), threshold, scope)
+    with RowCheck {
 
   require(nBins > 0 && hi > lo, "need nBins > 0 and hi > lo")
 
@@ -144,13 +145,12 @@ final class DriftCheck(
     }
   }
 
-  override def valid(d: DataFrame, cols: Seq[String]): DataFrame = {
-    preCheck(d); d.filter(scopeCol(d))
-  }
+  /** Drift is a property of the distribution, not of a row: every scoped
+    * row passes. */
+  override def verdict(d: DataFrame, cols: Seq[String]): Verdict = Verdict(lit(true), lit(false))
 
-  override def invalid(d: DataFrame, cols: Seq[String]): DataFrame = {
-    preCheck(d); d.filter(scopeCol(d) && lit(false))
-  }
+  override protected def missingColumns(d: DataFrame): Seq[String] =
+    super.missingColumns(d) ++ super.missingColumns(baselineDf).map("baselineDf." + _)
 
   override def metricAggs(d: DataFrame): Seq[Column] = Seq.empty
   override def metricsFromRow(row: Row): Seq[MetricResult] = Seq.empty
@@ -158,7 +158,6 @@ final class DriftCheck(
   /** Two metric rows: `<name>_psi` and `<name>_ks` (two small jobs). */
   override def metricResults(d: DataFrame): Seq[MetricResult] = {
     preCheck(d)
-    preCheck(baselineDf)
     val p = psi(d)
     val kRow = ksDf(d).head()
     // zero non-null values on either side -> null CDFs -> null max; report

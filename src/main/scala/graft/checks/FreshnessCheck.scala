@@ -29,7 +29,8 @@ final class FreshnessCheck(
     threshold: Double,
     val anchor: Option[Timestamp] = None,
     scope: Scope = NoScope
-) extends BaseCheck(dataset, runId, severityLevel, metricName, Seq(tsCol), threshold, scope) {
+) extends BaseCheck(dataset, runId, severityLevel, metricName, Seq(tsCol), threshold, scope)
+    with RowCheck {
 
   val checkType: String = "freshness"
   val dimension: Dimension = Dimension.Freshness
@@ -43,15 +44,12 @@ final class FreshnessCheck(
       case _ => lit(horizon)
     }
 
-  /** Rows newer than the freshness horizon (anchor − threshold·period). */
-  override def valid(d: DataFrame, cols: Seq[String]): DataFrame = {
-    preCheck(d)
-    d.filter(col(tsCol) >= horizonLit(d) && scopeCol(d))
-  }
-
-  override def invalid(d: DataFrame, cols: Seq[String]): DataFrame = {
-    preCheck(d)
-    d.filter((col(tsCol) < horizonLit(d) || col(tsCol).isNull) && scopeCol(d))
+  /** Pass: newer than the horizon (anchor − threshold·period); fail: older
+    * or null. Without an `anchor` the horizon is fixed per call: once per
+    * `valid`/`invalid`, once per [[graft.ResultObj]] marking. */
+  override def verdict(d: DataFrame, cols: Seq[String]): Verdict = {
+    val h = horizonLit(d)
+    Verdict(col(tsCol) >= h, col(tsCol) < h || col(tsCol).isNull)
   }
 
   private def anchorTs: Timestamp =

@@ -53,15 +53,13 @@ final class OutlierCheck(
   private def withStats(d: DataFrame): DataFrame =
     d.crossJoin(broadcast(statsDf(d)))
 
-  override def valid(d: DataFrame, cols: Seq[String]): DataFrame = {
+  private def split(d: DataFrame, keep: Column): DataFrame = {
     preCheck(d)
-    withStats(d).filter(scopeCol(d) && !isOutlier).drop("__mean", "__std")
+    withStats(d).filter(scopeCol(d) && keep).drop("__mean", "__std")
   }
 
-  override def invalid(d: DataFrame, cols: Seq[String]): DataFrame = {
-    preCheck(d)
-    withStats(d).filter(scopeCol(d) && isOutlier).drop("__mean", "__std")
-  }
+  override def valid(d: DataFrame, cols: Seq[String]): DataFrame = split(d, !isOutlier)
+  override def invalid(d: DataFrame, cols: Seq[String]): DataFrame = split(d, isOutlier)
 
   override def metricAggs(d: DataFrame): Seq[Column] = Seq.empty
 
@@ -83,23 +81,12 @@ final class OutlierCheck(
     val std = Option(counts.get(3)).map(_.asInstanceOf[Double])
     val total = counts.getAs[Long]("total")
     val outliers = counts.getAs[Long]("outliers")
-    val ratio = if (total == 0) 0.0 else outliers.toDouble / total.toDouble
-    val ok = ratio <= threshold
-    val msg =
-      if (ok) s"$checkType ${pct(ratio)} <= ${pct(threshold)}"
-      else s"$checkType ${pct(ratio)} > ${pct(threshold)}"
-    Seq(mkMetric(
-      column = column,
-      value = Some(ratio),
-      message = msg,
-      thresholdResult = ratio,
-      extra = Map(
-        "z_max" -> zMax.toString,
-        "mean" -> mean.map(_.toString).getOrElse(""),
-        "stddev" -> std.map(_.toString).getOrElse(""),
-        "outlier_count" -> outliers.toString,
-        "total_count" -> total.toString
-      )
-    ))
+    Seq(ratioMetric(column, checkType, ratio(outliers, total), Map(
+      "z_max" -> zMax.toString,
+      "mean" -> mean.map(_.toString).getOrElse(""),
+      "stddev" -> std.map(_.toString).getOrElse(""),
+      "outlier_count" -> outliers.toString,
+      "total_count" -> total.toString
+    ), atMost = true))
   }
 }

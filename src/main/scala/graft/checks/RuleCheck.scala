@@ -32,7 +32,8 @@ class RuleCheck(
     threshold: Double,
     inputAttributes: Seq[String] = Seq.empty,
     scope: Scope = NoScope
-) extends BaseCheck(dataset, runId, severityLevel, metricName, inputAttributes, threshold, scope) {
+) extends BaseCheck(dataset, runId, severityLevel, metricName, inputAttributes, threshold, scope)
+    with RowCheck {
 
   val checkType: String = "rule"
   def dimension: Dimension = Dimension.Validity
@@ -40,19 +41,11 @@ class RuleCheck(
   private def triggered: Column = coalesce(antecedent, lit(false))
   private def holds: Column = coalesce(consequent, lit(false))
 
-  /** Rows complying with the rule: triggered AND consequent holds.
-    * (Vacuous rows are excluded — `valid ∪ invalid` = triggered scoped
-    * rows, not the whole table.) */
-  override def valid(d: DataFrame, cols: Seq[String]): DataFrame = {
-    preCheck(d)
-    d.filter(triggered && holds && scopeCol(d))
-  }
-
-  /** Violating rows: triggered AND the consequent fails (or is null). */
-  override def invalid(d: DataFrame, cols: Seq[String]): DataFrame = {
-    preCheck(d)
-    d.filter(triggered && !holds && scopeCol(d))
-  }
+  /** Pass: triggered AND the consequent holds. Fail: triggered AND the
+    * consequent fails (or is null). Vacuous rows are in neither split —
+    * `valid ∪ invalid` = triggered scoped rows, not the whole table. */
+  override def verdict(d: DataFrame, cols: Seq[String]): Verdict =
+    Verdict(triggered && holds, triggered && !holds)
 
   override def metricAggs(d: DataFrame): Seq[Column] = {
     val s = scopeCol(d)
@@ -65,22 +58,11 @@ class RuleCheck(
   override def metricsFromRow(row: Row): Seq[MetricResult] = {
     val trig = row.getAs[Long](aggAlias("triggered"))
     val comp = row.getAs[Long](aggAlias("compliant"))
-    val ratio = if (trig == 0) 1.0 else comp.toDouble / trig.toDouble
-    val ok = ratio >= threshold
-    val msg =
-      if (ok) s"$checkType ${pct(ratio)} >= ${pct(threshold)}"
-      else s"$checkType ${pct(ratio)} < ${pct(threshold)}"
-    Seq(mkMetric(
-      column = inputAttributes.mkString(","),
-      value = Some(ratio),
-      message = msg,
-      thresholdResult = ratio,
-      extra = Map(
-        "antecedent" -> antecedent.toString,
-        "consequent" -> consequent.toString,
-        "triggered_count" -> trig.toString,
-        "compliant_count" -> comp.toString
-      )
-    ))
+    Seq(ratioMetric(inputAttributes.mkString(","), checkType, ratio(comp, trig, empty = 1.0), Map(
+      "antecedent" -> antecedent.toString,
+      "consequent" -> consequent.toString,
+      "triggered_count" -> trig.toString,
+      "compliant_count" -> comp.toString
+    )))
   }
 }

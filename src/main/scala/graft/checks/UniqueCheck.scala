@@ -62,14 +62,40 @@ final class UniqueCheck(
     preCheck(d, cols)
     val scoped = d.filter(scopeCol(d))
     if (cols.isEmpty) scoped.filter(lit(false))
-    else {
-      val dupKeys = scoped.groupBy(cols.map(col): _*)
-        .agg(count(lit(1)).as("__graft_dup_cnt"))
-        .filter(col("__graft_dup_cnt") > 1)
-        .drop("__graft_dup_cnt")
-      scoped.join(dupKeys, cols, "left_semi")
-    }
+    else scoped.join(duplicateKeys(scoped, cols), cols, "left_semi")
   }
+
+  /** The keys `cols` that occur more than once in `scoped`; null keys
+    * group together, as in `dropDuplicates`. */
+  private def duplicateKeys(scoped: DataFrame, cols: Seq[String]): DataFrame =
+    scoped.groupBy(cols.map(col): _*)
+      .agg(count(lit(1)).as("__graft_dup_cnt"))
+      .filter(col("__graft_dup_cnt") > 1)
+      .drop("__graft_dup_cnt")
+
+  /** `d` plus the boolean column `flag`: whether the row's key occurs more
+    * than once among the scoped rows of `src`, the input `d` derives from.
+    * Null-safe, so null keys group as in `dropDuplicates`. Needs keys. */
+  private[graft] def markDuplicates(d: DataFrame, src: DataFrame, flag: String): DataFrame = {
+    val keys = inputAttributes.zipWithIndex.map { case (k, j) => k -> s"$flag$j" }
+    val dup = duplicateKeys(src.filter(scopeCol(src)), inputAttributes)
+      .select(keys.map { case (k, r) => col(k).as(r) } :+ lit(true).as(flag): _*)
+    d.join(dup, keys.map { case (k, r) => col(k) <=> col(r) }.reduce(_ && _), "left_outer")
+      .select(d.columns.map(col) :+ col(flag).isNotNull.as(flag): _*)
+  }
+
+  /** [[valid]] over a subset of [[markDuplicates]]' output: only rows
+    * flagged `dup` go through `dropDuplicates` — a key with one scoped row
+    * in the whole input has at most one in any subset. */
+  private[graft] def validMarked(d: DataFrame, dup: Column): DataFrame = {
+    val scoped = d.filter(scopeCol(d))
+    scoped.filter(!dup).union(scoped.filter(dup).dropDuplicates(inputAttributes))
+  }
+
+  /** [[invalid]]'s verdict over a marked frame: scoped, duplicated and
+    * fully non-null (the semi join never matches a null key). */
+  private[graft] def failMarked(d: DataFrame, dup: Column): Column =
+    inputAttributes.map(col(_).isNotNull).foldLeft(dup)(_ && _) && scopeCol(d)
 
   /** Reference-shaped duplicate groups: key cols + `count`, count > 1
     * (`unique_chek.py:84-87`; schema-changing). */
@@ -81,51 +107,31 @@ final class UniqueCheck(
       .filter(col("count") > 1)
   }
 
-  private def distinctAgg(c: Column): Column =
-    if (exact) countDistinct(c) else approx_count_distinct(c)
-
-  override def metricAggs(d: DataFrame): Seq[Column] = {
-    preCheck(d)
+  private def ratioAggs(d: DataFrame, distinct: Column => Column): Seq[Column] = {
     val s = scopeCol(d)
     inputAttributes.flatMap { c =>
       Seq(
-        distinctAgg(when(s, col(c))).as(aggAlias(s"${c}__distinct")),
+        distinct(when(s, col(c))).as(aggAlias(s"${c}__distinct")),
         count(when(s, col(c))).as(aggAlias(s"${c}__count"))
       )
     }
   }
+
+  override def metricAggs(d: DataFrame): Seq[Column] =
+    ratioAggs(d, if (exact) countDistinct(_) else approx_count_distinct(_))
 
   /** `CollectMetrics`/`observe` forbids distinct aggregates — always use the
     * HLL++ sketch there. */
-  override def observableAggs(d: DataFrame): Seq[Column] = {
-    val s = scopeCol(d)
-    inputAttributes.flatMap { c =>
-      Seq(
-        approx_count_distinct(when(s, col(c))).as(aggAlias(s"${c}__distinct")),
-        count(when(s, col(c))).as(aggAlias(s"${c}__count"))
-      )
-    }
-  }
+  override def observableAggs(d: DataFrame): Seq[Column] = ratioAggs(d, approx_count_distinct(_))
 
   override def metricsFromRow(row: Row): Seq[MetricResult] =
     inputAttributes.map { c =>
       val nd = row.getAs[Long](aggAlias(s"${c}__distinct"))
       val n = row.getAs[Long](aggAlias(s"${c}__count"))
-      val ratio = if (n == 0) 0.0 else nd.toDouble / n.toDouble
-      val ok = ratio >= threshold
-      val msg =
-        if (ok) s"$c uniqueness ${pct(ratio)} >= ${pct(threshold)}"
-        else s"$c uniqueness ${pct(ratio)} < ${pct(threshold)}"
-      mkMetric(
-        column = c,
-        value = Some(ratio),
-        message = msg,
-        thresholdResult = ratio,
-        extra = Map(
-          "distinct_count" -> nd.toString,
-          "total_count" -> n.toString,
-          "estimator" -> (if (exact) "exact" else "hll++")
-        )
-      )
+      ratioMetric(c, s"$c uniqueness", ratio(nd, n), Map(
+        "distinct_count" -> nd.toString,
+        "total_count" -> n.toString,
+        "estimator" -> (if (exact) "exact" else "hll++")
+      ))
     }
 }

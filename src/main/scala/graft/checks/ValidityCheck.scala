@@ -24,22 +24,15 @@ class ValidityCheck(
     threshold: Double,
     inputAttributes: Seq[String] = Seq.empty,
     scope: Scope = NoScope
-) extends BaseCheck(dataset, runId, severityLevel, metricName, inputAttributes, threshold, scope) {
+) extends BaseCheck(dataset, runId, severityLevel, metricName, inputAttributes, threshold, scope)
+    with RowCheck {
 
   val checkType: String = "validity"
   def dimension: Dimension = Dimension.Validity
 
   private def predTrue: Column = coalesce(predicate, lit(false))
 
-  override def valid(d: DataFrame, cols: Seq[String]): DataFrame = {
-    preCheck(d)
-    d.filter(predTrue && scopeCol(d))
-  }
-
-  override def invalid(d: DataFrame, cols: Seq[String]): DataFrame = {
-    preCheck(d)
-    d.filter(!predTrue && scopeCol(d))
-  }
+  override def verdict(d: DataFrame, cols: Seq[String]): Verdict = Verdict(predTrue, !predTrue)
 
   override def metricAggs(d: DataFrame): Seq[Column] = {
     val s = scopeCol(d)
@@ -52,22 +45,11 @@ class ValidityCheck(
   override def metricsFromRow(row: Row): Seq[MetricResult] = {
     val total = row.getAs[Long](aggAlias("total"))
     val valid = row.getAs[Long](aggAlias("valid"))
-    val ratio = if (total == 0) 0.0 else valid.toDouble / total.toDouble
-    val ok = ratio >= threshold
-    val msg =
-      if (ok) s"$checkType ${pct(ratio)} >= ${pct(threshold)}"
-      else s"$checkType ${pct(ratio)} < ${pct(threshold)}"
-    Seq(mkMetric(
-      column = inputAttributes.mkString(","),
-      value = Some(ratio),
-      message = msg,
-      thresholdResult = ratio,
-      extra = Map(
-        "predicate" -> predicate.toString,
-        "valid_count" -> valid.toString,
-        "total_count" -> total.toString
-      )
-    ))
+    Seq(ratioMetric(inputAttributes.mkString(","), checkType, ratio(valid, total), Map(
+      "predicate" -> predicate.toString,
+      "valid_count" -> valid.toString,
+      "total_count" -> total.toString
+    )))
   }
 }
 

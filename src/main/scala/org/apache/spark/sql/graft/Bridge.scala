@@ -18,6 +18,10 @@ object Bridge {
   def nullable(c: Column): Column =
     column(org.apache.spark.sql.catalyst.expressions.KnownNullable(expression(c)))
 
+  /** `c`, typed non-nullable (a filter already keeps it non-null). */
+  def knownNotNull(c: Column): Column =
+    column(org.apache.spark.sql.catalyst.expressions.KnownNotNull(expression(c)))
+
   /** DataFrame from a (resolved) logical plan — the `Dataset.ofRows`
     * doorway custom operators need to surface a custom `LogicalPlan`
     * node through the public Column API. */
@@ -41,6 +45,14 @@ object Bridge {
       schema: org.apache.spark.sql.types.StructType): org.apache.spark.sql.DataFrame =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .internalCreateDataFrame(rdd, schema)
+
+  /** DataFrame over `rdd`, a copy of `df`'s internal rows, with `df`'s
+    * output attributes, so a column bound to `df`'s input still resolves. */
+  def rddFrame(df: org.apache.spark.sql.DataFrame,
+      rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow]): org.apache.spark.sql.DataFrame = {
+    val s = df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    ofRows(s, org.apache.spark.sql.execution.LogicalRDD(df.queryExecution.analyzed.output, rdd)(s))
+  }
 
   /** Runs `body` on `pool` under the calling thread's local properties
     * (job group, description, scheduler pool) and active session — the

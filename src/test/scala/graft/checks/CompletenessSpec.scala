@@ -7,7 +7,8 @@ import graft.{DQManager}
 
 /** Port of the reference E2E smoke (`/root/reference/tests/test_dq_task.py`,
   * fixture A2) with real assertions, plus a null-injected variant to
-  * exercise the failure branch, plus fused/observed metric-path equivalence. */
+  * exercise the failure branch, plus fused/per-check/observed metric-path
+  * equivalence. */
 class CompletenessSpec extends SparkSpec {
 
   /** `spark.range` + vectorized cols, as `tests/test_dq_task.py:13-28`
@@ -73,26 +74,28 @@ class CompletenessSpec extends SparkSpec {
 
   test("fused path == per-check path; observed path agrees (O1)") {
     val df = withNulls
+    val checks = Seq(
+      new CompletenessColRatioCheck("smoke", "r", SeverityLevel.High, "cr", Seq("name", "age"), 0.5),
+      new CompletenessRawRatioCheck("smoke", "r", SeverityLevel.High, "raw", Seq("age"), 0.5),
+      new UniqueCheck("smoke", "r", SeverityLevel.High, "uq", Seq("name_id")))
     val mgr = new DQManager(spark, "smoke")
     mgr.setData(df)
-    mgr.addCheck(new CompletenessColRatioCheck(
-      "smoke", "r", SeverityLevel.High, "cr", Seq("name", "age"), 0.5))
-    mgr.addCheck(new CompletenessRawRatioCheck(
-      "smoke", "r", SeverityLevel.High, "raw", Seq("age"), 0.5))
-    mgr.addCheck(new UniqueCheck(
-      "smoke", "r", SeverityLevel.High, "uq", Seq("name_id")))
-    val res = mgr.run()
+    checks.foreach(mgr.addCheck)
     def key(m: MetricResult) = (m.metricName, m.column, m.valueDouble)
-    assert(res.metricRows.map(key).toSet == res.metricRowsPerCheck.map(key).toSet)
+    val exact = checks.flatMap(_.metricResults(df)).map(key)
+    assert(mgr.run().metricRows.map(key).toSet == exact.toSet)
 
-    // observed path: metrics ride the valid_df job (approx distinct for uniq)
-    val (vdf, decode) = res.observedValidDf()
-    vdf.write.format("noop").mode("overwrite").save()
-    val observed = decode()
-    val exactKeys = res.metricRows.map(key).toSet
+    // observed path over a batch frame: metrics ride the job that reads it
+    // (approx distinct for uniq)
+    val observed = graft.streaming.StreamingDQ.observedMetrics(df, checks, "dq_batch")
+    observed.collect()
+    val row = observed.queryExecution.observedMetrics("dq_batch")
+    val obs = checks.flatMap(_.metricsFromRow(row))
     // hll++ vs exact may differ for the uniqueness metric; others must match
-    observed.filter(_.metricName != "uq").foreach(m => assert(exactKeys.contains(key(m))))
-    assert(observed.size == res.metricRows.size)
+    obs.filter(_.metricName != "uq").foreach(m => assert(exact.contains(key(m))))
+    assert(obs.size == exact.size)
+    val uq = exact.find(_._1 == "uq").flatMap(_._3).get
+    assert(math.abs(obs.find(_.metricName == "uq").flatMap(_.valueDouble).get - uq) < 0.05)
   }
 
   test("memoization + shared df_count cache (base_check.py:62-92 parity)") {
