@@ -4,9 +4,10 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.storage.StorageLevel
+import scala.reflect.ClassTag
 
-/** Session-conf-driven lineage truncation for iterative operators
-  * (connected components, PageRank, k-core peeling, pair-pipeline
+/** Session-conf-driven lineage truncation for iterative operators (the
+  * [[Superstep]] rounds, the SCC and k-truss loops, pair-pipeline
   * hand-offs). Every iteration must cut its lineage or the
   * plan grows with rounds; HOW it cuts is a deployment decision:
   *
@@ -38,15 +39,16 @@ object Checkpoints {
     if (reliable(df.sparkSession)) df.checkpoint() else df.localCheckpoint()
 
   /** RDD twin of [[truncate]]: marks `rdd` for the conf's truncation and
-    * materialises it in ONE job that also sums `measure` over its
-    * partitions (the fused materialise-and-count of an iterative round).
+    * materialises it in ONE job that also returns `measure` of each
+    * partition (the fused materialise-and-count of an iterative round).
     * Call it before any other job touches `rdd`. Local mode cuts the
     * lineage in that job; reliable mode keeps the blocks cached and adds
     * Spark's checkpoint-write job, which reads them back from the cache. */
-  def materialize[T](spark: SparkSession, rdd: RDD[T])(measure: Iterator[T] => Long): Long = {
+  def materialize[T, U: ClassTag](spark: SparkSession, rdd: RDD[T])(
+      measure: Iterator[T] => U): Array[U] = {
     if (reliable(spark)) rdd.persist(StorageLevel.MEMORY_AND_DISK).checkpoint()
     else rdd.localCheckpoint()
-    spark.sparkContext.runJob(rdd, measure).sum
+    spark.sparkContext.runJob(rdd, measure)
   }
 
   /** A round's state materialised by [[leaf]]: the frame reading it, and
@@ -70,7 +72,7 @@ object Checkpoints {
     // the scan reuses one mutable row, so the cached rows are copies
     val rdd = df.queryExecution.toRdd.map(_.copy())
     val matching =
-      try materialize(df.sparkSession, rdd)(_.foldLeft(0L)((n, r) => if (pred(r)) n + 1 else n))
+      try materialize(df.sparkSession, rdd)(_.count(pred).toLong).sum
       catch { case t: Throwable => rdd.unpersist(false); throw t }
     new Leaf(org.apache.spark.sql.graft.Bridge.internalCreateDataFrame(
       df.sparkSession, rdd, df.schema), matching, rdd)

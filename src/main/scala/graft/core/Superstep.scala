@@ -17,25 +17,30 @@ import scala.collection.mutable.ArrayBuilder
   * LAYOUT. The edge list is shuffled ONCE under the
   * `HashPartitioner(spark.sql.shuffle.partitions)` vertex mapping into one
   * [[Block]] per partition: the ascending ids of the vertices that
-  * partition owns, their out-degrees, and their out-edges as CSR arrays
-  * whose rows are DESTINATION partitions (each row sorted by destination
-  * id, so messages to one vertex are adjacent and pre-combine in one
-  * linear pass). Vertex state is one `Array[Long]` per partition, aligned
-  * with the block's ids — co-partitioned with the edges, so `zipPartitions`
-  * pairs them without a shuffle.
+  * partition owns, and their out-edges as a [[Csr]] whose rows are
+  * DESTINATION partitions (each row sorted by destination id, so messages
+  * to one vertex are adjacent and pre-combine in one linear pass). On
+  * request the same shuffle also routes every edge to its destination's
+  * partition, which builds the reversed [[Csr]] for programs that send
+  * against edge direction. Vertex state is a fixed number of fields, one
+  * `Array[Long]` each, aligned with the block's ids — co-partitioned with
+  * the edges, so `zipPartitions` pairs them without a shuffle.
   *
   * COST MODEL. Each round is ONE Spark job of two stages:
-  *  - `zipPartitions(blocks, state)` walks the CSR rows and ships one pair
-  *    of primitive `(keys, values)` long arrays per destination partition
-  *    — the round's single message shuffle, O(E) messages at most
-  *    (pre-combined to O(V) when the program has a combiner, and only
-  *    from the previous round's changed vertices for delta programs);
-  *  - `zipPartitions(blocks, state, messages)` applies them and counts
-  *    the changed vertices in the same job, which also materialises the
-  *    round's state through [[Checkpoints.materialize]] (lineage cut;
-  *    reliable checkpoint under `spark.graft.checkpointDir`).
-  * Per-partition memory is the block plus two state arrays: O((V+E)/p)
-  * longs. Nothing is broadcast, and no SQL plan is re-planned per round.
+  *  - `zipPartitions(blocks, state)` computes each sending vertex's message
+  *    once, walks the CSR rows and ships one pair of primitive
+  *    `(keys, values)` long arrays per destination partition — the round's
+  *    single message shuffle, O(E) messages at most (pre-combined to O(V)
+  *    when the program has a combiner, and only from the previous round's
+  *    changed vertices for delta programs);
+  *  - `zipPartitions(blocks, state, messages)` applies them, counts the
+  *    changed vertices and sums the program's aggregator in the same job,
+  *    which also materialises the round's state through
+  *    [[Checkpoints.materialize]] (lineage cut; reliable checkpoint under
+  *    `spark.graft.checkpointDir`).
+  * Per-partition memory is the block plus two states of `width` longs a
+  * vertex: O((V+E)/p) longs at a fixed width. Nothing is broadcast, and no
+  * SQL plan is re-planned per round.
   *
   * RELEASE. [[run]] releases the edge blocks and every intermediate state
   * on every exit path (empty graph, a throwing program factory, task
@@ -43,12 +48,17 @@ import scala.collection.mutable.ArrayBuilder
   * holds and either returns its frame or calls [[Result.release]]. */
 object Superstep {
 
-  /** A vertex program over long-valued vertex state. */
-  abstract class Program extends Serializable {
-    /** State of vertex `id` before round 1. */
-    def init(id: Long): Long
-    /** Message a sending vertex ships along each of its out-edges. */
-    def message(value: Long, outDegree: Int): Long
+  /** A vertex program over `width` long fields per vertex: `state(f)(i)`
+    * is field `f` of the partition's `i`-th vertex. Rounds count from 1;
+    * `agg` is the previous round's aggregator sum (0 in round 1). */
+  abstract class WideProgram extends Serializable {
+    def width: Int = 1
+    /** Sets vertex `i`'s fields before round 1 (default: zeros). */
+    def init(id: Long, state: Array[Array[Long]], i: Int): Unit = ()
+    /** What vertex `i` ships along each of its `degree` (> 0) edges. */
+    def message(round: Int, agg: Long, state: Array[Array[Long]], i: Int, degree: Int): Long
+    /** Whether the round sends against edge direction (needs `reverse`). */
+    def reverse(round: Int): Boolean = false
     /** Only vertices whose state changed in the previous round send
       * (round 1: every vertex). Sound when the update is monotone and
       * idempotent in its messages, e.g. min-label propagation. */
@@ -56,54 +66,82 @@ object Superstep {
     /** Associative, commutative merge of two messages to one vertex,
       * applied on the sending side; `null` ships every message. */
     def combiner: (Long, Long) => Long = null
-    /** New state of vertex `id` from its old state and the messages
-      * `msgs(from until until)` it received (possibly none). May reorder
-      * that slice. */
-    def update(id: Long, value: Long, msgs: Array[Long], from: Int, until: Int): Long
+    /** Writes vertex `i`'s new fields into `next` from its `old` ones and
+      * the messages `msgs(from until until)` (possibly none; may reorder). */
+    def update(round: Int, agg: Long, id: Long, old: Array[Array[Long]],
+        next: Array[Array[Long]], i: Int, msgs: Array[Long], from: Int, until: Int): Unit
+    /** Vertex `i`'s share of the round's aggregator, from its new fields. */
+    def aggregate(round: Int, state: Array[Array[Long]], i: Int): Long = 0L
+    /** Whether a round that changes no vertex ends the run: off for a
+      * program whose next round would not repeat it. */
+    def halts: Boolean = true
   }
 
-  /** One partition's share of the graph (see the LAYOUT note above). */
-  final class Block(
-      val ids: Array[Long],
-      val outDegree: Array[Int],
-      val rowStart: Array[Int],
-      val edgeSrc: Array[Int],
+  /** A [[WideProgram]] over one long, blind to the round and aggregator. */
+  abstract class Program extends WideProgram {
+    def init(id: Long): Long
+    def message(value: Long, outDegree: Int): Long
+    def update(id: Long, value: Long, msgs: Array[Long], from: Int, until: Int): Long
+
+    final override def width: Int = 1
+    final override def init(id: Long, state: Array[Array[Long]], i: Int): Unit =
+      state(0)(i) = init(id)
+    final def message(round: Int, agg: Long, state: Array[Array[Long]], i: Int, degree: Int) =
+      message(state(0)(i), degree)
+    final def update(round: Int, agg: Long, id: Long, old: Array[Array[Long]],
+        next: Array[Array[Long]], i: Int, msgs: Array[Long], from: Int, until: Int): Unit =
+      next(0)(i) = update(id, old(0)(i), msgs, from, until)
+  }
+
+  /** One direction's edges of a partition: `degree(i)` edges leave its
+    * `i`-th vertex; row `q` holds those into partition `q`, from local
+    * vertex `edgeSrc(e)` to vertex id `edgeDst(e)`. */
+  final class Csr(val degree: Array[Int], val rowStart: Array[Int], val edgeSrc: Array[Int],
       val edgeDst: Array[Long]) extends Serializable
 
-  /** One partition's vertex state, aligned with its block's `ids`. */
-  final class State(
-      val ids: Array[Long],
-      val value: Array[Long],
-      val changed: java.util.BitSet,
-      val nChanged: Long) extends Serializable
+  /** One partition's share of the graph (see LAYOUT); `in` is null unless
+    * [[run]] built the reversed edges. */
+  final class Block(val ids: Array[Long], val out: Csr, val in: Csr) extends Serializable
+
+  /** One partition's vertex state, aligned with its block's `ids`, with
+    * the last round's changed vertices and aggregator share. */
+  final class State(val ids: Array[Long], val fields: Array[Array[Long]],
+      val changed: java.util.BitSet, val nChanged: Long, val agg: Long) extends Serializable
 
   /** Messages to one destination partition: `values(i)` goes to vertex
     * `keys(i)`. */
   private final class Messages(val keys: Array[Long], val values: Array[Long])
     extends Serializable
 
-  /** Edges routed to one partition during the build: `src(i) -> dst(i)`,
-    * plus `vertices` known to exist only as destinations. */
+  /** Edges routed to one partition during the build: `src(i) -> dst(i)`
+    * leave its vertices, `rsrc(i) -> rdst(i)` are reversed edges (empty
+    * unless requested), and `vertices` are known to exist only as
+    * destinations. */
   private final class Edges(val src: Array[Long], val dst: Array[Long],
+      val rsrc: Array[Long], val rdst: Array[Long],
       val vertices: Array[Long]) extends Serializable
 
-  /** Outcome of [[run]]: the final materialised state, and how many
-    * vertices the last round changed (0 = fixpoint reached). */
+  /** Outcome of [[run]]: the final materialised state, how many vertices
+    * the last round changed (0 = fixpoint reached), and its aggregator
+    * sum. */
   final class Result private[Superstep] (spark: SparkSession,
-      state: RDD[State], val lastChanged: Long) {
+      state: RDD[State], val lastChanged: Long, val aggregate: Long) {
 
-    /** `(id, state)` rows under `schema` (two long columns). The frame
-      * reads the materialised state, which stays cached as its backing. */
+    /** `(id, field 0, field 1, …)` rows under `schema` (1 + width long
+      * columns). The frame reads the materialised state, which stays
+      * cached as its backing. */
     def frame(schema: StructType): DataFrame =
       if (state == null)
         spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
       else {
         val rows = state.mapPartitions { it =>
-          val w = new UnsafeRowWriter(2)
+          val w = new UnsafeRowWriter(schema.length)
           it.flatMap { s =>
             Iterator.tabulate(s.ids.length) { i =>
               w.reset(); w.zeroOutNullBytes()
-              w.write(0, s.ids(i)); w.write(1, s.value(i))
+              w.write(0, s.ids(i))
+              var f = 0
+              while (f < s.fields.length) { w.write(f + 1, s.fields(f)(i)); f += 1 }
               w.getRow: InternalRow
             }
           }
@@ -128,55 +166,67 @@ object Superstep {
 
   /** Runs a vertex program over `edges` — two long columns `(src, dst)`;
     * rows with a null endpoint are dropped — for at most `maxRounds`
-    * rounds, stopping after the first round that changes no vertex (the
-    * programs are deterministic, so every later round would repeat it).
+    * rounds, stopping after the first round that changes no vertex when
+    * the program [[WideProgram.halts]].
     *
     * @param undirected each row also yields the edge `dst -> src`
-    * @param simple     drop self-loops and parallel edges
+    * @param simple     drop parallel edges, and an undirected graph's
+    *                   self-loops (a directed self-loop is kept once)
+    * @param reverse    also build the reversed edges of a directed graph,
+    *                   for a program that sends against edge direction
     * @param program    builds the program from the vertex count; it may
     *                   throw to reject the graph */
-  def run(edges: DataFrame, undirected: Boolean, simple: Boolean,
-      maxRounds: Int)(program: Long => Program): Result = {
-    require(maxRounds >= 1)
+  def run(edges: DataFrame, undirected: Boolean, simple: Boolean, maxRounds: Int,
+      reverse: Boolean = false)(program: Long => WideProgram): Result = {
+    require(maxRounds >= 1 && !(undirected && reverse))
     val spark = edges.sparkSession
     val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val blocks = buildBlocks(edges, parts, undirected, simple)
+    val blocks = buildBlocks(edges, parts, undirected, simple, reverse)
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
       val n = spark.sparkContext.runJob(blocks, (it: Iterator[Block]) =>
         it.map(_.ids.length.toLong).sum).sum
       val prog = program(n)
-      if (n == 0) new Result(spark, null, 0L)
+      if (n == 0) new Result(spark, null, 0L, 0L)
       else loop(spark, blocks, parts, prog, maxRounds)
     } finally blocks.unpersist(false)
   }
 
   private def loop(spark: SparkSession, blocks: RDD[Block], parts: Int,
-      prog: Program, maxRounds: Int): Result = {
+      prog: WideProgram, maxRounds: Int): Result = {
     var state: RDD[State] = blocks.mapPartitions(_.map { b =>
       val n = b.ids.length
+      val fields = Array.fill(prog.width)(new Array[Long](n))
+      var i = 0
+      while (i < n) { prog.init(b.ids(i), fields, i); i += 1 }
       val all = new java.util.BitSet(n)
       all.set(0, n)
-      new State(b.ids, b.ids.map(prog.init), all, n)
+      new State(b.ids, fields, all, n, 0L)
     }, preservesPartitioning = true)
     var prev: RDD[State] = null
     try {
       var round = 0
       var changed = 1L
-      while (round < maxRounds && changed > 0) {
+      var agg = 0L
+      while (round < maxRounds && (changed > 0 || !prog.halts)) {
+        round += 1
         prev = state
-        val messages = blocks.zipPartitions(prev)((bs, ss) => send(bs.next(), ss.next(), prog))
-          .partitionBy(new HashPartitioner(parts))
+        val (r, a) = (round, agg)
+        val messages = blocks.zipPartitions(prev)((bs, ss) =>
+          send(bs.next(), ss.next(), prog, r, a)).partitionBy(new HashPartitioner(parts))
         state = blocks.zipPartitions(prev, messages) { (bs, ss, ms) =>
-          Iterator.single(receive(bs.next(), ss.next(), ms, prog))
+          Iterator.single(receive(bs.next(), ss.next(), ms, prog, r, a))
         }
-        changed = Checkpoints.materialize(spark, state)(_.map(_.nChanged).sum)
+        val stats = Checkpoints.materialize(spark, state) { it =>
+          val s = it.next(); (s.nChanged, s.agg)
+        }
+        changed = stats.map(_._1).sum
+        agg = stats.map(_._2).foldLeft(0L)(Math.addExact(_: Long, _: Long))
         prev.unpersist(false)
         prev = null
-        round += 1
         if (afterRound != null) afterRound(round, state)
       }
-      new Result(spark, state, changed)
+      new Result(spark, state, changed, agg)
     } catch {
       case t: Throwable =>
         // unpersisting the never-persisted initial state is a no-op
@@ -187,27 +237,35 @@ object Superstep {
   }
 
   /** Ships the round's messages: one `(keys, values)` pair per destination
-    * partition, walking the block's CSR rows. */
-  private def send(b: Block, s: State, prog: Program): Iterator[(Int, Messages)] = {
+    * partition, walking the CSR rows of the round's direction. */
+  private def send(b: Block, s: State, prog: WideProgram, round: Int,
+      agg: Long): Iterator[(Int, Messages)] = {
+    val csr = if (prog.reverse(round)) b.in else b.out
     val combine = prog.combiner
     val delta = prog.deltaOnly
+    val msg = new Array[Long](b.ids.length)
+    var v = 0
+    while (v < msg.length) {
+      if (csr.degree(v) > 0 && (!delta || s.changed.get(v)))
+        msg(v) = prog.message(round, agg, s.fields, v, csr.degree(v))
+      v += 1
+    }
     val out = Iterator.newBuilder[(Int, Messages)]
     var q = 0
-    while (q < b.rowStart.length - 1) {
-      val from = b.rowStart(q)
-      val until = b.rowStart(q + 1)
+    while (q < csr.rowStart.length - 1) {
+      val from = csr.rowStart(q)
+      val until = csr.rowStart(q + 1)
       val keys = new Array[Long](until - from)
       val values = new Array[Long](until - from)
       var m = 0
       var i = from
       while (i < until) {
-        val src = b.edgeSrc(i)
+        val src = csr.edgeSrc(i)
         if (!delta || s.changed.get(src)) {
-          val v = prog.message(s.value(src), b.outDegree(src))
-          val dst = b.edgeDst(i)
+          val dst = csr.edgeDst(i)
           if (combine != null && m > 0 && keys(m - 1) == dst)
-            values(m - 1) = combine(values(m - 1), v)
-          else { keys(m) = dst; values(m) = v; m += 1 }
+            values(m - 1) = combine(values(m - 1), msg(src))
+          else { keys(m) = dst; values(m) = msg(src); m += 1 }
         }
         i += 1
       }
@@ -220,10 +278,10 @@ object Superstep {
   }
 
   /** Applies one round's messages to a partition's state: buckets them
-    * per local vertex (counting sort), updates every vertex and counts
-    * the changed ones. */
+    * per local vertex (counting sort), updates every vertex, and counts
+    * the changed ones and sums the aggregator. */
   private def receive(b: Block, s: State, in: Iterator[(Int, Messages)],
-      prog: Program): State = {
+      prog: WideProgram, round: Int, agg: Long): State = {
     val n = b.ids.length
     val batches = in.map(_._2).toArray
     // local vertex index of every message, and per-vertex counts
@@ -254,52 +312,67 @@ object Superstep {
       while (k < idx.length) { msgs(fill(idx(k))) = vs(k); fill(idx(k)) += 1; k += 1 }
       j += 1
     }
-    val value = new Array[Long](n)
+    val fields = Array.fill(s.fields.length)(new Array[Long](n))
     val changed = new java.util.BitSet(n)
     var nChanged = 0L
+    var sum = 0L
     i = 0
     while (i < n) {
-      value(i) = prog.update(b.ids(i), s.value(i), msgs, start(i), start(i + 1))
-      if (value(i) != s.value(i)) { changed.set(i); nChanged += 1 }
+      prog.update(round, agg, b.ids(i), s.fields, fields, i, msgs, start(i), start(i + 1))
+      var f = 0
+      while (f < fields.length && fields(f)(i) == s.fields(f)(i)) f += 1
+      if (f < fields.length) { changed.set(i); nChanged += 1 }
+      sum = Math.addExact(sum, prog.aggregate(round, fields, i))
       i += 1
     }
-    new State(b.ids, value, changed, nChanged)
+    new State(b.ids, fields, changed, nChanged, sum)
   }
 
   /** The one edge shuffle: routes every edge to its source's partition
-    * (and, when directed, each destination id to its own partition) as
-    * primitive arrays, then assembles one [[Block]] per partition. */
+    * (and, when directed, each destination id — or with `reverse` the
+    * reversed edge — to the destination's partition) as primitive arrays,
+    * then assembles one [[Block]] per partition. */
   private def buildBlocks(edges: DataFrame, parts: Int, undirected: Boolean,
-      simple: Boolean): RDD[Block] =
+      simple: Boolean, reverse: Boolean): RDD[Block] =
     edges.queryExecution.toRdd.mapPartitions { rows =>
-      val src = Array.fill(parts)(new ArrayBuilder.ofLong)
-      val dst = Array.fill(parts)(new ArrayBuilder.ofLong)
-      val vertices = Array.fill(parts)(new ArrayBuilder.ofLong)
+      def builders() = Array.fill(parts)(new ArrayBuilder.ofLong)
+      val (src, dst, rsrc, rdst, vertices) =
+        (builders(), builders(), builders(), builders(), builders())
       rows.foreach { r =>
         if (!r.isNullAt(0) && !r.isNullAt(1)) {
           val a = r.getLong(0)
           val c = r.getLong(1)
-          if (!simple || a != c) {
+          if (!simple || !undirected || a != c) {
             val pa = owner(a, parts)
             src(pa).addOne(a); dst(pa).addOne(c)
             val pc = owner(c, parts)
             if (undirected) { src(pc).addOne(c); dst(pc).addOne(a) }
+            else if (reverse) { rsrc(pc).addOne(c); rdst(pc).addOne(a) }
             else vertices(pc).addOne(c)
           }
         }
       }
       Iterator.tabulate(parts)(q => q -> new Edges(src(q).result(), dst(q).result(),
-        sortedUnique(vertices(q).result())))
-        .filter { case (_, e) => e.src.nonEmpty || e.vertices.nonEmpty }
+        rsrc(q).result(), rdst(q).result(), sortedUnique(vertices(q).result())))
+        .filter { case (_, e) => e.src.nonEmpty || e.rsrc.nonEmpty || e.vertices.nonEmpty }
     }.partitionBy(new HashPartitioner(parts))
-      .mapPartitions(in => Iterator.single(assemble(in.map(_._2).toArray, parts, simple)),
-        preservesPartitioning = true)
+      .mapPartitions(in => Iterator.single(assemble(in.map(_._2).toArray, parts, simple,
+        reverse)), preservesPartitioning = true)
 
   /** One partition's [[Block]] from the edges routed to it. */
-  private def assemble(in: Array[Edges], parts: Int, simple: Boolean): Block = {
-    val src = Array.concat(in.map(_.src).toIndexedSeq: _*)
-    val dst = Array.concat(in.map(_.dst).toIndexedSeq: _*)
-    val ids = sortedUnique(Array.concat(src +: in.map(_.vertices).toIndexedSeq: _*))
+  private def assemble(in: Array[Edges], parts: Int, simple: Boolean,
+      reverse: Boolean): Block = {
+    def concat(f: Edges => Array[Long]) = Array.concat(in.map(f).toIndexedSeq: _*)
+    val (src, dst, rsrc) = (concat(_.src), concat(_.dst), concat(_.rsrc))
+    val ids = sortedUnique(Array.concat(src, rsrc, concat(_.vertices)))
+    new Block(ids, csr(ids, src, dst, parts, simple),
+      if (reverse) csr(ids, rsrc, concat(_.rdst), parts, simple) else null)
+  }
+
+  /** The [[Csr]] of the edges `src(e) -> dst(e)` leaving the vertices
+    * `ids`; `simple` keeps each distinct edge once. */
+  private def csr(ids: Array[Long], src: Array[Long], dst: Array[Long], parts: Int,
+      simple: Boolean): Csr = {
     // order edges by (destination, source) through one primitive sort of
     // packed (destination rank, source index) keys; a stable counting
     // sort by destination partition then yields the CSR rows
@@ -323,17 +396,17 @@ object Superstep {
     val fill = java.util.Arrays.copyOf(rowStart, parts)
     val edgeSrc = new Array[Int](keep.length)
     val edgeDst = new Array[Long](keep.length)
-    val outDegree = new Array[Int](ids.length)
+    val degree = new Array[Int](ids.length)
     e = 0
     while (e < keep.length) {
       val dr = (keep(e) >>> 32).toInt
       val at = fill(dstOwner(dr))
       fill(dstOwner(dr)) += 1
       edgeSrc(at) = keep(e).toInt; edgeDst(at) = dsts(dr)
-      outDegree(edgeSrc(at)) += 1
+      degree(edgeSrc(at)) += 1
       e += 1
     }
-    new Block(ids, outDegree, rowStart, edgeSrc, edgeDst)
+    new Csr(degree, rowStart, edgeSrc, edgeDst)
   }
 
   /** Sorts `a` in place and returns its distinct values. */

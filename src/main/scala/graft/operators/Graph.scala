@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.graft.Bridge.nullable
 import graft.core.{Checkpoints, Superstep}
 
 /** Distributed graph statistics over an edge list — no graph library, just
@@ -149,10 +150,9 @@ object Graph {
   private def longEdges(edges: DataFrame, src: String, dst: String): DataFrame =
     edges.select(col(src).cast("long"), col(dst).cast("long"))
 
-  /** Superstep output: `(node, <value>)`, both non-null longs. */
-  private def stateSchema(value: String): StructType =
-    StructType(Seq(StructField("node", LongType, nullable = false),
-      StructField(value, LongType, nullable = false)))
+  /** Superstep output: `(node, <fields>…)`, all non-null longs. */
+  private def stateSchema(fields: String*): StructType =
+    StructType(("node" +: fields).map(StructField(_, LongType, nullable = false)))
 
   /** Integer PageRank's round: `base + dampingPct · Σ shares // 100`, each
     * share `rank // outDegree`. With a `source`, the initial mass and the
@@ -174,50 +174,49 @@ object Graph {
     }
   }
 
-  /** Bounded-round k-core peeling: `rounds` synchronized sweeps of the
-    * textbook fixpoint — drop every node whose degree in the surviving
-    * subgraph is < `k`, shrink the edge set to surviving endpoints,
-    * repeat. Returns the nodes remaining after the last sweep with their
-    * subgraph degrees (the k-core once converged; peeling converges
-    * rapidly, and a truncated run is still deterministic — the oracle
-    * unrolls the SAME round count, so both engines agree converged or
-    * not). Per round: one degree aggregation + two semi-joins on a
-    * monotonically shrinking edge frame; each round's frame is
-    * lineage-truncated by [[Checkpoints.truncate]] so the plan
-    * doesn't grow with rounds.
+  /** Bounded-round k-core peeling: `rounds` synchronized sweeps, each
+    * dropping every node with fewer than `k` surviving neighbours at once.
+    * Returns `(node, degree)` for each survivor with a surviving
+    * neighbour, `degree` counting those (the k-core once converged). A
+    * truncated run is deterministic — the oracle unrolls the SAME sweep
+    * count — so it also returns survivors left below `k`. The graph is
+    * that of [[canonicalEdges]]. Node ids must be integral; `node` keeps
+    * their type.
     *
-    * EARLY EXIT: peeling only ever removes edges, so an unchanged edge
-    * count after a sweep IS the fixpoint — every surviving node already
-    * has degree ≥ k. The O(1)-row driver probe (the Pregel termination
-    * shape) stops the loop there; the count
-    * scans the round's eagerly-truncated blocks, not recomputed lineage.
-    * A truncated (`rounds` too small) run remains deterministic for the
-    * oracle: the SQL twin unrolls the same round count, and once both
-    * have converged extra unrolled rounds are no-ops. */
+    * Cost model: sweeps are [[graft.core.Superstep]] rounds — one Spark
+    * job per sweep with ONE message shuffle (each survivor's 1 to every
+    * neighbour, pre-summed per destination), then one round that only
+    * counts. A node holds its surviving-neighbour count, or -1 once
+    * peeled; a sweep that peels nobody ends the loop early. */
   def kCorePeel(edges: DataFrame, src: String, dst: String, k: Int,
       rounds: Int): DataFrame = {
     require(k >= 1 && rounds >= 1)
-    // (the fused materialize+count of a constant-stat Checkpoints.leaf
-    // was tried in this loop and MEASURED SLOWER: the leaf hides the
-    // shrinking edge frame's real size from the planner, flipping the keep
-    // semi-joins off their stats-justified broadcast — truncate's computed
-    // stats are the size-adaptive shape here. Reverted.)
-    var e = canonicalEdges(edges, src, dst).transform(Checkpoints.truncate)
-    var prevEdges = e.count()
-    var round = 0
-    var converged = prevEdges == 0
-    while (round < rounds && !converged) {
-      round += 1
-      val keep = degrees(e).filter(col("degree") >= k).select("node")
-      e = e.join(keep.withColumnRenamed("node", "a"), Seq("a"), "left_semi")
-        .join(keep.withColumnRenamed("node", "b"), Seq("b"), "left_semi")
-        .select("a", "b")
-        .transform(Checkpoints.truncate)
-      val nEdges = e.count()
-      converged = nEdges == prevEdges
-      prevEdges = nEdges
+    val idType = integralIds(edges, src, dst, "kCorePeel")
+    Superstep.run(longEdges(edges, src, dst), undirected = true, simple = true,
+        maxRounds = rounds + 1)(_ => new PeelProgram(k, rounds))
+      .frame(stateSchema("degree"))
+      .filter(col("degree") > 0L)
+      .select(col("node").cast(idType).as("node"), col("degree"))
+  }
+
+  /** The endpoints' id type, which must be integral. */
+  private def integralIds(edges: DataFrame, src: String, dst: String, op: String): DataType = {
+    val idType = edges.select(least(col(src), col(dst))).schema.head.dataType
+    require(Seq(ByteType, ShortType, IntegerType, LongType).contains(idType),
+      s"$op needs integral node ids, got $idType")
+    idType
+  }
+
+  /** k-core's sweep: rounds `1 to rounds` peel, the one after only counts. */
+  private final class PeelProgram(k: Int, rounds: Int) extends Superstep.WideProgram {
+    def message(round: Int, agg: Long, state: Array[Array[Long]], i: Int, degree: Int): Long =
+      if (state(0)(i) < 0L) 0L else 1L
+    override val combiner: (Long, Long) => Long = _ + _
+    def update(round: Int, agg: Long, id: Long, old: Array[Array[Long]],
+        next: Array[Array[Long]], i: Int, msgs: Array[Long], from: Int, until: Int): Unit = {
+      val alive = (from until until).foldLeft(0L)((n, j) => n + msgs(j))
+      next(0)(i) = if (old(0)(i) < 0L || (round <= rounds && alive < k)) -1L else alive
     }
-    degrees(e)
   }
 
   /** Synchronous label-propagation communities (Raghavan, Albert &
@@ -245,9 +244,7 @@ object Graph {
   def labelPropagation(edges: DataFrame, src: String, dst: String,
       rounds: Int): DataFrame = {
     require(rounds >= 1)
-    val idType = edges.select(least(col(src), col(dst))).schema.head.dataType
-    require(Seq(ByteType, ShortType, IntegerType, LongType).contains(idType),
-      s"labelPropagation needs integral node ids, got $idType")
+    val idType = integralIds(edges, src, dst, "labelPropagation")
     Superstep.run(longEdges(edges, src, dst),
         undirected = true, simple = true, maxRounds = rounds)(_ => ModeLabel)
       .frame(StructType(Seq(StructField("node", LongType, nullable = false),
@@ -357,71 +354,59 @@ object Graph {
   /** Harmonic centrality from a pinned seed set, via MULTI-SOURCE
     * level-synchronous BFS with a bitmask frontier: all `sources` (≤ 64)
     * explore in ONE propagation loop — per node the visited state is a
-    * single long whose bit `i` is set once seed `i` has reached it, so the
-    * per-hop work is one frontier⋈edges join + one `bit_or` aggregate
-    * regardless of seed count (64× cheaper than per-seed BFS). Newly set
-    * bits at hop `h` contribute `popcount / h` to the node's harmonic sum
+    * single long whose bit `i` is set once seed `i` has reached it, so a
+    * hop costs the same for any seed count. Newly set bits at hop `h`
+    * contribute `popcount / h` to the node's harmonic sum
     * `h(v) = Σ_{seeds s ≠ v} 1 / d(s, v)` (unreachable seeds contribute
     * 0 — the property harmonic centrality has and closeness lacks).
     *
-    * Scale shape: edges cached pre-partitioned on the source key, the O(F)
-    * frontier shuffles into place, and each hop's merged state is one
-    * [[graft.core.Checkpoints.leaf]] whose materialising job also counts
-    * the next frontier (the O(1)-row termination probe). Returns the top-`k`
-    * nodes: `(node, n_seeds, harmonic)`, ranked `(harmonic desc, node)` on
-    * the 6-dp-rounded sum so the cut is engine-reproducible. */
+    * Cost model: hops are [[graft.core.Superstep]] rounds over directed
+    * edges — one Spark job per hop with ONE message shuffle (the masks of
+    * the nodes that gained bits in the previous hop, OR-combined per
+    * destination); a node holds its mask and its sum as raw double bits,
+    * added in hop order. A hop that sets no bit ends the loop early.
+    * Returns the top-`k` nodes: `(node, n_seeds, harmonic)`, ranked
+    * `(harmonic desc, node)` on the 6-dp-rounded sum so the cut is
+    * engine-reproducible. */
   def harmonicCentrality(edges: DataFrame, src: String, dst: String,
       sources: Seq[Long], maxHops: Int, k: Int): DataFrame = {
     require(sources.nonEmpty && sources.size <= 64, "at most 64 seeds per mask")
     require(sources.distinct.size == sources.size, "seeds must be distinct")
     val spark = edges.sparkSession
     import spark.implicits._
-    val e = edges.filter(col(src).isNotNull && col(dst).isNotNull)
-      .select(col(src).cast("long").as("u"), col(dst).cast("long").as("v"))
-      .distinct()
-      .repartition(col("u"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var visited = sources.zipWithIndex
-      .map { case (s, i) => (s, 1L << i) }
-      .toDF("node", "mask")
-    var frontier = visited
-    val contribs = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    var hop = 0
-    var frontierSize = sources.size.toLong
-    while (hop < maxHops && frontierSize > 0) {
-      hop += 1
-      val prop = e
-        .join(frontier.select(col("node").as("u"), col("mask").as("fm")), Seq("u"))
-        .groupBy(col("v").as("node"))
-        .agg(expr("bit_or(fm)").as("pm"))
-      // ONE fused job materializes the hop's merged state leaf AND counts
-      // the new-bit frontier rows for the termination probe. Every hop's
-      // leaf stays cached until the final contribution aggregate consumes
-      // it.
-      val mergedLeaf = Checkpoints.leaf(
-        visited.join(prop, Seq("node"), "full_outer")
-          .select(col("node"),
-            coalesce(col("mask"), lit(0L)).as("old"),
-            coalesce(col("pm"), lit(0L)).as("pm"))
-          .withColumn("nw", expr("pm & ~old")))(_.getLong(3) != 0L)
-      val merged = mergedLeaf.frame
-      contribs += merged.filter(col("nw") =!= 0L)
-        .select(col("node"),
-          (expr("bit_count(nw)").cast("double") / hop).as("inv"),
-          expr("bit_count(nw)").cast("long").as("cnt"))
-      frontier = merged.filter(col("nw") =!= 0L)
-        .select(col("node"), col("nw").as("mask"))
-      frontierSize = mergedLeaf.matching
-      visited = merged.select(col("node"), expr("old | pm").as("mask"))
-    }
-    e.unpersist()
-    if (contribs.isEmpty) return Seq.empty[(Long, Long, Double)]
-      .toDF("node", "n_seeds", "harmonic")
-    contribs.reduce(_ unionByName _)
-      .groupBy("node")
-      .agg(sum(col("cnt")).as("n_seeds"), round(sum(col("inv")), 6).as("harmonic"))
+    if (maxHops < 1) return Seq.empty[(Long, Long, Double)].toDF("node", "n_seeds", "harmonic")
+    val bits = sources.zipWithIndex.map { case (s, i) => s -> (1L << i) }.toMap
+    val asDouble = udf(java.lang.Double.longBitsToDouble _)
+    // node and n_seeds keep the nullable types of the operator's contract
+    Superstep.run(longEdges(edges, src, dst), undirected = false, simple = true,
+        maxRounds = maxHops)(_ => new HarmonicProgram(bits))
+      .frame(stateSchema("mask", "sum"))
+      .filter(col("sum") =!= 0L)
+      .select(nullable(col("node")).as("node"), nullable((expr("bit_count(mask)") -
+          when(col("node").isin(sources: _*), 1).otherwise(0)).cast("long")).as("n_seeds"),
+        round(asDouble(col("sum")), 6).as("harmonic"))
       .orderBy(col("harmonic").desc, col("node").asc)
       .limit(k)
+  }
+
+  /** Harmonic centrality's hop: OR the in-neighbours' masks into the own
+    * mask, and add `popcount(new bits) / hop` to the sum. */
+  private final class HarmonicProgram(seedBit: Map[Long, Long]) extends Superstep.WideProgram {
+    override def width: Int = 2
+    override def init(id: Long, state: Array[Array[Long]], i: Int): Unit =
+      state(0)(i) = seedBit.getOrElse(id, 0L)
+    def message(round: Int, agg: Long, state: Array[Array[Long]], i: Int, degree: Int): Long =
+      state(0)(i)
+    override def deltaOnly: Boolean = true
+    override val combiner: (Long, Long) => Long = _ | _
+    def update(round: Int, agg: Long, id: Long, old: Array[Array[Long]],
+        next: Array[Array[Long]], i: Int, msgs: Array[Long], from: Int, until: Int): Unit = {
+      val mask = (from until until).foldLeft(old(0)(i))((m, j) => m | msgs(j))
+      val fresh = java.lang.Long.bitCount(mask & ~old(0)(i))
+      next(0)(i) = mask
+      next(1)(i) = if (fresh == 0) old(1)(i) else java.lang.Double.doubleToRawLongBits(
+        java.lang.Double.longBitsToDouble(old(1)(i)) + fresh.toDouble / round)
+    }
   }
 
   /** Co-occurrence edge list: items sharing a basket become edges (a<b,
@@ -754,83 +739,65 @@ object Graph {
     * any engine (the same contract as [[pageRank]]).
     *
     * Per iteration: `auth'(v) = Σ_{u→v} hub(u)` then L1-normalize to total
-    * `scale`, then `hub'(u) = Σ_{u→v} auth(v)` normalized likewise. Sums
-    * are exact BIGINT; each normalization is one `DECIMAL(38,0)` multiply
-    * followed by integral `div` (floor for the non-negative operands here),
-    * so no float enters the loop and addition order cannot matter. L1
-    * (not the textbook L2) keeps the arithmetic closed over integers; the
-    * ranking it induces is identical because normalization is a positive
-    * per-side constant.
+    * `scale`, then `hub'(u) = Σ_{u→v} auth(v)` normalized likewise, from
+    * hub scores `scale / #hubs`. Sums are exact longs and each
+    * normalization is the exact 128-bit `floor(s · scale / t)`, so no
+    * float enters the loop and addition order cannot matter. L1 (not the
+    * textbook L2) keeps the arithmetic closed over integers and induces
+    * the same ranking. Parallel edges count once, self-loops count, rows
+    * with a null endpoint are dropped. Returns `(role, node, score)`: a
+    * `hub` row per node with out-edges, an `authority` row per node with
+    * in-edges. Fails with "empty graph" when no edge remains.
     *
-    * Scale shape: the O(E) edge frame is cached once, pre-partitioned on
-    * the side each aggregation groups by; per iteration the O(N) score
-    * frame broadcasts into it (scores are ≤ |nodes| rows, ~16 bytes a
-    * node, so the hint holds while that frame fits executor and driver
-    * memory), the normalizer is a one-row aggregate, and lineage
-    * truncates per round.
-    * Nodes with no in-edges (resp. out-edges) hold authority (resp. hub)
-    * score 0, matching the algebra.
-    *
-    * `broadcastScores = false` is the beyond-the-threshold fallback: the
-    * per-iteration score joins drop the broadcast hint and become ordinary
-    * keyed joins — the O(N) score frame shuffles on its node key instead
-    * of materializing on
-    * every executor, so a graph whose score frame outgrows the broadcast
-    * limit degrades to two exchanges per iteration instead of dying. */
+    * Cost model: each half-iteration is a [[graft.core.Superstep]] round —
+    * one Spark job with ONE message shuffle, along the edges for the
+    * authorities and against them for the hubs; a node holds both scores,
+    * and the total that normalizes a half is that round's aggregator.
+    * Nothing is broadcast. */
   def hits(edges: DataFrame, src: String, dst: String, iters: Int = 3,
-      scale: Long = 1000000000000L,
-      broadcastScores: Boolean = true): DataFrame = {
+      scale: Long = 1000000000000L): DataFrame = {
     require(iters >= 1)
-    // Two cached copies pre-partitioned per aggregation side: on the
-    // broadcast path the auth pass streams the v-partitioned copy against
-    // the broadcast hub frame so its groupBy(v) runs with NO per-iteration
-    // O(E) exchange, and the hub pass uses the u-partitioned copy the same
-    // way — previously every half-iteration re-shuffled the full edge
-    // list (6 O(E) exchanges at iters = 3). On the no-broadcast fallback
-    // the roles swap: the score join is co-partitioned and only the
-    // groupBy side pays the one unavoidable Pregel-superstep exchange.
-    val e0 = edges
-      .filter(col(src).isNotNull && col(dst).isNotNull)
-      .select(col(src).cast("long").as("u"), col(dst).cast("long").as("v"))
-      .distinct()
-    val ev = e0.repartition(col("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val eu = ev.repartition(col("u"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // auth pass groups by v, hub pass by u; pick the copy whose cached
-    // partitioning the pass's expensive side keeps
-    val (eAuth, eHub) = if (broadcastScores) (ev, eu) else (eu, ev)
-    val hubs = eu.select(col("u")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nHubs = hubs.count()
-    require(nHubs > 0, "empty graph")
-    // L1-normalize a (node, s) frame to total `scale`: exact decimal
-    // product, integral div (both engines floor non-negatives identically)
-    def normalized(scores: DataFrame): DataFrame = {
-      val total = scores.agg(sum(col("s")).cast("decimal(38,0)").as("t"))
-      scores.crossJoin(broadcast(total))
-        .select(col("node"),
-          expr(s"cast(cast(s as decimal(38,0)) * $scale as decimal(38,0)) div t")
-            .as("s"))
-        .transform(Checkpoints.truncate)
+    val run = Superstep.run(longEdges(edges, src, dst), undirected = false, simple = true,
+        maxRounds = 2 * iters, reverse = true) { n =>
+      require(n > 0, "empty graph")
+      new HitsProgram(scale)
     }
-    val maybeBc = (d: DataFrame) => if (broadcastScores) broadcast(d) else d
-    var hub = hubs.select(col("u").as("node"), lit(scale / nHubs).as("s"))
-    var auth: DataFrame = null
-    (1 to iters).foreach { _ =>
-      auth = normalized(
-        eAuth.join(maybeBc(hub), eAuth("u") === hub("node"))
-          .groupBy(col("v").as("node")).agg(sum(col("s")).as("s")))
-      hub = normalized(
-        eHub.join(maybeBc(auth), eHub("v") === auth("node"))
-          .groupBy(col("u").as("node")).agg(sum(col("s")).as("s")))
+    val state = run.frame(stateSchema("authority", "hub"))
+    val total = run.aggregate // the last half summed the hub scores
+    val hubScore = udf((s: Long) => normalized(s, total, scale))
+    // node and score keep the nullable types of the operator's contract
+    state.filter(col("hub") >= 0L)
+      .select(lit("hub").as("role"), nullable(col("node")).as("node"),
+        nullable(hubScore(col("hub"))).as("score"))
+      .unionByName(state.filter(col("authority") >= 0L)
+        .select(lit("authority").as("role"), col("node"), col("authority").as("score")))
+  }
+
+  /** `floor(s · scale / t)` over the exact product, for `0 <= s <= t`. */
+  private def normalized(s: Long, t: Long, scale: Long): Long = (BigInt(s) * scale / t).toLong
+
+  /** HITS's half-iterations over (authority, hub): odd rounds send hub
+    * scores along the edges and sum authorities, even rounds send
+    * authority scores against them and sum hubs. A score stays a raw sum
+    * until the next round normalizes it by the aggregated total; -1 marks
+    * a node without in-edges (authority) or out-edges (hub). Round 1
+    * sends 1 per hub, which normalizes like `scale / #hubs` does. */
+  private final class HitsProgram(scale: Long) extends Superstep.WideProgram {
+    override def width: Int = 2
+    override def reverse(round: Int): Boolean = round % 2 == 0
+    override val combiner: (Long, Long) => Long = Math.addExact(_: Long, _: Long)
+    override def halts: Boolean = false // the halves alternate
+    def message(round: Int, agg: Long, state: Array[Array[Long]], i: Int, degree: Int): Long =
+      if (round == 1) 1L else normalized(state(round % 2)(i), agg, scale)
+    def update(round: Int, agg: Long, id: Long, old: Array[Array[Long]],
+        next: Array[Array[Long]], i: Int, msgs: Array[Long], from: Int, until: Int): Unit = {
+      val (sent, own) = (round % 2, old(round % 2)(i))
+      val sum = (from until until).foldLeft(0L)((a, j) => Math.addExact(a, msgs(j)))
+      next(1 - sent)(i) = if (from == until) -1L else sum
+      next(sent)(i) = if (round == 1 || own < 0L) own else normalized(own, agg, scale)
     }
-    val out = hub.select(lit("hub").as("role"), col("node"), col("s").as("score"))
-      .unionByName(auth.select(lit("authority").as("role"), col("node"),
-        col("s").as("score")))
-      .transform(Checkpoints.truncate) // eager: safe to unpersist
-    ev.unpersist(); eu.unpersist(); hubs.unpersist()
-    out
+    override def aggregate(round: Int, state: Array[Array[Long]], i: Int): Long =
+      math.max(state(1 - round % 2)(i), 0L)
   }
 
   /** Min-label fixpoint with a HASH-TO-MIN composition step: `label(v)`

@@ -25,7 +25,8 @@ class CheckpointSpec extends SparkSpec {
       Graph.bfsHops(edges, "src", "dst", source = 0L, maxHops = 3).orderBy("node"),
       Graph.personalizedPageRank(edges, "src", "dst", source = 0L, iters = 3)
         .orderBy("node"),
-      Graph.harmonicCentrality(edges, "src", "dst", Seq(0L, 1L, 2L), maxHops = 3, k = 20))
+      Graph.harmonicCentrality(edges, "src", "dst", Seq(0L, 1L, 2L), maxHops = 3, k = 20),
+      Graph.hits(edges, "src", "dst", iters = 2).orderBy("role", "node"))
       .map(_.collect().toSeq)
     val local = all() // default path: localCheckpoint
     val dir = "/tmp/graft_ckpt_spec"
@@ -88,6 +89,8 @@ class CheckpointSpec extends SparkSpec {
     writesUnderConf("ppr")(
       Graph.personalizedPageRank(edges, "src", "dst", source = 1L, iters = 2).collect())
     writesUnderConf("condensation")(Graph.sccCondensation(edges, "src", "dst").collect())
+    writesUnderConf("kcore")(Graph.kCorePeel(edges, "src", "dst", k = 1, rounds = 2).collect())
+    writesUnderConf("hits")(Graph.hits(edges, "src", "dst", iters = 1).collect())
   }
 
   test("harmonicCentrality alone writes its hop leaves under the conf dir") {

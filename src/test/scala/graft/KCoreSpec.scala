@@ -76,4 +76,47 @@ class KCoreSpec extends SparkSpec {
       .collect().map(_.getLong(0)).sorted
     assert(after2.toSeq == Seq(3L, 4L)) // next endpoints gone
   }
+
+  test("kCorePeel rejects non-integral ids and keeps an integral id type") {
+    val s = spark
+    import s.implicits._
+    val named = Seq(("a", "b"), ("b", "c"), ("c", "a")).toDF("src", "dst")
+    val e = intercept[IllegalArgumentException](
+      Graph.kCorePeel(named, "src", "dst", k = 2, rounds = 2))
+    assert(e.getMessage.contains("kCorePeel needs integral node ids, got StringType"),
+      e.getMessage)
+    val ints = Seq((1, 2), (2, 3), (3, 1), (3, 4)).toDF("src", "dst")
+    val out = Graph.kCorePeel(ints, "src", "dst", k = 2, rounds = 3)
+    assert(out.schema("node").dataType === org.apache.spark.sql.types.IntegerType)
+    assert(out.collect().map(r => r.getInt(0) -> r.getLong(1)).toMap ==
+      Map(1 -> 2L, 2 -> 2L, 3 -> 2L))
+  }
+
+  test("kCorePeel equals a driver-side peel on random graphs, truncated and converged") {
+    val s = spark
+    import s.implicits._
+    val rnd = new scala.util.Random(29)
+    /** `rounds` synchronized sweeps, then each survivor's surviving degree. */
+    def reference(edges: Seq[(Long, Long)], k: Int, rounds: Int): Map[Long, Long] = {
+      val und = edges.filter(e => e._1 != e._2).map(e => (e._1 min e._2, e._1 max e._2)).distinct
+      val adj = (und ++ und.map(_.swap)).groupBy(_._1).map { case (n, es) => n -> es.map(_._2) }
+      def degrees(alive: Set[Long]) =
+        alive.map(n => n -> adj(n).count(alive).toLong).toMap
+      var alive = adj.keySet
+      for (_ <- 1 to rounds) alive = degrees(alive).filter(_._2 >= k).keySet
+      degrees(alive).filter(_._2 > 0)
+    }
+    for (trial <- 1 to 3; parts <- Seq("1", "7")) {
+      val nodes = 10 + rnd.nextInt(30)
+      val edges = Seq.fill(nodes * (2 + rnd.nextInt(4)))(
+        (rnd.nextInt(nodes).toLong, rnd.nextInt(nodes).toLong))
+      val df = edges.toDF("src", "dst")
+      for (k <- 2 to 3; rounds <- Seq(1, 2, 50)) {
+        val got = withConfs("spark.sql.shuffle.partitions" -> parts)(
+          Graph.kCorePeel(df, "src", "dst", k, rounds).collect())
+          .map(r => r.getLong(0) -> r.getLong(1)).toMap
+        assert(got === reference(edges, k, rounds), s"trial $trial, $parts parts, k $k, $rounds rounds")
+      }
+    }
+  }
 }

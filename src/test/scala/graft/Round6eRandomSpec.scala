@@ -117,17 +117,19 @@ class Round6eRandomSpec extends SparkSpec {
       val expect = seeds.flatMap(s => bfs(s).toSeq.filter(_._2 > 0)
           .map { case (n, d) => n -> 1.0 / d })
         .groupBy(_._1).map { case (n, xs) => n -> (xs.size.toLong, xs.map(_._2).sum) }
-      if (sym.nonEmpty) {
-        val got = graft.operators.Graph.harmonicCentrality(
-            sym.toDF("u", "v"), "u", "v", seeds, maxHops, 1000)
-          .collect().map(r => r.getLong(0) ->
-            (r.getLong(1), r.getAs[Double]("harmonic"))).toMap
-        assert(got.keySet === expect.keySet, s"trial $trial node sets")
+      // at the session's partition count, on one partition and on seven
+      for (parts <- Seq(spark.conf.get("spark.sql.shuffle.partitions"), "1", "7")
+           if sym.nonEmpty) {
+        val got = withConfs("spark.sql.shuffle.partitions" -> parts)(
+            graft.operators.Graph.harmonicCentrality(
+              sym.toDF("u", "v"), "u", "v", seeds, maxHops, 1000).collect())
+          .map(r => r.getLong(0) -> (r.getLong(1), r.getAs[Double]("harmonic"))).toMap
+        assert(got.keySet === expect.keySet, s"trial $trial, $parts parts: node sets")
         expect.foreach { case (n, (cnt, h)) =>
-          assert(got(n)._1 === cnt, s"trial $trial n_seeds($n)")
+          assert(got(n)._1 === cnt, s"trial $trial, $parts parts: n_seeds($n)")
           assert(math.abs(got(n)._2 - BigDecimal(h)
             .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble) < 1e-9,
-            s"trial $trial harmonic($n)")
+            s"trial $trial, $parts parts: harmonic($n)")
         }
       }
     }

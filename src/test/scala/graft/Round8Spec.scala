@@ -129,36 +129,39 @@ class Round8Spec extends SparkSpec {
     assert(bc.size === 12)
   }
 
-  test("hits: no-broadcast scores are bit-identical; degraded join shuffles") {
+  test("hits equals a driver-side integer reference at 1 and 7 shuffle partitions") {
     import spark.implicits._
-    val e = Seq((0L, 1L), (0L, 2L), (3L, 1L), (3L, 2L), (1L, 2L), (4L, 2L))
-      .toDF("s", "d")
-    val bc = graft.operators.Graph.hits(e, "s", "d", iters = 3)
-      .orderBy("role", "node").collect().map(_.toSeq).toSeq
-    val nobc = graft.operators.Graph.hits(e, "s", "d", iters = 3,
-      broadcastScores = false)
-      .orderBy("role", "node").collect().map(_.toSeq).toSeq
-    assert(bc === nobc) // integer-exact loop: plan cannot change a bit
-    // plan shape of one no-broadcast score join, constructed exactly as
-    // hits builds it (the returned frame is checkpoint-truncated, so the
-    // per-iteration join is asserted on its own lineage)
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val edges = e.select(col("s").as("u"), col("d").as("v"))
-      val hub = edges.select(col("u").as("node")).distinct()
-        .withColumn("s", lit(100L))
-      val it = edges.join(hub, edges("u") === hub("node"))
-        .groupBy(col("v").as("node")).agg(sum(col("s")).as("s"))
-      it.collect()
-      val plan = it.queryExecution.executedPlan.toString
-      assert(!plan.contains("Broadcast"),
-        s"no-broadcast HITS iteration must keyed-join the scores:\n$plan")
-      assert(plan.contains("SortMergeJoin") || plan.contains("ShuffledHashJoin"))
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", "true")
-      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    val big = Long.MaxValue - 3
+    val small = Long.MinValue + 7
+    // 1, 2, 3 and `small` only send; 11, 12 and `big` only receive; 4
+    // has a self-loop; (3, 12) is duplicated
+    val edges = Seq((1L, 10L), (1L, 11L), (2L, 10L), (3L, 12L), (3L, 12L), (4L, 4L),
+      (4L, 10L), (10L, 5L), (5L, 11L), (small, big), (small, 10L))
+    val scale = 1000000000000L
+    var maxProduct = BigInt(0)
+    def normalized(raw: Map[Long, BigInt]): Map[Long, BigInt] = {
+      val t = raw.values.sum
+      raw.map { case (n, s) => maxProduct = maxProduct max s * scale; n -> s * scale / t }
     }
+    def reference(iters: Int): Set[(String, Long, Long)] = {
+      val e = edges.distinct
+      val hubs = e.map(_._1).distinct
+      var hub = hubs.map(_ -> BigInt(scale / hubs.size)).toMap
+      var auth = Map.empty[Long, BigInt]
+      for (_ <- 1 to iters) {
+        auth = normalized(e.groupBy(_._2).map { case (v, in) => v -> in.map(x => hub(x._1)).sum })
+        hub = normalized(e.groupBy(_._1).map { case (u, out) => u -> out.map(x => auth(x._2)).sum })
+      }
+      hub.map { case (n, s) => ("hub", n, s.toLong) }.toSet ++
+        auth.map { case (n, s) => ("authority", n, s.toLong) }
+    }
+    for (parts <- Seq("1", "7"); iters <- Seq(1, 3)) {
+      val got = withConfs("spark.sql.shuffle.partitions" -> parts)(
+        graft.operators.Graph.hits(edges.toDF("s", "d"), "s", "d", iters = iters).collect())
+        .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
+      assert(got === reference(iters), s"$parts partitions, $iters iterations")
+    }
+    assert(maxProduct > BigInt(Long.MaxValue), "no score product needed 128 bits")
   }
 
   test("minHashLshPairsSharded is set-equal to the global minHashLshPairs") {
